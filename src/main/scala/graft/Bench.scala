@@ -41,7 +41,7 @@ object Bench {
     * times simhash blocking *plus* its in-plan exact-Jaccard gate, q38
     * the hyperplane-LSH embedding near-dup, and q60 IVF ANN *including*
     * Lloyd centroid training. */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q01_agg", "q02_filter_project", "q05_star_join", "q06_window_rank",
     "q16_json", "q23_events_window", "q26_flow_factory", "q29_token_stats",
     "q31_quality_score", "q32_minhash_neardup", "q33_simhash_pairs",

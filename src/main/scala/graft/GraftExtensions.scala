@@ -3,69 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.expressions.{CosineSimilarity, GraftExpressions, HyperplaneLshKey, MinHashSignature, RollingHash, SimHash64}
+import graft.functions.expressions.GraftExpressions
 
 /**
  * Session-extension plugin: register graft's native expressions at session
  * build time, so clusters enable them with
  * `spark.sql.extensions=graft.GraftExtensions` — no code change in user
  * jobs. (`GraftExpressions.registerAll` remains the programmatic route for
- * an already-built session.)
+ * an already-built session; both routes read the one builder table.)
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExpressions.{checkArity, constInt}
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        checkArity("cosine_similarity", exprs, 2, 2)
-        CosineSimilarity(exprs(0), exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        checkArity("rolling_hash", exprs, 1, 1)
-        RollingHash(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        checkArity("simhash64", exprs, 1, 1)
-        SimHash64(exprs.head)
-      }))
-    e.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        checkArity("minhash_signature", exprs, 2, 2)
-        // second argument is the (foldable) lane count
-        MinHashSignature(exprs(0),
-          constInt(exprs(1), "minhash_signature", "num_hashes"))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("hyperplane_lsh_key"),
-      new ExpressionInfo(classOf[HyperplaneLshKey].getName, "hyperplane_lsh_key"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // (vec, nBits[, seed]) — seed defaults to 42, matching the Scala API
-        checkArity("hyperplane_lsh_key", exprs, 2, 3)
-        val seed = if (exprs.length > 2)
-          constInt(exprs(2), "hyperplane_lsh_key", "seed")
-        else 42
-        HyperplaneLshKey(exprs(0),
-          constInt(exprs(1), "hyperplane_lsh_key", "n_bits"), seed)
-      }))
-    // the published filter families (Gopher A1 + C4) — native
-    // repetition_stats plus the composed keep/stats column functions —
-    // from the SAME builder table GraftExpressions.registerAll consumes
-    // (one definition, two routes)
-    GraftExpressions.curationFunctionBuilders.foreach {
-      case (name, info, builder) =>
-        e.injectFunction((
-          FunctionIdentifier(name), new ExpressionInfo(info, name), builder))
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExpressions.functionBuilders.foreach { case (name, info, builder) =>
+      e.injectFunction((
+        FunctionIdentifier(name), new ExpressionInfo(info, name), builder))
     }
-  }
 }

@@ -1,7865 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core._
-import graft.functions.TextFunctions
-import graft.functions.VectorFunctions
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.catalog._
 
 /**
- * Driver contract: the operator catalog. Every entry in [[queries]] is one
- * operator/capability from SURVEY.md §2 expressed Spark-first; every entry in
- * [[oracleSql]] is the equivalent ANSI SQL the driver runs in DuckDB over the
- * same parquet tables for the hash-compare correctness gate.
- *
- * Conventions for oracle stability:
- *  - every floating-point aggregate is `round(..., n)` on BOTH sides;
- *  - every result is deterministically ordered on BOTH sides;
- *  - column names are aliased identically on BOTH sides.
+ * The operator catalog's entry points. Each [[catalog.QuerySpec]] is one
+ * operator/capability from SURVEY.md §2 expressed Spark-first, declared next
+ * to its DuckDB oracle SQL in a per-family file under `catalog/`.
+ * [[queries]] and [[oracleSql]] are two views of that one list, keyed by
+ * query name; Verify and Bench read them.
  */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  private def events(spark: SparkSession, dir: String): DataFrame =
-    sources.Tables.events(spark, dir)
-
-  /** Split a narrow source across the cluster: the fixture tables are
-    * single-row-group parquet files (unsplittable scans), so CPU-heavy
-    * per-row stages (tokenize, regex, sketch, JSON parse) would otherwise
-    * run on ONE core. A cheap round-robin shuffle of the small input
-    * unlocks full parallelism — conditional, so a production multi-file
-    * input that arrives pre-split is passed through untouched (no shuffle
-    * inserted at 100 TB where it would be the bottleneck).
-    *
-    * The split count is ESTIMATED from the scan's file-listing metadata in
-    * the (already-computed) analyzed plan — `ceil(scanBytes /
-    * maxPartitionBytes)`, the same packing rule Spark's FilePartition
-    * applies — instead of `df.rdd.getNumPartitions`, which would force a
-    * full physical plan plus an RDD build per query just to read one
-    * number. A frame with no file scan underneath passes through: for
-    * scale, no-shuffle is the conservative default. */
-  private def parallelize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val maxSplit = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
-    val scanBytes = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.sizeInBytes
-    }
-    if (scanBytes.isEmpty) df
-    else {
-      // 1 + (b-1)/maxSplit, not (b+maxSplit-1)/maxSplit: a relation with
-      // unknown stats reports sizeInBytes = Long.MaxValue, and the naive
-      // ceil would overflow negative — flipping the conservative
-      // no-shuffle default into repartitioning an arbitrarily large input
-      val estSplits = scanBytes.map(b =>
-        if (b <= 0L) 1L else 1L + (b - 1L) / maxSplit).sum
-      if (estSplits >= target) df else df.repartition(target)
-    }
-  }
+  /** Every catalog query, one spec each, grouped by family. */
+  val specs: Seq[QuerySpec] = Seq(Relational, SqlSurface, Flows,
+    Deduplication, Retrieval, TextQuality, Curation, Stores, Tokenizers,
+    Media).flatMap(_.specs)
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): the star-join
     * revenue rollup — scan, broadcast dims, hash agg, sort in one plan. */
   def entry(spark: SparkSession): DataFrame =
     queries("q05_star_join")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------------
-  // Relational core
-  // ---------------------------------------------------------------------
-
-  private def q01_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") <= lit("1998-09-02"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("sum_disc_price"),
-        round(avg(col("l_quantity")), 4).as("avg_qty"),
-        round(avg(col("l_discount")), 4).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  private def q02_filter_project(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_quantity") > 45 && col("l_discount") >= 0.05)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_quantity"), round(col("l_extendedprice"), 2).as("price"))
-      // (l_orderkey, l_linenumber) is NOT unique in the synthetic fixture —
-      // order by every output column for a fully deterministic row order.
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_quantity"), col("price"))
-
-  private def q03_join_agg(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val o = t(s, dir, "orders")
-    val l = t(s, dir, "lineitem")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .groupBy(col("o_orderkey"), col("o_orderdate"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
-      .filter(col("revenue") > 1000)
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(100)
-  }
-
-  private def q04_broadcast_join(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir, "part")
-    val l = t(s, dir, "lineitem")
-    l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
-      .groupBy(col("p_brand"))
-      .agg(
-        count(lit(1)).as("n_items"),
-        round(sum(col("l_extendedprice")), 2).as("total_price"),
-        round(avg(col("l_quantity")), 4).as("avg_qty"))
-      .orderBy(col("p_brand"))
-  }
-
-  private def q05_star_join(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
-    val n = t(s, dir, "nation")
-    val r = t(s, dir, "region")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy(col("r_name"), col("n_name"))
-  }
-
-  private def q06_window_rank(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"),
-        round(col("o_totalprice"), 2).as("price"), col("rnk"))
-      .orderBy(col("o_custkey"), col("rnk"))
-  }
-
-  private def q07_topk(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(10)
-      .select(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice"), 2).as("price"))
-
-  private def q08_distinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_linestatus"))
-      .distinct()
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  private def q09_setops(s: SparkSession, dir: String): DataFrame = {
-    val custNations = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-    val suppNations = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
-    custNations.intersect(suppNations)
-      .union(custNations.except(suppNations).withColumn("nationkey",
-        col("nationkey") + 1000))
-      .distinct()
-      .orderBy(col("nationkey"))
-  }
-
-  private def q10_rollup(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("qty"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  private def q11_anti_join(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val urgent = t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
-    c.join(urgent, c("c_custkey") === urgent("o_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey"))
-  }
-
-  private def q12_semi_join(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val bigOrders = t(s, dir, "orders").filter(col("o_totalprice") > 200000)
-    c.join(bigOrders, c("c_custkey") === bigOrders("o_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_nationkey"))
-      .orderBy(col("c_custkey"))
-  }
-
-  private def q13_string_fns(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(
-        col("p_partkey"),
-        upper(col("p_name")).as("uname"),
-        length(col("p_name")).as("name_len"),
-        substring(col("p_name"), 1, 5).as("prefix"),
-        regexp_replace(col("p_name"), "a", "@").as("subst"),
-        concat_ws("|", col("p_brand"), col("p_type")).as("brand_type"))
-      .orderBy(col("p_partkey"))
-
-  private def q14_date_fns(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .groupBy(
-        year(col("o_orderdate")).as("yr"),
-        month(col("o_orderdate")).as("mo"))
-      .agg(count(lit(1)).as("n_orders"),
-        round(sum(col("o_totalprice")), 2).as("total"))
-      .orderBy(col("yr"), col("mo"))
-
-  private def q15_math_fns(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(sum(sqrt(col("l_extendedprice"))), 2).as("sum_sqrt_price"),
-        round(sum(pow(col("l_discount"), 2)), 4).as("sum_disc_sq"),
-        round(sum(abs(col("l_quantity") - 25)), 2).as("sum_absdev"),
-        sum(ceil(col("l_tax") * 100)).cast("long").as("sum_ceil_tax"),
-        sum(floor(col("l_quantity"))).cast("long").as("sum_floor_qty"))
-      .orderBy(col("l_returnflag"))
-
-  private def q16_json(s: SparkSession, dir: String): DataFrame =
-    parallelize(events(s, dir))
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("k")).as("sum_k"),
-        round(avg(col("k")), 4).as("avg_k"))
-      .orderBy(col("event_type"))
-
-  private def q17_explode(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(explode(split(col("p_name"), " ")).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("word"))
-
-  private def q18_having(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"))
-      .agg(round(sum(col("l_quantity")), 2).as("total_qty"),
-        count(lit(1)).as("n"))
-      .filter(col("total_qty") > 100)
-      .orderBy(col("l_suppkey"))
-
-  private def q19_case_when(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .groupBy(col("o_orderpriority"))
-      .agg(
-        sum(when(col("o_totalprice") > 100000, 1).otherwise(0)).as("n_big"),
-        sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).as("n_finished"),
-        count(lit(1)).as("n"))
-      .orderBy(col("o_orderpriority"))
-
-  private def q20_window_running(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "orders")
-      .filter(col("o_custkey") < 50)
-      .select(col("o_custkey"), col("o_orderkey"),
-        round(sum(col("o_totalprice")).over(w), 2).as("running_total"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
-  }
-
-  private def q21_lag_lead(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-    t(s, dir, "orders")
-      .filter(col("o_custkey") < 100)
-      .select(col("o_custkey"), col("o_orderkey"),
-        datediff(col("o_orderdate"),
-          lag(col("o_orderdate"), 1).over(w)).cast("long").as("days_since_prev"),
-        lead(col("o_orderkey"), 1).over(w).as("next_orderkey"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
-  }
-
-  private def q22_ntile(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.orderBy(col("c_acctbal").desc, col("c_custkey"))
-    t(s, dir, "customer")
-      .select(col("c_custkey"), ntile(4).over(w).as("quartile"))
-      .groupBy(col("quartile"))
-      .agg(count(lit(1)).as("n"), min(col("c_custkey")).as("min_key"))
-      .orderBy(col("quartile"))
-  }
-
-  private def q23_events_window(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
-      .groupBy(window(col("ts"), "1 hour").getField("start").as("bucket"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .orderBy(col("bucket"), col("event_type"))
-
-  private def q24_grouping_sets(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("o_orderstatus").asc_nulls_first,
-        col("o_orderpriority").asc_nulls_first)
-
-  // ---------------------------------------------------------------------
-  // Pipeline algebra (stepist-parity flows, SURVEY §2.1)
-  // ---------------------------------------------------------------------
-
-  /** Chained map stages + StopFlowFlag-as-filter (≙ README arith flow +
-    * `stepist/flow/utils.py:8-12`), run through the core Flow engine. */
-  private def q25_flow_chain(s: SparkSession, dir: String): DataFrame = {
-    val app = new App(s)
-    val step3 = app.step("agg_stage", df => df
-      .groupBy(col("l_returnflag"))
-      .agg(round(sum(col("disc_price")), 2).as("revenue"),
-        count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag")))
-    val step2 = app.step("filter_stage",
-      df => df.filter(col("disc_price") > 1000), next = Some(step3))
-    val step1 = app.step("compute_stage", df => df
-      .withColumn("disc_price", col("l_extendedprice") * (lit(1) - col("l_discount"))),
-      next = Some(step2),
-      inputCols = Seq("l_returnflag", "l_extendedprice", "l_discount"))
-    app.run(step1, t(s, dir, "lineitem"))("agg_stage")
-  }
-
-  /** Factory step 1→N expansion (≙ `factory_step.py:19-31`): explode doc
-    * tokens, count token frequency downstream. */
-  private def q26_flow_factory(s: SparkSession, dir: String): DataFrame = {
-    val app = new App(s)
-    val counter = app.step("token_count_stage", df => df
-      .groupBy(col("token")).agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 50)
-      .orderBy(col("token")))
-    val factory = app.factoryStep("tokenize_stage", df => df
-      .select(explode(TextFunctions.tokens(col("text"))).as("token")),
-      next = Some(counter))
-    app.run(factory, parallelize(t(s, dir, "documents")))("token_count_stage")
-  }
-
-  /** Hub fan-out → Reducer fan-in (≙ README.markdown:159-205 +
-    * `reducer_engine.py:21-80`): two branches compute different per-row
-    * metrics; the reducer joins them back by hub_job_id and combines. */
-  private def q27_flow_hub_reducer(s: SparkSession, dir: String): DataFrame = {
-    val app = new App(s)
-    val reducer = app.reducerStep("combine_stage", grouped => grouped
-      .select(
-        // job_list sorted by branch idx: [0]=double_qty branch, [1]=tenth_price
-        element_at(col("job_list"), 1).getField("l_orderkey").as("l_orderkey"),
-        element_at(col("job_list"), 1).getField("l_linenumber").as("l_linenumber"),
-        // round to 3: the exact value has <=3 decimals (price/10), so both
-        // engines' doubles sit within 1 ulp of the representable target —
-        // rounding to FEWER decimals can diverge at exact .xx5 boundaries
-        // (Spark rounds the shortest decimal repr, DuckDB the binary value)
-        round(element_at(col("job_list"), 1).getField("double_qty") +
-          element_at(col("job_list"), 2).getField("tenth_price"), 3).as("combined"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("combined")))
-    val b1 = app.step("double_qty_stage", df => df
-      .withColumn("double_qty", col("l_quantity") * 2), next = Some(reducer))
-    val b2 = app.step("tenth_price_stage", df => df
-      .withColumn("tenth_price", col("l_extendedprice") / 10), next = Some(reducer))
-    val hub = Hub(b1, b2)
-    val src = app.step("src_stage", df => df
-      .filter(col("l_orderkey") < 100)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-        col("l_extendedprice")),
-      next = Some(hub))
-    app.run(src, t(s, dir, "lineitem"))("combine_stage")
-  }
-
-  // ---------------------------------------------------------------------
-  // LLM-data-pipeline operators (north star): dedup, text analysis,
-  // similarity search, multimodal
-  // ---------------------------------------------------------------------
-
-  /** Normalized-text SQL fragment matching TextFunctions.tokens semantics
-    * (lowercase, trim, whitespace-collapse, NULL ≡ empty — the one
-    * NULL-text contract, identical on both engines). */
-  private val normSql =
-    """regexp_replace(trim(lower(coalesce(text, ''))), '\s+', ' ', 'g')"""
-  private val toksSql =
-    """string_split_regex(trim(lower(coalesce(text, ''))), '\s+')"""
-
-  private def q28_dedup_exact(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(parallelize(t(s, dir, "documents")), "text", "doc_id")
-      .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy(col("doc_id"))
-
-  private def q29_token_stats(s: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        TextFunctions.tokenCount(txt).cast("long").as("n_tokens"),
-        TextFunctions.bpeTokenCount(txt).cast("long").as("n_bpe_tokens"),
-        length(concat_ws(" ", TextFunctions.tokens(txt))).cast("long").as("n_chars_norm"),
-        TextFunctions.fingerprint(txt).as("fp"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def q30_lang_id(s: SparkSession, dir: String): DataFrame =
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        TextFunctions.langId(col("text")).as("lang_pred"),
-        TextFunctions.langScore(col("text"), "en").cast("long").as("s_en"))
-      .orderBy(col("doc_id"))
-
-  private def q31_quality_score(s: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        round(TextFunctions.punctRatio(txt), 4).as("punct_ratio"),
-        round(TextFunctions.alphaRatio(txt), 4).as("alpha_ratio"),
-        round(TextFunctions.stopwordRatio(txt), 4).as("stopword_ratio"),
-        round(TextFunctions.meanWordLen(txt), 4).as("mean_word_len"),
-        TextFunctions.qualityScore(txt).as("quality"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** MinHash-LSH candidates verified by exact shingle Jaccard: the output is
-    * the set of truly-near-duplicate pairs, so an exact brute-force oracle
-    * can check it — the LSH blocking must not lose a single j>=0.8 pair. */
-  private def q32_minhash_neardup(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents").filter(col("doc_id") < 1000))
-    val cands = Dedup.minhashLsh(docs, "text", "doc_id",
-      shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
-    Dedup.ngramJaccard(docs, cands, "text", "doc_id", shingleK = 3)
-      .filter(col("jaccard") >= 0.8)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** SimHash near-dup accuracy gate. xxhash64 has no DuckDB equivalent, so
-    * instead of the raw pairs (whose values the oracle can't recompute)
-    * this emits a deterministic (metric, bound, ok) verdict the oracle CAN
-    * rows-match:
-    *  - `simhash_recall_of_exact`: of the pairs the EXACT ppjoin Jaccard
-    *    self-join finds at >= 0.9, the fraction simhash (hamming <= 3)
-    *    recovers. Measured 0.60 / 0.78 / 0.86 at sf0.01/0.001/0.1 — short
-    *    near-dup docs can flip > 3 of the 64 bits, the standard simhash
-    *    recall/precision dial — so the bound regression-gates at 0.4.
-    *  - `simhash_pairs_bounded`: the candidate set is non-empty yet far
-    *    from all-pairs (a banding/hamming bug that degenerates toward
-    *    cartesian output trips it long before the driver times out).
-    * A drift in either flips `ok` and fails the driver's hash compare.
-    * Pair-level fingerprint values stay pinned in ExpressionsSpec. */
-  private def q33_simhash_pairs(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents").filter(col("doc_id") < 1000))
-    val sim = Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = 3)
-      .select(col("id_a"), col("id_b"))
-    val exact = Dedup.jaccardSelfJoin(docs, "text", "doc_id",
-        shingleK = 3, threshold = 0.9)
-      .select(col("id_a"), col("id_b"))
-    val recall = exact.join(sim.withColumn("hit", lit(1)),
-        Seq("id_a", "id_b"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("recall"))
-    val simCount = sim.agg(count(lit(1)).as("n"))
-    recall.crossJoin(simCount)
-      .select(explode(array(
-        struct(lit("simhash_pairs_bounded").as("metric"),
-          lit(200.0).as("bound"),
-          (col("n") >= 1L && col("n") <= 200L).as("ok")),
-        struct(lit("simhash_recall_of_exact").as("metric"),
-          lit(0.4).as("bound"),
-          // empty exact-pair set -> recall is NULL; fail loudly, not NULL
-          coalesce(col("recall") >= 0.4, lit(false)).as("ok")))).as("g"))
-      .select(col("g.metric").as("metric"), col("g.bound").as("bound"),
-        col("g.ok").as("ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** Exact cosine top-k: rank on the ROUNDED similarity (+ id tiebreak) so
-    * Spark and DuckDB rank identically even at float boundaries. */
-  private def q34_cosine_topk(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val corpus = e.select(col("vec_id").as("corpus_id"), col("embedding").as("cv"))
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = corpus.join(broadcast(queries), col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 4).as("cos_r"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_r").desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  private def q35_embedding_stats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n"),
-        round(avg(VectorFunctions.l2Norm(col("embedding"))), 4).as("avg_norm"),
-        round(avg(size(col("embedding"))), 2).as("avg_dim"))
-      .orderBy(col("label"))
-
-  /** Multimodal packing: text payload as binary media + typed meta struct,
-    * joined to its embedding row. Oracle checks the SQL-expressible fields
-    * (byte length, md5 checksum, label); the fake decode/feature stages are
-    * pinned by ScalaTest. */
-  private def q36_multimodal_meta(s: SparkSession, dir: String): DataFrame = {
-    val recs = Multimodal.multimodalRecords(
-      t(s, dir, "documents"), t(s, dir, "embeddings"))
-    recs.select(col("doc_id"),
-        col("media_meta").getField("byte_len").as("byte_len"),
-        col("media_meta").getField("checksum").as("checksum"),
-        col("label"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** LSH-bucketed ANN recall gate: the approximate top-k is compared
-    * in-plan against [[Similarity.bruteForceTopK]] (the exact answer) and
-    * the query emits a deterministic (metric, bound, ok) verdict — recall@5
-    * over all probe queries must clear the bound, which the oracle
-    * rows-matches as a literal. The synthetic embeddings are near-random,
-    * so with 8 hyperplanes the 1-bit multiprobe scans ~9/256 ≈ 3.5% of the
-    * corpus and chance-level recall is ~0.035; measured recall is 0.12 /
-    * 0.16 / 0.06 at sf0.01 / sf0.001 / sf0.1, so the 0.05 bound asserts
-    * the bucketing beats chance and regression-gates the hash/probe path
-    * at every SF the driver and bench touch. On
-    * clustered real-world embeddings the same operator probes a far larger
-    * effective fraction of each query's neighborhood. Per-fixture recall
-    * values remain pinned in SimilaritySpec. */
-  private def q37_ann_lsh(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-    val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id", k = 5)
-      .select(col("query_id"), col("corpus_id"))
-    val approx = Similarity.lshTopK(e, queries, "embedding", "vec_id", k = 5, nBits = 8)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("recall"))
-      .select(lit("lsh_recall_at_5").as("metric"), lit(0.05).as("bound"),
-        // empty exact set would make recall NULL; surface false, not NULL
-        coalesce(col("recall") >= 0.05, lit(false)).as("ok"))
-  }
-
-  private def q38_near_dup_embedding(s: SparkSession, dir: String): DataFrame =
-    Dedup.embeddingNearDup(
-        t(s, dir, "embeddings").filter(col("vec_id") < 2000),
-        "embedding", "vec_id", threshold = 0.45, nBits = 0)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos_r"))
-      .orderBy(col("id_a"), col("id_b"))
-
-  // ---------------------------------------------------------------------
-  // Temporal / non-equi / SQL-surface operators
-  // ---------------------------------------------------------------------
-
-  /** As-of (temporal) join: each event picks the latest order of the same
-    * user with o_orderdate <= ts. Right side deduped to one row per
-    * (key, time) so the as-of winner is well-defined on both engines. */
-  private def q39_asof_join(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(col("event_id"), col("user_id"), col("ts"))
-    val quotes = t(s, dir, "orders")
-      .groupBy(col("o_custkey").as("user_id"), col("o_orderdate"))
-      .agg(max(col("o_orderkey")).as("o_orderkey"))
-    val joined = operators.AsOf.join(ev, quotes, Seq("user_id"),
-      "ts", "o_orderdate", Seq("o_orderkey"))
-    joined.select(col("event_id"), col("user_id"),
-        col("asof_o_orderkey").as("last_orderkey"))
-      .orderBy(col("event_id"))
-  }
-
-  /** Non-equi range join: orders bucketed into literal price bands. */
-  private def q40_range_join(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bands = Seq(
-      ("p0_50k", 0.0, 50000.0), ("p50_150k", 50000.0, 150000.0),
-      ("p150_300k", 150000.0, 300000.0), ("p300k_up", 300000.0, 1e18))
-      .toDF("band", "lo", "hi")
-    t(s, dir, "orders")
-      .join(broadcast(bands),
-        col("o_totalprice") >= col("lo") && col("o_totalprice") < col("hi"))
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
-      .orderBy(col("band"))
-  }
-
-  /** Explicit GROUPING SETS through the SQL surface. */
-  private def q41_grouping_sets(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    s.sql(
-      """SELECT l_returnflag, l_linestatus,
-        | count(*) AS n, round(sum(l_extendedprice), 2) AS total
-        |FROM lineitem_v
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
-  }
-
-  /** Multiset set ops: INTERSECT ALL / EXCEPT ALL preserve duplicity. */
-  private def q42_setops_all(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val a = li.filter(col("l_quantity") < 25).select(col("l_returnflag"))
-    val b = li.filter(col("l_discount") > 0.03).select(col("l_returnflag"))
-    a.intersectAll(b).groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n_intersect"))
-      .join(a.exceptAll(b).groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_except")), Seq("l_returnflag"), "full_outer")
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** Exact interpolated percentiles per group. */
-  private def q43_percentiles(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      // round to 4: quartile interpolation of 2-decimal prices yields exact
-      // values with <=4 decimals; Spark's (1-f)*lo+f*hi and DuckDB's
-      // lo+f*(hi-lo) differ by 1 ulp, and rounding to the exact precision
-      // absorbs it (coarser rounding diverges at .xx5 boundaries)
-      .agg(
-        round(expr("percentile(l_extendedprice, 0.25)"), 4).as("p25"),
-        round(expr("percentile(l_extendedprice, 0.5)"), 4).as("p50"),
-        round(expr("percentile(l_extendedprice, 0.75)"), 4).as("p75"))
-      .orderBy(col("l_returnflag"))
-
-  /** HLL++ approximate distinct, gated: sketch estimates are
-    * implementation-specific (the oracle can't recompute them), so each
-    * group emits its EXACT distinct count (oracle-computable) plus an
-    * `hll_ok` flag asserting the HLL estimate lands within the configured
-    * 5% rsd. Estimate drift flips the flag and fails the hash compare. */
-  private def q44_approx_distinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(approx_count_distinct(col("l_partkey")).as("approx"),
-        countDistinct(col("l_partkey")).as("n_parts"))
-      .select(col("l_returnflag"), col("n_parts"),
-        coalesce(abs(col("approx") - col("n_parts")) <=
-          col("n_parts") * lit(0.05), lit(false)).as("hll_ok"))
-      .orderBy(col("l_returnflag"))
-
-  /** Pivot (long→wide conditional aggregation) with pinned pivot values. */
-  private def q45_pivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .pivot("l_linestatus", Seq("F", "O"))
-      .agg(round(sum(col("l_quantity")), 2))
-      .withColumnsRenamed(Map("F" -> "qty_f", "O" -> "qty_o"))
-      .orderBy(col("l_returnflag"))
-
-  /** Fuzzy string matching: edit distance against a probe word. */
-  private def q46_levenshtein(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(col("p_partkey"),
-        levenshtein(substring(col("p_name"), 1, 8), lit("red widg"))
-          .cast("long").as("dist"))
-      .filter(col("dist") <= 4)
-      .orderBy(col("p_partkey"))
-
-  /** Array intrinsics over the token array (distinct, sort, slice,
-    * contains, join). */
-  private def q47_array_fns(s: SparkSession, dir: String): DataFrame = {
-    val toks = TextFunctions.tokens(col("text"))
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        size(array_distinct(toks)).cast("long").as("n_distinct"),
-        concat_ws(",", slice(sort_array(array_distinct(toks)), 1, 3)).as("top3"),
-        array_contains(toks, "the").as("has_the"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Correlated scalar subquery: orders above their customer's average. */
-  private def q48_subquery(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders_v")
-    s.sql(
-      """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price
-        |FROM orders_v o
-        |WHERE o_totalprice > (SELECT avg(o2.o_totalprice) * 1.2
-        |                      FROM orders_v o2
-        |                      WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** Pattern predicates: LIKE / IN / prefix. */
-  private def q49_like_in(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .filter(col("p_name").like("%widget%") ||
-        (col("p_name").startsWith("red") &&
-          col("p_type").isin("ECONOMY", "PROMO")))
-      .select(col("p_partkey"), col("p_name"), col("p_type"))
-      .orderBy(col("p_partkey"))
-
-  // ---------------------------------------------------------------------
-  // Round-2 additions: dedup/fingerprint variants, sessionization, sources,
-  // window frames, stats aggregates, map functions, streaming
-  // ---------------------------------------------------------------------
-
-  /** Standalone exact n-gram Jaccard near-dup via the prefix-filtered
-    * set-similarity self-join (lossless for the threshold, so the exact
-    * brute-force oracle must agree pair-for-pair). The shuffle moves
-    * (prefix-hash, id) pairs, never documents. */
-  private def q50_ngram_jaccard(s: SparkSession, dir: String): DataFrame =
-    Dedup.jaccardSelfJoin(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", shingleK = 3, threshold = 0.6)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** Gap-based sessionization (30 min inactivity): lag + cumulative-sum
-    * session ids, then per-session aggregates. Micro-precision epoch math
-    * on both engines — no sub-second truncation divergence. */
-  private def q51_sessionize(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events(s, dir)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > 1800L * 1000000L, 1L)
-          .otherwise(0L))
-      .withColumn("session_id", sum(col("new_sess")).over(wCum))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("ts")).as("sess_start"),
-        (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          .as("duration_us"),
-        round(sum(col("value")), 2).as("total_value"))
-      .orderBy(col("user_id"), col("session_id"))
-  }
-
-  /** Winnowing document fingerprints (Schleimer et al.): md5 3-gram hashes,
-    * min of each 4-window, distinct. md5 exists in both engines, so the
-    * whole selection is oracle-checkable. */
-  private def q52_winnow_fingerprint(s: SparkSession, dir: String): DataFrame =
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        transform(TextFunctions.shingles(col("text"), 3), g => md5(g)).as("gh"))
-      .select(col("doc_id"),
-        TextFunctions.winnowFromGramHashes(col("gh"), 4).as("fps"))
-      .select(col("doc_id"), size(col("fps")).cast("long").as("n_fp"),
-        array_min(col("fps")).as("fp_min"), array_max(col("fps")).as("fp_max"))
-      .orderBy(col("doc_id"))
-
-  /** Statistical aggregates: correlation, sample stddev/variance/covariance. */
-  private def q53_stats_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qty_price"),
-        round(stddev_samp(col("l_discount")), 6).as("sd_disc"),
-        round(covar_samp(col("l_quantity"), col("l_tax")), 6).as("cov_qty_tax"),
-        round(var_samp(col("l_quantity")), 4).as("var_qty"))
-      .orderBy(col("l_returnflag"))
-
-  /** Per-process round-trip scratch dir: two concurrent catalog runs (e.g.
-    * parallel Verify invocations) must not clobber each other's files.
-    * Deleted on JVM exit — a long-lived driver invoking the catalog for
-    * months must not accumulate fixture-sized CSV/JSON dumps in /tmp. */
-  private lazy val roundTripBase: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_roundtrip_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      rmTree(dir.toFile)
-    }, "graft-roundtrip-cleanup"))
-    dir.toString
-  }
-  private def roundTripDir(name: String): String = s"$roundTripBase/$name"
-
-  /** Recursive delete for the per-process /tmp fixture stores the
-    * verdict-gate queries build — one definition (was pasted into every
-    * store-building query); no-op on a missing path. */
-  private def rmTree(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Drop a catalog table AND its warehouse directory: a table dir left
-    * behind by a KILLED run isn't in the catalog, so the DROP misses it
-    * and saveAsTable would fail on the stale location — clean at the
-    * session's ACTUAL warehouse dir (only meaningful for a
-    * local-filesystem warehouse). Queries use per-process table names so
-    * two concurrent runs in one repo dir can't clobber each other. */
-  private def dropLocalTable(s: SparkSession, tbl: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
-    val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-    if (wh.getScheme == null || wh.getScheme == "file") {
-      val root = if (wh.getScheme == null) wh.toString else wh.getPath
-      val loc = new java.io.File(root, tbl)
-      rmTree(loc)
-    }
-  }
-
-  /** CSV sink + source round-trip: write orders as headered CSV, read back
-    * with an explicit schema, aggregate — the result must equal the oracle's
-    * direct-parquet aggregate (lossless round-trip of longs/doubles). */
-  private def q54_csv_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = roundTripDir("graft_q54_csv")
-    t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      .write.mode("overwrite").option("header", "true").csv(tmp)
-    s.read
-      .schema("o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE")
-      .option("header", "true").csv(tmp)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("o_totalprice")), 2).as("total"),
-        min(col("o_orderkey")).as("min_key"),
-        max(col("o_orderkey")).as("max_key"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** JSON-lines sink + source round-trip over part. */
-  private def q55_json_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = roundTripDir("graft_q55_json")
-    t(s, dir, "part")
-      .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_retailprice"))
-      .write.mode("overwrite").json(tmp)
-    s.read
-      .schema("p_partkey BIGINT, p_brand STRING, p_type STRING, p_retailprice DOUBLE")
-      .json(tmp)
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n"),
-        round(avg(col("p_retailprice")), 4).as("avg_price"))
-      .orderBy(col("p_brand"))
-  }
-
-  /** Sliding ROWS-frame window aggregates: 3-row moving avg/max/count. */
-  private def q56_window_frames(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(-2, Window.currentRow)
-    t(s, dir, "orders")
-      .filter(col("o_custkey") < 40)
-      .select(col("o_custkey"), col("o_orderkey"),
-        round(avg(col("o_totalprice")).over(w), 4).as("moving_avg"),
-        round(max(col("o_totalprice")).over(w), 2).as("moving_max"),
-        count(lit(1)).over(w).as("n_in_frame"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
-  }
-
-  /** Relative-rank window functions: percent_rank + cume_dist per nation
-    * (deterministic: the order key (c_acctbal, c_custkey) is unique). */
-  private def q57_percent_rank(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("c_nationkey"))
-      .orderBy(col("c_acctbal"), col("c_custkey"))
-    t(s, dir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"),
-        round(percent_rank().over(w), 6).as("pr"),
-        round(cume_dist().over(w), 6).as("cd"))
-      .filter(col("c_custkey") <= 300)
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Map-typed columns: JSON props → map<string,long>, key intrinsics. */
-  private def q58_map_fns(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, MapType, StringType}
-    parallelize(events(s, dir))
-      .withColumn("m", from_json(col("props"), MapType(StringType, LongType)))
-      .select(col("event_id"),
-        concat_ws(",", sort_array(map_keys(col("m")))).as("keys"),
-        element_at(col("m"), "k").as("k_val"),
-        size(col("m")).cast("long").as("n_keys"))
-      .orderBy(col("event_id"))
-  }
-
-  /** Event-time windowed aggregation through the STRUCTURED STREAMING path:
-    * file source → watermark → window agg → AvailableNow drain (≙ the
-    * reference worker's `die_when_empty`, `libs/simple_queue.py:24-37`) →
-    * memory sink. Must produce exactly the batch oracle's answer. Complete
-    * output mode because the fixture is one file = one micro-batch; the
-    * memory sink is test-scale only — production flows write parquet/Kafka
-    * via the same writeStream. */
-  private def q59_streaming_window(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    // isolated child session (shared SparkContext, own conf/catalog/streams):
-    // the nanosAsLong legacy flag and the memory-sink table stay scoped here
-    // instead of mutating the caller's session
-    val ns = s.newSession()
-    ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = ns.read.parquet(s"$dir/events.parquet")
-    // file-stream sources take a DIRECTORY; glob-filter to the events table
-    val agg = sources.Tables.normalizeTs(ns.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-    val q = agg.writeStream.format("memory").queryName("q59_mem")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    ns.table("q59_mem")
-      .select(col("window.start").as("bucket"), col("event_type"),
-        col("n"), col("total_value"))
-      .orderBy(col("bucket"), col("event_type"))
-  }
-
-  /** IVF ANN recall gate (same shape as q37): Lloyd-trained centroids,
-    * nProbe-cell search, compared in-plan against the exact brute-force
-    * top-k; emits a deterministic (metric, bound, ok) verdict the oracle
-    * rows-matches. Trained ≥ sampled centroid quality stays gated in
-    * SimilaritySpec. At real scale the assigned corpus is written
-    * partitioned by cell. */
-  private def q60_ivf_ann(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-    val centroids = Similarity.trainCentroids(e, "embedding", "vec_id",
-      k = 10)
-    val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id", k = 5)
-      .select(col("query_id"), col("corpus_id"))
-    val approx = Similarity.ivfTopK(e, queries, centroids, "embedding",
-        "vec_id", k = 5, nProbe = 3)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("recall"))
-      .select(lit("ivf_recall_at_5").as("metric"), lit(0.3).as("bound"),
-        // empty exact set would make recall NULL; surface false, not NULL
-        coalesce(col("recall") >= 0.3, lit(false)).as("ok"))
-  }
-
-  /** Native session-window operator (batch form of the streaming gap
-    * sessionizer), checked against a first-principles lag/cumulative-sum
-    * oracle: Spark's merge rule (same session iff gap < 30 min, end
-    * exclusive) must reproduce the SQL formulation exactly. */
-  private def q61_session_window(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
-      .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("total_value"))
-      .select(col("user_id"),
-        col("sw.start").as("sess_start"), col("sw.end").as("sess_end"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("user_id"), col("sess_start"))
-
-  /** Skew-salted equi-join (hot keys fan out over saltFactor reducers);
-    * result must be row-identical to the plain inner join the oracle runs. */
-  private def q62_salted_join(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(col("user_id"), col("value"))
-    val cust = t(s, dir, "customer")
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    operators.Skew.saltedJoin(ev, cust, Seq("user_id"), saltFactor = 8)
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** Custom typed Aggregator UDAF (constant-size top-3 buffer, partial+final
-    * hash agg — the scalable form of the reference's reducer-handler fold,
-    * `reducer_engine.py:78`). */
-  private def q63_custom_udaf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    val top3 = udaf(graft.functions.Aggregators.Top3Double, Encoders.scalaDouble)
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(top3(col("l_extendedprice")).as("t"))
-      .select(col("l_returnflag"),
-        round(col("t._1"), 2).as("top1"),
-        round(col("t._2"), 2).as("top2"),
-        round(col("t._3"), 2).as("top3"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** LEFT OUTER join with surviving nulls (unmatched customers keep null
-    * aggregate columns — exercised, not coalesced away). */
-  private def q64_left_outer(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").filter(col("c_custkey") <= 200)
-    val o = t(s, dir, "orders").filter(col("o_totalprice") > 250000)
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_big"), round(max(col("o_totalprice")), 2).as("max_price"))
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
-      .select(col("c_custkey"), col("n_big"), col("max_price"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** FULL OUTER join on overlapping key ranges — nulls possible both sides. */
-  private def q65_full_outer(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val a = o.filter(col("o_custkey") < 60)
-      .groupBy(col("o_custkey").as("k")).agg(count(lit(1)).as("n_a"))
-    val b = o.filter(col("o_custkey").between(30, 90))
-      .groupBy(col("o_custkey").as("k"))
-      .agg(round(sum(col("o_totalprice")), 2).as("total_b"))
-    a.join(b, Seq("k"), "full_outer").orderBy(col("k"))
-  }
-
-  /** CROSS join (explicit cartesian of two small dims). */
-  private def q66_cross_join(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "region").crossJoin(t(s, dir, "nation"))
-      .select(col("r_name"), col("n_name"),
-        concat_ws("/", col("r_name"), col("n_name")).as("pair"))
-      .orderBy(col("r_name"), col("n_name"))
-
-  /** unionByName with missing columns (schema-widening union — ≙ the
-    * reference's heterogeneous branch dicts) + null intrinsics. */
-  private def q67_union_null_fns(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-    val a = o.filter(col("o_custkey") < 10)
-      .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("amount"))
-    val b = o.filter(col("o_custkey") >= 140)
-      .select(col("o_orderkey"), col("o_orderstatus").as("status"))
-    a.unionByName(b, allowMissingColumns = true)
-      .select(col("o_orderkey"),
-        coalesce(col("amount"), lit(-1.0)).as("amount_f"),
-        coalesce(col("status"), lit("none")).as("status_f"),
-        col("amount").isNull.as("amount_missing"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Window VALUE functions: first/last/nth over the full-partition frame. */
-  private def q68_window_value_fns(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "orders")
-      .filter(col("o_custkey") < 30)
-      .select(col("o_custkey"), col("o_orderkey"),
-        round(first(col("o_totalprice")).over(w), 2).as("first_price"),
-        round(last(col("o_totalprice")).over(w), 2).as("last_price"),
-        round(nth_value(col("o_totalprice"), 2).over(w), 2).as("second_price"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
-  }
-
-  /** Date/time arithmetic: month add (end-clamped), day add, last_day,
-    * month truncation, quarter, day-of-week (normalized to Sunday=0). */
-  private def q69_date_arith(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .filter(col("o_orderkey") <= 2000)
-      .select(col("o_orderkey"),
-        add_months(col("o_orderdate"), 3).as("plus3m"),
-        date_add(col("o_orderdate").cast("date"), 30).as("plus30d"),
-        last_day(col("o_orderdate")).as("month_end"),
-        trunc(col("o_orderdate").cast("date"), "month").as("month_start"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        (dayofweek(col("o_orderdate")) - 1).cast("long").as("dow"))
-      .orderBy(col("o_orderkey"))
-
-  /** String surface 2: padding, translate, repeat, reverse, split-part. */
-  private def q70_string_fns2(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(col("p_partkey"),
-        lpad(col("p_brand"), 12, "*").as("lp"),
-        rpad(col("p_brand"), 12, "-").as("rp"),
-        translate(col("p_type"), "AEO", "aeo").as("tr"),
-        repeat(substring(col("p_name"), 1, 3), 2).as("rep"),
-        reverse(col("p_brand")).as("rev"),
-        element_at(split(col("p_name"), " "), 1).as("first_word"))
-      .orderBy(col("p_partkey"))
-
-  /** Bucketed-layout join: both sides pre-shuffled ONCE at write time into
-    * co-located hash buckets, so the join itself plans with no exchange
-    * (asserted in PlanSpec) — the 100 TB answer to a join that would
-    * otherwise shuffle the fact table every run. The result must equal the
-    * oracle's plain join over the original parquet. */
-  private def q71_bucketed_join(s: SparkSession, dir: String): DataFrame = {
-    // per-process table names: two concurrent Verify runs in one repo dir
-    // (same catalog/warehouse) must not overwrite each other's buckets
-    // mid-join; the pid suffix never surfaces in the query result
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val (liTbl, oTbl) = (s"q71_li_$pid", s"q71_o_$pid")
-    Seq(liTbl, oTbl).foreach(dropLocalTable(s, _))
-    operators.Layout.writeBucketed(
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_extendedprice"),
-        col("l_discount")),
-      liTbl, Seq("l_orderkey"), 8)
-    operators.Layout.writeBucketed(
-      t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
-        col("o_orderpriority")),
-      oTbl, Seq("l_orderkey"), 8)
-    // force sort-merge (the shape that matters at 100 TB, where neither
-    // side broadcasts) — bucketing then removes both join exchanges
-    operators.Layout.readTable(s, liTbl).hint("merge")
-      .join(operators.Layout.readTable(s, oTbl), Seq("l_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Multimodal frame sampling: 1→N posexplode of content-derived frame
-    * fingerprints per document payload (the real sampler swaps the fake
-    * md5 frames for codec output at the same column contract). md5 exists
-    * in both engines, so even the fake frames are oracle-checkable. */
-  private def q72_multimodal_frames(s: SparkSession, dir: String): DataFrame = {
-    val packed = t(s, dir, "documents")
-      .filter(col("doc_id") < 200)
-      .withColumn("payload", encode(col("text"), "UTF-8"))
-    Multimodal.sampleFrames(packed, "payload", n = 3)
-      .select(col("doc_id"), col("frame_idx").cast("long").as("frame_idx"),
-        col("frame_fingerprint"))
-      .orderBy(col("doc_id"), col("frame_idx"))
-  }
-
-  /** Regex surface: capture-group extraction, rlike predicate, match
-    * counting over the part names. */
-  private def q73_regex(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(col("p_partkey"),
-        regexp_extract(col("p_name"), "^(\\w+)\\s+(\\w+)", 1).as("w1"),
-        regexp_extract(col("p_name"), "^(\\w+)\\s+(\\w+)", 2).as("w2"),
-        col("p_name").rlike("(gear|widget)").as("is_mech"),
-        regexp_count(col("p_name"), lit("[aeiou]")).cast("long").as("n_vowels"))
-      .orderBy(col("p_partkey"))
-
-  /** Document chunking for training pipelines: overlapping token windows
-    * (size 32, stride 24) as 1→N rows with chunk index, token count, and
-    * reassembled text — the standard long-document → context-window prep. */
-  private def q74_chunking(s: SparkSession, dir: String): DataFrame = {
-    val size32 = 32
-    val stride = 24
-    parallelize(t(s, dir, "documents"))
-      .withColumn("toks", TextFunctions.tokens(col("text")))
-      .withColumn("n", size(col("toks")))
-      .filter(col("n") > 0)
-      .withColumn("n_chunks",
-        (lit(1) + ceil(greatest(lit(0), col("n") - size32).cast("double") / stride))
-          .cast("int"))
-      .select(col("doc_id"), col("toks"), col("n"),
-        explode(sequence(lit(0), col("n_chunks") - 1)).as("chunk_idx"))
-      .withColumn("start", col("chunk_idx") * stride + 1)
-      .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-        least(lit(size32), col("n") - col("start") + 1).cast("long").as("n_tokens"),
-        concat_ws(" ", slice(col("toks"), col("start"), lit(size32))).as("chunk_text"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
-  }
-
-  /** Element-wise mean embedding per label (vector aggregate): posexplode
-    * to (label, dim, v) rows, partial+final avg per lane — the shuffle
-    * moves per-dimension partial sums, never whole vectors. */
-  private def q75_vector_mean(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy(col("label"), col("dim"))
-      .agg(round(avg(col("v").cast("double")), 5).as("mean_v"))
-      .select(col("label"), col("dim").cast("long").as("dim"), col("mean_v"))
-      .orderBy(col("label"), col("dim"))
-
-  /** explode_outer null-row semantics: documents with no tokens survive
-    * the 1→N expansion as a single null-token row (explode would drop
-    * them — the outer variant is what a lossless pipeline audit needs). */
-  private def q76_explode_outer(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .filter(col("doc_id") < 100)
-      .select(col("doc_id"),
-        explode_outer(TextFunctions.tokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("token").isNull.cast("long")).as("n_null"))
-      .orderBy(col("doc_id"))
-
-  /** Higher-order array functions as the user surface: transform, filter,
-    * exists, aggregate over the token array. */
-  private def q77_array_hof(s: SparkSession, dir: String): DataFrame = {
-    val toks = TextFunctions.tokens(col("text"))
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"), toks.as("toks"))
-      .select(col("doc_id"),
-        size(filter(col("toks"), t => length(t) >= 5)).cast("long").as("n_long"),
-        exists(col("toks"), t => t.rlike("^[0-9]+$")).as("has_number"),
-        aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t)).as("total_chars"),
-        concat_ws(",", slice(transform(col("toks"), t => upper(t)), 1, 2)).as("up2"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Unpivot (wide→long): per-order price/tax-ish measures melted into
-    * (measure, value) rows. */
-  private def q78_unpivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_orderkey") < 50)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        round(col("l_extendedprice"), 2).as("price"),
-        round(col("l_discount"), 2).as("discount"),
-        round(col("l_tax"), 2).as("tax"))
-      .unpivot(
-        Array(col("l_orderkey"), col("l_linenumber"), col("l_partkey")),
-        Array(col("price"), col("discount"), col("tax")),
-        "measure", "value")
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("measure"), col("value"))
-
-  /** FILTER-clause aggregates + conditional distinct counting. */
-  private def q79_filtered_agg(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders_q79")
-    s.sql(
-      """SELECT o_orderstatus,
-        | count(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-        | round(sum(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'), 2)
-        |   AS urgent_total,
-        | count(DISTINCT CASE WHEN o_totalprice > 150000 THEN o_custkey END)
-        |   AS n_big_custs
-        |FROM orders_q79
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-  }
-
-  /** argmax/argmin aggregates: the order row per extreme value, without a
-    * self-join or window (tie-broken by max/min orderkey for determinism). */
-  private def q80_max_by(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("orders_q80")
-    // ordering key = exact integer composite (2-decimal price in cents,
-    // orderkey tiebreak) so both engines pick the same row on price ties
-    s.sql(
-      """SELECT o_orderpriority,
-        | max_by(o_orderkey,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) * 10000000 + o_orderkey)
-        |   AS priciest_order,
-        | min_by(o_orderkey,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) * 10000000 + o_orderkey)
-        |   AS cheapest_order,
-        | round(max(o_totalprice), 2) AS max_price
-        |FROM orders_q80
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-  }
-
-  /** Deterministic string aggregation: sorted distinct values joined into
-    * one list column per group. */
-  private def q81_string_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        concat_ws(",", sort_array(collect_set(col("l_linestatus")))).as("statuses"),
-        concat_ws("|", sort_array(collect_set(
-          year(col("l_shipdate")).cast("string")))).as("ship_years"))
-      .orderBy(col("l_returnflag"))
-
-  /** Bitwise and boolean aggregates per group. */
-  private def q82_bit_bool_agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        bit_or(col("l_suppkey")).as("suppkey_or"),
-        bit_and(col("l_suppkey")).as("suppkey_and"),
-        bit_xor(col("l_orderkey")).as("orderkey_xor"),
-        every(col("l_quantity") > 0).as("all_positive"),
-        some(col("l_discount") > 0.09).as("any_high_disc"))
-      .orderBy(col("l_returnflag"))
-
-  /** Histogram binning: fixed-width price buckets via floor division —
-    * exact integer arithmetic on both engines, no width_bucket needed. */
-  private def q83_histogram(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .withColumn("bucket",
-        floor(col("o_totalprice") / 50000).cast("long"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        round(min(col("o_totalprice")), 2).as("lo"),
-        round(max(col("o_totalprice")), 2).as("hi"))
-      .orderBy(col("bucket"))
-
-  /** Nested struct building + field access + struct equality grouping. */
-  private def q84_struct_fns(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .withColumn("who", struct(
-        col("c_nationkey").as("nation"),
-        struct(col("c_mktsegment").as("segment"),
-          (col("c_acctbal") > 0).as("solvent")).as("profile")))
-      .groupBy(col("who.nation").as("nation"),
-        col("who.profile.segment").as("segment"),
-        col("who.profile.solvent").as("solvent"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("nation"), col("segment"), col("solvent"))
-
-  /** Discrete percentiles: the quantile is an actual data element (no
-    * interpolation), so cross-engine float drift cannot exist. */
-  private def q85_percentile_disc(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem_q85")
-    s.sql(
-      """SELECT l_returnflag,
-        | round(percentile_disc(0.25) WITHIN GROUP (ORDER BY l_extendedprice), 2)
-        |   AS p25,
-        | round(percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice), 2)
-        |   AS p50,
-        | round(percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice), 2)
-        |   AS p90
-        |FROM lineitem_q85
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-  }
-
-  /** Near-dup cluster resolution: the exact Jaccard pair set (q50's
-    * operator) fed through connected components (alternating
-    * large-star/small-star joins) — one row per member doc with its
-    * canonical cluster id and survivor flag. Oracle: a DuckDB recursive-CTE
-    * transitive closure over the identical pair set, so the component
-    * structure is hash-checked end to end. */
-  private def q86_cluster_resolve(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.jaccardSelfJoin(parallelize(t(s, dir, "documents")),
-      "text", "doc_id", shingleK = 3, threshold = 0.6)
-    Dedup.resolveClusters(pairs)
-      .select(col("id"), col("cluster_id"), col("keep"))
-      .orderBy(col("id"))
-  }
-
-  /** The full dedup decision, end to end: near-dup pairs (exact Jaccard) →
-    * connected components → drop every non-canonical cluster member — the
-    * `pairs → clusters → keep one` pipeline a production corpus dedup
-    * actually ships. Oracle: DuckDB recursive-CTE closure to find the
-    * losers, anti-joined against the corpus. */
-  private def q87_dedup_pipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val pairs = Dedup.jaccardSelfJoin(docs, "text", "doc_id",
-      shingleK = 3, threshold = 0.6)
-    Dedup.keepRepresentatives(docs, pairs, "doc_id")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Gopher-style 2-gram repetition filter scores over the corpus
-    * (dup-occurrence and top-gram fractions) — the standard boilerplate/
-    * spam signal a curation pipeline thresholds on. */
-  private def q88_repetition_scores(s: SparkSession, dir: String): DataFrame =
-    operators.TextProfile.repetitionScores(
-        parallelize(t(s, dir, "documents")), "text", "doc_id", n = 2)
-      .orderBy(col("doc_id"))
-
-  /** Benchmark decontamination: training docs sharing any distinct word
-    * 4-gram with the held-out eval slice (doc_id % 100 == 7), with the
-    * shared-gram count — the pre-training contamination sweep. */
-  private def q89_decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val isEval = pmod(col("doc_id"), lit(100)) === 7
-    operators.TextProfile.contaminationReport(
-        docs.filter(!isEval), docs.filter(isEval), "text", "doc_id", n = 4)
-      .orderBy(col("doc_id"))
-  }
-
-  // ---------------------------------------------------------------------
-  // Corpus curation: sampling, data mixing, PII, quality filtering
-  // ---------------------------------------------------------------------
-
-  /** Stratified deterministic sampling by language: per-stratum keep rates
-    * on an md5-hex threshold — a pure filter (no shuffle, no RNG state),
-    * reproducible across runs/cluster sizes, unlike `df.sample`. Oracle runs
-    * the identical hash threshold in DuckDB, so the exact row set matches.
-    * The `es` stratum runs at rate 1.0 to keep the sorts-above-all-hex
-    * threshold edge (binding-mixing-stratum path) under the driver gate. */
-  private def q90_stratified_sample(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.stratifiedSample(t(s, dir, "documents"), "lang",
-        Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.1, "es" -> 1.0),
-        defaultRate = 0.05)
-      .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy(col("doc_id"))
-
-  /** Exactly-k-per-group deterministic sample (distributed reservoir):
-    * 20 docs per language, ranked by the uniform sample key. */
-  private def q91_group_sample(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.samplePerGroup(t(s, dir, "documents"), "lang", "doc_id", 20)
-      .select(col("doc_id"), col("lang"), col("sample_rank"))
-      .orderBy(col("lang"), col("sample_rank"))
-
-  /** PII scrub: plant a deterministic email/IP/phone suffix per doc (so the
-    * check exercises real replacements, not a no-op), then count and redact
-    * stage-wise. The redacted text is hash-compared via md5. */
-  private def q92_pii_redact(s: SparkSession, dir: String): DataFrame = {
-    val planted = concat(coalesce(col("text"), lit("")),
-      lit(" contact user"), col("doc_id").cast("string"),
-      lit("@example.com or 10."),
-      pmod(col("doc_id"), lit(256)).cast("string"),
-      lit(".0.1 tel +1415555"),
-      lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"))
-    parallelize(t(s, dir, "documents"))
-      .withColumn("__p", planted)
-      .withColumn("__c", TextFunctions.piiCounts(col("__p")))
-      .select(col("doc_id"),
-        col("__c.n_emails").cast("long").as("n_emails"),
-        col("__c.n_ips").cast("long").as("n_ips"),
-        col("__c.n_phones").cast("long").as("n_phones"),
-        md5(TextFunctions.redactPii(col("__p"))).as("red_fp"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Quality-percentile curation: keep the top half of each language by the
-    * Gopher-ish quality score (deterministic doc_id tiebreak). */
-  private def q93_quality_filter(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.topFractionPerGroup(
-        parallelize(t(s, dir, "documents"))
-          .withColumn("quality", TextFunctions.qualityScore(col("text"))),
-        "lang", "quality", 0.5, "doc_id")
-      .select(col("doc_id"), col("lang"), col("quality"))
-      .orderBy(col("doc_id"))
-
-  /** Data-mixing rates: per-language keep rates that hit a target mix
-    * (en .4 / de .2 / fr .2 / es .1 / zh .1) without over-sampling any
-    * stratum — the planning step before [[q90_stratified_sample]]'s filter. */
-  private def q94_mixing_rates(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.mixingRates(t(s, dir, "documents"), "lang",
-        Map("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1, "zh" -> 0.1))
-      .orderBy(col("stratum"))
-
-  /** Exact mix materialization — the q94 plan executed: per-stratum quotas
-    * from [[q94_mixing_rates]]' targets, realized to the row via rank +
-    * broadcast-joined quota (the |strata|-row plan frame never shuffles the
-    * corpus). Realized counts equal `sample_n` exactly, making mixing-plan
-    * drift driver-visible end to end. */
-  private def q95_materialize_mix(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.materializeMix(t(s, dir, "documents"), "lang",
-        Map("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1, "zh" -> 0.1))
-      .select(col("doc_id"), col("lang"), col("sample_rank"))
-      .orderBy(col("doc_id"))
-
-  /** End-to-end curation pipeline — the flagship composition a
-    * training-data team actually ships: the FULL Gopher A1 gate (both
-    * published halves — the repetition keep rule, plus the structural
-    * quality rule at [[fixtureQualityBounds]], the corpus-policy
-    * parameterization a synthetic/multilingual corpus needs — the
-    * quality failures the composite score's length/punctuation signals
-    * cannot see), per-language quality gating (top half), exact dedup
-    * to min-id representatives, benchmark decontamination against the
-    * eval slice, exact mix materialization, then the FINAL
-    * MATERIALIZATION pair every published pipeline applies at
-    * training-set write time (the Dolma posture): CDC keep-first block
-    * dedup over the selected set (q186's tier) and PII redaction on the
-    * rebuilt text (q92's chain), md5-pinned. Every stage is the
-    * operator its standalone query exercises (q162/q166/q93/q28/q89/
-    * q95/q186/q92); what this query gates is the COMPOSITION,
-    * oracle-checked as the same CTE chain. Scale shape: both A1 gates
-    * are pure maps over
-    * the scan (no shuffle — Probe `repfilter` prices the pair at
-    * 2.95 + 1.80 s per 500k docs), the quality window shuffles once
-    * per language, dedup shuffles (fingerprint, id) pairs,
-    * decontamination ships only (id, gram) pairs semi-joined against
-    * the broadcastable eval-gram set, the mix join broadcasts a
-    * |strata|-row quota frame, the CDC pass exchanges one (fp, id, len)
-    * key per ~64-char block of the SELECTED set only, and redaction is
-    * a scan-speed regex map — no stage widens at 100 TB. The eval
-    * slice for decontamination is drawn from the RAW docs: a benchmark
-    * document is a leak source whatever its repetition profile. */
-  private def q96_curation_pipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val qualified = operators.Curate.topFractionPerGroup(
-      docs.filter(TextFunctions.gopherRepetitionKeep(col("text")) &&
-          TextFunctions.gopherQualityKeep(col("text"), fixtureQualityBounds))
-        .withColumn("quality", TextFunctions.qualityScore(col("text"))),
-      "lang", "quality", 0.5, "doc_id")
-    val deduped = Dedup.exact(qualified, "text", "doc_id")
-    val isEval = pmod(col("doc_id"), lit(100)) === 7
-    val train = deduped.filter(!isEval)
-    val contaminated = operators.TextProfile.contaminationReport(
-        train, docs.filter(isEval), "text", "doc_id", n = 4)
-      .select(col("doc_id"))
-    val clean = train.join(contaminated, Seq("doc_id"), "left_anti")
-    // PERSIST the selected set: it is read three times below — the strip
-    // tier's chunk pass, the strip tier's rebuild join (both inside
-    // stripDuplicateBlocks, which references its input twice by
-    // contract), and the final column re-attach. Without the persist the
-    // whole selection upstream (quality gates, exact dedup,
-    // decontamination's n-gram join, mix materialization) re-executes
-    // per reference — measured 2.1× on the r18 baseline bench when the
-    // final-materialization pair landed.
-    val mixed = operators.OpCache.track(
-      operators.Curate.materializeMix(clean, "lang",
-          Map("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1, "zh" -> 0.1))
-        .select(col("doc_id"), col("lang"), col("quality"), col("sample_rank"))
-        .persist())
-    // FINAL MATERIALIZATION (the Dolma posture: masking/boilerplate
-    // removal happen when the training set is written, after selection):
-    // CDC keep-first block dedup over the SELECTED set — the block-level
-    // boilerplate the line/span tiers mis-align on (q186's tier, wired) —
-    // then PII redaction on the rebuilt text (q92's chain, wired; this
-    // corpus plants no PII, so n_pii pins the chain at zero — the
-    // decorated both-directions gate is q92's). clean_fp hashes the
-    // final redacted text, so ANY drift in cut rule, keep rule, rebuild,
-    // or redaction order fails the oracle.
-    val withText = mixed
-      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-    val stripped = Dedup.stripDuplicateBlocks(withText, "text", "doc_id")
-    mixed.join(stripped, Seq("doc_id"))
-      .withColumn("__c", TextFunctions.piiCounts(col("text_clean")))
-      .select(col("doc_id"), col("lang"), col("quality"), col("sample_rank"),
-        col("n_chunks"), col("n_kept"),
-        (col("__c.n_emails") + col("__c.n_ips") + col("__c.n_phones"))
-          .cast("long").as("n_pii"),
-        md5(TextFunctions.redactPii(col("text_clean"))).as("clean_fp"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Sequence packing (concatenation-offset bins): every doc is assigned
-    * the training bin its first token lands in, per id-mod shard — the
-    * concatenate-then-cut layout of packed pre-training datasets. Window
-    * partitioned by shard, so no global sort at any corpus size
-    * (Curate.packSequences). */
-  private def q97_pack_sequences(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
-    operators.Curate.packSequences(docs, "doc_id", "n_tokens",
-        budget = 2048L, shards = 8)
-      .select(col("doc_id"), col("n_tokens"), col("shard"), col("bin"),
-        col("bin_offset"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Exact top-quality selection under a global token budget, decomposed
-    * by quality level so wholly-fitting levels never touch a per-doc
-    * window (Curate.selectByTokenBudget). The oracle runs the semantic
-    * definition — a global (quality DESC, doc_id) running-sum cutoff —
-    * so the plan decomposition is verified equivalent, not assumed. */
-  private def q98_token_budget(s: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    val docs = parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        TextFunctions.qualityScore(txt).as("quality"),
-        TextFunctions.tokenCount(txt).cast("long").as("n_tokens"))
-    operators.Curate.selectByTokenBudget(docs, "quality", "n_tokens",
-        "doc_id", budget = 8000L)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Real-image decode under the driver gate: deterministic PNGs (built
-    * with the JDK encoder at plan-build time) flow through the batched
-    * decode path alongside a non-image payload; the verdict rows pin
-    * that every decoded dimension matches its constructed size and that
-    * the fallback stays in the stub's range. The oracle pins the
-    * expected verdict literally (javax.imageio has no DuckDB twin), so a
-    * decode regression flips `ok` and hash-mismatches — the q33
-    * accuracy-gate pattern applied to multimodal. */
-  private def q99_multimodal_decode(s: SparkSession, dir: String): DataFrame = {
-    def png(w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) { img.setRGB(x, y, (x * 31 + y * 7) & 0xFFFFFF); y += 1 }
-        x += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      // a missing PNG writer must fail HERE, not surface later as a
-      // misattributed decode-regression verdict
-      require(javax.imageio.ImageIO.write(img, "png", bos),
-        "no PNG ImageWriter registered on this JVM")
-      bos.toByteArray
-    }
-    import s.implicits._
-    val media = Seq(
-      (1L, png(2, 2), 2L, 2L),
-      (2L, png(640, 480), 640L, 480L),
-      (3L, png(31, 17), 31L, 17L),
-      (4L, "definitely not an image".getBytes("UTF-8"), -1L, -1L))
-      .toDF("id", "payload", "want_w", "want_h")
-    val decoded = operators.Multimodal.decodeBatched(media, "payload")
-      .select(col("id"), col("want_w"), col("want_h"),
-        col("decoded.width").as("w"), col("decoded.height").as("h"))
-    val verdict = decoded.agg(
-      sum(when(col("want_w") > 0 &&
-        col("w") === col("want_w") && col("h") === col("want_h"), 1L)
-        .otherwise(0L)).as("n_decoded"),
-      sum(when(col("want_w") < 0 &&
-        col("w").between(1L, 1920L) && col("h").between(1L, 1080L), 1L)
-        .otherwise(0L)).as("n_fallback"))
-    verdict.select(explode(array(
-        struct(lit("imageio_decode_dims").as("metric"),
-          lit(3.0).as("bound"), (col("n_decoded") === 3L).as("ok")),
-        struct(lit("fallback_in_stub_range").as("metric"),
-          lit(1.0).as("bound"), (col("n_fallback") === 1L).as("ok")))))
-      .select(col("col.metric").as("metric"), col("col.bound").as("bound"),
-        col("col.ok").as("ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** REAL image resize under the q99 accuracy-gate pattern
-    * ([[operators.Multimodal.resizeBatched]] — aspect-preserving
-    * BufferedImage rescale, FORMAT-PRESERVING re-encode, batched codec
-    * contract): the verdict pins (a) rescaled payloads RE-DECODE to
-    * exactly the floor-scaled dims, (b) an in-bounds image passes
-    * through byte-identical, (c) a non-image passes through unapplied,
-    * (d) the decompression-bomb guard refuses to allocate pixels over
-    * the budget, and (e, r15) a JPEG input comes back with the JPEG
-    * magic AND smaller than its input — the storage contract a 100 TB
-    * photographic corpus needs (a PNG re-encode of a downscaled JPEG is
-    * typically LARGER than the original). The oracle pins the verdict
-    * rows literally (java.awt has no DuckDB twin). */
-  private def q159_multimodal_resize(s: SparkSession, dir: String): DataFrame = {
-    def png(w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) { img.setRGB(x, y, (x * 31 + y * 7) & 0xFFFFFF); y += 1 }
-        x += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      require(javax.imageio.ImageIO.write(img, "png", bos),
-        "no PNG ImageWriter registered on this JVM")
-      bos.toByteArray
-    }
-    import s.implicits._
-    def jpeg(w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var x = 0
-      while (x < w) {
-        var y = 0
-        while (y < h) { img.setRGB(x, y, (x * 31 + y * 7) & 0xFFFFFF); y += 1 }
-        x += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      require(javax.imageio.ImageIO.write(img, "jpg", bos),
-        "no JPEG ImageWriter registered on this JVM")
-      bos.toByteArray
-    }
-    val small = png(10, 6)
-    val media = Seq(
-      (1L, png(100, 40), 32L, 12L),  // downscale, landscape
-      (2L, png(30, 80), 12L, 32L),   // downscale, portrait
-      (3L, small, 10L, 6L),          // in-bounds: byte-identical
-      (4L, "definitely not an image".getBytes("UTF-8"), -1L, -1L),
-      (5L, jpeg(200, 100), 32L, 16L)) // downscale, FORMAT-PRESERVING
-      .toDF("id", "payload", "want_w", "want_h")
-    val out = operators.Multimodal.resizeBatched(media, "payload",
-      maxW = 32, maxH = 32)
-    // format preservation is a claim about the BYTES: the resized JPEG
-    // payload must carry the JPEG magic (not PNG's) and, being a
-    // downscaled re-encode of a photographic-ish gradient, be SMALLER
-    // than its input — the storage contract a 100 TB image corpus needs
-    val jrow = out.filter(col("id") === 5L)
-      .select(col("resized.payload"), col("payload")).head()
-    val (jres, jorig) =
-      (jrow.getAs[Array[Byte]](0), jrow.getAs[Array[Byte]](1))
-    val jpegStaysJpeg = jres != null && jres.length >= 3 &&
-      jres(0) == 0xFF.toByte && jres(1) == 0xD8.toByte &&
-      jres(2) == 0xFF.toByte
-    val jpegSmaller = jres != null && jres.length < jorig.length
-    // re-decode the rewritten payloads: the claim is about the BYTES,
-    // not the metadata — a resize that lies about dims must fail here
-    val redecoded = operators.Multimodal.decodeBatched(
-      out.select(col("id"), col("want_w"), col("want_h"),
-        col("resized.applied").as("applied"),
-        when(col("resized.applied"), col("resized.payload"))
-          .otherwise(col("payload")).as("payload"),
-        (col("resized.payload") === col("payload")).as("same_bytes")),
-      "payload")
-    val verdict = redecoded.agg(
-      sum(when(col("want_w") > 0 && col("applied") &&
-        col("decoded.width") === col("want_w") &&
-        col("decoded.height") === col("want_h"), 1L).otherwise(0L))
-        .as("n_scaled"),
-      sum(when(col("id") === 3L && col("same_bytes"), 1L).otherwise(0L))
-        .as("n_identical"),
-      sum(when(col("want_w") < 0 && !col("applied") && col("same_bytes"),
-        1L).otherwise(0L)).as("n_passthrough"))
-    val guarded = operators.Multimodal.resizeBatched(
-        Seq((9L, png(100, 40))).toDF("id", "payload"), "payload",
-        maxW = 32, maxH = 32, maxPixels = 50L)
-      .select(col("resized.applied")).head().getBoolean(0)
-    verdict.select(explode(array(
-        struct(lit("resize_bomb_guard_holds").as("metric"),
-          lit(1.0).as("bound"), lit(!guarded).as("ok")),
-        struct(lit("resize_inbounds_byte_identical").as("metric"),
-          lit(1.0).as("bound"), (col("n_identical") === 1L).as("ok")),
-        struct(lit("resize_jpeg_smaller").as("metric"),
-          lit(1.0).as("bound"), lit(jpegSmaller).as("ok")),
-        struct(lit("resize_jpeg_stays_jpeg").as("metric"),
-          lit(1.0).as("bound"), lit(jpegStaysJpeg).as("ok")),
-        struct(lit("resize_nonimage_passthrough").as("metric"),
-          lit(1.0).as("bound"), (col("n_passthrough") === 1L).as("ok")),
-        struct(lit("resize_redecoded_dims").as("metric"),
-          lit(4.0).as("bound"), (col("n_scaled") === 4L).as("ok")))))
-      .select(col("col.metric").as("metric"), col("col.bound").as("bound"),
-        col("col.ok").as("ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** C4-style duplicate-span removal: every 4-token span occurring twice+
-    * corpus-wide is removed except its first occurrence, and each doc's
-    * text is rebuilt from the surviving spans
-    * (Dedup.removeDuplicateSpans). The oracle groups by span TEXT where
-    * the operator groups by a 2-lane xxhash64 key, so the compare also
-    * certifies the key is collision-free on this corpus. */
-  private def q100_span_dedup(s: SparkSession, dir: String): DataFrame =
-    Dedup.removeDuplicateSpans(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", window = 4, minCount = 2)
-      .orderBy(col("doc_id"))
-
-  /** Incremental ingestion, exact: the stored corpus snapshot is
-    * doc_id % 10 != 0; the incoming crawl batch (doc_id % 10 == 0) is
-    * deduped in-batch, then against the snapshot — only never-seen content
-    * survives. Runs the Bloom pre-filter path (so the codegen'd
-    * might_contain + two-path union + exact anti-join correction is under
-    * the driver gate); the oracle recomputes the definition directly. */
-  private def q101_incremental_dedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val isBatch = pmod(col("doc_id"), lit(10)) === 0
-    val inBatch = Dedup.exact(docs.filter(isBatch), "text", "doc_id")
-    Dedup.dedupAgainst(inBatch, docs.filter(!isBatch), "text", "doc_id",
-        bloomItems = 100000L, bloomFpp = 0.01)
-      .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Incremental ingestion, near-dup: bipartite MinHash+LSH banding of the
-    * crawl batch against the stored snapshot (no self-pairs on either
-    * side), exact-Jaccard verified — the pairs a pipeline uses to drop
-    * batch docs that near-duplicate stored content. Bounded to
-    * doc_id < 2000 like q32 so the oracle's bipartite exact join stays
-    * cheap at every SF; scale evidence lives with the operator (slim
-    * banding, SURVEY §6). */
-  private def q102_incremental_neardup(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents").filter(col("doc_id") < 2000))
-    val isBatch = pmod(col("doc_id"), lit(10)) === 0
-    val cands = Dedup.minhashLshAgainst(docs.filter(isBatch),
-        docs.filter(!isBatch), "text", "doc_id",
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
-    Dedup.ngramJaccard(docs, cands, "text", "doc_id", shingleK = 3)
-      .filter(col("jaccard") >= 0.8)
-      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
-        round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("batch_id"), col("corpus_id"))
-  }
-
-  /** CCNet-style LM quality score: an add-one bigram model trained on the
-    * English slice scores every document's cross-entropy/perplexity —
-    * the standard head/middle/tail quality dial. The oracle recomputes
-    * the smoothed model and both scores from the definition. */
-  private def q103_perplexity(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    operators.TextProfile.bigramPerplexity(
-        docs, docs.filter(col("lang") === "en"), "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** BM25 relevance ranking for a literal query — the retrieval sweep a
-    * curation pipeline runs for corpus audits and targeted
-    * decontamination. Scores ordered by doc for a deterministic hash;
-    * ranking is the score column. */
-  private def q104_bm25(s: SparkSession, dir: String): DataFrame =
-    operators.Rank.bm25(parallelize(t(s, dir, "documents")), "text", "doc_id",
-        Seq("spark", "data", "query"))
-      .orderBy(col("doc_id"))
-
-  /** ORC sink + source round-trip over supplier (completes the columnar
-    * connector pair next to parquet; CSV/JSON cover the text formats in
-    * q54/q55). Written with an explicit read schema and aggregated — the
-    * result must equal the oracle's direct-parquet aggregate, proving the
-    * round-trip lossless for longs/doubles/strings. */
-  private def q105_orc_roundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = roundTripDir("graft_q105_orc")
-    t(s, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
-      .write.mode("overwrite").orc(tmp)
-    s.read
-      .schema("s_suppkey BIGINT, s_nationkey INT, s_acctbal DOUBLE")
-      .orc(tmp)
-      .groupBy(col("s_nationkey"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("s_acctbal")), 2).as("total_bal"),
-        min(col("s_suppkey")).as("min_key"),
-        max(col("s_suppkey")).as("max_key"))
-      .orderBy(col("s_nationkey"))
-  }
-
-  /** CCNet-style normalization (lowercase → NFKD accent strip → whitespace
-    * collapse) via the native codegen `normalize_text` expression — the
-    * standard dedup-preprocessing transform (Wenzek et al. 2020). The
-    * fixture is ASCII so the oracle's `strip_accents` agrees exactly; the
-    * unicode edges (accent strip, compatibility folds, combining marks)
-    * are pinned in ExpressionsSpec. */
-  private def q106_normalize_text(s: SparkSession, dir: String): DataFrame =
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        TextFunctions.normalizeText(col("text")).as("norm_text"))
-      .withColumn("n_chars_norm", length(col("norm_text")).cast("long"))
-      .orderBy(col("doc_id"))
-
-  /** Hybrid retrieval: a lexical BM25 top-50 and a dense cosine top-50
-    * (query = the vec_id-0 embedding) fused by reciprocal-rank fusion
-    * (k=60) — the standard two-retriever RAG-prep consensus, fused on
-    * ranks so no score calibration is needed. Both lists rank on
-    * round-4 scores with id tiebreaks (the q34 convention) so the two
-    * engines can never disagree on a rank. Both top-50s take the q111
-    * shape — orderBy+limit (TakeOrderedAndProject) FIRST, then
-    * row_number over the 50 survivors — never a partition-less window
-    * over the whole corpus; the ordering is total, so the results are
-    * identical. */
-  private def q107_rrf_fusion(s: SparkSession, dir: String): DataFrame = {
-    val sw = Window.orderBy(col("score").desc, col("doc_id"))
-    val sparse = operators.Rank.bm25(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", Seq("spark", "data", "query"))
-      .orderBy(col("score").desc, col("doc_id")).limit(50)
-      .withColumn("rank", row_number().over(sw))
-      .select(col("doc_id").as("id"), col("rank"))
-    val e = t(s, dir, "embeddings")
-    val q0 = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val dw = Window.orderBy(col("cos_r").desc, col("id"))
-    val dense = e.filter(col("vec_id") =!= 0)
-      .join(broadcast(q0))
-      .select(col("vec_id").as("id"),
-        round(VectorFunctions.cosine(col("qv"), col("embedding")), 4).as("cos_r"))
-      .orderBy(col("cos_r").desc, col("id")).limit(50)
-      .withColumn("rank", row_number().over(dw))
-      .select(col("id"), col("rank"))
-    operators.Rank.rrfFuse(Seq(sparse, dense), "id")
-      .select(col("id"), round(col("rrf"), 6).as("rrf"))
-      .orderBy(col("rrf").desc, col("id"))
-      .limit(20)
-  }
-
-  /** SemDeDup accuracy gate (q33/q37/q60 pattern): cluster-then-compare
-    * semantic dedup is verified in-plan against the exact all-pairs
-    * threshold graph at the same tau. Recall < 1 is the paper's own
-    * approximation (cross-cluster duplicates are never compared);
-    * spurious drops must be structurally zero (the sem pair graph is a
-    * subgraph of the exact graph, so a doc dropped by sem is non-minimal
-    * in its exact component too). The oracle pins the verdict rows. */
-  private def q108_semdedup(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val sem = Dedup.semDedupPairs(e, "embedding", "vec_id", k = 8, tau = 0.45)
-      .select(col("id_a"), col("id_b"))
-    val exact = Dedup.embeddingNearDup(e, "embedding", "vec_id",
-        threshold = 0.45, nBits = 0)
-      .select(col("id_a"), col("id_b"))
-    // the two connected-components resolutions (approximate and exact
-    // tier) are independent eager loops — overlap them (guide §2.6 via
-    // Par, the q157 note)
-    val (semResolved, exactResolved) = operators.Par.par2(
-      Dedup.resolveClusters(sem), Dedup.resolveClusters(exact))
-    // lazily persisted: recall AND spurious-drop rows both read these
-    // (persist, not the RDD materialize — see q118's note)
-    val semDropped = operators.OpCache.track(semResolved
-      .filter(!col("keep")).select(col("id")).persist())
-    val exactDropped = operators.OpCache.track(exactResolved
-      .filter(!col("keep")).select(col("id")).persist())
-    val recall = exactDropped
-      .join(semDropped.withColumn("hit", lit(1)), Seq("id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("v"))
-      .select(lit("semdedup_recall_of_exact").as("metric"),
-        lit(0.5).as("bound"),
-        // empty exact-dup set would make recall NULL; surface false
-        coalesce(col("v") >= 0.5, lit(false)).as("ok"))
-    val spurious = semDropped.join(exactDropped, Seq("id"), "left_anti")
-      .agg(count(lit(1)).as("n"))
-      .select(lit("semdedup_spurious_drops").as("metric"),
-        lit(0.0).as("bound"), (col("n") === 0).as("ok"))
-    recall.unionByName(spurious).orderBy(col("metric"))
-  }
-
-  /** fastText-style hashed linear quality classifier (Joulin et al. 2016):
-    * unigram+bigram features → closed-form hashed weights → mean →
-    * sigmoid, fused into ONE codegen'd pass by the native
-    * `hashed_ngram_score` expression (no per-feature array, no HOF
-    * lambda). The oracle recomputes the identical arithmetic from the
-    * definition. Blank documents have no features → NULL score/accept. */
-  private def q109_hash_classifier(s: SparkSession, dir: String): DataFrame = {
-    val toks = TextFunctions.tokens(col("text"))
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        greatest(size(toks) * 2 - 1, lit(0)).cast("long").as("n_feats"),
-        round(TextFunctions.hashedQualityScore(col("text")), 4).as("score"))
-      .withColumn("accept", col("score") >= 0.5)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Temperature-based mixing rates over the (skewed) language strata —
-    * T = 2 upweights rare languages toward (not to) uniform, the standard
-    * multilingual rebalancing rule. The binding stratum samples at 1.0. */
-  private def q110_temperature_mix(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.temperatureRates(t(s, dir, "documents"), "lang",
-        temperature = 2.0)
-      .orderBy(col("stratum"))
-
-  /** Vocabulary coverage: the top-30 tokens by corpus frequency with each
-    * prefix's cumulative share of all token occurrences — the statistic
-    * behind vocabulary-size/tokenizer decisions (how much of the corpus
-    * do the k most frequent words cover). Top-30 via TakeOrdered (never a
-    * full-vocab single-partition window); the cumulative sum then runs
-    * over 30 rows. */
-  private def q111_vocab_coverage(s: SparkSession, dir: String): DataFrame = {
-    val counts = parallelize(t(s, dir, "documents"))
-      .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-    val total = counts.agg(sum(col("n")).cast("double").as("tot"))
-    val w = Window.orderBy(col("n").desc, col("tok"))
-    counts
-      .orderBy(col("n").desc, col("tok")).limit(30)
-      .withColumn("rank", row_number().over(w))
-      .crossJoin(broadcast(total))
-      .withColumn("cum_share", round(
-        sum(col("n")).over(w.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)) / col("tot"), 6))
-      .select(col("tok"), col("n"), col("rank"), col("cum_share"))
-      .orderBy(col("rank"))
-  }
-
-  /** Product-quantization accuracy gate (q33/q60/q108 pattern): 64-dim
-    * embeddings compress to m=16 4-bit codes (32× smaller than float32 —
-    * measured fixture: mean reconstruction cosine 0.815, ADC recall@10
-    * 0.32–0.44);
-    * the verdict verifies reconstruction quality and ADC top-10 recall
-    * against exact brute-force cosine, in-plan. The oracle pins the
-    * verdict rows. */
-  private def q112_pq_ann(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val (m, subDim) = (16, 4)
-    val cb = operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-      dim = 64, m = m, ksub = 16)
-    // lazily persisted: the reconstruction gate AND the ADC recall gate
-    // both read the codes — encode once, not per verdict row (persist,
-    // not the RDD materialize — see q118's note)
-    val codes = operators.OpCache.track(
-      operators.Quantize.encode(e, cb, "embedding", "vec_id", m, subDim)
-        .persist())
-    val rec = operators.Quantize.decode(codes, cb, "recv", "vec_id")
-      .join(e, Seq("vec_id"))
-      .agg(avg(VectorFunctions.cosine(col("recv"), col("embedding"))).as("v"))
-      .select(lit("pq_reconstruction_mean_cosine").as("metric"),
-        lit(0.7).as("bound"), coalesce(col("v") >= 0.7, lit(false)).as("ok"))
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-    val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id",
-        k = 10)
-      .select(col("query_id"), col("corpus_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("corpus_id"))
-    val approx = operators.Quantize.pqScores(codes, cb, queries,
-        "embedding", "vec_id", m, subDim)
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    val rc = exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("v"))
-      .select(lit("pq_recall_at_10").as("metric"), lit(0.2).as("bound"),
-        coalesce(col("v") >= 0.2, lit(false)).as("ok"))
-    rec.unionByName(rc).orderBy(col("metric"))
-  }
-
-  /** IVF-PQ composed ANN gate: coarse cells prune the scan, product codes
-    * score it — the at-scale shape where raw vectors are never read at
-    * query time. Recall compounds both approximations; verdict vs exact
-    * brute force, oracle pins the row. */
-  private def q113_ivfpq_ann(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val (m, subDim) = (16, 4)
-    val cents = Similarity.trainCentroids(e, "embedding", "vec_id", k = 10)
-    val cb = operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-      dim = 64, m = m, ksub = 16)
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-    val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id",
-        k = 10)
-      .select(col("query_id"), col("corpus_id"))
-    val approx = operators.Quantize.ivfPqTopK(e, queries, cents, cb,
-        "embedding", "vec_id", m, subDim, k = 10, nProbe = 3)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("v"))
-      .select(lit("ivfpq_recall_at_10").as("metric"), lit(0.15).as("bound"),
-        coalesce(col("v") >= 0.15, lit(false)).as("ok"))
-  }
-
-  /** Deterministic contrastive negative sampling: every 50th document
-    * anchors 3 pseudo-random negatives via md5-prefix bucket draws —
-    * reproducible on any cluster, no RNG state, oracle recomputes the
-    * identical draws from the definition. */
-  private def q114_negative_sampling(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    operators.Curate.sampleNegatives(docs, "doc_id",
-        docs.filter(pmod(col("doc_id"), lit(50)) === 0), k = 3)
-      .orderBy(col("anchor_id"), col("neg_rank"))
-  }
-
-  /** Symmetric per-vector int8 quantization (the 4× embedding-store
-    * compression tier next to q112's 32× PQ): codes, scale, and the
-    * reconstruction cosine are exact integer/double arithmetic both
-    * engines reproduce bit-for-bit — oracle-checked, not verdict-gated. */
-  private def q115_int8_quantize(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val scale = operators.Quantize.int8Scale(col("embedding"))
-    val codes = operators.Quantize.int8Codes(col("embedding"))
-    e.select(col("vec_id"), col("embedding"), scale.as("scale"),
-        codes.as("codes"))
-      .select(col("vec_id"), round(col("scale"), 6).as("scale_r"),
-        array_max(col("codes")).as("max_code"),
-        array_min(col("codes")).as("min_code"),
-        round(VectorFunctions.cosine(
-          operators.Quantize.int8Reconstruct(col("codes"), col("scale")),
-          transform(col("embedding"), x => x.cast("double"))), 4)
-          .as("recon_cos"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** Corpus diversity report: distinct-1/distinct-2 ratios (unique
-    * n-grams / total n-grams, Li et al. 2016's distinct-n) per source —
-    * the metric behind "is this slice templated/repetitive" curation
-    * calls. Shuffles bare (source, gram) pairs; text dies in its scan. */
-  private def q116_distinct_ngrams(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val toks = TextFunctions.tokens(col("text"))
-    val uni = docs.select(col("source"), explode(toks).as("g"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_tok"),
-        countDistinct(col("g")).as("d_tok"))
-    val bi = docs
-      .select(col("source"), toks.as("w"))
-      .select(col("source"), explode(
-        when(size(col("w")) < 2, array().cast("array<string>"))
-          .otherwise(transform(sequence(lit(0), size(col("w")) - 2),
-            i => concat(element_at(col("w"), i + 1), lit(" "),
-              element_at(col("w"), i + 2))))).as("g"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_bi"), countDistinct(col("g")).as("d_bi"))
-    uni.join(bi, Seq("source"), "left_outer")
-      .select(col("source"), col("n_tok"), col("d_tok"),
-        round(col("d_tok").cast("double") / col("n_tok"), 6).as("distinct_1"),
-        coalesce(col("n_bi"), lit(0L)).as("n_bi"),
-        coalesce(col("d_bi"), lit(0L)).as("d_bi"),
-        round(col("d_bi").cast("double") / col("n_bi"), 6).as("distinct_2"))
-      .orderBy(col("source"))
-  }
-
-  /** Ordered funnel over the events fixture: first view → first click
-    * strictly after it → first purchase strictly after that, per user —
-    * sequential-first-match product-analytics semantics, one row per
-    * user with the stage timestamps and the stage count reached. */
-  private def q117_funnel(s: SparkSession, dir: String): DataFrame =
-    operators.Funnel.funnel(events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))
-      .orderBy(col("user_id"))
-
-  /** IVF-PQ code-store equivalence gate: the cell-partitioned store
-    * (assign + encode ONCE at write; probe-time scan statically pruned
-    * to the probed cells' partitions — the at-scale serving shape) must
-    * answer exactly like the ad-hoc recompute path. Gate 1 compares the
-    * full candidate score sets to 1e-9 (same codes, same LUT — only FP
-    * summation order can differ), which also proves pruning loses no
-    * candidate; gate 2 compares deterministic top-10 sets ranked on
-    * round-6 scores with id tiebreaks. The oracle pins the verdict rows. */
-  private def q118_ivfpq_code_store(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val (m, subDim) = (16, 4)
-    // independent model trainings overlap (the q157 note)
-    val (cents, cb) = operators.Par.par2(
-      Similarity.trainCentroids(e, "embedding", "vec_id", k = 10),
-      operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-        dim = 64, m = m, ksub = 16))
-    val store = roundTripDir("graft_q118_codestore")
-    operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-      m, subDim, store)
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-    def scoresOf(codes: DataFrame) = operators.Quantize.ivfPqScores(
-      codes, queries, cents, cb, "embedding", "vec_id", m, subDim, nProbe = 3)
-    // the store side goes through the PRUNED scan (the serving path), so
-    // this gate also proves static pruning loses no candidate
-    val storeScores = scoresOf(operators.Quantize.prunedCodeStore(
-      s, store, queries, cents, "embedding", "vec_id", nProbe = 3))
-    val adhocScores = {
-      val assigned = Similarity.ivfAssign(e, cents, "embedding", "vec_id")
-        .select(col("vec_id"), col("cell"))
-      val codes = operators.Quantize.encode(e, cb, "embedding", "vec_id",
-        m, subDim).join(assigned, Seq("vec_id"))
-      scoresOf(codes)
-    }
-    // lazily persist both candidate-score frames: the scores gate AND the
-    // top-k gate select from them, and each is the expensive end of a
-    // full assign/encode (or store-scan) pipeline. persist (Tungsten
-    // cache), NOT OpCache.materialize — the RDD round-trip's Row
-    // conversion measured slower than the recompute on these row counts
-    val a = operators.OpCache.track(
-      adhocScores.select(col("query_id"), col("corpus_id"),
-        col("score").as("sa")).persist())
-    val b = operators.OpCache.track(
-      storeScores.select(col("query_id"), col("corpus_id"),
-        col("score").as("sb")).persist())
-    val scoresEq = a.join(b, Seq("query_id", "corpus_id"), "full_outer")
-      .agg(coalesce(sum(when(col("sa").isNull || col("sb").isNull ||
-        abs(col("sa") - col("sb")) > 1e-9, 1).otherwise(0)), lit(0)).as("bad"))
-      .select(lit("ivfpq_store_scores_equal").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-    def topk(scored: DataFrame, marker: String) = scored
-      .withColumn("rr", round(col("score"), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("rr").desc, col("corpus_id").asc)))
-      .filter(col("rank") <= 10)
-      .select(col("query_id"), col("corpus_id"), col("rank"),
-        lit(1).as(marker))
-    val topkEq = topk(a.withColumnRenamed("sa", "score"), "ina")
-      .join(topk(b.withColumnRenamed("sb", "score"), "inb"),
-        Seq("query_id", "corpus_id", "rank"), "full_outer")
-      .agg(coalesce(sum(when(col("ina").isNull || col("inb").isNull, 1)
-        .otherwise(0)), lit(0)).as("bad"))
-      .select(lit("ivfpq_store_topk_equal").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-    scoresEq.unionByName(topkEq).orderBy(col("metric"))
-  }
-
-  /** BM25 materialized-index equivalence gate: the term-bucketed inverted
-    * index (tokenize ONCE at ingest; query-time scan bucket-pruned by the
-    * term filter — the standing-search-service shape) must score exactly
-    * like the q104 scan-time path. Both run the shared scoring formula,
-    * so the gate pins the index CONTENT (tf/dl/df per term) and the
-    * bucketed round-trip. The oracle pins the verdict rows. */
-  private def q119_bm25_index(s: SparkSession, dir: String): DataFrame = {
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q119_idx_$pid"
-    Seq(tbl, s"${tbl}_stats").foreach(dropLocalTable(s, _))
-    val docs = parallelize(t(s, dir, "documents"))
-    operators.Rank.writeIndex(docs, "text", "doc_id", tbl, buckets = 8)
-    val (index, stats) = operators.Rank.readIndex(s, tbl)
-    val terms = Seq("spark", "data", "query")
-    val a = operators.Rank.bm25(docs, "text", "doc_id", terms)
-      .select(col("doc_id"), col("score").as("sa"))
-    val b = operators.Rank.bm25FromIndex(index, stats, "doc_id", terms)
-      .select(col("doc_id"), col("score").as("sb"))
-    // materialized: both verdict rows select from this 1-row aggregate,
-    // which would otherwise re-run the two BM25 pipelines per row
-    val joined = operators.OpCache.materializeLocal(
-      a.join(b, Seq("doc_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("sa").isNull || col("sb").isNull ||
-            abs(col("sa") - col("sb")) > 1e-9, 1).otherwise(0)), lit(0))
-            .as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("bm25_index_equals_scan").as("metric"), lit(0.0).as("bound"),
-        (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("bm25_index_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Per-stage funnel conversion report (q117's natural companion): users
-    * reaching each stage, conversion rate from the previous stage, and
-    * the exact median seconds between consecutive stage completions —
-    * the product-analytics summary the per-user funnel frame exists
-    * for. */
-  private def q120_funnel_conversion(s: SparkSession, dir: String): DataFrame =
-    operators.Funnel.conversion(events(s, dir), "user_id", "event_type",
-        "ts", Seq("view", "click", "purchase"), approxMedian = false)
-      .orderBy(col("stage_idx"))
-
-  /** Offset-robust exact substring dedup: every ≥5-token passage that
-    * repeats anywhere in the corpus is reported as a removable [start,
-    * end) token range in every non-first document — at ARBITRARY
-    * offsets, the duplicates q100's fixed window grid misses when a copy
-    * straddles a chunk boundary. The oracle recomputes the stride-1
-    * window definition and the interval merge from scratch. */
-  private def q121_substring_spans(s: SparkSession, dir: String): DataFrame =
-    Dedup.duplicateSubstringSpans(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", minTokens = 5)
-      .orderBy(col("doc_id"), col("span_start"))
-
-  /** Offset-robust decontamination: per training doc, the fraction of
-    * stride-1 ≥4-token window POSITIONS whose content appears verbatim
-    * in the eval corpus, at ANY offset (a position-match rate, not token
-    * coverage — see [[Dedup.substringContamination]]) — the
-    * exact-substring companion to q89's distinct-n-gram overlap report.
-    * Eval slice = doc_id % 50 == 7. */
-  private def q122_substring_contamination(s: SparkSession,
-                                           dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val isEval = pmod(col("doc_id"), lit(50)) === 7
-    Dedup.substringContamination(docs.filter(!isEval), docs.filter(isEval),
-        "text", "doc_id", minTokens = 4)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Deterministic 80/10/10 train/val/test split assignment — the
-    * reproducible sharding every training run needs; same doc → same
-    * split on any cluster, any run. One scan, zero shuffles (beyond the
-    * presentation sort); the train split is bit-identical to the 0.8
-    * deterministic sample (CurateSpec-gated). */
-  private def q123_split_assign(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.assignSplits(t(s, dir, "documents"), "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      .select(col("doc_id"), col("lang"), col("split"))
-      .orderBy(col("doc_id"))
-
-  /** Approximate-percentile sketch gate (q44's HLL companion, completing
-    * the sketch family): percentile_approx's bounded-error quantile
-    * summary — the mergeable per-partition sketch a 100 TB profile job
-    * uses where exact percentiles would shuffle every value — verified
-    * in-plan against the exact percentile at p50/p95. The oracle pins
-    * the verdict rows; the accuracy knob's error bound is the gate. */
-  private def q124_approx_percentile(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    // materialize the 1-row aggregate: both gate rows select from it, and
-    // without this the sketch AND the exact percentile recompute per row
-    val one = operators.OpCache.materializeLocal(li.agg(
-      expr("percentile_approx(l_extendedprice, array(0.5D, 0.95D), 10000)")
-        .as("apx"),
-      expr("percentile(l_extendedprice, array(0.5D, 0.95D))").as("ext")))
-    def gate(i: Int, name: String) = one.select(
-      lit(s"approx_${name}_rel_err").as("metric"),
-      lit(0.01).as("bound"),
-      coalesce(
-        abs(element_at(col("apx"), i) - element_at(col("ext"), i)) /
-          abs(element_at(col("ext"), i)) <= 0.01,
-        lit(false)).as("ok"))
-    gate(1, "p50").unionByName(gate(2, "p95")).orderBy(col("metric"))
-  }
-
-  /** SemDeDup store equivalence gate (q118/q119 pattern for the
-    * semantic-dedup tier): the cell-BUCKETED assigned corpus — assign
-    * once at ingest; the within-cell self-join reads co-located buckets
-    * so nothing ever shuffles on `cell` (PlanSpec-gated) — must emit
-    * exactly the pairs the in-plan assignment path emits at the same
-    * centroids. The oracle pins the verdict rows. */
-  private def q125_semdedup_store(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val cents = Similarity.trainCentroids(e, "embedding", "vec_id", k = 8)
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q125_sem_$pid"
-    dropLocalTable(s, tbl)
-    Dedup.writeAssignedCorpus(e, cents, "embedding", "vec_id", probes = 2,
-      tbl, buckets = 8)
-    val store = Dedup.semDedupPairsFromStore(s, tbl, "embedding", "vec_id",
-        tau = 0.45)
-      .select(col("id_a"), col("id_b"), lit(1).as("ins"))
-    val adhoc = Dedup.semDedupPairsAssigned(
-        Similarity.ivfAssignMulti(e, cents, "embedding", "vec_id", 2),
-        "embedding", "vec_id", tau = 0.45)
-      .select(col("id_a"), col("id_b"), lit(1).as("ina"))
-    // 1-row agg read by both verdict rows → materialize (q119 pattern)
-    val joined = operators.OpCache.materializeLocal(
-      adhoc.join(store, Seq("id_a", "id_b"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("ina").isNull || col("ins").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("semdedup_store_pairs_equal").as("metric"), lit(0.0).as("bound"),
-        (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("semdedup_store_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Incremental exact-dedup ingest-store equivalence gate (q118/q119/
-    * q125 pattern, closing the last asserted-unbuilt store claim): the
-    * fp-BUCKETED fingerprint store — fingerprint once at ingest; the
-    * per-batch anti-join reads co-located buckets with no exchange
-    * (PlanSpec-gated) and never touches corpus text — must pass exactly
-    * the batch rows the in-plan [[Dedup.dedupAgainst]] path passes on
-    * the q101 snapshot/batch split. The oracle pins the verdict rows. */
-  private def q126_fingerprint_store(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val isBatch = pmod(col("doc_id"), lit(10)) === 0
-    val corpus = docs.filter(!isBatch)
-    val batch = Dedup.exact(docs.filter(isBatch), "text", "doc_id")
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q126_fp_$pid"
-    dropLocalTable(s, tbl)
-    Dedup.writeFingerprintStore(corpus, "text", tbl, buckets = 8)
-    val store = Dedup.dedupAgainstStore(s, batch, "text", tbl)
-      .select(col("doc_id"), lit(1).as("ins"))
-    val adhoc = Dedup.dedupAgainst(batch, corpus, "text", "doc_id")
-      .select(col("doc_id"), lit(1).as("ina"))
-    // 1-row agg read by both verdict rows → eager materialize (q125 note)
-    val joined = operators.OpCache.materializeLocal(
-      adhoc.join(store, Seq("doc_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("ina").isNull || col("ins").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("fp_store_batch_equal").as("metric"), lit(0.0).as("bound"),
-        (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("fp_store_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Incremental near-dup ingest-store equivalence gate (the q126 twin
-    * for the LSH tier): the (band, bucket)-bucketed band store + the
-    * id-bucketed signature store — shingle/minhash once at ingest; the
-    * per-batch candidate join and the verification attach both read
-    * co-located buckets, no corpus text in the plan (PlanSpec-gated) —
-    * must emit exactly the (pair, est_jaccard) rows the in-plan
-    * [[Dedup.minhashLshAgainst]] path emits on the q102 split. The
-    * oracle pins the verdict rows. */
-  private def q127_lsh_store(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents").filter(col("doc_id") < 2000))
-    val isBatch = pmod(col("doc_id"), lit(10)) === 0
-    val corpus = docs.filter(!isBatch)
-    val batch = docs.filter(isBatch)
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q127_lsh_$pid"
-    Seq(s"${tbl}_bands", s"${tbl}_sigs").foreach(dropLocalTable(s, _))
-    Dedup.writeLshStore(corpus, "text", "doc_id", tbl,
-      shingleK = 3, numHashes = 64, bands = 16, buckets = 8)
-    val store = Dedup.minhashLshAgainstStore(s, batch, "text", "doc_id", tbl,
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select(col("batch_id"), col("corpus_id"), col("est_jaccard").as("js"))
-    val adhoc = Dedup.minhashLshAgainst(batch, corpus, "text", "doc_id",
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select(col("batch_id"), col("corpus_id"), col("est_jaccard").as("ja"))
-    val joined = operators.OpCache.materializeLocal(
-      adhoc.join(store, Seq("batch_id", "corpus_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("ja").isNull || col("js").isNull ||
-            col("ja") =!= col("js"), 1).otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("lsh_store_pairs_equal").as("metric"), lit(0.0).as("bound"),
-        (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("lsh_store_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Bipartite batch-vs-store SemDeDup equivalence gate (q125's
-    * incremental companion, the q102 analog for the semantic tier): an
-    * incoming batch assigned with the STORED centroids and compared
-    * only against store cells — the store side reading co-located
-    * buckets (PlanSpec-gated) — must emit exactly the pairs the in-plan
-    * bipartite compare emits at the same centroids. The oracle pins the
-    * verdict rows. */
-  private def q129_semdedup_batch_store(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val isBatch = pmod(col("vec_id"), lit(10)) === 0
-    val corpus = e.filter(!isBatch)
-    val batch = e.filter(isBatch)
-    val cents = Similarity.trainCentroids(corpus, "embedding", "vec_id", k = 8)
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q129_sem_$pid"
-    dropLocalTable(s, tbl)
-    Dedup.writeAssignedCorpus(corpus, cents, "embedding", "vec_id",
-      probes = 2, tbl, buckets = 8)
-    val store = Dedup.semDedupBatchAgainstStore(s, batch, tbl, cents,
-        "embedding", "vec_id", probes = 2, tau = 0.45)
-      .select(col("batch_id"), col("corpus_id"), lit(1).as("ins"))
-    val adhoc = Dedup.semDedupPairsBipartite(
-        Similarity.ivfAssignMulti(batch, cents, "embedding", "vec_id", 2),
-        Similarity.ivfAssignMulti(corpus, cents, "embedding", "vec_id", 2),
-        "embedding", "vec_id", tau = 0.45)
-      .select(col("batch_id"), col("corpus_id"), lit(1).as("ina"))
-    // 1-row agg read by both verdict rows → materialize (q125 pattern)
-    val joined = operators.OpCache.materializeLocal(
-      adhoc.join(store, Seq("batch_id", "corpus_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("ina").isNull || col("ins").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("semdedup_batch_store_pairs_equal").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("semdedup_batch_store_nonempty").as("metric"),
-        lit(1.0).as("bound"), (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Scale-safe funnel median gate (q124 pattern): `Funnel.conversion`'s
-    * `approxMedian` mode — the mergeable approx_percentile sketch whose
-    * buffer stays O(accuracy) at 10⁹ users, where the exact mode's
-    * final-merge buffer is data-sized — must agree with the exact median
-    * per stage within the pinned relative error. q120 keeps the exact
-    * mode as the cross-engine oracle form. */
-  private def q128_funnel_approx(s: SparkSession, dir: String): DataFrame = {
-    val stages = Seq("view", "click", "purchase")
-    def conv(approx: Boolean) = operators.Funnel.conversion(events(s, dir),
-        "user_id", "event_type", "ts", stages, approxMedian = approx)
-      .select(col("stage_idx"), col("median_gap_s"))
-    // 2-row frame read by every gate row → eager materialize (q124 note)
-    val joined = operators.OpCache.materializeLocal(
-      conv(false).withColumnRenamed("median_gap_s", "ext")
-        .join(conv(true).withColumnRenamed("median_gap_s", "apx"),
-          Seq("stage_idx"))
-        .filter(col("stage_idx") > 1))
-    // bound 0.03, measured (verify-skill protocol): rel err 0.0 at
-    // sf0.001, 0.0075/0.0165 at sf0.01 — the gap is NOT sketch error
-    // (accuracy 10000 is exact at fixture counts) but approx returning
-    // an actual gap value where exact interpolates between neighbors;
-    // that one-inter-value-gap bound SHRINKS as user count grows
-    joined.select(
-        concat(lit("funnel_approx_med_stage"), col("stage_idx")).as("metric"),
-        lit(0.03).as("bound"),
-        coalesce(
-          abs(col("apx") - col("ext")) / abs(col("ext")) <= 0.03,
-          lit(false)).as("ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** Curation pipeline with the stride-1 substring tier composed in
-    * (q96's offset-robust variant, closing SURVEY §6's 2.4×-premium
-    * policy loop): quality gate → exact dedup → duplicateSubstringSpans
-    * → stripSpans — the oracle recomputes the whole composition
-    * including the REBUILT text, so the spans→strip hand-off is
-    * verified end-to-end, not just the span frame (q121) in
-    * isolation. */
-  private def q130_strip_pipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val qualified = operators.Curate.topFractionPerGroup(
-      docs.withColumn("quality", TextFunctions.qualityScore(col("text"))),
-      "lang", "quality", 0.5, "doc_id")
-    // NOT persisted (measured 1.08× with a persist on the r18 A/B —
-    // caching the full-text frame costs more than recomputing the
-    // quality window + exact dedup per reference at any tested SF)
-    val deduped = Dedup.exact(qualified, "text", "doc_id")
-    val spans = Dedup.duplicateSubstringSpans(deduped, "text", "doc_id",
-      minTokens = 5)
-    Dedup.stripSpans(deduped, spans, "text", "doc_id")
-      .select(col("doc_id"), col("text_clean"), col("n_tokens"),
-        col("n_kept"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Incremental SimHash gate (q33's bipartite companion, completing the
-    * incremental ingest family next to q101 exact / q102 Jaccard / q129
-    * semantic): segment-blocked batch-vs-corpus near-dup pairs must
-    * EQUAL the brute-force bipartite hamming join in-plan — pigeonhole
-    * blocking is lossless, so the contract is equality, not recall.
-    * Bounded like q102 so the brute-force cross join stays small at
-    * every SF. The oracle pins the verdict rows. */
-  private def q131_simhash_incremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents").filter(col("doc_id") < 2000))
-    val isBatch = pmod(col("doc_id"), lit(10)) === 0
-    val batch = docs.filter(isBatch)
-    val corpus = docs.filter(!isBatch)
-    val maxH = 8
-    val blocked = Dedup.simhashAgainst(batch, corpus, "text", "doc_id",
-        maxHamming = maxH)
-      .select(col("batch_id"), col("corpus_id"), lit(1).as("inb"))
-    val bf = batch
-      .select(col("doc_id").as("batch_id"),
-        Dedup.simhash64(col("text")).as("fa"))
-      .crossJoin(corpus.select(col("doc_id").as("corpus_id"),
-        Dedup.simhash64(col("text")).as("fb")))
-      .filter(Dedup.hammingDistance(col("fa"), col("fb")) <= maxH)
-      .select(col("batch_id"), col("corpus_id"), lit(1).as("ine"))
-    // 1-row agg read by both verdict rows → eager materialize (q125 note)
-    val joined = operators.OpCache.materializeLocal(
-      blocked.join(bf, Seq("batch_id", "corpus_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("inb").isNull || col("ine").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("simhash_incr_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok"))
-      .unionByName(joined.select(
-        lit("simhash_incr_pairs_equal").as("metric"), lit(0.0).as("bound"),
-        (col("bad") === 0).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Multi-query BM25 serving against the materialized index — the
-    * batch face of the stream-static serve path (`Rank.bm25Serve` over
-    * `indexServingFrame`): three queries scored in ONE join+aggregate
-    * pass. The DuckDB oracle recomputes every query's scores from the
-    * definition, independently pinning the serving frame's precomputed
-    * per-term document frequencies (StreamingSpec separately proves the
-    * same code serves a stream with batch parity). */
-  private def q132_bm25_serve(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q132_idx_$pid"
-    Seq(tbl, s"${tbl}_stats").foreach(dropLocalTable(s, _))
-    val docs = parallelize(t(s, dir, "documents"))
-    operators.Rank.writeIndex(docs, "text", "doc_id", tbl, buckets = 8)
-    val (index, stats) = operators.Rank.readIndex(s, tbl)
-    val serving = operators.Rank.indexServingFrame(index, stats)
-    val queries = Seq(
-      (1L, Seq("spark", "data", "query")),
-      (2L, Seq("join", "table")),
-      (3L, Seq("stream"))).toDF("query_id", "terms")
-    operators.Rank.bm25Serve(queries, serving, "query_id", "terms", "doc_id")
-      .orderBy(col("query_id"), col("doc_id"))
-  }
-
-  /** Two-stage ANN gate (q113's production companion): the IVF-PQ ADC
-    * shortlist re-ranked with exact cosine must have recall@10 ≥ the
-    * plain ADC top-10 at the same models/probes (structural: the plain
-    * list is a subset of the shortlist and exact scoring promotes every
-    * true neighbor inside it), and above a measured-then-pinned floor.
-    * The oracle pins the verdict rows. */
-  private def q133_ivfpq_rerank(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val (m, subDim) = (16, 4)
-    val cents = Similarity.trainCentroids(e, "embedding", "vec_id", k = 10)
-    val cb = operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-      dim = 64, m = m, ksub = 16)
-    val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-    val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id",
-        k = 10)
-      .select(col("query_id"), col("corpus_id"))
-    def recallOf(approx: DataFrame) = exact
-      .join(approx.select(col("query_id"), col("corpus_id"),
-          lit(1).as("hit")),
-        Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("v"))
-    val plain = operators.Quantize.ivfPqTopK(e, queries, cents, cb,
-      "embedding", "vec_id", m, subDim, k = 10, nProbe = 3)
-    val rerank = operators.Quantize.ivfPqRerank(e, queries, cents, cb,
-      "embedding", "vec_id", m, subDim, k = 10, shortlist = 50, nProbe = 3)
-    // 1-row recalls read by two verdict rows each → eager materialize
-    val rp = operators.OpCache.materializeLocal(recallOf(plain))
-    val rr = operators.OpCache.materializeLocal(recallOf(rerank))
-    // bound 0.4, measured (verify-skill protocol): rerank recall 0.54 at
-    // sf0.001, 0.46 at sf0.01 — vs plain ADC 0.34 / 0.32 (+~40%
-    // relative, the exact-re-rank lift at shortlist = 50)
-    rr.crossJoin(rp.withColumnRenamed("v", "vp"))
-      .select(lit("rerank_recall_ge_plain").as("metric"),
-        lit(0.0).as("bound"),
-        coalesce(col("v") >= col("vp"), lit(false)).as("ok"))
-      .unionByName(rr.select(
-        lit("rerank_recall_at_10").as("metric"), lit(0.4).as("bound"),
-        coalesce(col("v") >= 0.4, lit(false)).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** ANN-grade hard-negative mining, exact retrieval form (q114's
-    * quality companion): per anchor, the 3 most-similar vectors below
-    * the tau = 0.45 near-duplicate threshold — informative negatives
-    * that are provably not positives. The oracle recomputes the full
-    * definition (cosine, tau cut, rank) from scratch; the at-scale
-    * retrieval swap (ivfPqRerank shortlist feeding the same
-    * `hardNegatives` tail) keeps these exact semantics per shortlist. */
-  private def q134_hard_negatives(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val corpus = e.select(col("vec_id").as("corpus_id"),
-      col("embedding").as("cv"))
-    val anchors = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = corpus
-      .join(broadcast(anchors), col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 4).as("cos_r"))
-    operators.Curate.hardNegatives(scored, "query_id", "corpus_id",
-        "cos_r", k = 3, tau = 0.45)
-      .orderBy(col("query_id"), col("neg_rank"))
-  }
-
-  /** Source×source distinct-trigram overlap matrix (q89's corpus-audit
-    * companion): which sources mirror each other — the signal that
-    * prioritizes cross-source dedup sweeps. The oracle recomputes the
-    * full matrix (distinct gram sets, pairwise intersection, Jaccard)
-    * from the definition, zero-overlap pairs included. */
-  private def q135_source_overlap(s: SparkSession, dir: String): DataFrame =
-    operators.TextProfile.sourceOverlap(
-        parallelize(t(s, dir, "documents")), "text", "source", n = 3)
-      .orderBy(col("src_a"), col("src_b"))
-
-  /** DSIR importance weights (Xie et al. 2023): every doc scored by the
-    * hashed-bigram log-likelihood ratio of target (en) vs raw features —
-    * the data-selection pass that tilts a raw pool toward a target domain.
-    * The oracle recomputes the full two-pass definition (bucket histograms,
-    * smoothed log-ratios, per-doc feature sums) from scratch. */
-  private def q136_dsir_select(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.dsirWeights(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", col("lang") === "en", nBuckets = 1009, alpha = 0.5)
-      .withColumn("weight", round(col("weight"), 4))
-      .orderBy(col("doc_id"))
-
-  /** Two sequential [[Dedup.ingestBatch]] steps over a fingerprint store
-    * (the production incremental-ingest loop: in-batch dedup → store
-    * anti-join → append survivors' fps): batch B must be deduped against
-    * corpus ∪ survivors(A), proving the append is visible and correct.
-    * FULL DuckDB oracle — it recomputes both ingest steps from the md5
-    * definition (stronger than a verdict gate: any drift in the loop's
-    * composition, not just inequality, hash-mismatches). */
-  private def q137_fp_store_ingest(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val m = pmod(col("doc_id"), lit(3))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q137_fp_$pid"
-    dropLocalTable(s, tbl)
-    Dedup.writeFingerprintStore(docs.filter(m === 2), "text", tbl, buckets = 8)
-    val survA = Dedup.ingestBatch(s, docs.filter(m === 0), "text", "doc_id",
-      tbl)
-    val survB = Dedup.ingestBatch(s, docs.filter(m === 1), "text", "doc_id",
-      tbl)
-    survA.select(lit("a").as("batch"), col("doc_id"))
-      .unionByName(survB.select(lit("b").as("batch"), col("doc_id")))
-      .orderBy(col("batch"), col("doc_id"))
-  }
-
-  /** Store-compaction gate ([[operators.Layout.compactBucketed]]): after
-    * an ingest append fragments the fingerprint store into multi-file
-    * buckets, compaction must return EXACTLY the same fingerprint set in
-    * at most one file per bucket (PlanSpec separately execution-gates the
-    * scan's numFiles and the join's exchange-free store side; the SMJ
-    * sort stays — see compactBucketed's honest-limit note). Verdict rows
-    * pinned by the oracle. */
-  private def q138_store_compact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = parallelize(t(s, dir, "documents"))
-    val m = pmod(col("doc_id"), lit(3))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q138_fp_$pid"
-    Seq(tbl, s"${tbl}__graft_compact").foreach(dropLocalTable(s, _))
-    Dedup.writeFingerprintStore(docs.filter(m === 2), "text", tbl, buckets = 8)
-    Dedup.ingestBatch(s, docs.filter(m === 0), "text", "doc_id", tbl)
-    // pre-compaction snapshot through an RDD handle (q137's lesson: the
-    // swap would otherwise refresh/recompute any plan still reading tbl)
-    val pre = operators.OpCache.materialize(s.table(tbl))
-    val preFiles = s.table(tbl).select(input_file_name()).distinct().count()
-    operators.Layout.compactBucketed(s, tbl)
-    val post = s.table(tbl)
-    val contentBad = pre.select(col("fp"), lit(1).as("inp"))
-      .join(post.select(col("fp"), lit(1).as("ins")), Seq("fp"), "full_outer")
-      .filter(col("inp").isNull || col("ins").isNull).count()
-    val postFiles = post.select(input_file_name()).distinct().count()
-    Seq(
-      ("compact_content_equal", 0.0, contentBad == 0L),
-      ("compact_one_file_per_bucket", 8.0,
-        postFiles <= 8L && postFiles < preFiles))
-      .toDF("metric", "bound", "ok").orderBy(col("metric"))
-  }
-
-  /** Per-source corpus data card: volumes, exact-dup rate, language
-    * spread, quality profile — the datasheet table a curation run
-    * publishes. One partial+final aggregation; the oracle recomputes
-    * every column from the raw definitions. */
-  private def q139_corpus_report(s: SparkSession, dir: String): DataFrame =
-    operators.TextProfile.corpusReport(
-        parallelize(t(s, dir, "documents")), "text", "source", "lang")
-      .orderBy(col("source"))
-
-  /** Deterministic per-epoch training order (epoch 1): the reproducible
-    * pre-training shuffle. The ROW ORDER is the contract — the oracle
-    * recomputes the md5 epoch key and sorts by it, and the driver's
-    * order-sensitive hash must agree row for row. */
-  private def q140_training_order(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.trainingOrder(
-        parallelize(t(s, dir, "documents")), "doc_id", epoch = 1)
-      .select(col("doc_id"),
-        operators.Curate.epochOrderKey(col("doc_id"), 1).as("okey"))
-
-  /** Content-keyed (leakage-safe) split assignment: exact duplicates
-    * share a split by construction — q123's id-keyed form leaves the
-    * copy-contamination path open; this closes it. The oracle recomputes
-    * the md5-interval CASE over the normalized text. */
-  private def q141_leakage_safe_splits(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.leakageSafeSplits(t(s, dir, "documents"),
-        "text", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      .select(col("doc_id"), col("split"))
-      .orderBy(col("doc_id"))
-
-  /** q136's SELECTION step — the actual DSIR output: the top-k raw-pool
-    * documents by importance weight (rounded, doc_id tiebreak — the q134
-    * rank-the-rounded-value discipline). Plans as TakeOrderedAndProject
-    * (PlanSpec-gated): the corpus is never globally sorted for a top-k. */
-  private def q142_dsir_topk(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.dsirWeights(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", col("lang") === "en", nBuckets = 1009, alpha = 0.5)
-      .filter(!col("is_target") && col("weight").isNotNull)
-      .select(col("doc_id"), round(col("weight"), 4).as("weight"))
-      .orderBy(col("weight").desc, col("doc_id"))
-      .limit(50)
-
-  /** The round-12 flagship composition — the ingest-to-training-set
-    * pipeline assembled from this round's operators: quality gate →
-    * in-corpus exact dedup → DSIR model trained ON THE SURVIVORS →
-    * target-likeness selection of the raw pool (rounded-weight cut, the
-    * q134 discipline) → leakage-safe content-keyed splits. Every stage
-    * is individually oracle-green (q31/q28/q136/q141); this gate proves
-    * the COMPOSITION — the oracle rebuilds the whole chain from first
-    * principles, with the DSIR CTEs re-pointed at the deduped survivor
-    * relation (the model must be trained on what survives, not on the
-    * raw corpus). */
-  /** Tokenizer fertility per language: BPE-ish tokens per whitespace
-    * token, aggregated per lang — the statistic behind "which languages
-    * does this tokenizer serve poorly" (high fertility = more sequence
-    * length per word = worse compute economics for that language).
-    * Composes q29's two exactly-mirrored counters; one partial+final
-    * aggregation to |langs| rows; fertility is ONE division of two exact
-    * sums, no float accumulation. */
-  private def q144_tokenizer_fertility(s: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    parallelize(t(s, dir, "documents"))
-      .select(col("lang"),
-        TextFunctions.tokenCount(txt).cast("long").as("n_tok"),
-        TextFunctions.bpeTokenCount(txt).cast("long").as("n_bpe"))
-      .filter(col("n_tok") > 0)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("ws_tokens"),
-        sum(col("n_bpe")).as("bpe_tokens"),
-        round(sum(col("n_bpe")).cast("double") / sum(col("n_tok")), 4)
-          .as("fertility"))
-      .orderBy(col("lang"))
-  }
-
-  /** Heavy-hitter n-gram gate ([[operators.TextProfile.heavyNgrams]],
-    * q108 verdict pattern): the merged Misra–Gries summary must contain
-    * EVERY trigram whose exact count exceeds N/(capacity+1) and report
-    * only counts in [true − N/(capacity+1), true] — the mergeable-MG
-    * guarantee checked in-plan against exact counts at fixture scale
-    * (capacity 64 ≪ the fixture's trigram vocabulary, so evictions and
-    * merge trims genuinely happen). Oracle pins the verdicts. */
-  private def q145_heavy_ngrams(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = parallelize(t(s, dir, "documents"))
-    val cap = 64
-    val grams = operators.OpCache.track(docs
-      .select(explode(TextFunctions.shingles(col("text"), 3)).as("g"))
-      .persist())
-    val mgRows = operators.TextProfile.heavyNgrams(docs, "text", 3, cap)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val err = grams.count() / (cap + 1)
-    val exact = grams.groupBy(col("g")).agg(count(lit(1)).as("cnt"))
-    val missed = exact.filter(col("cnt") > err)
-      .filter(!col("g").isin(mgRows.map(_._1).toSeq: _*)).count()
-    val bad = exact
-      .join(mgRows.toSeq.toDF("g", "est"), Seq("g"))
-      .filter(col("est") > col("cnt") || col("est") < col("cnt") - err)
-      .count()
-    Seq(
-      ("mg_estimates_within_bound", 0.0, bad == 0L && mgRows.nonEmpty),
-      ("mg_heavy_recall", 1.0, missed == 0L))
-      .toDF("metric", "bound", "ok").orderBy(col("metric"))
-  }
-
-  /** LSH-tier ingest-append gate ([[Dedup.ingestBatchLsh]], the q137
-    * analog closing the last lifecycle asymmetry): after an ingest
-    * appends batch A's surviving band triples + signatures, serving
-    * batch B against the APPENDED store must emit exactly the pairs the
-    * in-plan bipartite path emits against corpus ∪ survivors(A) — the
-    * append is visible, exact, and byte-equivalent to a one-shot store
-    * (same signature/band formulas). The oracle pins the verdict rows;
-    * DedupSpec separately gates idempotence and PlanSpec the post-append
-    * exchange-free store sides. */
-  private def q146_lsh_store_ingest(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents").filter(col("doc_id") < 2000))
-    val m = pmod(col("doc_id"), lit(3))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q146_lsh_$pid"
-    Seq(s"${tbl}_bands", s"${tbl}_sigs").foreach(dropLocalTable(s, _))
-    val corpus = docs.filter(m === 2)
-    Dedup.writeLshStore(corpus, "text", "doc_id", tbl,
-      shingleK = 3, numHashes = 64, bands = 16, buckets = 8)
-    // ingestBatchLsh already returns an RDD-materialized frame (it must
-    // survive its own append) — safe to reuse for the one-shot oracle side
-    val survA = Dedup.ingestBatchLsh(s, docs.filter(m === 0), "text",
-      "doc_id", tbl, shingleK = 3, numHashes = 64, bands = 16,
-      threshold = 0.5)
-    val batchB = docs.filter(m === 1)
-    val store = Dedup.minhashLshAgainstStore(s, batchB, "text", "doc_id",
-        tbl, shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select(col("batch_id"), col("corpus_id"), col("est_jaccard").as("js"))
-    val adhoc = Dedup.minhashLshAgainst(batchB, corpus.unionByName(survA),
-        "text", "doc_id", shingleK = 3, numHashes = 64, bands = 16,
-        threshold = 0.5)
-      .select(col("batch_id"), col("corpus_id"), col("est_jaccard").as("ja"))
-    val joined = operators.OpCache.materializeLocal(
-      adhoc.join(store, Seq("batch_id", "corpus_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("ja").isNull || col("js").isNull ||
-            col("ja") =!= col("js"), 1).otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("lsh_ingest_seq_equals_oneshot").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("lsh_ingest_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Semantic-tier ingest-append gate ([[Dedup.ingestBatchSemDedup]],
-    * q146's twin): after an ingest appends batch A's surviving
-    * (cell, id, vector) assignments — assigned with the STORED
-    * centroids — serving batch B against the appended store must emit
-    * exactly the in-plan bipartite pairs against corpus ∪ survivors(A)
-    * at the same centroids. The oracle pins the verdict rows. */
-  private def q147_semdedup_store_ingest(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val m = pmod(col("vec_id"), lit(3))
-    val corpus = e.filter(m === 2)
-    val cents = Similarity.trainCentroids(corpus, "embedding", "vec_id", k = 8)
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q147_sem_$pid"
-    dropLocalTable(s, tbl)
-    Dedup.writeAssignedCorpus(corpus, cents, "embedding", "vec_id",
-      probes = 2, tbl, buckets = 8)
-    val survA = Dedup.ingestBatchSemDedup(s, e.filter(m === 0), tbl, cents,
-      "embedding", "vec_id", probes = 2, tau = 0.45)
-    val batchB = e.filter(m === 1)
-    val store = Dedup.semDedupBatchAgainstStore(s, batchB, tbl, cents,
-        "embedding", "vec_id", probes = 2, tau = 0.45)
-      .select(col("batch_id"), col("corpus_id"), lit(1).as("ins"))
-    val adhoc = Dedup.semDedupPairsBipartite(
-        Similarity.ivfAssignMulti(batchB, cents, "embedding", "vec_id", 2),
-        Similarity.ivfAssignMulti(
-          corpus.select(col("vec_id"), col("embedding")).unionByName(survA),
-          cents, "embedding", "vec_id", 2),
-        "embedding", "vec_id", tau = 0.45)
-      .select(col("batch_id"), col("corpus_id"), lit(1).as("ina"))
-    val joined = operators.OpCache.materializeLocal(
-      adhoc.join(store, Seq("batch_id", "corpus_id"), "full_outer")
-        .agg(
-          coalesce(sum(when(col("ina").isNull || col("ins").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"),
-          count(lit(1)).as("n")))
-    joined.select(
-        lit("sem_ingest_seq_equals_oneshot").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("sem_ingest_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .orderBy(col("metric"))
-  }
-
-  /** Index-retraction gate ([[operators.Rank.removeFromIndex]]): a
-    * takedown must purge the removed documents' POSTINGS and leave the
-    * index scoring the remaining corpus bit-identically to a full
-    * rebuild (exact long-sum stats decrement) — derived data honors
-    * retention too. The oracle pins the verdict rows; PlanSpec gates
-    * that bucket pruning survives the rewrite. */
-  private def q148_index_retract(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = operators.OpCache.track(parallelize(t(s, dir, "documents"))
-      .filter(length(trim(col("text"))) > 0).persist())
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val (tbl, tbl2) = (s"q148_idx_$pid", s"q148_rb_$pid")
-    Seq(tbl, s"${tbl}_stats", s"${tbl}__graft_compact", s"${tbl}__graft_old",
-      tbl2, s"${tbl2}_stats").foreach(dropLocalTable(s, _))
-    val removed = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-      .select(col("doc_id"))
-    // the tbl lifecycle (build + retraction) and the tbl2 rebuild touch
-    // disjoint tables — overlap the two chains (the q157 note)
-    operators.Par.par2(
-      {
-        operators.Rank.writeIndex(docs, "text", "doc_id", tbl, buckets = 8)
-        operators.Rank.removeFromIndex(s, tbl, removed, "doc_id")
-      },
-      operators.Rank.writeIndex(
-        docs.join(removed, Seq("doc_id"), "left_anti"),
-        "text", "doc_id", tbl2, buckets = 8))
-    val terms = Seq("spark", "data", "query", "stream")
-    val (i1, s1) = operators.Rank.readIndex(s, tbl)
-    val (i2, s2) = operators.Rank.readIndex(s, tbl2)
-    val a = operators.Rank.bm25FromIndex(i1, s1, "doc_id", terms)
-      .withColumnRenamed("score", "sa")
-    val b = operators.Rank.bm25FromIndex(i2, s2, "doc_id", terms)
-      .withColumnRenamed("score", "sb")
-    // the three verdict actions read the final stores independently —
-    // overlap them
-    val (joined, servedRemoved, postingsLeft) = operators.Par.par3(
-      operators.OpCache.materializeLocal(
-        a.join(b, Seq("doc_id"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("sa").isNull || col("sb").isNull ||
-              col("sa") =!= col("sb"), 1).otherwise(0)), lit(0)).as("bad"),
-            count(lit(1)).as("n"))),
-      a.join(removed, Seq("doc_id"), "left_semi").count(),
-      i1.join(removed, Seq("doc_id"), "left_semi").count())
-    joined.select(
-        lit("retract_scores_equal_rebuild").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("retract_index_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .unionByName(Seq(
-        ("retract_removed_never_served", 0.0, servedRemoved == 0L),
-        ("retract_postings_purged", 0.0, postingsLeft == 0L))
-        .toDF("metric", "bound", "ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** Code-store retraction gate ([[operators.Quantize.removeFromCodeStore]],
-    * q148's ANN sibling): the per-partition rewrite must leave the
-    * cell-partitioned store IDENTICAL to one rebuilt from the remaining
-    * corpus (only affected cells rewritten), and the serving path must
-    * never return a retracted id. The oracle pins the verdict rows;
-    * PlanSpec gates that partition pruning survives. */
-  private def q149_codestore_retract(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    // independent model trainings overlap (the q157 note)
-    val (cents, cb) = operators.Par.par2(
-      Similarity.trainCentroids(e, "embedding", "vec_id", k = 8),
-      operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-        dim = 64, m = 4, ksub = 8))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_q149_$pid"
-    val (dirA, dirB) = (s"$base/store", s"$base/rebuild")
-    rmTree(new java.io.File(base))
-    val removed = e.filter(pmod(col("vec_id"), lit(5)) === 0)
-      .select(col("vec_id"))
-    // dirA lifecycle (build + retract) and the dirB rebuild touch
-    // disjoint stores — overlap the two chains (the q157 note)
-    operators.Par.par2(
-      {
-        operators.Quantize.writeCodeStore(e, cents, cb, "embedding",
-          "vec_id", 4, 16, dirA)
-        operators.Quantize.removeFromCodeStore(s, dirA, removed, "vec_id")
-      },
-      operators.Quantize.writeCodeStore(
-        e.join(removed, Seq("vec_id"), "left_anti"), cents, cb,
-        "embedding", "vec_id", 4, 16, dirB))
-    val got = operators.Quantize.readCodeStore(s, dirA)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("ing"))
-    val want = operators.Quantize.readCodeStore(s, dirB)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("inw"))
-    // parity aggregate and serving probe overlap (the q157 note)
-    val (joined, served) = operators.Par.par2(
-      operators.OpCache.materializeLocal(
-        got.join(want, Seq("vec_id", "codes", "cell"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("ing").isNull || col("inw").isNull, 1)
-              .otherwise(0)), lit(0)).as("bad"),
-            count(lit(1)).as("n"))),
-      operators.Quantize.ivfPqTopKFromStore(s, dirA,
-          e.filter(col("vec_id") === 1), cents, cb, "embedding", "vec_id",
-          4, 16, k = 10, nProbe = 3)
-        .join(removed.withColumnRenamed("vec_id", "corpus_id"),
-          Seq("corpus_id"), "left_semi").count())
-    joined.select(
-        lit("codestore_retract_equals_rebuild").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("codestore_retract_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .unionByName(Seq(
-        ("codestore_removed_never_served", 0.0, served == 0L))
-        .toDF("metric", "bound", "ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** Detected-boilerplate REMOVAL ([[operators.TextProfile.stripBoilerplate]]
-    * — q145's detection composed into q130's strip): a deterministic
-    * boilerplate sentence is planted on half the corpus IN-PLAN (the C4
-    * scenario — a footer shared across a crawl — expressed so the oracle
-    * can mirror it), the heavy-trigram phrases are detected one-pass
-    * (Misra–Gries) and confirmed exact, and every occurrence is stripped.
-    * FULL DuckDB oracle: the phrase set and the rebuilt text are both
-    * recomputed from exact counts — the MG stage must change nothing
-    * (the determinism contract boilerplatePhrases enforces). */
-  private def q150_strip_boilerplate(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val planted = operators.OpCache.track(docs.select(col("doc_id"),
-      when(pmod(col("doc_id"), lit(2)) === 0,
-        trim(concat(coalesce(col("text"), lit("")),
-          lit(" subscribe to our newsletter now"))))
-        .otherwise(coalesce(col("text"), lit(""))).as("text"))
-      .persist())
-    // threshold well above the planted-phrase count's noise floor AND the
-    // MG bound (N/(cap+1) ≈ 110 at 500 docs): 2/5 of the doc count
-    val minCount = planted.count() * 2 / 5
-    operators.TextProfile.stripBoilerplate(planted, "text", "doc_id",
-        n = 3, capacity = 256, minCount = minCount)
-      .orderBy(col("doc_id"))
-  }
-
-  /** The data card, extended with the two columns a datasheet consumer
-    * asks for next (r12 advice #8): per-source NEAR-dup rate (exact
-    * n-gram-Jaccard tier here so the card stays exactly recomputable;
-    * production serves the same pairs off the LSH store) and
-    * eval-CONTAMINATION rate (q122's stride-window machinery, eval
-    * slice doc_id % 50 == 7). FULL DuckDB oracle — every column of the
-    * card, including both new rates, recomputed from raw definitions. */
-  private def q151_datacard_ext(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val isEval = pmod(col("doc_id"), lit(50)) === 7
-    val corpus = operators.OpCache.track(docs.filter(!isEval).persist())
-    val pairs = Dedup.jaccardSelfJoin(corpus, "text", "doc_id",
-      shingleK = 3, threshold = 0.6)
-    operators.TextProfile.corpusReportExt(corpus, "text", "doc_id",
-        "source", "lang", pairs, docs.filter(isEval), minTokens = 4)
-      .orderBy(col("source"))
-  }
-
-  /** Split-internal decontamination ([[operators.Curate.decontaminateSplits]]
-    * — q141 hardened against PARTIAL overlap): content-keyed splits close
-    * the exact-duplicate leak by construction, but a train doc sharing a
-    * ≥4-token passage with a val/test doc still leaks; those train docs
-    * are relabeled `quarantined` (rows never dropped). FULL DuckDB oracle:
-    * base split CASE (q141) + stride-window contamination between the
-    * split partitions (q122) + the relabel, recomputed from scratch. */
-  private def q152_decontaminated_splits(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.decontaminateSplits(parallelize(t(s, dir, "documents")),
-        "text", "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-        minTokens = 4)
-      .select(col("doc_id"), col("split"))
-      .orderBy(col("doc_id"))
-
-  /** Data-constrained repeat planner ([[operators.Curate.repeatPlan]],
-    * Muennighoff et al. 2023): per-language epochs/repeat decomposition
-    * for a 200k-token budget against the corpus's available tokens, with
-    * the diminishing-returns cap flagged at 8 epochs. Pure arithmetic
-    * over a |langs|-row aggregate — FULL DuckDB oracle. The weighted
-    * 'xx' stratum has NO corpus documents: its budget share must surface
-    * as an `unsatisfiable` row (full-outer edge contract), never vanish. */
-  private def q153_repeat_plan(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.repeatPlan(
-        parallelize(t(s, dir, "documents"))
-          .select(col("lang"),
-            TextFunctions.tokenCount(col("text")).cast("long").as("n_tok")),
-        "lang", "n_tok", budgetTokens = 200000L,
-        weights = Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.15,
-          "fr" -> 0.1, "zh" -> 0.04, "xx" -> 0.01),
-        maxEpochs = 8.0)
-      .orderBy(col("stratum"))
-
-  /** Near-dup-safe split assignment ([[operators.Curate.clusterSafeSplits]]
-    * — the proactive close of the leakage path q152 quarantines after
-    * the fact): every near-dup CLUSTER co-splits, keyed on its
-    * representative's content. Pairs from the exact-Jaccard tier here so
-    * the FULL DuckDB oracle can recompute everything: q50's pair CTEs,
-    * q86's recursive-CTE transitive closure, the representative's md5
-    * key, q141's interval CASE. */
-  private def q154_cluster_safe_splits(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val pairs = Dedup.jaccardSelfJoin(docs, "text", "doc_id",
-      shingleK = 3, threshold = 0.6)
-    operators.Curate.clusterSafeSplits(docs, "text", "doc_id", pairs,
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      .select(col("doc_id"), col("split"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Epoch materialization ([[operators.Curate.materializeRepeats]] over
-    * q153's plan): the repeated training set itself — every doc
-    * `full_repeats` times plus the deterministic partial-epoch sample,
-    * with a 1-based repeat index. FULL DuckDB oracle: the plan's
-    * arithmetic, the per-stratum hex threshold (thresholdHex's
-    * floor(frac·2^32) form), and the range explode, all recomputed. */
-  private def q155_epoch_materialize(s: SparkSession, dir: String): DataFrame = {
-    val docs = operators.OpCache.track(parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"), col("lang"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
-      .persist())
-    val plan = operators.Curate.repeatPlan(docs, "lang", "n_tok",
-      budgetTokens = 200000L,
-      weights = Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.15,
-        "fr" -> 0.1, "zh" -> 0.05),
-      maxEpochs = 8.0)
-    operators.Curate.materializeRepeats(docs, plan, "lang", "doc_id")
-      .select(col("doc_id"), col("lang"), col("n_tok"), col("repeat_idx"))
-      .orderBy(col("doc_id"), col("repeat_idx"))
-  }
-
-  /** VERSIONED code-store lifecycle gate ([[operators.Quantize]] manifest
-    * form — q149's twin on the concurrent-reader-safe store): two
-    * sequential retractions walk the generation chain (v1→v2→v3, each
-    * swap one atomic manifest rename), after which the store must equal
-    * a one-shot rebuild over the final survivors, retracted ids must
-    * never be served, and exactly the current + grace manifests survive
-    * GC. The oracle pins the verdict rows (q149 pattern). */
-  private def q157_codestore_versioned(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    // the coarse quantizer and the PQ codebook train independently —
-    // overlap them (guide §2.6 via Par), like every chain split below
-    val (cents, cb) = operators.Par.par2(
-      Similarity.trainCentroids(e, "embedding", "vec_id", k = 8),
-      operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-        dim = 64, m = 4, ksub = 8))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_q157_$pid"
-    val (dirA, dirB) = (s"$base/store", s"$base/rebuild")
-    rmTree(new java.io.File(base))
-    val rm1 = e.filter(pmod(col("vec_id"), lit(5)) === 0).select(col("vec_id"))
-    val rm2 = e.filter(pmod(col("vec_id"), lit(7)) === 1).select(col("vec_id"))
-    val removed = rm1.unionByName(rm2).distinct()
-    // the dirA lifecycle (build + two retractions) and the dirB rebuild
-    // touch disjoint stores — overlap the two chains; the retractions
-    // stay strictly ordered inside their block (same manifest chain)
-    operators.Par.par2(
-      {
-        operators.Quantize.writeCodeStore(e, cents, cb, "embedding",
-          "vec_id", 4, 16, dirA, versioned = true)
-        operators.Quantize.removeFromCodeStore(s, dirA, rm1, "vec_id")
-        operators.Quantize.removeFromCodeStore(s, dirA, rm2, "vec_id")
-      },
-      operators.Quantize.writeCodeStore(
-        e.join(removed, Seq("vec_id"), "left_anti"), cents, cb,
-        "embedding", "vec_id", 4, 16, dirB, versioned = true))
-    val got = operators.Quantize.readCodeStore(s, dirA)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("ing"))
-    val want = operators.Quantize.readCodeStore(s, dirB)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("inw"))
-    // the rebuild-parity aggregate and the retracted-id serving probe
-    // read the final stores independently — overlap them
-    val (joined, served) = operators.Par.par2(
-      operators.OpCache.materializeLocal(
-        got.join(want, Seq("vec_id", "codes", "cell"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("ing").isNull || col("inw").isNull, 1)
-              .otherwise(0)), lit(0)).as("bad"),
-            count(lit(1)).as("n"))),
-      operators.Quantize.ivfPqTopKFromStore(s, dirA,
-          e.filter(col("vec_id") === 1), cents, cb, "embedding", "vec_id",
-          4, 16, k = 10, nProbe = 3)
-        .join(removed.withColumnRenamed("vec_id", "corpus_id"),
-          Seq("corpus_id"), "left_semi").count())
-    // generation chain: two retractions on a v1 store land at v3, and GC
-    // keeps exactly the current + one grace manifest
-    val manifests = new java.io.File(dirA).list()
-      .filter(_.startsWith("_graft_manifest")).sorted.toSeq
-    val chainOk = operators.Quantize.codeStoreVersion(s, dirA)
-      .contains(3L) &&
-      manifests == Seq("_graft_manifest-v000002", "_graft_manifest-v000003")
-    joined.select(
-        lit("vstore_retract_equals_rebuild").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("vstore_retract_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .unionByName(Seq(
-        ("vstore_removed_never_served", 0.0, served == 0L),
-        ("vstore_generation_chain", 3.0, chainOk))
-        .toDF("metric", "bound", "ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** Versioned code-store INGEST gate ([[operators.Quantize.ingestBatchCodeStore]]
-    * — q146/q147's pattern on the ANN-serving store, completing its
-    * lifecycle: write/ingest/serve/retract all gated): two ingest appends
-    * with the STORED models must leave the store equal to a one-shot
-    * build over the union, a replayed batch must append nothing (the
-    * idempotence the streaming wrapper's exactly-once effect rests on),
-    * and every cell must stay ONE file (ingest is self-compacting). */
-  private def q158_codestore_ingest(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    val m3 = pmod(col("vec_id"), lit(3))
-    // independent model trainings overlap (the q157 note)
-    val (cents, cb) = operators.Par.par2(
-      Similarity.trainCentroids(e, "embedding", "vec_id", k = 8),
-      operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-        dim = 64, m = 4, ksub = 8))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_q158_$pid"
-    val (dirA, dirB) = (s"$base/store", s"$base/oneshot")
-    rmTree(new java.io.File(base))
-    // the dirA ingest chain (strictly ordered: same manifest chain) and
-    // the dirB one-shot build touch disjoint stores — overlap them
-    val (replayed, _) = operators.Par.par2(
-      {
-        operators.Quantize.writeCodeStore(e.filter(m3 === 0), cents, cb,
-          "embedding", "vec_id", 4, 16, dirA, versioned = true)
-        operators.Quantize.ingestBatchCodeStore(s, dirA, e.filter(m3 === 1),
-          cents, cb, "embedding", "vec_id", 4, 16)
-        operators.Quantize.ingestBatchCodeStore(s, dirA, e.filter(m3 === 2),
-          cents, cb, "embedding", "vec_id", 4, 16)
-        operators.Quantize.ingestBatchCodeStore(s, dirA, e.filter(m3 === 2),
-          cents, cb, "embedding", "vec_id", 4, 16).count()
-      },
-      operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-        4, 16, dirB, versioned = true))
-    val got = operators.Quantize.readCodeStore(s, dirA)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("ing"))
-    val want = operators.Quantize.readCodeStore(s, dirB)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("inw"))
-    val store = operators.Quantize.readCodeStore(s, dirA)
-    // the sequential-equals-oneshot aggregate and the one-file-per-cell
-    // distinct count read the final stores independently — overlap them
-    val (joined, nCells) = operators.Par.par2(
-      operators.OpCache.materializeLocal(
-        got.join(want, Seq("vec_id", "codes", "cell"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("ing").isNull || col("inw").isNull, 1)
-              .otherwise(0)), lit(0)).as("bad"),
-            count(lit(1)).as("n"))),
-      store.select(col("cell")).distinct().count())
-    val oneFilePerCell = store.inputFiles.length.toLong == nCells
-    joined.select(
-        lit("cstore_ingest_seq_equals_oneshot").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("cstore_ingest_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .unionByName(Seq(
-        ("cstore_ingest_replay_noop", 0.0, replayed == 0L),
-        ("cstore_ingest_one_file_per_cell", 1.0, oneFilePerCell))
-        .toDF("metric", "bound", "ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** The composed TRAINING-SET FLAGSHIP — corpus in, token batches out,
-    * the contract the whole engine exists for (q143 stops at the split;
-    * this runs the full chain): quality gate + exact dedup (q143's
-    * curation stage) → near-dup-safe splits (q154) → data-constrained
-    * repeat plan over the TRAIN split (q153) → epoch materialization
-    * (q155) → per-epoch deterministic order (q140's key, column-epoch
-    * form) → sequence packing per (epoch, shard) (q97's layout). Each
-    * output (repeat_idx, shard, bin) is a training batch of ≤2048 tokens
-    * in reproducible epoch order. FULL DuckDB oracle: one CTE chain
-    * recomputing every stage. */
-  private def q156_training_batches(s: SparkSession, dir: String): DataFrame = {
-    // quality gate = composite score AND the Gopher repetition keep rule
-    // (disjoint failure modes; both pure map stages) — q161's store-served
-    // twin MUST apply the identical gate or the parity verdicts there
-    // compare different corpora
-    val curated = operators.OpCache.track(
-      Dedup.exact(
-        parallelize(t(s, dir, "documents"))
-          .filter(TextFunctions.qualityScore(col("text")) >= 0.6 &&
-            TextFunctions.gopherRepetitionKeep(col("text"))),
-        "text", "doc_id").persist())
-    val pairs = Dedup.jaccardSelfJoin(curated, "text", "doc_id",
-      shingleK = 3, threshold = 0.6)
-    // persisted: the repeat planner aggregates the train split and the
-    // epoch materializer re-reads it — without this the cluster-safe
-    // split chain (CC resolution included) runs once per reference
-    val train = operators.OpCache.track(
-      operators.Curate.clusterSafeSplits(curated, "text",
-          "doc_id", pairs, Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .filter(col("split") === "train")
-        .select(col("doc_id"), col("lang"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
-        .persist())
-    val plan = operators.Curate.repeatPlan(train, "lang", "n_tok",
-      budgetTokens = 150000L,
-      weights = Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.15,
-        "fr" -> 0.1, "zh" -> 0.05),
-      maxEpochs = 8.0)
-    val epochs = operators.Curate
-      .materializeRepeats(train, plan, "lang", "doc_id")
-      .withColumn("okey",
-        operators.Curate.epochOrderKey(col("doc_id"), col("repeat_idx")))
-    operators.Curate.packSequences(epochs, "doc_id", "n_tok",
-        budget = 2048L, shards = 8,
-        epochCol = Some("repeat_idx"), orderCol = Some("okey"))
-      .select(col("doc_id"), col("lang"), col("n_tok"), col("repeat_idx"),
-        col("okey"), col("shard"), col("bin"), col("bin_offset"))
-      .orderBy(col("doc_id"), col("repeat_idx"))
-  }
-
-  /** MODEL-GENERATION migration gate
-    * ([[operators.Quantize.retrainCodeStore]] — the ANN lifecycle's last
-    * leg: models were frozen at store creation, so a drifted corpus had
-    * no recourse short of an un-guarded manual rebuild): a store built
-    * over HALF the corpus with models trained on that half drifts (the
-    * full corpus arrives); retrain trains fresh models on the full
-    * corpus and re-encodes everything behind ONE manifest swap. The
-    * verdict pins: the retrained store equals a one-shot build with the
-    * models the manifest now references ([[operators.Quantize.storedModels]]
-    * — readers always pair codes with their models), serving works off
-    * the stored models, the generation chain lands at v2 with both the
-    * grace and current manifests, and BOTH model artifacts exist (the
-    * outgoing one referenced by the grace manifest, GC'd one commit
-    * later — QuantizeSpec-gated). Oracle pins the verdict rows literally
-    * (q157's pattern). */
-  private def q160_codestore_retrain(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    val half = e.filter(pmod(col("vec_id"), lit(2)) === 0)
-    // independent model trainings overlap (the q157 note)
-    val (cents0, cb0) = operators.Par.par2(
-      Similarity.trainCentroids(half, "embedding", "vec_id", k = 8),
-      operators.Quantize.trainCodebook(half, "embedding", "vec_id",
-        dim = 64, m = 4, ksub = 8))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_q160_$pid"
-    val (dirA, dirB) = (s"$base/store", s"$base/oneshot")
-    rmTree(new java.io.File(base))
-    operators.Quantize.writeCodeStore(half, cents0, cb0, "embedding",
-      "vec_id", 4, 16, dirA, versioned = true)
-    // the corpus DOUBLED since the models were trained — migrate
-    operators.Quantize.retrainCodeStore(s, dirA, e, "embedding", "vec_id",
-      dim = 64, m = 4, ksub = 8, cells = 8)
-    val (c2, cb2) = operators.Quantize.storedModels(s, dirA).getOrElse(
-      throw new IllegalStateException("retrained store lost its models"))
-    operators.Quantize.writeCodeStore(e, c2, cb2, "embedding", "vec_id",
-      4, 16, dirB, versioned = true)
-    val got = operators.Quantize.readCodeStore(s, dirA)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("ing"))
-    val want = operators.Quantize.readCodeStore(s, dirB)
-      .select(col("vec_id"), col("codes"), col("cell"), lit(1).as("inw"))
-    // the retrain-parity aggregate and the stored-models serving probe
-    // read the final stores independently — overlap them (q157 note)
-    val (joined, served) = operators.Par.par2(
-      operators.OpCache.materializeLocal(
-        got.join(want, Seq("vec_id", "codes", "cell"), "full_outer")
-          .agg(
-            coalesce(sum(when(col("ing").isNull || col("inw").isNull, 1)
-              .otherwise(0)), lit(0)).as("bad"),
-            count(lit(1)).as("n"))),
-      operators.Quantize.ivfPqTopKFromStore(s, dirA,
-        e.filter(col("vec_id") === 1), c2, cb2, "embedding", "vec_id",
-        4, 16, k = 10, nProbe = 3).count())
-    val manifests = new java.io.File(dirA).list()
-      .filter(_.startsWith("_graft_manifest")).sorted.toSeq
-    val chainOk = operators.Quantize.codeStoreVersion(s, dirA)
-      .contains(2L) &&
-      manifests == Seq("_graft_manifest-v000001", "_graft_manifest-v000002")
-    val modelDirs = new java.io.File(dirA).list()
-      .count(_.startsWith("models-"))
-    joined.select(
-        lit("retrain_equals_oneshot_with_stored_models").as("metric"),
-        lit(0.0).as("bound"), (col("bad") === 0).as("ok"))
-      .unionByName(joined.select(
-        lit("retrain_nonempty").as("metric"), lit(1.0).as("bound"),
-        (col("n") >= 1).as("ok")))
-      .unionByName(Seq(
-        ("retrain_generation_chain", 2.0, chainOk),
-        ("retrain_models_grace_kept", 2.0, modelDirs == 2),
-        ("retrain_serves_from_stored_models", 1.0, served > 0L))
-        .toDF("metric", "bound", "ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** The q156 training flagship served OFF THE STANDING STORE — the
-    * PRODUCTION composition (no 100 TB deployment recomputes the exact
-    * all-pairs tier per training run): near-dup candidates come from the
-    * LSH ingest store's band self-join
-    * ([[operators.Dedup.minhashLshPairsFromStore]], written at
-    * 32 bands × 2 rows so a j ≥ 0.6 pair escapes banding with
-    * probability ≈ 6·10⁻⁷) and are upgraded to EXACT Jaccard at
-    * pair-bounded cost ([[operators.Dedup.jaccardVerifyPairs]]); the
-    * splits, repeat plan, epochs, order, and packing are q156's chain.
-    * Benched as the production flagship's tracked wall-time (store build
-    * included — the one-time ingest cost the serving path amortizes).
-    * The verdict pins the PARITY the VERDICT asked for: the store-served
-    * pair set and the resulting split assignment EQUAL q156's exact
-    * tier, no stored near-dup pair crosses a split boundary, every
-    * multi-doc packed bin respects the token budget, and batches exist.
-    * The exact tier runs here as the oracle side of that comparison —
-    * gate cost, like q156 itself. */
-  private def q161_training_batches_stored(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // identical quality gate to q156 (composite score + Gopher repetition
-    // keep) — the parity verdicts below compare this corpus to the exact
-    // tier's, so the two gates must never drift
-    val curated = operators.OpCache.track(
-      Dedup.exact(
-        parallelize(t(s, dir, "documents"))
-          .filter(TextFunctions.qualityScore(col("text")) >= 0.6 &&
-            TextFunctions.gopherRepetitionKeep(col("text"))),
-        "text", "doc_id").persist())
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q161_lsh_$pid"
-    Seq(s"${tbl}_bands", s"${tbl}_sigs").foreach(dropLocalTable(s, _))
-    // ONE corpus shingle+sort pass serves BOTH jaccard tiers (the exact
-    // self-join and the store-candidate verify — the r18 "not yet
-    // optimized" item): prime it (and curated's cache under it) with one
-    // count so the concurrent tiers below never race an un-materialized
-    // cache into duplicate computes
-    val sets = Dedup.shingleSets(curated, "text", "doc_id", shingleK = 3)
-    sets.count()
-    // the store tier (LSH store write + band candidates + exact upgrade)
-    // and the exact self-join tier are independent until the parity
-    // verdicts — overlap them (guide §2.6 via Par)
-    val (pairsStore, pairsExact) = operators.Par.par2(
-      {
-        Dedup.writeLshStore(curated, "text", "doc_id", tbl,
-          shingleK = 3, numHashes = 64, bands = 32, buckets = 8)
-        // threshold 0 keeps every band collision: candidates, not
-        // verdicts — the exact upgrade below is the filter
-        val cand = Dedup.minhashLshPairsFromStore(s, tbl, numHashes = 64,
-          threshold = 0.0)
-        operators.OpCache.materialize(
-          Dedup.jaccardVerifyPairsOnSets(sets, cand, threshold = 0.6))
-      },
-      operators.OpCache.materialize(
-        Dedup.jaccardSelfJoinOnSets(sets, threshold = 0.6)))
-    val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    // the two cluster-safe split chains (each a CC loop) are independent
-    // — overlap them too
-    val (splitsStore, splitsExact) = operators.Par.par2(
-      operators.OpCache.materialize(
-        operators.Curate.clusterSafeSplits(curated, "text", "doc_id",
-            pairsStore, splits)
-          .select(col("doc_id"), col("lang"), col("split"),
-            TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))),
-      operators.Curate.clusterSafeSplits(curated, "text",
-          "doc_id", pairsExact, splits)
-        .select(col("doc_id"), col("split").as("split_x")))
-    // the three parity counts and the packed-batch chain fan out of the
-    // materialized frames independently — run all four concurrently
-    val (pairDiff, splitDiff, leaks, bins) = operators.Par.par4(
-      pairsStore.select(col("id_a"), col("id_b"), lit(1).as("l"))
-        .join(pairsExact.select(col("id_a"), col("id_b"), lit(1).as("r")),
-          Seq("id_a", "id_b"), "full_outer")
-        .filter(col("l").isNull || col("r").isNull).count(),
-      splitsStore.select(col("doc_id"), col("split"))
-        .join(splitsExact, Seq("doc_id"), "full_outer")
-        .filter(col("split").isNull || col("split_x").isNull ||
-          col("split") =!= col("split_x")).count(),
-      pairsStore
-        .join(splitsStore.select(col("doc_id").as("id_a"),
-          col("split").as("sa")), Seq("id_a"))
-        .join(splitsStore.select(col("doc_id").as("id_b"),
-          col("split").as("sb")), Seq("id_b"))
-        .filter(col("sa") =!= col("sb")).count(),
-      {
-        // the production chain downstream of the store-served splits
-        val train = splitsStore.filter(col("split") === "train")
-          .select(col("doc_id"), col("lang"), col("n_tok"))
-        val plan = operators.Curate.repeatPlan(train, "lang", "n_tok",
-          budgetTokens = 150000L,
-          weights = Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.15,
-            "fr" -> 0.1, "zh" -> 0.05),
-          maxEpochs = 8.0)
-        val epochs = operators.Curate
-          .materializeRepeats(train, plan, "lang", "doc_id")
-          .withColumn("okey",
-            operators.Curate.epochOrderKey(col("doc_id"), col("repeat_idx")))
-        val packed = operators.Curate.packSequences(epochs, "doc_id",
-          "n_tok", budget = 2048L, shards = 8,
-          epochCol = Some("repeat_idx"), orderCol = Some("okey"))
-        // packSequences is concatenate-then-cut: a doc crossing a bin
-        // boundary SPILLS (never splits), so per-bin token sums may
-        // exceed the budget by one spill — the layout invariant is that
-        // every doc STARTS inside its bin: bin_offset ∈ [0, budget)
-        operators.OpCache.materializeLocal(
-          packed.agg(count(lit(1)).as("nrows"),
-            coalesce(sum(when(col("bin_offset") < 0L ||
-              col("bin_offset") >= 2048L, 1L).otherwise(0L)), lit(0L))
-              .as("badoff")))
-      })
-    bins.select(
-        lit("stored_flagship_batches").as("metric"), lit(1.0).as("bound"),
-        (col("nrows") >= 1L).as("ok"))
-      .unionByName(bins.select(
-        lit("stored_pack_budget").as("metric"), lit(0.0).as("bound"),
-        (col("badoff") === 0L).as("ok")))
-      .unionByName(Seq(
-        ("stored_pairs_equal_exact", 0.0, pairDiff == 0L),
-        ("stored_splits_equal_exact", 0.0, splitDiff == 0L),
-        ("stored_splits_leakfree", 0.0, leaks == 0L))
-        .toDF("metric", "bound", "ok"))
-      .orderBy(col("metric"))
-  }
-
-  /** Struct field names of [[TextFunctions.repetitionStats]] in struct
-    * order — q162's output columns and the oracle generator's select
-    * list derive from ONE list so the two can never drift. */
-  private val repetitionFields: Seq[String] =
-    Seq("n_lines", "dup_line_frac", "dup_line_char_frac",
-      "n_paras", "dup_para_frac", "dup_para_char_frac") ++
-      TextFunctions.topGramKs.map(k => s"top_${k}gram_char_frac") ++
-      TextFunctions.dupGramKs.map(k => s"dup_${k}gram_char_frac")
-
-  /** Gopher repetition rules — the COMPLETE A1 family
-    * ([[TextFunctions.repetitionStats]] /
-    * [[TextFunctions.gopherRepetitionKeep]], Rae et al. 2021 — public):
-    * repetitive documents are the quality failure
-    * [[TextFunctions.qualityScore]]'s length/punctuation signals cannot
-    * see. The fixture text carries no newlines, so duplicate LINES are
-    * planted on every third document (q150's planting pattern) and
-    * duplicate blank-line-separated PARAGRAPHS on every fifth; word-gram
-    * repetition comes from the fixture's own tiny vocabulary. FULL
-    * DuckDB oracle: every fraction recomputed from first principles
-    * (explode + group-by counts vs the operator's sorted run-length
-    * fold — two different algorithms, same definitions). */
-  private def q162_repetition_rules(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").withColumn("t2", {
-      val raw = coalesce(col("text"), lit(""))
-      val withLines = when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(raw, lit("\n"), substring(raw, 1, 40),
-            lit("\n"), substring(raw, 1, 40)))
-        .otherwise(raw)
-      when(pmod(col("doc_id"), lit(5)) === 0,
-          concat(withLines, lit("\n\n"), substring(raw, 1, 60),
-            lit("\n\n"), substring(raw, 1, 60)))
-        .otherwise(withLines)
-    })
-    docs.select(col("doc_id"),
-        TextFunctions.repetitionStats(col("t2")).as("r"))
-      .select(col("doc_id") +:
-        repetitionFields.map(f => col(s"r.$f").as(f)) :+
-        // keep from the PROJECTED struct: 13 slot reads, not a second
-        // run of the fold family
-        TextFunctions.gopherKeepFromStats(col("r")).as("keep"): _*)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Bloom-sidecar verdict gate — q158's sibling on the ARBITRARY-BINDING
-    * idempotence leg (`fullIdCheck = true`): with
-    * [[operators.Quantize.enableCodeStoreIdBloom]] recorded, the check is
-    * Bloom-screened (store files read only for Bloom-positive ids — the
-    * O(store ids) per-batch scan was the last ingest cost that grew with
-    * the store). Verdicts pin the full semantic envelope: the screen
-    * never drops (replay of held ids is a no-op; a retracted id is a
-    * stale POSITIVE that falls through to the exact check and re-ingests
-    * — the deterministic false-positive case), never blocks (a batch of
-    * new ids lands in full), and the filter is maintained by every
-    * committing ingest (final store ≡ the expected id union). All
-    * verdicts are fpp-independent, so the gate cannot flake on hash
-    * luck. QuantizeSpec carries the corruption fixture proving the
-    * zero-read claim at execution level. */
-  private def q163_codestore_bloom(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    // independent model trainings overlap (the q157 note)
-    val (cents, cb) = operators.Par.par2(
-      Similarity.trainCentroids(e, "embedding", "vec_id", k = 8),
-      operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-        dim = 64, m = 4, ksub = 8))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_q163_$pid"
-    rmTree(new java.io.File(base))
-    val store = s"$base/store"
-    operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-      4, 16, store, versioned = true)
-    operators.Quantize.enableCodeStoreIdBloom(s, store, "vec_id", 200000L)
-    val recorded = operators.Quantize.storedIdBloom(s, store).nonEmpty
-    def ingest(batch: DataFrame): Long =
-      operators.Quantize.ingestBatchCodeStore(s, store, batch, cents, cb,
-        "embedding", "vec_id", 4, 16, fullIdCheck = true).count()
-    // held ids replayed: every id is Bloom-positive, the exact fallback
-    // finds all of them held — nothing lands, no commit
-    val replayed = ingest(e)
-    // retract one id: the sidecar stays conservative (still positive),
-    // the exact check finds it absent, the re-ingest proceeds
-    val x = e.agg(min(col("vec_id"))).as[Long].head()
-    operators.Quantize.removeFromCodeStore(s, store,
-      Seq(x).toDF("vec_id"), "vec_id")
-    val staleCorrected = ingest(
-      e.filter(col("vec_id") === x).select(col("vec_id"), col("embedding")))
-    // a batch of genuinely-new ids lands in full (negatives skip the
-    // store read entirely; any hash-unlucky positive just pays the join)
-    val fresh = e.orderBy(col("vec_id")).limit(50)
-      .select((col("vec_id") + 9000000L).as("vec_id"), col("embedding"))
-    val freshLanded = ingest(fresh)
-    // final store = corpus ∪ fresh (x retracted and re-ingested)
-    val gotIds = operators.Quantize.readCodeStore(s, store)
-      .select(col("vec_id"), lit(1).as("ing"))
-    val wantIds = e.select(col("vec_id"))
-      .unionByName(fresh.select(col("vec_id"))).withColumn("inw", lit(1))
-    val mismatches = gotIds
-      .join(wantIds, Seq("vec_id"), "full_outer")
-      .filter(col("ing").isNull || col("inw").isNull).count()
-    Seq(
-      ("cstore_bloom_recorded", 1.0, recorded),
-      ("cstore_bloom_replay_noop", 0.0, replayed == 0L),
-      ("cstore_bloom_stale_positive_corrected", 1.0, staleCorrected == 1L),
-      ("cstore_bloom_new_batch_full", 50.0, freshLanded == 50L),
-      ("cstore_bloom_store_equals_union", 0.0, mismatches == 0L))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** Drift-metric verdict gate ([[operators.Quantize.codeStoreDriftStats]]
-    * — the "WHEN to retrain" diagnostic q160's retrain leg was missing):
-    * an in-distribution control batch must read err_ratio ≈ 1 with
-    * bounded fill skew, and a concentrated new-domain batch (the
-    * Probe-`retrain` drift shape whose stale recall@10 measured 0.004 vs
-    * 0.328 retrained) must read err_ratio and fill_skew FAR above the
-    * control — the separation that makes the metric an actionable
-    * retrain trigger rather than a number. */
-  private def q164_codestore_drift(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    // independent model trainings overlap (the q157 note)
-    val (cents, cb) = operators.Par.par2(
-      Similarity.trainCentroids(e, "embedding", "vec_id", k = 8),
-      operators.Quantize.trainCodebook(e, "embedding", "vec_id",
-        dim = 64, m = 4, ksub = 8))
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_q164_$pid"
-    rmTree(new java.io.File(base))
-    val store = s"$base/store"
-    operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-      4, 16, store, versioned = true)
-    // control: a same-distribution sample of the corpus itself
-    val control = e.filter(pmod(col("vec_id"), lit(7)) === 3)
-    // drift: a tight NEW domain the stored models never saw (the
-    // realistic shape — a fresh data source arriving; same fixture
-    // family as graft.Probe retrain/drift)
-    val drifted = e.select(col("vec_id"),
-      transform(sequence(lit(1), lit(64)),
-        i => (sin(lit(7) * i) + sin(col("vec_id") * i) * lit(0.2))
-          .cast("float")).as("embedding"))
-    def stats(batch: DataFrame) = operators.Quantize
-      .codeStoreDriftStats(s, store, batch, "embedding", "vec_id")
-      .collect()(0)
-    // the control and drifted diagnostics are independent batch-bounded
-    // passes over the same read-only store — overlap them (q157 note)
-    val (c, d) = operators.Par.par2(stats(control), stats(drifted))
-    val (cr, dr) = (c.getAs[Double]("err_ratio"), d.getAs[Double]("err_ratio"))
-    val (cs, ds) = (c.getAs[Double]("fill_skew"), d.getAs[Double]("fill_skew"))
-    // bounds measured before pinning: control ratio 1.22/1.24 and skew
-    // 1.47/1.35, drifted ratio 41.2/46.1 and skew 7.97/8.00 at
-    // sf0.001/sf0.01 — calm-vs-loud margins of 1.6× and 4× either side
-    Seq(
-      ("drift_control_ratio_calm", 2.0, cr < 2.0),
-      ("drift_drifted_ratio_loud", 10.0, dr > 10.0),
-      ("drift_separation", 5.0, dr > 5.0 * cr),
-      ("drift_skew_separation", 2.0, ds > 2.0 * cs),
-      ("drift_nonempty", 1.0,
-        c.getAs[Long]("n") > 0 && d.getAs[Long]("n") > 0))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** Gopher QUALITY rule gate — q162's sibling on the A1 NON-repetition
-    * half ([[TextFunctions.gopherQualityStats]]): word-count and
-    * mean-word-length windows, hash/ellipsis symbol caps, bullet and
-    * ellipsis line fractions, alphabetic-word floor, stop-word
-    * requirement. The decorations exercise every bound in BOTH
-    * directions across the corpus (hash spam, a bullet-heavy prefix
-    * that crosses the 0.9 line bound, ellipsis line endings in both
-    * spellings, numeric-word dilution of the alphabetic floor,
-    * truncation under the 50-word minimum, a stop-word-rich tail).
-    * FULL DuckDB oracle recomputing the family from first principles. */
-  private def q165_gopher_quality(s: SparkSession, dir: String): DataFrame = {
-    val raw = coalesce(col("text"), lit(""))
-    val m = pmod(col("doc_id"), lit(9))
-    val bullets = concat(
-      (1 to 10).map(i => lit(s"- item$i\n")): _*)
-    val longWords = lit(
-      " pneumonoultramicroscopicsilicovolcanoconiosis" * 4)
-    val oneChars = lit(" a" * 30)
-    val docs = t(s, dir, "documents").withColumn("t2",
-      when(m === 0, concat(raw, lit(" ## # ### ##")))
-        .when(m === 1, concat(bullets, raw))
-        .when(m === 2, concat(raw, lit("\nwait...\nmore...\nend…")))
-        .when(m === 3, concat(raw, lit(" 111 222 333 444 555 666")))
-        .when(m === 4, substring(raw, 1, 25))
-        .when(m === 5, concat(raw, lit(" the be to of and that have with")))
-        .when(m === 6, concat(raw, longWords)) // mean-len above 10 (short docs)
-        .when(m === 7, concat(raw, oneChars)) // mean-len below 3 (short docs)
-        .otherwise(raw))
-    docs.select(col("doc_id"),
-        TextFunctions.gopherQualityStats(col("t2")).as("g"))
-      .select(col("doc_id") +:
-        gopherQualityFields.map(f => col(s"g.$f").as(f)) :+
-        TextFunctions.gopherQualityKeepFromStats(col("g")).as("keep"): _*)
-      .orderBy(col("doc_id"))
-  }
-
-  /** q165's output stats, in [[TextFunctions.gopherQualityStats]]' struct
-    * order — shared between the query and its oracle SELECT (the
-    * repetitionFields discipline). */
-  private val gopherQualityFields = Seq("n_words", "mean_word_len",
-    "hash_word_ratio", "ellipsis_word_ratio", "bullet_line_frac",
-    "ellipsis_line_frac", "alpha_word_frac", "stop_hits")
-
-  /** C4 line/page filter gate ([[TextFunctions.c4Stats]]/
-    * [[TextFunctions.c4KeepFromStats]], Raffel et al. 2020 — public):
-    * the OTHER canonical published filter family next to Gopher A1.
-    * Decorations exercise every rule in BOTH directions: a 5-sentence
-    * block (line kept, page passes the sentence floor), a
-    * javascript-mention line (dropped despite terminal punctuation and
-    * word count), a lorem-ipsum line (line kept, PAGE dropped by the
-    * template tripwire), a code line with braces (line dropped AND page
-    * dropped), `!`/`?` terminal lines plus a too-short `Ok.` (word
-    * floor vs terminal-mark variety, page under the sentence floor),
-    * a `"`-terminal quote line (the paper's fourth mark), and the raw
-    * word-soup (no terminal punctuation — nothing retained). FULL
-    * DuckDB oracle recomputing lines/kept/clean-text-hash/sentences/
-    * tripwires/keep from first principles, bounds interpolated from
-    * the same [[TextFunctions.C4Bounds]] instance. */
-  private def q167_c4_filters(s: SparkSession, dir: String): DataFrame = {
-    val raw = coalesce(col("text"), lit(""))
-    val m = pmod(col("doc_id"), lit(7))
-    val five = lit("\n" + c4FiveSentences)
-    val docs = t(s, dir, "documents").withColumn("t2",
-      when(m === 0, concat(raw, five))
-        .when(m === 1, concat(raw,
-          lit("\nPlease enable javascript to continue reading this page now.")))
-        .when(m === 2, concat(raw, five,
-          lit("\nLorem ipsum dolor sit amet consectetur adipiscing elit.")))
-        .when(m === 3, concat(raw, five,
-          lit("\nfunction render() { return template; }")))
-        .when(m === 4, concat(raw,
-          lit("\nOk.\nThis works fine!\nDoes this work too?")))
-        .when(m === 5, concat(raw, five,
-          lit("\nThe reviewer said it was \"good enough.\"")))
-        .otherwise(raw))
-    docs.select(col("doc_id"), TextFunctions.c4Stats(col("t2")).as("c"))
-      .select(col("doc_id"),
-        col("c.n_lines").as("n_lines"),
-        col("c.n_kept").as("n_kept"),
-        md5(col("c.text_clean")).as("clean_hash"),
-        col("c.n_sentences").as("n_sentences"),
-        col("c.has_lorem").as("has_lorem"),
-        col("c.has_brace").as("has_brace"),
-        TextFunctions.c4KeepFromStats(col("c")).as("keep"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q167's 5-sentence decoration block — one Scala constant
-    * interpolated into BOTH engines (no internal quotes, so it embeds
-    * in a single-quoted SQL literal verbatim). */
-  private val c4FiveSentences =
-    "Alpha beta gamma here. Delta epsilon follows now. " +
-      "Zeta eta theta next. Iota kappa lambda then. Mu nu xi closes this."
-
-  /** Corpus-wide exact LINE dedup gate
-    * ([[operators.Dedup.removeDuplicateSegments]] — RefinedWeb's
-    * cross-document boilerplate removal; q100's span twin at natural
-    * line boundaries): two boilerplate lines are planted across
-    * overlapping corpus slices (a newsletter line on ~half the docs, a
-    * copyright footer on another ~half, both on a quarter — the shared
-    * footer/nav shape), every planted copy after the corpus-first must
-    * vanish while each document's own soup line survives, and documents
-    * are rebuilt with line boundaries intact. The oracle recomputes
-    * keep-first from first principles, partitioned by segment TEXT —
-    * certifying the operator's 128-bit segment keys collision-free on
-    * this corpus, the q100 discipline. */
-  private def q168_line_dedup(s: SparkSession, dir: String): DataFrame = {
-    val raw = coalesce(col("text"), lit(""))
-    val m = pmod(col("doc_id"), lit(4))
-    val docs = t(s, dir, "documents").withColumn("t2",
-        when(m === 0, concat(raw, lit("\n" + q168News)))
-          .when(m === 1, concat(raw, lit("\n" + q168News + "\n" + q168Foot)))
-          .when(m === 2, concat(raw, lit("\n" + q168Foot)))
-          .otherwise(raw))
-      .select(col("doc_id"), col("t2").as("text"))
-    Dedup.removeDuplicateSegments(parallelize(docs), "text", "doc_id")
-      .select(col("doc_id"), col("text_clean"),
-        col("n_spans").as("n_segs"), col("n_kept"))
-      .orderBy(col("doc_id"))
-  }
-
-  // q168's planted boilerplate lines — single constants, both engines
-  private val q168News = "subscribe to our newsletter for updates"
-  private val q168Foot = "copyright footer all rights reserved"
-
-  /** Semantic-decontamination accuracy gate
-    * ([[operators.Dedup.semanticDecontaminate]] — the embedding-space
-    * sibling of the n-gram decontamination gates q89/q122; q108's
-    * in-plan discipline applied to the bipartite leg): the IVF-bucketed
-    * operator is verified against the exact broadcast corpus×eval
-    * cosine-threshold graph at the same tau. Recall < 1 is the
-    * SemDeDup approximation (a leak whose corpus cell is outside the
-    * eval row's probe set is never compared); spurious drops must be
-    * STRUCTURALLY zero (every bipartite pair carries an exact in-cell
-    * cosine, so the approximate drop set is a subgraph of the exact
-    * one); survivors + dropped must conserve the corpus. Bounds
-    * measured before pinning: 42 exact leaks at both SFs, recall
-    * 0.929/0.952 at sf0.001/sf0.01 with probes = 2 (every planted
-    * verbatim copy caught — identical vector ⇒ identical hard cell;
-    * the 2–3 misses are natural tau-threshold pairs straddling cells,
-    * the SemDeDup trade) — pinned at ≥ 0.8, the q108 convention. */
-  private def q169_semantic_decontaminate(s: SparkSession,
-                                          dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    val isEval = pmod(col("vec_id"), lit(7)) === 3
-    val tau = 0.45
-    val corpus = e.filter(!isEval)
-    // eval = a held-out slice (the NATURAL near-leak tail — pairs at
-    // tau that may straddle cells, the documented recall trade) PLUS
-    // re-keyed exact copies of ~1/11 of the corpus (the verbatim
-    // benchmark-in-corpus leak — identical vector ⇒ identical hard
-    // cell ⇒ always caught, so the fixture's exact-leak set is large
-    // enough that the recall gate measures the operator, not a
-    // two-pair coin flip)
-    val evalDf = e.filter(isEval).select(col("vec_id"), col("embedding"))
-      .unionByName(corpus.filter(pmod(col("vec_id"), lit(11)) === 5)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-    val keptIds = operators.OpCache.track(
-      Dedup.semanticDecontaminate(corpus, evalDf, "embedding", "vec_id",
-          k = 8, tau = tau)
-        .select(col("vec_id")).persist())
-    val dropped = operators.OpCache.track(corpus.select(col("vec_id"))
-      .join(keptIds, Seq("vec_id"), "left_anti").persist())
-    val exactDropped = operators.OpCache.track(
-      corpus.join(broadcast(evalDf.select(col("embedding").as("__ev"))))
-        .filter(VectorFunctions.cosine(col("embedding"), col("__ev")) >= tau)
-        .select(col("vec_id")).distinct().persist())
-    val nExact = exactDropped.count()
-    val nDropped = dropped.count()
-    val hit = exactDropped.join(dropped, Seq("vec_id"), "left_semi").count()
-    val spurious =
-      dropped.join(exactDropped, Seq("vec_id"), "left_anti").count()
-    val conserved = keptIds.count() + nDropped == corpus.count()
-    Seq(
-      ("semdecon_recall_of_exact", 0.8,
-        nExact > 0 && hit >= 0.8 * nExact),
-      ("semdecon_spurious_drops", 0.0, spurious == 0L),
-      ("semdecon_nonempty", 1.0, nExact > 0),
-      ("semdecon_conservation", 0.0, conserved))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** UniMax epoch-capped uniform budget allocation
-    * ([[operators.Curate.unimaxRates]] — Chung et al. 2023): a 48k-token
-    * budget over the language strata at a 2-epoch cap. On this corpus
-    * (~27k tokens, en ≈ 2.6× any other lang) the fixture exercises BOTH
-    * regimes: the four small languages hit their caps and English absorbs
-    * the uniform remainder. FULL DuckDB oracle — the capacity sort, the
-    * exact-BIGINT prefix-sum capping test, and both divisions recomputed
-    * in SQL windows. */
-  private def q170_unimax(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.unimaxRates(
-        parallelize(t(s, dir, "documents"))
-          .select(col("lang"),
-            TextFunctions.tokenCount(col("text")).cast("long").as("n_tok")),
-        "lang", "n_tok", budgetTokens = 48000L, maxEpochs = 2.0)
-      .orderBy(col("stratum"))
-
-  /** Prototype pruning ([[operators.Curate.prototypePrune]] — SSL
-    * prototypes, Sorscher et al. 2022; D4's second stage, Tirumala et al.
-    * 2023): drop the 25% of each label cluster closest to its centroid,
-    * keep the diverse periphery. FULL DuckDB oracle: per-label rounded
-    * dimension-wise means, the same cosine, the same (cos desc, id)
-    * rank — kept rows hash-compared including rank and cluster size. */
-  private def q171_prototype_prune(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.prototypePrune(t(s, dir, "embeddings"),
-        "embedding", "label", "vec_id", dropFrac = 0.25)
-      .orderBy(col("label"), col("proto_rank"))
-
-  /** D4 composed (Tirumala et al. 2023: dedup, then diversify): exact
-    * embedding near-dup pairs (q38's tier — tau at the fixture's measured
-    * semantic-dup band) → min-id representative per connected cluster →
-    * prototype pruning over the SURVIVORS (centroids reflect the deduped
-    * corpus, the paper's ordering). The exact pair tier is what makes the
-    * oracle FULL (the q154 discipline — recursive-CTE closure, same
-    * centroid/rank arithmetic); production swaps in the cell-bucketed
-    * store pairs (q125/q129) for the pair stage. */
-  private def q172_d4_pipeline(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val pairs = Dedup.embeddingNearDup(e, "embedding", "vec_id",
-      threshold = 0.45, nBits = 0)
-    val survivors = Dedup.keepRepresentatives(e, pairs, "vec_id")
-    operators.Curate.prototypePrune(survivors, "embedding", "label",
-        "vec_id", dropFrac = 0.2)
-      .orderBy(col("label"), col("proto_rank"))
-  }
-
-  /** UniMax materialized (q170's allocator driving q155's epoch
-    * machinery — the allocator-to-dataset loop closed): the q170
-    * allocation becomes a repeat plan (full repeats = floor of the
-    * ROUNDED epochs — the same 4-decimal value both engines print — and
-    * the deterministic hex-threshold partial sample takes the fraction),
-    * then [[operators.Curate.materializeRepeats]] emits the actual
-    * repeated training rows. On this fixture every capped language rides
-    * exactly twice and English lands 1.46 epochs (every doc once, a
-    * deterministic ~46% once more). FULL DuckDB oracle: q170's
-    * integer-exact waterfilling CTEs + q155's md5-threshold repeat CASE. */
-  private def q174_unimax_materialize(s: SparkSession,
-                                      dir: String): DataFrame = {
-    val docs = operators.OpCache.track(parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"), col("lang"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
-      .persist())
-    val rates = operators.Curate.unimaxRates(docs, "lang", "n_tok",
-      budgetTokens = 48000L, maxEpochs = 2.0)
-    val plan = rates.select(col("stratum"),
-      floor(col("epochs")).cast("long").as("full_repeats"),
-      round(col("epochs") - floor(col("epochs")), 4).as("partial_fraction"))
-    operators.Curate.materializeRepeats(docs, plan, "lang", "doc_id")
-      .select(col("doc_id"), col("lang"), col("n_tok"), col("repeat_idx"))
-      .orderBy(col("doc_id"), col("repeat_idx"))
-  }
-
-  /** Margin-based bitext mining ([[operators.Similarity.marginMine]] —
-    * Artetxe & Schwenk 2019; the CCMatrix rule): the corpus splits into
-    * a "source language" (labels 0–4) and a "target language" (labels
-    * 5–9) half, and every 13th source vector is planted into the target
-    * side as a re-keyed exact copy — the ideal multilingual-encoder
-    * translation. Mutual argmax-margin pairs at tau recover exactly the
-    * planted translations (margin ≈ 1.6–2 vs the natural hubs' ≈ 1.1 —
-    * the hub-discounting the raw cosine cannot do). The exact all-pairs
-    * scored tier is what makes the oracle FULL; production feeds an
-    * [[operators.Similarity.lshTopK]] shortlist (documented on the
-    * operator). */
-  private def q176_margin_mine(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val src = e.filter(col("label") < 5)
-      .select(col("vec_id").as("src_id"), col("embedding").as("sv"))
-    val tgt = e.filter(col("label") >= 5)
-      .select(col("vec_id").as("tgt_id"), col("embedding").as("tv"))
-      .unionByName(e.filter(col("label") < 5 &&
-          pmod(col("vec_id"), lit(13)) === 0)
-        .select((col("vec_id") + 1000000L).as("tgt_id"),
-          col("embedding").as("tv")))
-    // exact all-pairs tier (oracle gate; the broadcast side is the
-    // fixture-sized target half)
-    val scored = src.join(broadcast(tgt))
-      .select(col("src_id"), col("tgt_id"),
-        VectorFunctions.cosine(col("sv"), col("tv")).as("cos"))
-    operators.Similarity.marginMine(scored, "src_id", "tgt_id", "cos",
-        k = 4, tau = 1.2, mutual = true)
-      .select(col("src_id"), col("tgt_id"),
-        round(col("cos"), 4).as("cos_r"),
-        round(col("margin"), 4).as("margin_r"))
-      .orderBy(col("src_id"))
-  }
-
-  /** Distributed BPE merge learning ([[operators.Tokenize.bpeMerges]] —
-    * Sennrich et al. 2016, arXiv:1508.07909; tokenizer induction, the
-    * technique that turns a curated corpus into the vocabulary it will be
-    * trained with): the corpus collapses to its vocab-bounded
-    * word-frequency table, then each of the 8 merges is one pair-count
-    * aggregate + argmax (count desc, lexicographic tie-break) + one
-    * non-overlapping greedy merge application. FULL DuckDB oracle — 8
-    * UNROLLED CTE layers replay the identical pair counts, argmax, and
-    * the double-space-boundary `replace` application (the encoding that
-    * makes single-pass string replace ≡ Sennrich's non-consuming
-    * lookaround scan on repeated-symbol runs — pinned by TokenizeSpec
-    * against a naive sequential reference). */
-  private def q177_bpe_merges(s: SparkSession, dir: String): DataFrame =
-    operators.Tokenize.bpeMerges(parallelize(t(s, dir, "documents")),
-        "text", merges = 8, minPairCount = 2L)
-      .orderBy(col("merge_idx"))
-
-  /** Weighted sampling without replacement ([[operators.Curate
-    * .weightedSample]] — Efraimidis & Spirakis 2006; the weighted tier of
-    * q90's deterministic sampling): top-120 documents by the ln(u)/w key
-    * with w = n_chars, so longer documents are proportionally likelier
-    * without ever being guaranteed — the draw a token-weighted corpus
-    * subsample needs. u is exact dyadic md5 arithmetic; the key rounds
-    * at 1e-9 with an id tie-break (the cross-engine ln pin). FULL DuckDB
-    * oracle — the identical hex-prefix u, ln-key, rank, and cut. */
-  private def q178_weighted_sample(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.weightedSample(
-        parallelize(t(s, dir, "documents")), "doc_id", "n_chars", k = 120)
-      .select(col("doc_id"), col("n_chars"), col("es_key"),
-        col("sample_rank"))
-      .orderBy(col("sample_rank"))
-
-  /** k-center greedy coreset ([[operators.Curate.kCenterGreedy]] — Sener
-    * & Savarese 2018 / Gonzalez 1985; the coverage-based pruning tier
-    * next to q171's density-based prototype pruning): the 8 embedding
-    * rows that best span the corpus, each round picking the point
-    * farthest (1−cos, rounded at 1e-6, id tie-break) from the picks so
-    * far; `sep_dist` traces the k-center objective and is
-    * non-increasing by construction. FULL DuckDB oracle — 8 UNROLLED
-    * CTE layers (the q177 discipline for iterative trainers) replaying
-    * the same seed, running-min distances, and argmax. */
-  private def q179_kcenter_coreset(s: SparkSession, dir: String): DataFrame =
-    operators.Curate.kCenterGreedy(t(s, dir, "embeddings"),
-        "embedding", "vec_id", k = 8)
-      .orderBy(col("center_rank"))
-
-  /** Kneser–Ney bigram perplexity ([[operators.TextProfile
-    * .knBigramPerplexity]] — Kneser & Ney 1995, the smoother CCNet's
-    * KenLM actually uses; q103's add-one model upgraded to discounted
-    * interpolation with continuation-probability backoff). Same contract
-    * as q103: every document scored against the English reference slice,
-    * docs without bigrams emitted with n_bigrams=0. FULL DuckDB oracle —
-    * the four model tables (pair counts, context totals + distinct
-    * continuations, distinct contexts, B/V scalars) and the exact
-    * discount arithmetic, term order mirrored. */
-  private def q180_kn_perplexity(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    operators.TextProfile.knBigramPerplexity(
-        docs, docs.filter(col("lang") === "en"), "text", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Similarity-graph centrality ([[operators.Rank.graphRank]] —
-    * TextRank's weighted power iteration, Mihalcea & Tarau 2004 / Brin &
-    * Page 1998): 5 damped iterations over the exact cosine graph at
-    * tau 0.3 (the q172 pair tier; production feeds the LSH/IVF store
-    * pairs), surfacing the corpus's over-connected hub rows. Every
-    * neighbor sum folds window-ordered (the q110 discipline) and each
-    * iteration rounds at 1e-9, so both engines iterate identical
-    * doubles. FULL DuckDB oracle — 5 UNROLLED CTE layers (the q177
-    * discipline) replaying the same normalized edges, ordered folds,
-    * and damping arithmetic. */
-  private def q181_graph_centrality(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val pairs = Dedup.embeddingNearDup(e, "embedding", "vec_id",
-        threshold = 0.3, nBits = 0)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("w"))
-    operators.Rank.graphRank(e.select(col("vec_id"), col("label")),
-        "vec_id", pairs, "id_a", "id_b", "w", iters = 5, damping = 0.85)
-      .select(col("vec_id"), col("label"), col("centrality"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** BPE tokenizer fit per language ([[operators.Tokenize.bpeFit]] —
-    * q177's learn → apply → measure loop closed, the way q174 closed
-    * q170's): 8 merges learned on the whole corpus, the vocabulary
-    * segmented once with the learned table, fertility
-    * (symbols-per-word) and chars-per-symbol reported per language —
-    * the learned-tokenizer upgrade of q144's fixed-regex fertility.
-    * FULL DuckDB oracle: the q177 unrolled layers now CARRY each word's
-    * segmentation, so the final layer IS the segmented vocabulary and
-    * the report is exact-BIGINT ratio arithmetic on top. */
-  private def q182_bpe_fit(s: SparkSession, dir: String): DataFrame =
-    operators.Tokenize.bpeFit(parallelize(t(s, dir, "documents")),
-        "text", "lang", merges = 8, minPairCount = 2L)
-      .withColumnRenamed("grp", "lang")
-      .orderBy(col("lang"))
-
-  /** T5 span corruption ([[operators.Tokenize.spanCorrupt]] — Raffel et
-    * al. 2020's denoising-objective data prep, in the deterministic
-    * md5-offset form: one 3-token span per 20-token window = the paper's
-    * 15% corruption rate, reproducible on any cluster). The rebuilt
-    * input/target texts are md5-pinned (the q167 rebuilt-text
-    * discipline). FULL DuckDB oracle — the same window arithmetic,
-    * hex-derived offsets, sentinel numbering, and final-sentinel close,
-    * replayed over list comprehensions. */
-  private def q183_span_corrupt(s: SparkSession, dir: String): DataFrame =
-    operators.Tokenize.spanCorrupt(parallelize(t(s, dir, "documents")),
-        "text", "doc_id")
-      .select(col("doc_id"), col("n_tokens"), col("n_spans"),
-        col("n_input_tokens"),
-        md5(col("input_text")).as("input_fp"),
-        md5(col("target_text")).as("target_fp"))
-      .orderBy(col("doc_id"))
-
-  /** C4 blocklist page filter ([[TextFunctions.blocklistHits]] /
-    * `blocklistKeep` — Raffel et al. 2020 §2.2's remaining member next
-    * to q167's structural rules: drop pages containing blocklisted
-    * words; the list is policy content and arrives as a parameter, so
-    * the fixture uses corpus-present neutral words exercising both
-    * branches — 'dup' occurs in the planted near-dup mutations,
-    * 'casino' never occurs). FULL DuckDB oracle via the same distinct
-    * token-set intersection. */
-  private def q184_blocklist_filter(s: SparkSession, dir: String): DataFrame = {
-    val bl = Seq("dup", "casino")
-    parallelize(t(s, dir, "documents"))
-      .select(col("doc_id"), col("lang"),
-        TextFunctions.blocklistHits(col("text"), bl).cast("long").as("n_bad"),
-        TextFunctions.blocklistKeep(col("text"), bl).as("keep"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Content-defined chunking duplicate-block report ([[operators.Dedup
-    * .cdcDuplicateChunks]] — LBFS 2001 / the FastCDC base form; the
-    * block-level dedup tier whose boundaries RESYNC after insertions,
-    * where q100/q121's grids mis-align and q168 needs newline
-    * structure): every ~64-char content-defined block occurring ≥ 2×
-    * corpus-wide, with occurrence/document counts. FULL DuckDB oracle —
-    * the same normalized text, md5-window cut rule, bounds assembly,
-    * and chunk fingerprints via list comprehensions. */
-  private def q185_cdc_chunks(s: SparkSession, dir: String): DataFrame =
-    Dedup.cdcDuplicateChunks(parallelize(t(s, dir, "documents")),
-        "text", "doc_id")
-      .orderBy(col("n_occ").desc, col("chunk_fp"))
-
-  /** CDC duplicate-block REMOVAL ([[operators.Dedup.stripDuplicateBlocks]]
-    * — q185's decision face, the keep-first rule at content-defined
-    * granularity; the detection→decision pairing q150/q168 gave their
-    * tiers): every ≥2× block removed everywhere but its min-(id, idx)
-    * first occurrence, documents rebuilt by concatenating survivors.
-    * The rebuilt text is md5-pinned (the q167 discipline). FULL DuckDB
-    * oracle — the q185 cut/fp arithmetic plus the same occurrence
-    * window, keep rule, and per-document slice-and-concat rebuild. */
-  private def q186_strip_blocks(s: SparkSession, dir: String): DataFrame =
-    Dedup.stripDuplicateBlocks(parallelize(t(s, dir, "documents")),
-        "text", "doc_id")
-      .select(col("doc_id"), md5(col("text_clean")).as("clean_fp"),
-        col("n_chunks"), col("n_kept"))
-      .orderBy(col("doc_id"))
-
-  /** Similarity-graph centrality served OFF THE STANDING STORE — the
-    * q161 pattern applied to q181, closing the "production feeds the
-    * store pairs" claim [[operators.Rank.graphRank]] documents: the
-    * edge set comes from the cell-bucketed assigned-corpus store
-    * ([[operators.Dedup.semDedupPairsFromStore]] — within-cell EXACT
-    * cosine at the q181 tau, so the served graph is a SUBSET of the
-    * exact graph by construction, never a superset) and graphRank runs
-    * the same 5 damped iterations on it. The exact all-pairs tier runs
-    * here only as the oracle side of the parity verdict — gate cost,
-    * the q169 discipline: edge recall vs the exact graph, structurally
-    * zero spurious edges, and hub-ordering agreement (top-20 by served
-    * centrality vs top-20 exact — the ordering centrality exists to
-    * surface) at bounds measured across all three fixture SFs.
-    * Scale shape: the served side is the q125 store path — assignment
-    * is one compiled map pass, the within-cell self-join reads
-    * co-located buckets (no exchange hashes on cell), vectors never
-    * move, and graphRank exchanges only (id, id, double) triples; only
-    * the exact tier (the gate) is quadratic, and production never runs
-    * it. */
-  private def q187_store_centrality(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    val tau = 0.3
-    val cents = Similarity.trainCentroids(e, "embedding", "vec_id", k = 8)
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q187_sem_$pid"
-    dropLocalTable(s, tbl)
-    Dedup.writeAssignedCorpus(e, cents, "embedding", "vec_id", probes = 4,
-      tbl, buckets = 8)
-    val served = operators.OpCache.track(
-      Dedup.semDedupPairsFromStore(s, tbl, "embedding", "vec_id", tau)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("w"))
-        .persist())
-    val exact = operators.OpCache.track(
-      Dedup.embeddingNearDup(e, "embedding", "vec_id", threshold = tau,
-          nBits = 0)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("w"))
-        .persist())
-    // fill both pair caches CONCURRENTLY (guide §2.6 via Par — the two
-    // tiers are independent until the parity verdicts), then fan out the
-    // two graphRank chains and the parity aggregate the same way; the
-    // up-front counts stop the concurrent readers from racing the same
-    // un-materialized cache into duplicate heavy computes
-    operators.Par.par2(served.count(), exact.count())
-    val nodes = e.select(col("vec_id"), col("label"))
-    def hubs(pairs: DataFrame) = operators.Rank.graphRank(nodes, "vec_id",
-        pairs, "id_a", "id_b", "w", iters = 5, damping = 0.85)
-      .orderBy(col("centrality").desc, col("vec_id")).limit(20)
-      .select(col("vec_id"))
-    // ONE full-outer aggregate replaces the r18 three sequential counts
-    // (exact.count + semi-join count + anti-join count): both pair sets
-    // are unique by construction (distinct candidates / ordered brute
-    // pairs), so row markers in the joined frame classify every pair
-    // exactly as the three joins did
-    val (hubsServed, hubsExact, parity) = operators.Par.par3(
-      operators.OpCache.materializeLocal(hubs(served)),
-      operators.OpCache.materializeLocal(hubs(exact)),
-      served.select(col("id_a"), col("id_b"), lit(1).as("l"))
-        .join(exact.select(col("id_a"), col("id_b"), lit(1).as("r")),
-          Seq("id_a", "id_b"), "full_outer")
-        .agg(
-          coalesce(sum(col("r")), lit(0)).as("n_exact"),
-          coalesce(sum(when(col("l") === 1 && col("r") === 1, 1)
-            .otherwise(0)), lit(0)).as("hit"),
-          coalesce(sum(when(col("l") === 1 && col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("spurious"))
-        .collect()(0))
-    val nExact = parity.getLong(0)
-    val hit = parity.getLong(1)
-    val spurious = parity.getLong(2)
-    // both hub frames are driver-local 20-row relations — intersect on
-    // the driver instead of running one more Spark job
-    val exactHubSet = hubsExact.collect().map(_.get(0)).toSet
-    val overlap =
-      hubsServed.collect().map(_.get(0)).count(exactHubSet).toLong
-    // bounds measured before pinning (the q169 discipline): recall
-    // 0.998/0.996/0.998 and hub overlap 19/20 at sf0.001/0.01/0.1 with
-    // probes = 4 of 8 cells (0.74 and 11/20 at probes = 2 — the
-    // recall-vs-cost knob, documented on semanticDecontaminate);
-    // spurious is structurally zero (within-cell exact cosine at tau)
-    Seq(
-      ("stored_centrality_edge_recall", 0.95,
-        nExact > 0 && hit >= 0.95 * nExact),
-      ("stored_centrality_spurious_edges", 0.0, spurious == 0L),
-      ("stored_centrality_hub_overlap", 16.0, overlap >= 16L),
-      ("stored_centrality_nonempty", 1.0, nExact > 0))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** Margin-based bitext mining served OFF THE STANDING STORE — the
-    * q161 pattern applied to q176, closing the "production feeds a
-    * store shortlist" claim [[operators.Similarity.marginMine]]
-    * documents: the target half is ingested into the cell-bucketed
-    * assigned store, the source half scores ONLY within its probed
-    * cells ([[operators.Dedup.semDedupBatchAgainstStore]] at a −1
-    * cosine floor — the FULL within-cell shortlist, because margins
-    * need each endpoint's own top-k, not just the high-cos tail), and
-    * marginMine runs the same k/tau/mutual rule on the shortlist. The
-    * exact all-pairs tier runs here only as the oracle side of the
-    * verdict — gate cost: planted-translation recovery (an exact copy
-    * shares its twin's hard cell, so the shortlist always carries the
-    * pair and its cos = 1 argmax survives), mined-set recall and
-    * spurious count vs the exact tier, nonempty. Scale shape: corpus
-    * vectors never move (the batch shuffles into the store's cell
-    * bucketing); marginMine's windows see candidate-sized input. */
-  private def q188_store_margin_mine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val e = t(s, dir, "embeddings")
-    val src = e.filter(col("label") < 5)
-      .select(col("vec_id"), col("embedding"))
-    val tgt = e.filter(col("label") >= 5)
-      .select(col("vec_id"), col("embedding"))
-      .unionByName(e.filter(col("label") < 5 &&
-          pmod(col("vec_id"), lit(13)) === 0)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-    val cents = Similarity.trainCentroids(tgt, "embedding", "vec_id", k = 8)
-    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tbl = s"q188_mm_$pid"
-    dropLocalTable(s, tbl)
-    // the store tier (write + shortlist + mine) and the exact tier are
-    // independent until the parity verdicts — run the two mining chains
-    // concurrently (guide §2.6 via Par); planted is a trivial filter
-    val (minedStore, minedExact) = operators.Par.par2(
-      {
-        Dedup.writeAssignedCorpus(tgt, cents, "embedding", "vec_id",
-          probes = 4, tbl, buckets = 8)
-        val shortlist = Dedup.semDedupBatchAgainstStore(s, src, tbl, cents,
-            "embedding", "vec_id", probes = 4, tau = -1.0)
-          .select(col("batch_id").as("src_id"),
-            col("corpus_id").as("tgt_id"), col("cos"))
-        operators.OpCache.materialize(
-          operators.Similarity.marginMine(shortlist, "src_id", "tgt_id",
-              "cos", k = 4, tau = 1.2, mutual = true)
-            .select(col("src_id"), col("tgt_id")))
-      }, {
-        val scoredExact = src.select(col("vec_id").as("src_id"),
-            col("embedding").as("sv"))
-          .join(broadcast(tgt.select(col("vec_id").as("tgt_id"),
-            col("embedding").as("tv"))))
-          .select(col("src_id"), col("tgt_id"),
-            VectorFunctions.cosine(col("sv"), col("tv")).as("cos"))
-        operators.OpCache.materialize(
-          operators.Similarity.marginMine(scoredExact, "src_id", "tgt_id",
-              "cos", k = 4, tau = 1.2, mutual = true)
-            .select(col("src_id"), col("tgt_id")))
-      })
-    val planted = src.filter(pmod(col("vec_id"), lit(13)) === 0)
-      .select(col("vec_id").as("src_id"),
-        (col("vec_id") + 1000000L).as("tgt_id"))
-    // each parity tier fuses its r18 sequential counts into ONE
-    // aggregate (mined/planted sets are unique pairs by construction:
-    // marginMine keeps one forward pick per src, planted one row per
-    // src), and the two aggregates run concurrently
-    val (plantedRow, parityRow) = operators.Par.par2(
-      planted
-        .join(minedStore.withColumn("m", lit(1)), Seq("src_id", "tgt_id"),
-          "left_outer")
-        .agg(count(lit(1)).as("n_planted"),
-          coalesce(sum(col("m")), lit(0)).as("planted_hit"))
-        .collect()(0),
-      minedStore.select(col("src_id"), col("tgt_id"), lit(1).as("l"))
-        .join(minedExact.select(col("src_id"), col("tgt_id"), lit(1).as("r")),
-          Seq("src_id", "tgt_id"), "full_outer")
-        .agg(
-          coalesce(sum(col("r")), lit(0)).as("n_exact"),
-          coalesce(sum(when(col("l") === 1 && col("r") === 1, 1)
-            .otherwise(0)), lit(0)).as("hit"),
-          coalesce(sum(when(col("l") === 1 && col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("spurious"))
-        .collect()(0))
-    val nPlanted = plantedRow.getLong(0)
-    val plantedHit = plantedRow.getLong(1)
-    val nExact = parityRow.getLong(0)
-    val hit = parityRow.getLong(1)
-    val spurious = parityRow.getLong(2)
-    // bounds measured before pinning: at probes = 4 the store-mined set
-    // EQUALED the exact tier's at all three SFs (recall 1.0, spurious 0;
-    // probes = 2 measured recall 0.89 with 14 spurious — the shortlist
-    // fidelity knob); planted recovery is the structural claim (an
-    // exact copy shares its twin's hard cell and wins both argmaxes at
-    // cos = 1), so it pins at ALL, while recall/spurious keep headroom
-    // for natural-pair margin flips near the tau boundary
-    Seq(
-      ("stored_mine_planted_recovered", 1.0,
-        nPlanted > 0 && plantedHit == nPlanted),
-      ("stored_mine_recall_of_exact", 0.9,
-        nExact > 0 && hit >= 0.9 * nExact),
-      ("stored_mine_spurious", 0.1, spurious <= 0.1 * nExact),
-      ("stored_mine_nonempty", 1.0, nExact > 0))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** PRODUCTION-scale BPE learning gated at fixture scale
-    * ([[operators.Tokenize.bpeMergesLocal]] — the corpus still collapses
-    * to its word-frequency table distributed, but the merge loop runs
-    * driver-side with incremental pair maintenance, the shape every
-    * published trainer uses, because 32k sequential one-job-per-merge
-    * rounds would take days): with topV covering the fixture vocabulary
-    * the learner is an EXACT drop-in for q177's distributed loop, so
-    * q177's 8-layer unrolled DuckDB oracle gates it row for row —
-    * same counts, argmaxes, tie-breaks, and early stop. What the path
-    * buys at 32k merges (and the native [[operators.Tokenize.bpeEncode]]
-    * apply that replaces 32k chained literal replaces) is priced by
-    * `graft.Probe bpelocal`; TokenizeSpec pins local≡distributed parity
-    * across seeds, the topV cap semantics, and encode equivalence. */
-  private def q189_bpe_local(s: SparkSession, dir: String): DataFrame =
-    operators.Tokenize.bpeMergesLocal(parallelize(t(s, dir, "documents")),
-        "text", merges = 8, minPairCount = 2L)
-      .orderBy(col("merge_idx"))
-
-  /** Unigram-LM tokenizer training (Kudo 2018 —
-    * [[operators.Tokenize.unigramFit]], the SentencePiece algorithm: the
-    * OTHER canonical induction method next to q177/q189's BPE — seed
-    * large, let a unigram LM's EM decide which pieces carry likelihood,
-    * shrink). Same production shape as q189: distributed word collapse,
-    * driver-side train loop over the vocab-bounded table. ENGINE-LOCAL
-    * gate (an EM float loop has no SQL twin — the DeflateRatio
-    * convention): verdict rows pin that the learned table IS a
-    * probability distribution (mass within 1e-6 of 1), that pruning hit
-    * the vocab target while keeping EVERY corpus code point (the
-    * paper's coverage rule), that at least one multi-codepoint piece
-    * was actually learned, and that Viterbi-segmenting every distinct
-    * corpus word reconstructs it exactly from in-table pieces (zero
-    * unknown fallbacks). The distinct-word frame is vocab-bounded, so
-    * the gate never collects corpus-sized data. TokenizeSpec pins the
-    * trainer against an ENUMERATIVE EM reference (every segmentation of
-    * every word, no lattice) across seeds, and the Viterbi encoder
-    * against exhaustive argmax. */
-  private def q191_unigram_fit(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = parallelize(t(s, dir, "documents"))
-    val table = operators.Tokenize.unigramFit(docs, "text",
-        vocabSize = 64, maxPieceLen = 6, seedSize = 512)
-      .orderBy(col("piece_rank")).collect()
-      .map(r => (r.getString(1), r.getDouble(3))).toSeq
-    val mass = table.map(p => math.exp(p._2)).sum
-    val tableSingles = table.map(_._1)
-      .filter(p => p.codePointCount(0, p.length) == 1).toSet
-    val nMulti = table.size - tableSingles.size
-    val words = operators.OpCache.track(docs
-      .select(explode(TextFunctions.tokens(col("text"))).as("w"))
-      .filter(col("w") =!= "").distinct().persist())
-    val wantSingles = words.as[String].collect()
-      .flatMap(w => w.codePoints().toArray.map(cp =>
-        new String(Character.toChars(cp)))).toSet
-    val segd = words.select(col("w"),
-      operators.Tokenize.unigramSegment(col("w"), table).as("s"))
-    val badRecon = segd.filter(concat_ws("", col("s")) =!= col("w")).count()
-    val badPiece = segd.select(explode(col("s")).as("p"))
-      .filter(!col("p").isInCollection(table.map(_._1))).count()
-    Seq(
-      ("uni_prob_mass", 1e-6, math.abs(mass - 1.0) <= 1e-6),
-      ("uni_vocab_target", 64.0,
-        table.size <= math.max(64, wantSingles.size) &&
-          tableSingles == wantSingles),
-      ("uni_learned_multis", 1.0, nMulti >= 1),
-      ("uni_reconstruction", 0.0, badRecon == 0L && badPiece == 0L))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** Dolma document-level PII policy ([[TextFunctions.piiPolicy]] —
-    * detect, count, DECIDE: pages over the span threshold drop instead
-    * of masking, the Dolma toolkit's contact-dump rule; survivors get
-    * q92's redaction chain). Decorated fixture, both directions (the
-    * q92 pattern): every doc plants one email + one IP + one phone
-    * (3 ≤ 5 → kept and masked), every 7th doc additionally plants a
-    * six-address contact dump (9 > 5 → dropped, red_fp NULL). FULL
-    * DuckDB oracle — the same planting, stage-wise counts, threshold,
-    * and conditional md5 of the redacted rebuild. */
-  private def q190_pii_policy(s: SparkSession, dir: String): DataFrame = {
-    val base = concat(coalesce(col("text"), lit("")),
-      lit(" contact user"), col("doc_id").cast("string"),
-      lit("@example.com or 10."),
-      pmod(col("doc_id"), lit(256)).cast("string"),
-      lit(".0.1 tel +1415555"),
-      lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"))
-    val dump = concat_ws(" ", (1 to 6).map(k =>
-      concat(lit(s"u$k."), col("doc_id").cast("string"),
-        lit("@dump.example"))): _*)
-    val planted = when(pmod(col("doc_id"), lit(7)) === 0,
-      concat(base, lit(" "), dump)).otherwise(base)
-    parallelize(t(s, dir, "documents"))
-      .withColumn("__o", TextFunctions.piiPolicy(planted, maxSpans = 5))
-      .select(col("doc_id"),
-        col("__o.n_pii").as("n_pii"),
-        col("__o.keep").as("keep"),
-        md5(col("__o.text_redacted")).as("red_fp"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Compression-ratio quality signal ([[TextFunctions.compressionRatio]]
-    * / [[TextFunctions.compressionKeep]] — the RedPajama-v2/Dolma zlib
-    * signal as a native codegen expression): engine-LOCAL by design (no
-    * SQL engine exposes deterministic zlib), so the gate is q169-style
-    * in-plan verdicts over planted decorations whose separation was
-    * MEASURED before pinning — repeated-block boilerplate deflates to
-    * ~0.014 (bound 0.1), base64 noise to ≥0.88 (bound 0.8), and every
-    * ≥200-char natural doc sits in 0.37–0.61 at all three SFs, inside
-    * the (0.20, 0.80) keep band with ≥0.17 margin both sides; short docs
-    * are excluded from the band gate because deflate ratios are
-    * length-confounded below ~200 bytes (dictionary warmup), the reason
-    * the keep rule is corpus policy, not a universal constant. */
-  private def q175_compression_signal(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = parallelize(t(s, dir, "documents"))
-    val ratio = TextFunctions.compressionRatio(col("text"))
-    val keep = TextFunctions.compressionKeep(col("text"))
-    val long = base.filter(length(col("text")) >= 200).select(col("text"))
-      .withColumn("kind", lit("long"))
-    val rep = base.filter(col("doc_id") < 50)
-      .select(repeat(concat(substring(col("text"), 1, 40), lit(" ")), 120)
-        .as("text"))
-      .withColumn("kind", lit("rep"))
-    val noise = base.filter(col("doc_id") < 50)
-      .select(concat((0 until 8).map(i =>
-        base64(unhex(md5(concat(coalesce(col("text"), lit("")),
-          lit(i.toString)))))): _*).as("text"))
-      .withColumn("kind", lit("noise"))
-    val empty = Seq("").toDF("text").withColumn("kind", lit("empty"))
-    val m = long.unionByName(rep).unionByName(noise).unionByName(empty)
-      .select(col("kind"), ratio.as("r"), keep.as("k"))
-      .groupBy(col("kind"))
-      .agg(count(lit(1)).as("n"), min(col("r")).as("rmin"),
-        max(col("r")).as("rmax"),
-        sum(when(col("k"), 1L).otherwise(0L)).as("kept"),
-        sum(when(col("r").isNull, 1L).otherwise(0L)).as("nulls"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    def n(k: String) = m(k).getLong(1)
-    Seq(
-      ("comp_rep_below_floor", 0.1,
-        m("rep").getDouble(3) < 0.1 && m("rep").getLong(4) == 0L),
-      ("comp_noise_above_ceiling", 0.8,
-        m("noise").getDouble(2) > 0.8 && m("noise").getLong(4) == 0L),
-      ("comp_natural_long_in_band", 0.0,
-        m("long").getDouble(2) > 0.20 && m("long").getDouble(3) < 0.80 &&
-          m("long").getLong(4) == n("long")),
-      ("comp_empty_unscorable", 0.0,
-        m("empty").getLong(5) == n("empty") && m("empty").getLong(4) == 0L),
-      ("comp_nonempty", 1.0,
-        Seq("long", "rep", "noise", "empty").forall(n(_) > 0L)))
-      .toDF("metric", "bound", "ok")
-      .orderBy(col("metric"))
-  }
-
-  /** CCNet head/middle/tail corpus split ([[operators.Curate.scoreBuckets]]
-    * over q103's bigram-LM perplexity, per language): the published
-    * quality partition — each language's cleanest perplexity tercile is
-    * "head", the noisiest "tail"; docs too short to score (no bigrams)
-    * surface as "none", never silently shifted into a bucket. FULL DuckDB
-    * oracle: q103's smoothed LM CTEs + the same ntile over the ROUNDED
-    * perplexity (identical sort keys by q103's proven parity). This gate
-    * runs the exact tier; a billion-doc language group switches to the
-    * operator's `approxAccuracy` boundary-cut mode (CurateSpec-gated
-    * against this exact tier) and never sorts the group. */
-  private def q173_ccnet_buckets(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    val ppl = operators.TextProfile.bigramPerplexity(docs,
-      docs.filter(col("lang") === "en"), "text", "doc_id")
-    val scored = docs.select(col("doc_id"), col("lang"))
-      .join(ppl.select(col("doc_id"), col("perplexity")), Seq("doc_id"))
-    operators.Curate.scoreBuckets(scored, "lang", "perplexity", "doc_id",
-        Seq("head", "middle", "tail"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** PARAMETERIZED quality gate — q165's production-policy sibling: the
-    * same A1 stats family judged at [[fixtureQualityBounds]] over the
-    * RAW corpus (no decoration — the adjusted word-count floor and
-    * stop-word requirement discriminate on undecorated word-soup:
-    * ~11% fail `n_words < 20`, ~25% fail `stop_hits < 1`, measured).
-    * The oracle recomputes stats AND the keep conjunction from the
-    * same interpolated [[TextFunctions.GopherQualityBounds]] instance,
-    * so the parameterization itself is what this query gates. */
-  private def q166_gopher_quality_bounds(s: SparkSession,
-                                         dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"),
-        TextFunctions.gopherQualityStats(col("text")).as("g"))
-      .select(col("doc_id"),
-        col("g.n_words").as("n_words"),
-        col("g.stop_hits").as("stop_hits"),
-        TextFunctions.gopherQualityKeepFromStats(col("g"),
-          fixtureQualityBounds).as("keep"))
-      .orderBy(col("doc_id"))
-
-  /** The A1 quality keep conjunction as oracle SQL, interpolated from
-    * the SAME [[TextFunctions.GopherQualityBounds]] instance the Spark
-    * rule reads — a bound adjusted in one place moves both engines
-    * together (default instance = the published constants table). */
-  private def gopherQualityKeepSql(
-      b: TextFunctions.GopherQualityBounds =
-        TextFunctions.GopherQualityBounds()): String =
-    s"""(n_words >= ${b.minWords} AND n_words <= ${b.maxWords}
-       |   AND mean_word_len >= ${b.minMeanWordLen}
-       |   AND mean_word_len <= ${b.maxMeanWordLen}
-       |   AND hash_word_ratio <= ${b.maxHashWordRatio}
-       |   AND ellipsis_word_ratio <= ${b.maxEllipsisWordRatio}
-       |   AND bullet_line_frac <= ${b.maxBulletLineFrac}
-       |   AND ellipsis_line_frac <= ${b.maxEllipsisLineFrac}
-       |   AND alpha_word_frac >= ${b.minAlphaWordFrac}
-       |   AND stop_hits >= ${b.minStopHits})""".stripMargin
-
-  /** Corpus-policy bounds for the SYNTHETIC fixture corpus, measured
-    * from the raw-document distribution (verify dump, sf0.01): docs are
-    * 10–100-word soup with `stop_hits ≤ 1` (the 31-word vocabulary
-    * contains only "the" from the paper's 8 stop words), so the
-    * published 50-word floor and 2-stop-hit requirement would drop
-    * ~half the corpus by construction. `minWords = 20` (~11% fail) and
-    * `minStopHits = 1` (~25% fail) keep the gate DISCRIMINATING at
-    * every other published bound — the escape hatch a real multilingual
-    * corpus needs, exercised in production composition (q96) and
-    * oracle-gated standalone (q166). */
-  private val fixtureQualityBounds =
-    TextFunctions.GopherQualityBounds(minWords = 20, minStopHits = 1)
-
-  /** The A1 quality-stats CTE block as oracle SQL — `<p>tok` + `<p>st`
-    * over a source relation `src(doc_id, text)`, recomputing
-    * [[TextFunctions.gopherQualityStats]] from first principles (same
-    * trim/lower/split conventions as `toksSql`, replace-based symbol
-    * counting; the prefix keeps names clash-free inside larger CTE
-    * chains — the `repetitionCtesSql` convention). Shared by the
-    * q165/q166 gates and the q96 flagship oracle so every consumer pins
-    * the same definitions. */
-  private def gopherQualityStatsCtesSql(p: String, src: String): String =
-    s"""${p}tok AS (
-       |  SELECT doc_id, text,
-       |    CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[])
-       |         ELSE string_split_regex(trim(lower(text)), '\\s+') END AS w,
-       |    list_filter(string_split(text, chr(10)), l -> l <> '') AS lines
-       |  FROM $src),
-       |${p}st AS (
-       |  SELECT doc_id, len(w) AS n_words,
-       |    round(CASE WHEN len(w) = 0 THEN 0.0
-       |      ELSE list_sum(list_transform(w, t -> length(t)))::DOUBLE
-       |           / len(w) END, 4) AS mean_word_len,
-       |    round(CASE WHEN len(w) = 0 THEN 0.0
-       |      ELSE (length(text) - length(replace(text, '#', '')))::DOUBLE
-       |           / len(w) END, 4) AS hash_word_ratio,
-       |    round(CASE WHEN len(w) = 0 THEN 0.0
-       |      ELSE ((length(text) - length(replace(text, '...', ''))) / 3
-       |            + (length(text) - length(replace(text, '…', ''))))::DOUBLE
-       |           / len(w) END, 4) AS ellipsis_word_ratio,
-       |    round(CASE WHEN len(lines) = 0 THEN 0.0
-       |      ELSE len(list_filter(lines, l -> list_contains(
-       |             [${TextFunctions.gopherBulletGlyphs
-                    .map(g => s"'$g'").mkString(", ")}],
-       |             substr(ltrim(l), 1, 1))))
-       |           ::DOUBLE / len(lines) END, 4) AS bullet_line_frac,
-       |    round(CASE WHEN len(lines) = 0 THEN 0.0
-       |      ELSE len(list_filter(lines, l -> rtrim(l) LIKE '%...'
-       |             OR rtrim(l) LIKE '%…'))::DOUBLE / len(lines) END, 4)
-       |      AS ellipsis_line_frac,
-       |    round(CASE WHEN len(w) = 0 THEN 0.0
-       |      ELSE len(list_filter(w, t -> regexp_matches(t, '\\p{L}')))
-       |           ::DOUBLE / len(w) END, 4) AS alpha_word_frac,
-       |    len(list_filter([${TextFunctions.gopherStopWords
-           .map(s0 => s"'$s0'").mkString(",")}],
-       |        sw -> list_contains(w, sw))) AS stop_hits
-       |  FROM ${p}tok)""".stripMargin
-
-  private def q143_ingest_pipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = parallelize(t(s, dir, "documents"))
-    // composed quality gate: composite score + Gopher repetition keep
-    // (q96/q156/q161 apply the same pair — one production convention)
-    val quality = docs.filter(
-      TextFunctions.qualityScore(col("text")) >= 0.6 &&
-        TextFunctions.gopherRepetitionKeep(col("text")))
-    // persisted: dsirWeights is two-pass over its input (feature
-    // histograms, then scoring) and the split assignment joins the
-    // deduped frame again — without this the quality gate + exact dedup
-    // run once per reference (the q96 r18 lesson)
-    val deduped = operators.OpCache.track(
-      Dedup.exact(quality, "text", "doc_id").persist())
-    val weighted = operators.Curate.dsirWeights(deduped, "text", "doc_id",
-      col("lang") === "en", nBuckets = 1009, alpha = 0.5)
-    val selected = weighted
-      .filter(!col("is_target") && col("weight").isNotNull)
-      .withColumn("wr", round(col("weight"), 4))
-      .filter(col("wr") > 0)
-      .select(col("doc_id"), col("wr"))
-    operators.Curate.leakageSafeSplits(
-        deduped.join(selected, Seq("doc_id")), "text",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      .select(col("doc_id"), col("wr").as("weight"), col("split"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---------------------------------------------------------------------
-  // Assemble
-  // ---------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg" -> q01_agg _,
-    "q02_filter_project" -> q02_filter_project _,
-    "q03_join_agg" -> q03_join_agg _,
-    "q04_broadcast_join" -> q04_broadcast_join _,
-    "q05_star_join" -> q05_star_join _,
-    "q06_window_rank" -> q06_window_rank _,
-    "q07_topk" -> q07_topk _,
-    "q08_distinct" -> q08_distinct _,
-    "q09_setops" -> q09_setops _,
-    "q10_rollup" -> q10_rollup _,
-    "q11_anti_join" -> q11_anti_join _,
-    "q12_semi_join" -> q12_semi_join _,
-    "q13_string_fns" -> q13_string_fns _,
-    "q14_date_fns" -> q14_date_fns _,
-    "q15_math_fns" -> q15_math_fns _,
-    "q16_json" -> q16_json _,
-    "q17_explode" -> q17_explode _,
-    "q18_having" -> q18_having _,
-    "q19_case_when" -> q19_case_when _,
-    "q20_window_running" -> q20_window_running _,
-    "q21_lag_lead" -> q21_lag_lead _,
-    "q22_ntile" -> q22_ntile _,
-    "q23_events_window" -> q23_events_window _,
-    "q24_grouping_sets" -> q24_grouping_sets _,
-    "q25_flow_chain" -> q25_flow_chain _,
-    "q26_flow_factory" -> q26_flow_factory _,
-    "q27_flow_hub_reducer" -> q27_flow_hub_reducer _,
-    "q28_dedup_exact" -> q28_dedup_exact _,
-    "q29_token_stats" -> q29_token_stats _,
-    "q30_lang_id" -> q30_lang_id _,
-    "q31_quality_score" -> q31_quality_score _,
-    "q32_minhash_neardup" -> q32_minhash_neardup _,
-    "q33_simhash_pairs" -> q33_simhash_pairs _,
-    "q34_cosine_topk" -> q34_cosine_topk _,
-    "q35_embedding_stats" -> q35_embedding_stats _,
-    "q36_multimodal_meta" -> q36_multimodal_meta _,
-    "q37_ann_lsh" -> q37_ann_lsh _,
-    "q38_near_dup_embedding" -> q38_near_dup_embedding _,
-    "q39_asof_join" -> q39_asof_join _,
-    "q40_range_join" -> q40_range_join _,
-    "q41_grouping_sets" -> q41_grouping_sets _,
-    "q42_setops_all" -> q42_setops_all _,
-    "q43_percentiles" -> q43_percentiles _,
-    "q44_approx_distinct" -> q44_approx_distinct _,
-    "q45_pivot" -> q45_pivot _,
-    "q46_levenshtein" -> q46_levenshtein _,
-    "q47_array_fns" -> q47_array_fns _,
-    "q48_subquery" -> q48_subquery _,
-    "q49_like_in" -> q49_like_in _,
-    "q50_ngram_jaccard" -> q50_ngram_jaccard _,
-    "q51_sessionize" -> q51_sessionize _,
-    "q52_winnow_fingerprint" -> q52_winnow_fingerprint _,
-    "q53_stats_agg" -> q53_stats_agg _,
-    "q54_csv_roundtrip" -> q54_csv_roundtrip _,
-    "q55_json_roundtrip" -> q55_json_roundtrip _,
-    "q56_window_frames" -> q56_window_frames _,
-    "q57_percent_rank" -> q57_percent_rank _,
-    "q58_map_fns" -> q58_map_fns _,
-    "q59_streaming_window" -> q59_streaming_window _,
-    "q60_ivf_ann" -> q60_ivf_ann _,
-    "q61_session_window" -> q61_session_window _,
-    "q62_salted_join" -> q62_salted_join _,
-    "q63_custom_udaf" -> q63_custom_udaf _,
-    "q64_left_outer" -> q64_left_outer _,
-    "q65_full_outer" -> q65_full_outer _,
-    "q66_cross_join" -> q66_cross_join _,
-    "q67_union_null_fns" -> q67_union_null_fns _,
-    "q68_window_value_fns" -> q68_window_value_fns _,
-    "q69_date_arith" -> q69_date_arith _,
-    "q70_string_fns2" -> q70_string_fns2 _,
-    "q71_bucketed_join" -> q71_bucketed_join _,
-    "q72_multimodal_frames" -> q72_multimodal_frames _,
-    "q73_regex" -> q73_regex _,
-    "q74_chunking" -> q74_chunking _,
-    "q75_vector_mean" -> q75_vector_mean _,
-    "q76_explode_outer" -> q76_explode_outer _,
-    "q77_array_hof" -> q77_array_hof _,
-    "q78_unpivot" -> q78_unpivot _,
-    "q79_filtered_agg" -> q79_filtered_agg _,
-    "q80_max_by" -> q80_max_by _,
-    "q81_string_agg" -> q81_string_agg _,
-    "q82_bit_bool_agg" -> q82_bit_bool_agg _,
-    "q83_histogram" -> q83_histogram _,
-    "q84_struct_fns" -> q84_struct_fns _,
-    "q85_percentile_disc" -> q85_percentile_disc _,
-    "q86_cluster_resolve" -> q86_cluster_resolve _,
-    "q87_dedup_pipeline" -> q87_dedup_pipeline _,
-    "q88_repetition_scores" -> q88_repetition_scores _,
-    "q89_decontaminate" -> q89_decontaminate _,
-    "q90_stratified_sample" -> q90_stratified_sample _,
-    "q91_group_sample" -> q91_group_sample _,
-    "q92_pii_redact" -> q92_pii_redact _,
-    "q93_quality_filter" -> q93_quality_filter _,
-    "q94_mixing_rates" -> q94_mixing_rates _,
-    "q95_materialize_mix" -> q95_materialize_mix _,
-    "q96_curation_pipeline" -> q96_curation_pipeline _,
-    "q97_pack_sequences" -> q97_pack_sequences _,
-    "q98_token_budget" -> q98_token_budget _,
-    "q99_multimodal_decode" -> q99_multimodal_decode _,
-    "q100_span_dedup" -> q100_span_dedup _,
-    "q101_incremental_dedup" -> q101_incremental_dedup _,
-    "q102_incremental_neardup" -> q102_incremental_neardup _,
-    "q103_perplexity" -> q103_perplexity _,
-    "q104_bm25" -> q104_bm25 _,
-    "q105_orc_roundtrip" -> q105_orc_roundtrip _,
-    "q106_normalize_text" -> q106_normalize_text _,
-    "q107_rrf_fusion" -> q107_rrf_fusion _,
-    "q108_semdedup" -> q108_semdedup _,
-    "q109_hash_classifier" -> q109_hash_classifier _,
-    "q110_temperature_mix" -> q110_temperature_mix _,
-    "q111_vocab_coverage" -> q111_vocab_coverage _,
-    "q112_pq_ann" -> q112_pq_ann _,
-    "q113_ivfpq_ann" -> q113_ivfpq_ann _,
-    "q114_negative_sampling" -> q114_negative_sampling _,
-    "q115_int8_quantize" -> q115_int8_quantize _,
-    "q116_distinct_ngrams" -> q116_distinct_ngrams _,
-    "q117_funnel" -> q117_funnel _,
-    "q118_ivfpq_code_store" -> q118_ivfpq_code_store _,
-    "q119_bm25_index" -> q119_bm25_index _,
-    "q120_funnel_conversion" -> q120_funnel_conversion _,
-    "q121_substring_spans" -> q121_substring_spans _,
-    "q122_substring_contamination" -> q122_substring_contamination _,
-    "q123_split_assign" -> q123_split_assign _,
-    "q124_approx_percentile" -> q124_approx_percentile _,
-    "q125_semdedup_store" -> q125_semdedup_store _,
-    "q126_fingerprint_store" -> q126_fingerprint_store _,
-    "q127_lsh_store" -> q127_lsh_store _,
-    "q128_funnel_approx" -> q128_funnel_approx _,
-    "q129_semdedup_batch_store" -> q129_semdedup_batch_store _,
-    "q130_strip_pipeline" -> q130_strip_pipeline _,
-    "q131_simhash_incremental" -> q131_simhash_incremental _,
-    "q132_bm25_serve" -> q132_bm25_serve _,
-    "q133_ivfpq_rerank" -> q133_ivfpq_rerank _,
-    "q134_hard_negatives" -> q134_hard_negatives _,
-    "q135_source_overlap" -> q135_source_overlap _,
-    "q136_dsir_select" -> q136_dsir_select _,
-    "q137_fp_store_ingest" -> q137_fp_store_ingest _,
-    "q138_store_compact" -> q138_store_compact _,
-    "q139_corpus_report" -> q139_corpus_report _,
-    "q140_training_order" -> q140_training_order _,
-    "q141_leakage_safe_splits" -> q141_leakage_safe_splits _,
-    "q142_dsir_topk" -> q142_dsir_topk _,
-    "q143_ingest_pipeline" -> q143_ingest_pipeline _,
-    "q144_tokenizer_fertility" -> q144_tokenizer_fertility _,
-    "q145_heavy_ngrams" -> q145_heavy_ngrams _,
-    "q146_lsh_store_ingest" -> q146_lsh_store_ingest _,
-    "q147_semdedup_store_ingest" -> q147_semdedup_store_ingest _,
-    "q148_index_retract" -> q148_index_retract _,
-    "q149_codestore_retract" -> q149_codestore_retract _,
-    "q150_strip_boilerplate" -> q150_strip_boilerplate _,
-    "q151_datacard_ext" -> q151_datacard_ext _,
-    "q152_decontaminated_splits" -> q152_decontaminated_splits _,
-    "q153_repeat_plan" -> q153_repeat_plan _,
-    "q154_cluster_safe_splits" -> q154_cluster_safe_splits _,
-    "q155_epoch_materialize" -> q155_epoch_materialize _,
-    "q156_training_batches" -> q156_training_batches _,
-    "q157_codestore_versioned" -> q157_codestore_versioned _,
-    "q158_codestore_ingest" -> q158_codestore_ingest _,
-    "q159_multimodal_resize" -> q159_multimodal_resize _,
-    "q160_codestore_retrain" -> q160_codestore_retrain _,
-    "q161_training_batches_stored" -> q161_training_batches_stored _,
-    "q162_repetition_rules" -> q162_repetition_rules _,
-    "q163_codestore_bloom" -> q163_codestore_bloom _,
-    "q164_codestore_drift" -> q164_codestore_drift _,
-    "q165_gopher_quality" -> q165_gopher_quality _,
-    "q166_gopher_quality_bounds" -> q166_gopher_quality_bounds _,
-    "q167_c4_filters" -> q167_c4_filters _,
-    "q168_line_dedup" -> q168_line_dedup _,
-    "q169_semantic_decontaminate" -> q169_semantic_decontaminate _,
-    "q170_unimax" -> q170_unimax _,
-    "q171_prototype_prune" -> q171_prototype_prune _,
-    "q172_d4_pipeline" -> q172_d4_pipeline _,
-    "q173_ccnet_buckets" -> q173_ccnet_buckets _,
-    "q174_unimax_materialize" -> q174_unimax_materialize _,
-    "q175_compression_signal" -> q175_compression_signal _,
-    "q176_margin_mine" -> q176_margin_mine _,
-    "q177_bpe_merges" -> q177_bpe_merges _,
-    "q178_weighted_sample" -> q178_weighted_sample _,
-    "q179_kcenter_coreset" -> q179_kcenter_coreset _,
-    "q180_kn_perplexity" -> q180_kn_perplexity _,
-    "q181_graph_centrality" -> q181_graph_centrality _,
-    "q182_bpe_fit" -> q182_bpe_fit _,
-    "q183_span_corrupt" -> q183_span_corrupt _,
-    "q184_blocklist_filter" -> q184_blocklist_filter _,
-    "q185_cdc_chunks" -> q185_cdc_chunks _,
-    "q186_strip_blocks" -> q186_strip_blocks _,
-    "q187_store_centrality" -> q187_store_centrality _,
-    "q188_store_margin_mine" -> q188_store_margin_mine _,
-    "q189_bpe_local" -> q189_bpe_local _,
-    "q190_pii_policy" -> q190_pii_policy _,
-    "q191_unigram_fit" -> q191_unigram_fit _,
-  )
-
-  /** SQL list literal of a stopword list. */
-  private def swList(lang: String): String =
-    TextFunctions.stopwordList(lang).map(w => s"'$w'").mkString("[", ",", "]")
-
-  /** DuckDB subquery computing per-document quality components (the oracle
-    * twin of TextFunctions' ratio columns); `cols` prepends id/group cols. */
-  private def qualityRawSql(cols: String): String = {
-    val en = swList("en")
-    s"""SELECT $cols,
-       |  CASE WHEN trim(coalesce(text,'')) = '' THEN 0
-       |       ELSE len($toksSql) END AS n_tok,
-       |  CASE WHEN length(coalesce(text,'')) = 0 THEN 0.0
-       |       ELSE (length(coalesce(text,'')) - length(regexp_replace(coalesce(text,''), '[[:punct:]]', '', 'g')))::DOUBLE / length(coalesce(text,'')) END AS punct_ratio,
-       |  CASE WHEN length(coalesce(text,'')) = 0 THEN 0.0
-       |       ELSE length(regexp_replace(coalesce(text,''), '[^\\p{L}]', '', 'g'))::DOUBLE / length(coalesce(text,'')) END AS alpha_ratio,
-       |  CASE WHEN trim(coalesce(text,'')) = '' THEN 0.0
-       |       ELSE len(list_filter($toksSql, t -> list_contains($en, t)))::DOUBLE / len($toksSql) END AS stopword_ratio,
-       |  CASE WHEN trim(coalesce(text,'')) = '' THEN 0.0
-       |       ELSE list_aggregate(list_transform($toksSql, t -> length(t)), 'sum')::DOUBLE / len($toksSql) END AS mean_word_len
-       | FROM documents""".stripMargin
-  }
-
-  /** The composite quality formula over [[qualityRawSql]]'s columns — the
-    * oracle twin of TextFunctions.qualityScore's combination step. */
-  private val qualityExprSql: String =
-    """round((
-      |   (CASE WHEN n_tok >= 5 AND n_tok <= 10000 THEN 1.0 ELSE 0.0 END) +
-      |   (CASE WHEN mean_word_len >= 2.5 AND mean_word_len <= 12.0 THEN 1.0 ELSE 0.0 END) +
-      |   (CASE WHEN stopword_ratio >= 0.05 THEN 1.0 ELSE 0.0 END) +
-      |   (CASE WHEN punct_ratio <= 0.3 THEN 1.0 ELSE 0.0 END) +
-      |   (CASE WHEN alpha_ratio >= 0.5 THEN 1.0 ELSE 0.0 END)) / 5.0, 2)""".stripMargin
-
-  /** CTE list (no leading WITH) recomputing the COMPLETE Gopher A1
-    * repetition family over `src` — a relation exposing (doc_id, t) —
-    * by the OPPOSITE algorithm to TextFunctions.repetitionStats'
-    * sorted run-length folds: explode + group-by counts per
-    * (doc, line/para/gram). Ties on the top-k-gram count break toward
-    * the longer gram on both sides; dup-after-first = sum((c-1)·len)
-    * over repeated values; dup-k-grams count EVERY occurrence (c·len).
-    * Lines are non-empty `\n` fragments, paragraphs non-blank `\n{2,}`
-    * fragments — both matching the operator exactly. `p` prefixes every
-    * CTE name so callers (q162, q96, q143, q156) can embed the chain
-    * without collisions. Ends with `${p}fr`: (doc_id, <fractions>, keep). */
-  private def repetitionCtesSql(p: String, src: String): String = {
-    val topCtes = TextFunctions.topGramKs.map { k =>
-      s"""${p}g$k AS (
-         |  SELECT doc_id, array_to_string(w[i:i+${k - 1}], ' ') AS g
-         |  FROM ${p}base, UNNEST(range(1, len(w) - ${k - 2})) AS r(i)
-         |  WHERE len(w) >= $k),
-         |${p}g${k}c AS (SELECT doc_id, g, count(*) AS c, length(g) AS len
-         |  FROM ${p}g$k GROUP BY doc_id, g),
-         |${p}g${k}m AS (SELECT doc_id, max(c) AS mc FROM ${p}g${k}c
-         |  GROUP BY doc_id),
-         |${p}g${k}s AS (
-         |  SELECT c.doc_id, any_value(m.mc) AS mc, max(c.len) AS ml
-         |  FROM ${p}g${k}c c JOIN ${p}g${k}m m
-         |    ON c.doc_id = m.doc_id AND c.c = m.mc
-         |  GROUP BY c.doc_id)""".stripMargin
-    }
-    val dupCtes = TextFunctions.dupGramKs.map { k =>
-      s"""${p}g$k AS (
-         |  SELECT doc_id, array_to_string(w[i:i+${k - 1}], ' ') AS g
-         |  FROM ${p}base, UNNEST(range(1, len(w) - ${k - 2})) AS r(i)
-         |  WHERE len(w) >= $k),
-         |${p}g${k}s AS (
-         |  SELECT doc_id, CAST(coalesce(sum(c * len)
-         |      FILTER (WHERE c >= 2), 0) AS BIGINT) AS dup
-         |  FROM (SELECT doc_id, g, count(*) AS c, length(g) AS len
-         |        FROM ${p}g$k GROUP BY doc_id, g)
-         |  GROUP BY doc_id)""".stripMargin
-    }
-    val topSel = TextFunctions.topGramKs.map { k =>
-      s"""round(CASE WHEN b.chars > 0 THEN
-         |      coalesce(${p}g${k}s.mc * ${p}g${k}s.ml, 0)
-         |        / CAST(b.chars AS DOUBLE)
-         |      ELSE 0 END, 4) AS top_${k}gram_char_frac""".stripMargin
-    }
-    val dupSel = TextFunctions.dupGramKs.map { k =>
-      s"""round(least(1.0, CASE WHEN b.chars > 0 THEN
-         |      coalesce(${p}g${k}s.dup, 0) / CAST(b.chars AS DOUBLE)
-         |      ELSE 0 END), 4) AS dup_${k}gram_char_frac""".stripMargin
-    }
-    val gramJoins =
-      (TextFunctions.topGramKs ++ TextFunctions.dupGramKs).map { k =>
-        s"  LEFT JOIN ${p}g${k}s ON b.doc_id = ${p}g${k}s.doc_id"
-      }.mkString("\n")
-    s"""${p}base AS (
-       |  SELECT doc_id, t, length(t) AS chars,
-       |    list_filter(string_split(t, chr(10)), l -> l <> '') AS lines,
-       |    list_filter(string_split_regex(t, '\\n{2,}'),
-       |      q -> trim(q) <> '') AS paras,
-       |    CASE WHEN trim(t) = '' THEN CAST([] AS VARCHAR[])
-       |         ELSE string_split_regex(trim(lower(t)), '\\s+') END AS w
-       |  FROM $src),
-       |${p}lx AS (
-       |  SELECT doc_id, l, count(*) AS c, length(l) AS len
-       |  FROM ${p}base, UNNEST(lines) AS u(l)
-       |  GROUP BY doc_id, l, length(l)),
-       |${p}lstat AS (
-       |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-       |    CAST(count(*) AS BIGINT) AS nd,
-       |    CAST(coalesce(sum(CASE WHEN c >= 2 THEN (c - 1) * len
-       |      ELSE 0 END), 0) AS BIGINT) AS dup_after
-       |  FROM ${p}lx GROUP BY doc_id),
-       |${p}px AS (
-       |  SELECT doc_id, q AS l, count(*) AS c, length(q) AS len
-       |  FROM ${p}base, UNNEST(paras) AS u(q)
-       |  GROUP BY doc_id, q, length(q)),
-       |${p}pstat AS (
-       |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n,
-       |    CAST(count(*) AS BIGINT) AS nd,
-       |    CAST(coalesce(sum(CASE WHEN c >= 2 THEN (c - 1) * len
-       |      ELSE 0 END), 0) AS BIGINT) AS dup_after
-       |  FROM ${p}px GROUP BY doc_id),
-       |${topCtes.mkString(",\n")},
-       |${dupCtes.mkString(",\n")},
-       |${p}fr0 AS (
-       |  SELECT b.doc_id,
-       |    CAST(coalesce(ls.n, 0) AS INT) AS n_lines,
-       |    round(CASE WHEN coalesce(ls.n, 0) > 0 THEN
-       |      (ls.n - ls.nd) / CAST(ls.n AS DOUBLE) ELSE 0 END, 4)
-       |      AS dup_line_frac,
-       |    round(CASE WHEN b.chars > 0 THEN
-       |      coalesce(ls.dup_after, 0) / CAST(b.chars AS DOUBLE)
-       |      ELSE 0 END, 4) AS dup_line_char_frac,
-       |    CAST(coalesce(ps.n, 0) AS INT) AS n_paras,
-       |    round(CASE WHEN coalesce(ps.n, 0) > 0 THEN
-       |      (ps.n - ps.nd) / CAST(ps.n AS DOUBLE) ELSE 0 END, 4)
-       |      AS dup_para_frac,
-       |    round(CASE WHEN b.chars > 0 THEN
-       |      coalesce(ps.dup_after, 0) / CAST(b.chars AS DOUBLE)
-       |      ELSE 0 END, 4) AS dup_para_char_frac,
-       |    ${(topSel ++ dupSel).mkString(",\n    ")}
-       |  FROM ${p}base b
-       |  LEFT JOIN ${p}lstat ls ON b.doc_id = ls.doc_id
-       |  LEFT JOIN ${p}pstat ps ON b.doc_id = ps.doc_id
-       |$gramJoins),
-       |${p}fr AS (
-       |  SELECT *, $repetitionKeepCondSql AS keep FROM ${p}fr0)""".stripMargin
-  }
-
-  /** The A1 keep rule over the fraction aliases `repetitionCtesSql`
-    * computes — generated from the SAME threshold table the Spark-side
-    * gopherRepetitionKeep reads. */
-  private def repetitionKeepCondSql: String =
-    TextFunctions.gopherRepetitionThresholds
-      .map { case (f, t) => s"$f <= $t" }
-      .mkString("(", " AND ", ")")
-
-  /** Per-language score fragment (≡ TextFunctions.langScore). */
-  private def langScoreSql(lang: String): String =
-    s"len(list_intersect(list_distinct($toksSql), ${swList(lang)}))"
-
-  /** argmax-with-priority CASE (≡ TextFunctions.langId tie-breaking). */
-  private def langCaseSql: String = {
-    val langs = TextFunctions.langOrder
-    val greatest = s"greatest(${langs.map(l => s"s_$l").mkString(",")})"
-    val cases = langs.init.zipWithIndex.map { case (l, i) =>
-      val laterLangs = langs.drop(i + 1)
-      val cond = laterLangs.map(o => s"s_$l >= s_$o").mkString(" AND ")
-      s"WHEN $cond THEN '$l'"
-    }.mkString(" ")
-    s"CASE WHEN $greatest <= 0 THEN 'und' $cases ELSE '${langs.last}' END"
-  }
-
-  /** The DSIR model CTEs over a given source relation (q136/q142/q143's
-    * shared oracle body): unigram+bigram features in q109's list_concat
-    * order, the portable positional code-point hash into 1009 buckets,
-    * add-0.5-smoothed target/raw histograms, the dense per-bucket
-    * log-ratio list. Returns the CTE LIST (no leading WITH) so callers
-    * can chain their own CTEs before it. */
-  private def dsirCtesOver(src: String): String =
-    s"""tok AS (
-       |  SELECT doc_id, coalesce(lang = 'en', FALSE) AS is_target,
-       |    CASE WHEN trim(coalesce(text, '')) = ''
-       |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-       |  FROM $src),
-       |f AS (
-       |  SELECT doc_id, is_target, list_concat(w,
-       |    list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS feats
-       |  FROM tok),
-       |fb AS (
-       |  SELECT doc_id, is_target,
-       |    list_transform(feats, t ->
-       |      CAST(list_sum(list_transform(range(1, len(t) + 1),
-       |        i -> ascii(t[i]) * i)) % 1009 AS INT)) AS bks
-       |  FROM f),
-       |c AS (
-       |  SELECT bucket,
-       |    sum(CASE WHEN is_target THEN 1 ELSE 0 END)::BIGINT AS ct,
-       |    sum(CASE WHEN is_target THEN 0 ELSE 1 END)::BIGINT AS cr
-       |  FROM (SELECT is_target, unnest(bks) AS bucket FROM fb)
-       |  GROUP BY bucket),
-       |tot AS (SELECT sum(ct)::DOUBLE AS nt, sum(cr)::DOUBLE AS nr FROM c),
-       |r AS (
-       |  SELECT list(
-       |      ln((coalesce(c.ct, 0) + 0.5) / (tot.nt + 0.5 * 1009)) -
-       |      ln((coalesce(c.cr, 0) + 0.5) / (tot.nr + 0.5 * 1009))
-       |      ORDER BY sp.bucket) AS lrs
-       |  FROM (SELECT unnest(range(0, 1009)) AS bucket) sp
-       |  LEFT JOIN c ON sp.bucket = c.bucket CROSS JOIN tot)""".stripMargin
-
-  /** DOUBLE-cast embedding fragment for exact-parity vector oracles. */
-  private val vecSql = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-
-  /** DuckDB prototype-prune tail over a CTE `src(vec_id, label, v)`:
-    * rounded per-label centroid means, the q38 cosine, the
-    * (cos DESC, vec_id) rank, the ceil(frac·n) cut — ONE definition for
-    * q171 (full corpus) and q172 (post-dedup survivors), so the two
-    * oracles cannot drift. */
-  private def protoPruneSql(src: String, frac: Double): String =
-    s"""c AS (SELECT label, fi, round(avg(v[fi]), 6) AS m
-       |      FROM $src CROSS JOIN (SELECT unnest(range(1, 65)) AS fi) f
-       |      GROUP BY label, fi),
-       |cent AS (SELECT label, array_agg(m ORDER BY fi) AS cv
-       |         FROM c GROUP BY label),
-       |s AS (SELECT $src.vec_id, $src.label, ${cosSql("v", "cv")} AS cos
-       |      FROM $src JOIN cent USING (label)),
-       |r AS (SELECT vec_id, label, cos,
-       |        row_number() OVER (PARTITION BY label
-       |          ORDER BY cos DESC, vec_id) AS proto_rank,
-       |        count(*) OVER (PARTITION BY label) AS cluster_n
-       |      FROM s)
-       |SELECT vec_id, label, round(cos, 4) AS cos_centroid,
-       |  proto_rank, cluster_n
-       |FROM r
-       |WHERE proto_rank > CAST(ceil($frac * cluster_n) AS BIGINT)
-       |ORDER BY label, proto_rank""".stripMargin
-
-  /** DuckDB UniMax waterfilling CTEs over `a(stratum, available_tokens,
-    * cap_tokens)`: the capacity sort, the exact-BIGINT prefix capping
-    * test, and the capped/uniform allocation CASE (CTE `al`, column
-    * `alloc`) — ONE definition for q170 and q174. */
-  private def unimaxCtesSql(budget: Long): String =
-    s"""w AS (SELECT *,
-       |        row_number() OVER (ORDER BY cap_tokens, stratum) AS idx,
-       |        coalesce(sum(cap_tokens) OVER (ORDER BY cap_tokens, stratum
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |          AS pfx,
-       |        count(*) OVER () AS n_tot
-       |      FROM a),
-       |f AS (SELECT *,
-       |        cap_tokens * (n_tot - idx + 1) < $budget - pfx AS capped
-       |      FROM w),
-       |g AS (SELECT *,
-       |        sum(CASE WHEN capped THEN 1 ELSE 0 END) OVER () AS k,
-       |        coalesce(sum(CASE WHEN capped THEN cap_tokens END)
-       |          OVER (), 0) AS sum_capped
-       |      FROM f),
-       |al AS (SELECT *,
-       |        CASE WHEN capped THEN cap_tokens::DOUBLE
-       |             ELSE ($budget - sum_capped)::DOUBLE / (n_tot - k) END
-       |          AS alloc
-       |      FROM g)""".stripMargin
-  private def cosSql(a: String, b: String): String =
-    s"list_dot_product($a,$b)/(sqrt(list_dot_product($a,$a))*sqrt(list_dot_product($b,$b)))"
-
-  /** DuckDB BPE merge-learning CTEs: `k` UNROLLED iteration layers (an
-    * iterative trainer has no closed form, so the oracle replays each
-    * round — pair counts over the previous segmentation, the (cnt DESC,
-    * lhs, rhs) argmax, and the same single-space-wrapped double-space
-    * -boundary `replace` application [[operators.Tokenize]] uses; both
-    * engines' `replace` scans left-to-right non-overlapping, and the
-    * double boundary keeps repeated-symbol runs merging greedily).
-    * Early-stop parity is structural: an empty argmax CTE empties every
-    * later layer through its CROSS JOIN, exactly like the trainer's
-    * break. */
-  private def bpeLayersSql(k: Int, minCnt: Long): String = {
-    // early-stop robustness (review fix): when b_i is empty (no pair
-    // reaches minCnt), s_i CARRIES s_{i-1} forward via LEFT JOIN ON TRUE
-    // instead of emptying through a CROSS JOIN — every later b_j stays
-    // empty (same counts, same filter), so q177's merge table still ends
-    // early, while q182's segmentation carry (the final s_k) matches the
-    // early-stopped trainer instead of silently vanishing.
-    val layers = (1 to k).map { i =>
-      s"""p$i AS (SELECT pr.l AS lhs, pr.r AS rhs, sum(freq)::BIGINT AS cnt
-         |  FROM (SELECT freq,
-         |          unnest([{'l': sy[j], 'r': sy[j+1]}
-         |                  for j in range(1, len(sy))]) AS pr
-         |        FROM (SELECT freq, string_split(seg, '  ') AS sy
-         |              FROM s${i - 1}))
-         |  GROUP BY 1, 2),
-         |b$i AS (SELECT lhs, rhs, cnt FROM p$i WHERE cnt >= $minCnt
-         |  ORDER BY cnt DESC, lhs, rhs LIMIT 1),
-         |s$i AS (SELECT word, freq,
-         |  CASE WHEN b.lhs IS NULL THEN seg ELSE
-         |    array_to_string(list_filter(string_split_regex(
-         |      replace(' ' || seg || ' ', ' ' || b.lhs || '  ' || b.rhs || ' ',
-         |              ' ' || b.lhs || b.rhs || ' '), ' +'), x -> x <> ''),
-         |      '  ') END AS seg
-         |  FROM s${i - 1} LEFT JOIN b$i b ON TRUE)""".stripMargin
-    }
-    s"""wds AS (SELECT word, count(*)::BIGINT AS freq
-       |  FROM (SELECT unnest($toksSql) AS word FROM documents)
-       |  WHERE word <> '' GROUP BY word),
-       |s0 AS (SELECT word, freq,
-       |  array_to_string([word[i] for i in range(1, len(word)+1)], '  ')
-       |    AS seg
-       |  FROM wds),
-       |${layers.mkString(",\n")}""".stripMargin
-  }
-
-  private def bpeCtesSql(k: Int, minCnt: Long): String = {
-    val union = (1 to k).map { i =>
-      s"SELECT $i AS merge_idx, lhs, rhs, lhs || rhs AS merged," +
-        s" cnt AS pair_count FROM b$i"
-    }.mkString("\nUNION ALL ")
-    s"""${bpeLayersSql(k, minCnt)}
-       |SELECT * FROM ($union) ORDER BY merge_idx""".stripMargin
-  }
-
-  /** DuckDB k-center greedy CTEs: `k` UNROLLED layers (the [[bpeCtesSql]]
-    * discipline — greedy selection has no closed form). Layer i holds the
-    * running min distance to centers 1..i; each next center is the
-    * (md DESC, vec_id) argmax. Distances are rounded at 1e-6 BEFORE the
-    * min, mirroring [[operators.Curate.kCenterGreedy]]'s engine-parity
-    * pin. */
-  private def kCenterSql(k: Int): String = {
-    val layers = (2 to k).map { i =>
-      s"""c$i AS (SELECT vec_id, v, md FROM d${i - 1}
-         |  ORDER BY md DESC, vec_id LIMIT 1),
-         |d$i AS (SELECT d.vec_id, d.v,
-         |    least(d.md, round(1 - ${cosSql("d.v", "c.v")}, 6)) AS md
-         |  FROM d${i - 1} d CROSS JOIN c$i c)""".stripMargin
-    }
-    // `md > 0` mirrors the operator's early stop: when the max
-    // min-distance hits 0 coverage is complete (k exceeds the
-    // distinct-vector count) and kCenterGreedy returns the shorter,
-    // duplicate-free list — without the filter this oracle would pad
-    // with re-picked zero-distance rows and diverge on such a fixture.
-    // sep_dist is non-increasing, so every later layer filters too.
-    val union = (s"SELECT 1 AS center_rank, vec_id," +
-      s" CAST(NULL AS DOUBLE) AS sep_dist FROM c1") +:
-      (2 to k).map(i => s"SELECT $i, vec_id, md FROM c$i WHERE md > 0")
-    s"""WITH e AS (SELECT vec_id, $vecSql AS v FROM embeddings),
-       |c1 AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1),
-       |d1 AS (SELECT e.vec_id, e.v,
-       |    round(1 - ${cosSql("e.v", "c.v")}, 6) AS md
-       |  FROM e CROSS JOIN c1 c),
-       |${layers.mkString(",\n")}
-       |SELECT * FROM (${union.mkString("\nUNION ALL ")})
-       |ORDER BY center_rank""".stripMargin
-  }
-
-  /** DuckDB graph-centrality CTEs: `iters` UNROLLED power-iteration
-    * layers (the [[bpeCtesSql]] discipline) over the exact cosine pair
-    * graph at `tau`. Every per-node sum (out-strength, each round's
-    * incoming mass) folds as a window ORDERED by the neighbor id —
-    * matching [[operators.Rank.graphRank]]'s ordered-fold pin — and each
-    * round rounds at 1e-9. The damping literals interpolate from the
-    * SAME Scala doubles the operator uses (`1.0 - damping` is NOT the
-    * decimal 0.15 at the last ulp). */
-  private def graphRankSql(iters: Int, damping: Double, tau: Double): String = {
-    def orderedFold(src: String, key: String, ord: String, value: String,
-                    out: String): String =
-      s"""SELECT $key AS id, cum AS $out FROM (
-         |  SELECT $key, sum($value) OVER (PARTITION BY $key ORDER BY $ord
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         |    row_number() OVER (PARTITION BY $key ORDER BY $ord DESC) AS rn
-         |  FROM $src) WHERE rn = 1""".stripMargin
-    val layers = (1 to iters).map { i =>
-      s"""m$i AS (${orderedFold(
-        s"(SELECT en.v, en.u, en.nw * r${i - 1}.r AS c FROM en " +
-          s"JOIN r${i - 1} ON en.u = r${i - 1}.id)",
-        "v", "u", "c", "mass")}),
-         |r$i AS (SELECT r0.id, round(${1.0 - damping} +
-         |    $damping * coalesce(m$i.mass, 0), 9) AS r
-         |  FROM r0 LEFT JOIN m$i ON r0.id = m$i.id)""".stripMargin
-    }
-    s"""WITH e AS (SELECT vec_id, label, $vecSql AS v FROM embeddings),
-       |p AS MATERIALIZED (
-       |  SELECT ua, ub, round(c, 6) AS w FROM (
-       |    SELECT a.vec_id AS ua, b.vec_id AS ub,
-       |      ${cosSql("a.v", "b.v")} AS c
-       |    FROM e a JOIN e b ON a.vec_id < b.vec_id) WHERE c >= $tau),
-       |ee AS (SELECT ua AS u, ub AS v, w FROM p
-       |       UNION ALL SELECT ub, ua, w FROM p),
-       |ow AS (${orderedFold("ee", "u", "v", "w", "outw")}),
-       |en AS MATERIALIZED (SELECT ee.u, ee.v, ee.w / ow.outw AS nw
-       |  FROM ee JOIN ow ON ee.u = ow.id),
-       |r0 AS (SELECT vec_id AS id, 1.0 AS r FROM e),
-       |${layers.mkString(",\n")}
-       |SELECT e.vec_id, e.label, r$iters.r AS centrality
-       |FROM e JOIN r$iters ON e.vec_id = r$iters.id
-       |ORDER BY e.vec_id""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(l_quantity),2) AS sum_qty,
-        | round(sum(l_extendedprice),2) AS sum_base_price,
-        | round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc_price,
-        | round(avg(l_quantity),4) AS avg_qty,
-        | round(avg(l_discount),4) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity,
-        | round(l_extendedprice,2) AS price
-        |FROM lineitem WHERE l_quantity > 45 AND l_discount >= 0.05
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_quantity, price""".stripMargin,
-    "q03_join_agg" ->
-      """SELECT o_orderkey, o_orderdate,
-        | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey, o_orderdate
-        |HAVING round(sum(l_extendedprice*(1-l_discount)),2) > 1000
-        |ORDER BY revenue DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q04_broadcast_join" ->
-      """SELECT p_brand, count(*) AS n_items,
-        | round(sum(l_extendedprice),2) AS total_price,
-        | round(avg(l_quantity),4) AS avg_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q05_star_join" ->
-      """SELECT r_name, n_name,
-        | round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q06_window_rank" ->
-      """SELECT o_custkey, o_orderkey, round(o_totalprice,2) AS price, rnk
-        |FROM (SELECT o_custkey, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_totalprice DESC, o_orderkey) AS rnk FROM orders) x
-        |WHERE rnk <= 3 ORDER BY o_custkey, rnk""".stripMargin,
-    "q07_topk" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice,2) AS price
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q08_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q09_setops" ->
-      """SELECT nationkey FROM (
-        |  SELECT c_nationkey AS nationkey FROM customer
-        |  INTERSECT SELECT s_nationkey FROM supplier
-        |  UNION
-        |  SELECT nationkey + 1000 FROM (
-        |    SELECT c_nationkey AS nationkey FROM customer
-        |    EXCEPT SELECT s_nationkey FROM supplier) e
-        |) u ORDER BY nationkey""".stripMargin,
-    "q10_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        | round(sum(l_quantity),2) AS qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q11_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q12_semi_join" ->
-      """SELECT c_custkey, c_nationkey FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 200000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q13_string_fns" ->
-      """SELECT p_partkey, upper(p_name) AS uname, length(p_name) AS name_len,
-        | substring(p_name, 1, 5) AS prefix,
-        | regexp_replace(p_name, 'a', '@', 'g') AS subst,
-        | concat_ws('|', p_brand, p_type) AS brand_type
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q14_date_fns" ->
-      """SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-        | count(*) AS n_orders, round(sum(o_totalprice),2) AS total
-        |FROM orders GROUP BY 1, 2 ORDER BY yr, mo""".stripMargin,
-    "q15_math_fns" ->
-      """SELECT l_returnflag,
-        | round(sum(sqrt(l_extendedprice)),2) AS sum_sqrt_price,
-        | round(sum(pow(l_discount,2)),4) AS sum_disc_sq,
-        | round(sum(abs(l_quantity-25)),2) AS sum_absdev,
-        | CAST(sum(ceil(l_tax*100)) AS BIGINT) AS sum_ceil_tax,
-        | CAST(sum(floor(l_quantity)) AS BIGINT) AS sum_floor_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q16_json" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(json_extract_string(props,'$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        | round(avg(CAST(json_extract_string(props,'$.k') AS BIGINT)),4) AS avg_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q17_explode" ->
-      """SELECT word, count(*) AS n FROM (
-        |  SELECT unnest(string_split(p_name, ' ')) AS word FROM part) w
-        |GROUP BY word ORDER BY word""".stripMargin,
-    "q18_having" ->
-      """SELECT l_suppkey, round(sum(l_quantity),2) AS total_qty, count(*) AS n
-        |FROM lineitem GROUP BY l_suppkey
-        |HAVING round(sum(l_quantity),2) > 100 ORDER BY l_suppkey""".stripMargin,
-    "q19_case_when" ->
-      """SELECT o_orderpriority,
-        | CAST(sum(CASE WHEN o_totalprice > 100000 THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
-        | CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_finished,
-        | count(*) AS n
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q20_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        | round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-        |   ORDER BY o_orderdate, o_orderkey
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS running_total
-        |FROM orders WHERE o_custkey < 50
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q21_lag_lead" ->
-      """SELECT o_custkey, o_orderkey,
-        | date_diff('day', lag(o_orderdate,1) OVER w, o_orderdate) AS days_since_prev,
-        | lead(o_orderkey,1) OVER w AS next_orderkey
-        |FROM orders WHERE o_custkey < 100
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q22_ntile" ->
-      """SELECT quartile, count(*) AS n, min(c_custkey) AS min_key FROM (
-        |  SELECT c_custkey, ntile(4) OVER (ORDER BY c_acctbal DESC, c_custkey)
-        |    AS quartile FROM customer) x
-        |GROUP BY quartile ORDER BY quartile""".stripMargin,
-    "q23_events_window" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS bucket, event_type,
-        | count(*) AS n, round(sum(value),2) AS total_value
-        |FROM events GROUP BY bucket, event_type
-        |ORDER BY bucket, event_type""".stripMargin,
-    "q24_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q25_flow_chain" ->
-      """SELECT l_returnflag, round(sum(disc_price),2) AS revenue, count(*) AS n
-        |FROM (SELECT l_returnflag, l_extendedprice*(1-l_discount) AS disc_price
-        |      FROM lineitem) x
-        |WHERE disc_price > 1000
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q26_flow_factory" ->
-      """SELECT token, count(*) AS n FROM (
-        |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |  FROM documents WHERE trim(text) <> '') tk
-        |GROUP BY token HAVING count(*) >= 50 ORDER BY token""".stripMargin,
-    "q27_flow_hub_reducer" ->
-      """SELECT l_orderkey, l_linenumber,
-        | round(l_quantity*2 + l_extendedprice/10, 3) AS combined
-        |FROM lineitem WHERE l_orderkey < 100
-        |ORDER BY l_orderkey, l_linenumber, combined""".stripMargin,
-    "q28_dedup_exact" ->
-      s"""SELECT doc_id, lang, source FROM documents
-         |WHERE doc_id IN (
-         |  SELECT min(doc_id) FROM documents GROUP BY md5($normSql))
-         |ORDER BY doc_id""".stripMargin,
-    "q29_token_stats" ->
-      s"""SELECT doc_id,
-         | CAST(CASE WHEN trim(text) = '' THEN 0 ELSE len($toksSql) END AS BIGINT) AS n_tokens,
-         | CAST(len(regexp_extract_all(coalesce(text,''),
-         |   '(''(?:s|d|m|t|ll|ve|re))|([\\p{L}]+)|([0-9]{1,3})|([^\\s\\p{L}0-9]+)')) AS BIGINT) AS n_bpe_tokens,
-         | CAST(length($normSql) AS BIGINT) AS n_chars_norm,
-         | md5($normSql) AS fp
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q30_lang_id" -> {
-      val scores = TextFunctions.langOrder
-        .map(l => s"${langScoreSql(l)} AS s_$l").mkString(", ")
-      s"""SELECT doc_id, $langCaseSql AS lang_pred, CAST(s_en AS BIGINT) AS s_en
-         |FROM (SELECT doc_id, $scores FROM documents) x
-         |ORDER BY doc_id""".stripMargin
-    },
-    "q31_quality_score" ->
-      s"""SELECT doc_id,
-         | round(punct_ratio, 4) AS punct_ratio,
-         | round(alpha_ratio, 4) AS alpha_ratio,
-         | round(stopword_ratio, 4) AS stopword_ratio,
-         | round(mean_word_len, 4) AS mean_word_len,
-         | $qualityExprSql AS quality
-         |FROM (${qualityRawSql("doc_id")}) raw
-         |ORDER BY doc_id""".stripMargin,
-    "q32_minhash_neardup" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, $toksSql AS w FROM documents WHERE doc_id < 1000),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))), 4) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8
-         |ORDER BY id_a, id_b""".stripMargin,
-    // q33 is an accuracy GATE: Spark verifies simhash pairs against exact
-    // 3-gram Jaccard and emits (metric, bound, ok); the oracle pins the
-    // expected verdict literally, so a simhash regression (ok=false)
-    // hash-mismatches. The bound/metric literals must match the query.
-    "q33_simhash_pairs" ->
-      """SELECT * FROM (VALUES
-        |  ('simhash_pairs_bounded', CAST(200.0 AS DOUBLE), TRUE),
-        |  ('simhash_recall_of_exact', CAST(0.4 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q34_cosine_topk" ->
-      s"""WITH e AS (SELECT vec_id, $vecSql AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id % 100 = 0)
-         |SELECT query_id, corpus_id, cos_r, rank FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-         |    round(${cosSql("q.v", "c.v")}, 4) AS cos_r,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY round(${cosSql("q.v", "c.v")}, 4) DESC, c.vec_id) AS rank
-         |  FROM q, e c WHERE c.vec_id <> q.vec_id) x
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q35_embedding_stats" ->
-      s"""SELECT label, count(*) AS n,
-         | round(avg(sqrt(list_dot_product($vecSql, $vecSql))), 4) AS avg_norm,
-         | round(avg(len(embedding)), 2) AS avg_dim
-         |FROM embeddings GROUP BY label ORDER BY label""".stripMargin,
-    "q36_multimodal_meta" ->
-      """SELECT d.doc_id, CAST(octet_length(encode(d.text)) AS BIGINT) AS byte_len,
-        | md5(d.text) AS checksum, e.label
-        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q37 gate: LSH recall@5 vs in-plan brute force must clear the bound.
-    "q37_ann_lsh" ->
-      """SELECT 'lsh_recall_at_5' AS metric, CAST(0.05 AS DOUBLE) AS bound,
-        | TRUE AS ok""".stripMargin,
-    "q38_near_dup_embedding" ->
-      s"""WITH e AS (SELECT vec_id, $vecSql AS v FROM embeddings WHERE vec_id < 2000)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         |  round(${cosSql("a.v", "b.v")}, 4) AS cos_r
-         |FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |WHERE ${cosSql("a.v", "b.v")} >= 0.45
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q39_asof_join" ->
-      """WITH quotes AS (
-        |  SELECT o_custkey AS user_id, o_orderdate,
-        |         max(o_orderkey) AS o_orderkey
-        |  FROM orders GROUP BY o_custkey, o_orderdate)
-        |SELECT e.event_id, e.user_id, q.o_orderkey AS last_orderkey
-        |FROM events e ASOF LEFT JOIN quotes q
-        |  ON e.user_id = q.user_id AND e.ts >= q.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-    "q40_range_join" ->
-      """WITH bands(band, lo, hi) AS (VALUES
-        |  ('p0_50k', 0.0, 50000.0), ('p50_150k', 50000.0, 150000.0),
-        |  ('p150_300k', 150000.0, 300000.0), ('p300k_up', 300000.0, 1e18))
-        |SELECT band, count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY band ORDER BY band""".stripMargin,
-    "q41_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        | count(*) AS n, round(sum(l_extendedprice), 2) AS total
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q42_setops_all" ->
-      """WITH a AS (SELECT l_returnflag FROM lineitem WHERE l_quantity < 25),
-        |b AS (SELECT l_returnflag FROM lineitem WHERE l_discount > 0.03),
-        |i AS (SELECT l_returnflag, count(*) AS n_intersect
-        |      FROM (SELECT * FROM a INTERSECT ALL SELECT * FROM b) x
-        |      GROUP BY l_returnflag),
-        |e AS (SELECT l_returnflag, count(*) AS n_except
-        |      FROM (SELECT * FROM a EXCEPT ALL SELECT * FROM b) y
-        |      GROUP BY l_returnflag)
-        |SELECT coalesce(i.l_returnflag, e.l_returnflag) AS l_returnflag,
-        |       n_intersect, n_except
-        |FROM i FULL OUTER JOIN e ON i.l_returnflag = e.l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q43_percentiles" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.25), 4) AS p25,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        | round(quantile_cont(l_extendedprice, 0.75), 4) AS p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // q44 gate: exact distinct count is oracle-computable; hll_ok asserts
-    // the HLL++ estimate (not oracle-computable) stays within 5%.
-    "q44_approx_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-        | TRUE AS hll_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q45_pivot" ->
-      """SELECT l_returnflag,
-        | round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_f,
-        | round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q46_levenshtein" ->
-      """SELECT p_partkey,
-        | CAST(levenshtein(substring(p_name, 1, 8), 'red widg') AS BIGINT) AS dist
-        |FROM part WHERE levenshtein(substring(p_name, 1, 8), 'red widg') <= 4
-        |ORDER BY p_partkey""".stripMargin,
-    "q47_array_fns" ->
-      s"""SELECT doc_id,
-         | CAST(len(list_distinct($toksSql)) AS BIGINT) AS n_distinct,
-         | array_to_string(list_sort(list_distinct($toksSql))[1:3], ',') AS top3,
-         | list_contains($toksSql, 'the') AS has_the
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q48_subquery" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price
-        |FROM orders o
-        |WHERE o_totalprice > (SELECT avg(o2.o_totalprice) * 1.2
-        |                      FROM orders o2
-        |                      WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q49_like_in" ->
-      """SELECT p_partkey, p_name, p_type FROM part
-        |WHERE p_name LIKE '%widget%'
-        |   OR (p_name LIKE 'red%' AND p_type IN ('ECONOMY', 'PROMO'))
-        |ORDER BY p_partkey""".stripMargin,
-    "q50_ngram_jaccard" ->
-      s"""WITH tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))), 4) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |      len(list_distinct(list_concat(a.s, b.s))) >= 0.6
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q51_sessionize" ->
-      """WITH seq AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    lag(epoch_us(ts), 1) OVER w AS prev_us
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |flagged AS (
-        |  SELECT *, CASE WHEN prev_us IS NULL
-        |      OR epoch_us(ts) - prev_us > 1800 * 1000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM seq),
-        |sess AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flagged)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  min(ts) AS sess_start,
-        |  CAST(max(epoch_us(ts)) - min(epoch_us(ts)) AS BIGINT) AS duration_us,
-        |  round(sum(value), 2) AS total_value
-        |FROM sess GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "q52_winnow_fingerprint" ->
-      s"""WITH tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |gr AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [md5(array_to_string(w, ' '))]
-         |    ELSE [md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-         |          for i in range(1, len(w) - 1)] END AS gh
-         |  FROM tok),
-         |fp AS (
-         |  SELECT doc_id, list_distinct(
-         |    CASE WHEN len(gh) <= 4 THEN [list_aggregate(gh, 'min')]
-         |      ELSE [list_aggregate(gh[i:i+3], 'min')
-         |            for i in range(1, len(gh) - 2)] END) AS fps
-         |  FROM gr)
-         |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
-         |  list_aggregate(fps, 'min') AS fp_min,
-         |  list_aggregate(fps, 'max') AS fp_max
-         |FROM fp ORDER BY doc_id""".stripMargin,
-    "q53_stats_agg" ->
-      """SELECT l_returnflag,
-        | round(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-        | round(stddev_samp(l_discount), 6) AS sd_disc,
-        | round(covar_samp(l_quantity, l_tax), 6) AS cov_qty_tax,
-        | round(var_samp(l_quantity), 4) AS var_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q54_csv_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | round(sum(o_totalprice), 2) AS total,
-        | min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q55_json_roundtrip" ->
-      """SELECT p_brand, count(*) AS n,
-        | round(avg(p_retailprice), 4) AS avg_price
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q56_window_frames" ->
-      """SELECT o_custkey, o_orderkey,
-        | round(avg(o_totalprice) OVER w, 4) AS moving_avg,
-        | round(max(o_totalprice) OVER w, 2) AS moving_max,
-        | count(*) OVER w AS n_in_frame
-        |FROM orders WHERE o_custkey < 40
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q57_percent_rank" ->
-      """SELECT c_custkey, c_nationkey, pr, cd FROM (
-        |  SELECT c_custkey, c_nationkey,
-        |    round(percent_rank() OVER w, 6) AS pr,
-        |    round(cume_dist() OVER w, 6) AS cd
-        |  FROM customer
-        |  WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)) x
-        |WHERE c_custkey <= 300 ORDER BY c_custkey""".stripMargin,
-    "q58_map_fns" ->
-      """SELECT event_id,
-        | array_to_string(list_sort(json_keys(props)), ',') AS keys,
-        | CAST(json_extract(props, '$.k') AS BIGINT) AS k_val,
-        | CAST(len(json_keys(props)) AS BIGINT) AS n_keys
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q59_streaming_window" ->
-      """SELECT time_bucket(INTERVAL '1 hour', ts) AS bucket, event_type,
-        | count(*) AS n, round(sum(value),2) AS total_value
-        |FROM events GROUP BY bucket, event_type
-        |ORDER BY bucket, event_type""".stripMargin,
-    "q61_session_window" ->
-      """WITH seq AS (
-        |  SELECT user_id, ts, value, lag(epoch_us(ts), 1) OVER
-        |    (PARTITION BY user_id ORDER BY ts) AS prev_us
-        |  FROM events),
-        |flagged AS (
-        |  SELECT *, CASE WHEN prev_us IS NULL
-        |      OR epoch_us(ts) - prev_us >= 1800 * 1000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM seq),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM flagged)
-        |SELECT user_id, min(ts) AS sess_start,
-        |  max(ts) + INTERVAL '30 minutes' AS sess_end,
-        |  count(*) AS n_events, round(sum(value), 2) AS total_value
-        |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, sess_start""".stripMargin,
-    // q60 gate: IVF recall@5 vs in-plan brute force must clear the bound.
-    "q60_ivf_ann" ->
-      """SELECT 'ivf_recall_at_5' AS metric, CAST(0.3 AS DOUBLE) AS bound,
-        | TRUE AS ok""".stripMargin,
-    "q62_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n, round(sum(value), 2) AS total_value
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q63_custom_udaf" ->
-      """SELECT l_returnflag,
-        | round(list_sort(list(l_extendedprice), 'DESC')[1], 2) AS top1,
-        | round(list_sort(list(l_extendedprice), 'DESC')[2], 2) AS top2,
-        | round(list_sort(list(l_extendedprice), 'DESC')[3], 2) AS top3
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q64_left_outer" ->
-      """SELECT c_custkey, n_big, max_price
-        |FROM customer LEFT JOIN (
-        |  SELECT o_custkey, count(*) AS n_big,
-        |    round(max(o_totalprice), 2) AS max_price
-        |  FROM orders WHERE o_totalprice > 250000 GROUP BY o_custkey) o
-        |ON c_custkey = o_custkey
-        |WHERE c_custkey <= 200 ORDER BY c_custkey""".stripMargin,
-    "q65_full_outer" ->
-      """WITH a AS (SELECT o_custkey AS k, count(*) AS n_a
-        |           FROM orders WHERE o_custkey < 60 GROUP BY o_custkey),
-        |b AS (SELECT o_custkey AS k, round(sum(o_totalprice), 2) AS total_b
-        |      FROM orders WHERE o_custkey BETWEEN 30 AND 90 GROUP BY o_custkey)
-        |SELECT coalesce(a.k, b.k) AS k, n_a, total_b
-        |FROM a FULL OUTER JOIN b ON a.k = b.k ORDER BY k""".stripMargin,
-    "q66_cross_join" ->
-      """SELECT r_name, n_name, concat_ws('/', r_name, n_name) AS pair
-        |FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-    "q67_union_null_fns" ->
-      """WITH u AS (
-        |  SELECT o_orderkey, round(o_totalprice, 2) AS amount,
-        |         CAST(NULL AS VARCHAR) AS status
-        |  FROM orders WHERE o_custkey < 10
-        |  UNION ALL
-        |  SELECT o_orderkey, CAST(NULL AS DOUBLE), o_orderstatus
-        |  FROM orders WHERE o_custkey >= 140)
-        |SELECT o_orderkey, coalesce(amount, -1.0) AS amount_f,
-        |  coalesce(status, 'none') AS status_f,
-        |  amount IS NULL AS amount_missing
-        |FROM u ORDER BY o_orderkey""".stripMargin,
-    "q68_window_value_fns" ->
-      """SELECT o_custkey, o_orderkey,
-        | round(first_value(o_totalprice) OVER w, 2) AS first_price,
-        | round(last_value(o_totalprice) OVER w, 2) AS last_price,
-        | round(nth_value(o_totalprice, 2) OVER w, 2) AS second_price
-        |FROM orders WHERE o_custkey < 30
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q69_date_arith" ->
-      """SELECT o_orderkey,
-        | CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus3m,
-        | CAST(CAST(o_orderdate AS DATE) + 30 AS DATE) AS plus30d,
-        | last_day(CAST(o_orderdate AS DATE)) AS month_end,
-        | CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
-        | CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-        | CAST(dayofweek(o_orderdate) AS BIGINT) AS dow
-        |FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey""".stripMargin,
-    "q70_string_fns2" ->
-      """SELECT p_partkey,
-        | lpad(p_brand, 12, '*') AS lp,
-        | rpad(p_brand, 12, '-') AS rp,
-        | translate(p_type, 'AEO', 'aeo') AS tr,
-        | repeat(substring(p_name, 1, 3), 2) AS rep,
-        | reverse(p_brand) AS rev,
-        | split_part(p_name, ' ', 1) AS first_word
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q71_bucketed_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q72_multimodal_frames" ->
-      """SELECT doc_id, CAST(fi AS BIGINT) AS frame_idx,
-        | md5(md5(text) || CAST(fi AS VARCHAR)) AS frame_fingerprint
-        |FROM documents CROSS JOIN (SELECT unnest([0,1,2]) AS fi) f
-        |WHERE doc_id < 200
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "q73_regex" ->
-      """SELECT p_partkey,
-        | regexp_extract(p_name, '^(\w+)\s+(\w+)', 1) AS w1,
-        | regexp_extract(p_name, '^(\w+)\s+(\w+)', 2) AS w2,
-        | regexp_matches(p_name, '(gear|widget)') AS is_mech,
-        | CAST(len(regexp_extract_all(p_name, '[aeiou]')) AS BIGINT) AS n_vowels
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q74_chunking" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(lower(coalesce(text, ''))) = ''
-         |      THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |n AS (SELECT doc_id, w, len(w) AS n FROM tok WHERE len(w) > 0),
-         |c AS (SELECT *, CAST(1 + ceil(greatest(0, n - 32) / 24.0) AS INT)
-         |        AS n_chunks FROM n),
-         |ch AS (SELECT doc_id, w, n, unnest(range(0, n_chunks)) AS chunk_idx
-         |       FROM c)
-         |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |  CAST(least(32, n - (chunk_idx * 24 + 1) + 1) AS BIGINT) AS n_tokens,
-         |  array_to_string(w[chunk_idx * 24 + 1 : chunk_idx * 24 + 32], ' ')
-         |    AS chunk_text
-         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q75_vector_mean" ->
-      """SELECT label, CAST(fi - 1 AS BIGINT) AS dim,
-        | round(avg(CAST(embedding[fi] AS DOUBLE)), 5) AS mean_v
-        |FROM embeddings CROSS JOIN (SELECT unnest(range(1, 65)) AS fi) f
-        |GROUP BY label, fi ORDER BY label, dim""".stripMargin,
-    "q76_explode_outer" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(lower(coalesce(text, ''))) = ''
-         |      THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents WHERE doc_id < 100)
-         |SELECT doc_id,
-         |  CAST(CASE WHEN len(w) = 0 THEN 1 ELSE len(w) END AS BIGINT) AS n_rows,
-         |  CAST(CASE WHEN len(w) = 0 THEN 1 ELSE 0 END AS BIGINT) AS n_null
-         |FROM tok ORDER BY doc_id""".stripMargin,
-    "q77_array_hof" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(lower(coalesce(text, ''))) = ''
-         |      THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(list_filter(w, t -> length(t) >= 5)) AS BIGINT) AS n_long,
-         |  len(list_filter(w, t -> regexp_matches(t, '^[0-9]+$$'))) > 0 AS has_number,
-         |  CAST(coalesce(list_aggregate(list_transform(w, t -> length(t)), 'sum'), 0)
-         |    AS BIGINT) AS total_chars,
-         |  array_to_string(list_transform(w, t -> upper(t))[1:2], ',') AS up2
-         |FROM tok ORDER BY doc_id""".stripMargin,
-    "q78_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, measure, value FROM (
-        |  SELECT l_orderkey, l_linenumber, l_partkey, 'price' AS measure,
-        |    round(l_extendedprice, 2) AS value FROM lineitem WHERE l_orderkey < 50
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, l_partkey, 'discount',
-        |    round(l_discount, 2) FROM lineitem WHERE l_orderkey < 50
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, l_partkey, 'tax',
-        |    round(l_tax, 2) FROM lineitem WHERE l_orderkey < 50) u
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, measure, value""".stripMargin,
-    "q79_filtered_agg" ->
-      """SELECT o_orderstatus,
-        | count(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-        | round(sum(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'), 2)
-        |   AS urgent_total,
-        | count(DISTINCT CASE WHEN o_totalprice > 150000 THEN o_custkey END)
-        |   AS n_big_custs
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q80_max_by" ->
-      """SELECT o_orderpriority,
-        | arg_max(o_orderkey,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) * 10000000 + o_orderkey)
-        |   AS priciest_order,
-        | arg_min(o_orderkey,
-        |   CAST(round(o_totalprice * 100) AS BIGINT) * 10000000 + o_orderkey)
-        |   AS cheapest_order,
-        | round(max(o_totalprice), 2) AS max_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q81_string_agg" ->
-      """SELECT l_returnflag,
-        | array_to_string(list_sort(list(DISTINCT l_linestatus)), ',') AS statuses,
-        | array_to_string(list_sort(list(DISTINCT CAST(year(l_shipdate) AS VARCHAR))), '|')
-        |   AS ship_years
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q82_bit_bool_agg" ->
-      """SELECT l_returnflag,
-        | bit_or(l_suppkey) AS suppkey_or,
-        | bit_and(l_suppkey) AS suppkey_and,
-        | bit_xor(l_orderkey) AS orderkey_xor,
-        | bool_and(l_quantity > 0) AS all_positive,
-        | bool_or(l_discount > 0.09) AS any_high_disc
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q83_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bucket,
-        | count(*) AS n,
-        | round(min(o_totalprice), 2) AS lo,
-        | round(max(o_totalprice), 2) AS hi
-        |FROM orders GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q84_struct_fns" ->
-      """SELECT c_nationkey AS nation, c_mktsegment AS segment,
-        | c_acctbal > 0 AS solvent, count(*) AS n
-        |FROM customer GROUP BY nation, segment, solvent
-        |ORDER BY nation, segment, solvent""".stripMargin,
-    "q85_percentile_disc" ->
-      """SELECT l_returnflag,
-        | round(quantile_disc(l_extendedprice, 0.25), 2) AS p25,
-        | round(quantile_disc(l_extendedprice, 0.5), 2) AS p50,
-        | round(quantile_disc(l_extendedprice, 0.9), 2) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q86_cluster_resolve" ->
-      s"""WITH RECURSIVE tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))) >= 0.6),
-         |nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-         |edges AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM pairs
-         |          UNION SELECT id_b AS u, id_a AS v FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u)
-         |SELECT id, min(r) AS cluster_id, (id = min(r)) AS keep
-         |FROM reach GROUP BY id ORDER BY id""".stripMargin,
-    "q87_dedup_pipeline" ->
-      s"""WITH RECURSIVE tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))) >= 0.6),
-         |nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-         |edges AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM pairs
-         |          UNION SELECT id_b AS u, id_a AS v FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |losers AS (SELECT id FROM reach GROUP BY id HAVING id <> min(r))
-         |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
-         |WHERE d.doc_id NOT IN (SELECT id FROM losers)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q88_repetition_scores" ->
-      s"""WITH tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |g AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 2 THEN [array_to_string(w, ' ')]
-         |    ELSE [w[i] || ' ' || w[i+1] for i in range(1, len(w))] END AS gs
-         |  FROM tok),
-         |e AS (SELECT doc_id, unnest(gs) AS gram FROM g),
-         |c AS (SELECT doc_id, gram, count(*) AS c FROM e GROUP BY 1, 2)
-         |SELECT doc_id,
-         | round(sum(CASE WHEN c > 1 THEN c ELSE 0 END)::DOUBLE / sum(c), 4)
-         |   AS dup_2gram_frac,
-         | round(max(c)::DOUBLE / sum(c), 4) AS top_2gram_frac
-         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q89_decontaminate" ->
-      s"""WITH tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |g AS MATERIALIZED (
-         |  SELECT doc_id, CASE WHEN len(w) <= 4 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([array_to_string(w[i:i+3], ' ')
-         |                        for i in range(1, len(w) - 2)]) END AS gs
-         |  FROM tok),
-         |ev AS (SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 100 = 7),
-         |tr AS (SELECT doc_id, unnest(gs) AS gram FROM g WHERE doc_id % 100 <> 7)
-         |SELECT tr.doc_id, count(*) AS n_shared
-         |FROM tr JOIN ev ON tr.gram = ev.gram
-         |GROUP BY tr.doc_id ORDER BY tr.doc_id""".stripMargin,
-    "q90_stratified_sample" -> {
-      val cases = Seq("en" -> 0.5, "de" -> 0.25, "fr" -> 0.1, "es" -> 1.0)
-        .sortBy(_._1)
-        .map { case (l, r) =>
-          s"WHEN '$l' THEN '${operators.Curate.thresholdHex(r)}'" }
-        .mkString(" ")
-      s"""SELECT doc_id, lang, source FROM documents
-         |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-         |  CASE lang $cases ELSE '${operators.Curate.thresholdHex(0.05)}' END
-         |ORDER BY doc_id""".stripMargin
-    },
-    "q91_group_sample" ->
-      """SELECT doc_id, lang, sample_rank FROM (
-        |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
-        |    ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id)
-        |    AS sample_rank
-        |  FROM documents) x
-        |WHERE sample_rank <= 20 ORDER BY lang, sample_rank""".stripMargin,
-    "q92_pii_redact" -> {
-      val em = TextFunctions.emailPattern
-      val ip = TextFunctions.ipv4Pattern
-      val ph = TextFunctions.phonePattern
-      s"""WITH p AS (SELECT doc_id,
-         |  coalesce(text,'') || ' contact user' || CAST(doc_id AS VARCHAR) ||
-         |  '@example.com or 10.' || CAST(doc_id % 256 AS VARCHAR) ||
-         |  '.0.1 tel +1415555' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-         |  FROM documents),
-         |s1 AS (SELECT doc_id, t, regexp_replace(t, '$em', '<EMAIL>', 'g') AS t1 FROM p),
-         |s2 AS (SELECT doc_id, t, t1, regexp_replace(t1, '$ip', '<IP>', 'g') AS t2 FROM s1)
-         |SELECT doc_id,
-         | CAST(len(regexp_extract_all(t, '$em')) AS BIGINT) AS n_emails,
-         | CAST(len(regexp_extract_all(t1, '$ip')) AS BIGINT) AS n_ips,
-         | CAST(len(regexp_extract_all(t2, '$ph')) AS BIGINT) AS n_phones,
-         | md5(regexp_replace(t2, '$ph', '<PHONE>', 'g')) AS red_fp
-         |FROM s2 ORDER BY doc_id""".stripMargin
-    },
-    // q190 replays the Dolma document-level policy: the q92 planting
-    // plus a six-address dump on every 7th doc, stage-wise counts, the
-    // <=5 threshold, and md5 of the redacted text only for kept docs
-    // (dropped docs yield NULL — both engines' md5(NULL)).
-    "q190_pii_policy" -> {
-      val em = TextFunctions.emailPattern
-      val ip = TextFunctions.ipv4Pattern
-      val ph = TextFunctions.phonePattern
-      s"""WITH p AS (SELECT doc_id,
-         |  coalesce(text,'') || ' contact user' || CAST(doc_id AS VARCHAR) ||
-         |  '@example.com or 10.' || CAST(doc_id % 256 AS VARCHAR) ||
-         |  '.0.1 tel +1415555' ||
-         |  lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-         |  CASE WHEN doc_id % 7 = 0 THEN ' ' || array_to_string(
-         |    [('u' || k || '.' || CAST(doc_id AS VARCHAR) || '@dump.example')
-         |     for k in range(1, 7)], ' ') ELSE '' END AS t
-         |  FROM documents),
-         |s1 AS (SELECT doc_id, t,
-         |  regexp_replace(t, '$em', '<EMAIL>', 'g') AS t1 FROM p),
-         |s2 AS (SELECT doc_id, t, t1,
-         |  regexp_replace(t1, '$ip', '<IP>', 'g') AS t2 FROM s1),
-         |c AS (SELECT doc_id, t2,
-         |  CAST(len(regexp_extract_all(t, '$em')) +
-         |       len(regexp_extract_all(t1, '$ip')) +
-         |       len(regexp_extract_all(t2, '$ph')) AS BIGINT) AS n_pii
-         |  FROM s2)
-         |SELECT doc_id, n_pii, n_pii <= 5 AS keep,
-         |  CASE WHEN n_pii <= 5
-         |    THEN md5(regexp_replace(t2, '$ph', '<PHONE>', 'g')) END AS red_fp
-         |FROM c ORDER BY doc_id""".stripMargin
-    },
-    // q191 is engine-local (EM float loop — the DeflateRatio
-    // convention): the oracle pins the literal verdict rows; the
-    // trainer itself is TokenizeSpec-gated against an enumerative EM
-    // reference.
-    "q191_unigram_fit" ->
-      """SELECT * FROM (VALUES
-        |  ('uni_learned_multis', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('uni_prob_mass', CAST(1e-6 AS DOUBLE), TRUE),
-        |  ('uni_reconstruction', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('uni_vocab_target', CAST(64.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q93_quality_filter" ->
-      s"""WITH q AS (SELECT doc_id, lang, $qualityExprSql AS quality
-         |  FROM (${qualityRawSql("doc_id, lang")}) raw),
-         |rk AS (SELECT doc_id, lang, quality,
-         |  row_number() OVER (PARTITION BY lang
-         |    ORDER BY quality DESC, doc_id) AS rk,
-         |  count(*) OVER (PARTITION BY lang) AS n FROM q)
-         |SELECT doc_id, lang, quality FROM rk
-         |WHERE rk <= ceil(n * 0.5 - 1e-9) ORDER BY doc_id""".stripMargin,
-    "q94_mixing_rates" -> {
-      val cases = Seq("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1,
-          "zh" -> 0.1).sortBy(_._1)
-        .map { case (l, w) => s"WHEN '$l' THEN $w" }.mkString(" ")
-      s"""WITH c AS (SELECT lang AS stratum, count(*) AS n_docs
-         |  FROM documents GROUP BY 1),
-         |w AS (SELECT stratum, n_docs,
-         |  CAST(CASE stratum $cases ELSE 0 END AS DOUBLE) AS weight FROM c),
-         |r AS (SELECT stratum, n_docs, weight,
-         |  round(CASE WHEN weight > 0 THEN least(1.0, weight *
-         |    (SELECT min(n_docs / weight) FROM w WHERE weight > 0) / n_docs)
-         |    ELSE 0.0 END, 6) AS rate FROM w)
-         |SELECT stratum, n_docs, weight, rate,
-         |  CAST(floor(rate * n_docs) AS BIGINT) AS sample_n
-         |FROM r ORDER BY stratum""".stripMargin
-    },
-    "q95_materialize_mix" -> {
-      val cases = Seq("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1,
-          "zh" -> 0.1).sortBy(_._1)
-        .map { case (l, w) => s"WHEN '$l' THEN $w" }.mkString(" ")
-      s"""WITH c AS (SELECT lang AS stratum, count(*) AS n_docs
-         |  FROM documents GROUP BY 1),
-         |w AS (SELECT stratum, n_docs,
-         |  CAST(CASE stratum $cases ELSE 0 END AS DOUBLE) AS weight FROM c),
-         |r AS (SELECT stratum, n_docs,
-         |  round(CASE WHEN weight > 0 THEN least(1.0, weight *
-         |    (SELECT min(n_docs / weight) FROM w WHERE weight > 0) / n_docs)
-         |    ELSE 0.0 END, 6) AS rate FROM w),
-         |q AS (SELECT stratum,
-         |  CAST(floor(rate * n_docs) AS BIGINT) AS sample_n FROM r),
-         |rk AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
-         |  ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id)
-         |  AS sample_rank FROM documents)
-         |SELECT rk.doc_id, rk.lang, rk.sample_rank
-         |FROM rk JOIN q ON rk.lang = q.stratum
-         |WHERE rk.sample_rank <= q.sample_n ORDER BY rk.doc_id""".stripMargin
-    },
-    // q96: the q162 -> q93 -> q28 -> q89 -> q95 stages as one CTE
-    // chain — the oracle twin of the composed curation pipeline (the
-    // Gopher repetition keep gate recomputed by q162's explode CTEs)
-    "q96_curation_pipeline" -> {
-      val cases = Seq("en" -> 0.4, "de" -> 0.2, "fr" -> 0.2, "es" -> 0.1,
-          "zh" -> 0.1).sortBy(_._1)
-        .map { case (l, w) => s"WHEN '$l' THEN $w" }.mkString(" ")
-      val piiEm = TextFunctions.emailPattern
-      val piiIp = TextFunctions.ipv4Pattern
-      val piiPh = TextFunctions.phonePattern
-      val gramExpr =
-        """CASE WHEN len(w) <= 4 THEN [array_to_string(w, ' ')]
-          |    ELSE list_distinct([array_to_string(w[i:i+3], ' ')
-          |                        for i in range(1, len(w) - 2)]) END""".stripMargin
-      s"""WITH rdoc AS (SELECT doc_id, coalesce(text,'') AS t FROM documents),
-         |${repetitionCtesSql("r", "rdoc")},
-         |gdoc AS (SELECT doc_id, t AS text FROM rdoc),
-         |${gopherQualityStatsCtesSql("g", "gdoc")},
-         |qual AS (
-         |  SELECT doc_id, lang, text, $qualityExprSql AS quality
-         |  FROM (${qualityRawSql("doc_id, lang, text")}) raw
-         |  WHERE doc_id IN (SELECT doc_id FROM rfr WHERE keep)
-         |    AND doc_id IN (SELECT doc_id FROM gst
-         |      WHERE ${gopherQualityKeepSql(fixtureQualityBounds)})),
-         |rk AS (SELECT doc_id, lang, text, quality,
-         |  row_number() OVER (PARTITION BY lang
-         |    ORDER BY quality DESC, doc_id) AS rk,
-         |  count(*) OVER (PARTITION BY lang) AS n FROM qual),
-         |kept AS (SELECT doc_id, lang, text, quality FROM rk
-         |  WHERE rk <= ceil(n * 0.5 - 1e-9)),
-         |dedup AS (SELECT * FROM kept WHERE doc_id IN (
-         |  SELECT min(doc_id) FROM kept GROUP BY md5($normSql))),
-         |gev AS MATERIALIZED (
-         |  SELECT doc_id, $gramExpr AS gs
-         |  FROM (SELECT doc_id, $toksSql AS w FROM documents
-         |        WHERE doc_id % 100 = 7) t),
-         |gtr AS MATERIALIZED (
-         |  SELECT doc_id, $gramExpr AS gs
-         |  FROM (SELECT doc_id, $toksSql AS w FROM dedup
-         |        WHERE doc_id % 100 <> 7) t),
-         |ev AS (SELECT DISTINCT unnest(gs) AS gram FROM gev),
-         |contaminated AS (SELECT DISTINCT tr.doc_id
-         |  FROM (SELECT doc_id, unnest(gs) AS gram FROM gtr) tr
-         |  JOIN ev ON tr.gram = ev.gram),
-         |clean AS (SELECT doc_id, lang, quality FROM dedup
-         |  WHERE doc_id % 100 <> 7
-         |    AND doc_id NOT IN (SELECT doc_id FROM contaminated)),
-         |c AS (SELECT lang AS stratum, count(*) AS n_docs FROM clean GROUP BY 1),
-         |w AS (SELECT stratum, n_docs,
-         |  CAST(CASE stratum $cases ELSE 0 END AS DOUBLE) AS weight FROM c),
-         |r AS (SELECT stratum, n_docs,
-         |  round(CASE WHEN weight > 0 THEN least(1.0, weight *
-         |    (SELECT min(n_docs / weight) FROM w WHERE weight > 0) / n_docs)
-         |    ELSE 0.0 END, 6) AS rate FROM w),
-         |q AS (SELECT stratum,
-         |  CAST(floor(rate * n_docs) AS BIGINT) AS sample_n FROM r),
-         |rk2 AS (SELECT doc_id, lang, quality,
-         |  row_number() OVER (PARTITION BY lang
-         |    ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), doc_id)
-         |    AS sample_rank FROM clean),
-         |sel AS (SELECT rk2.doc_id, rk2.lang, rk2.quality, rk2.sample_rank
-         |  FROM rk2 JOIN q ON rk2.lang = q.stratum
-         |  WHERE rk2.sample_rank <= q.sample_n),
-         |nt9 AS (SELECT sel.doc_id, sel.lang, sel.quality, sel.sample_rank,
-         |  $normSql AS t FROM sel JOIN documents USING (doc_id)),
-         |b9 AS (SELECT doc_id, t, len(t) AS n,
-         |  [i for i in range(16, len(t))
-         |   if ('0x' || substr(md5(t[i-15:i]), 1, 4))::INT % 64 = 0] AS cuts
-         |  FROM nt9),
-         |ch9 AS (SELECT doc_id, c.idx AS idx, c.off AS off, c.ln AS ln,
-         |         c.fp AS fp
-         |  FROM (SELECT doc_id,
-         |          unnest([{'idx': j-1, 'off': bounds[j],
-         |                   'ln': bounds[j+1]-bounds[j],
-         |                   'fp': md5(t[bounds[j]+1:bounds[j+1]])}
-         |                  for j in range(1, len(bounds))]) AS c
-         |        FROM (SELECT doc_id, t, ([0] || cuts || [n]) AS bounds
-         |              FROM b9 WHERE n > 0))),
-         |w9 AS (SELECT *, count(*) OVER (PARTITION BY fp) AS occ,
-         |        row_number() OVER (PARTITION BY fp
-         |          ORDER BY doc_id, idx) AS rn
-         |      FROM ch9),
-         |k9 AS (SELECT doc_id, count(*)::BIGINT AS n_chunks,
-         |        sum(CASE WHEN occ < 2 OR rn = 1 THEN 1 ELSE 0 END)::BIGINT
-         |          AS n_kept,
-         |        array_agg({'off': off, 'ln': ln} ORDER BY idx)
-         |          FILTER (WHERE occ < 2 OR rn = 1) AS ks
-         |      FROM w9 GROUP BY doc_id),
-         |cl9 AS (SELECT nt9.doc_id, nt9.lang, nt9.quality, nt9.sample_rank,
-         |  coalesce(array_to_string(
-         |    [nt9.t[s.off+1:s.off+s.ln] for s in k9.ks], ''), '') AS tc,
-         |  coalesce(k9.n_chunks, 0) AS n_chunks,
-         |  coalesce(k9.n_kept, 0) AS n_kept
-         |  FROM nt9 LEFT JOIN k9 USING (doc_id)),
-         |p9 AS (SELECT *, regexp_replace(tc, '$piiEm', '<EMAIL>', 'g') AS t1
-         |  FROM cl9),
-         |p9b AS (SELECT *, regexp_replace(t1, '$piiIp', '<IP>', 'g') AS t2
-         |  FROM p9)
-         |SELECT doc_id, lang, quality, sample_rank, n_chunks, n_kept,
-         |  CAST(len(regexp_extract_all(tc, '$piiEm')) +
-         |       len(regexp_extract_all(t1, '$piiIp')) +
-         |       len(regexp_extract_all(t2, '$piiPh')) AS BIGINT) AS n_pii,
-         |  md5(regexp_replace(t2, '$piiPh', '<PHONE>', 'g')) AS clean_fp
-         |FROM p9b ORDER BY doc_id""".stripMargin
-    },
-    // q97: concatenation-offset packing — per-shard running token sum,
-    // bin = floor(start / budget). DuckDB's window sum over BIGINT yields
-    // HUGEINT, hence the explicit casts.
-    "q97_pack_sequences" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len($toksSql) END AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tokens, CAST(doc_id % 8 AS BIGINT) AS shard,
-         |    sum(n_tokens) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-         |      ROWS UNBOUNDED PRECEDING) - n_tokens AS strt
-         |  FROM tok)
-         |SELECT doc_id, n_tokens, shard,
-         |  CAST(floor(strt / 2048.0) AS BIGINT) AS bin,
-         |  CAST(strt % 2048 AS BIGINT) AS bin_offset
-         |FROM c ORDER BY doc_id""".stripMargin,
-    // q98: the SEMANTIC definition of top-quality-under-budget — a global
-    // (quality DESC, id) running-sum cutoff — verifying the Spark side's
-    // decomposed-by-level plan is exactly equivalent
-    "q98_token_budget" ->
-      s"""WITH q AS (
-         |  SELECT doc_id, $qualityExprSql AS quality,
-         |    CAST(n_tok AS BIGINT) AS n_tokens
-         |  FROM (${qualityRawSql("doc_id")}) raw),
-         |c AS (
-         |  SELECT doc_id, quality, n_tokens,
-         |    sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS cum
-         |  FROM q)
-         |SELECT doc_id, quality, n_tokens FROM c
-         |WHERE cum <= 8000 ORDER BY doc_id""".stripMargin,
-    // q99 is an accuracy GATE (q33 pattern): the oracle pins the expected
-    // decode verdict literally; a javax.imageio regression flips ok and
-    // hash-mismatches.
-    "q99_multimodal_decode" ->
-      """SELECT * FROM (VALUES
-        |  ('fallback_in_stub_range', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('imageio_decode_dims', CAST(3.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q100: C4-style span dedup — keep-first = row_number over
-    // (doc_id, spanIdx) ≡ the Spark side's min(struct(id, sidx)); the
-    // oracle partitions by span TEXT, certifying the operator's hashed
-    // key collision-free on this corpus
-    "q100_span_dedup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-        |    END AS toks
-        |  FROM documents),
-        |n AS (SELECT doc_id, toks,
-        |        CAST(ceil(len(toks) / 4.0) AS BIGINT) AS nc FROM d),
-        |c AS (SELECT doc_id, toks, unnest(range(0, nc)) AS cidx FROM n),
-        |ch AS (SELECT doc_id, cidx,
-        |         array_to_string(toks[cidx*4 + 1 : cidx*4 + 4], ' ') AS span
-        |       FROM c),
-        |s AS (SELECT doc_id, cidx, span,
-        |        count(*) OVER (PARTITION BY span) AS cnt,
-        |        row_number() OVER (PARTITION BY span
-        |          ORDER BY doc_id, cidx) AS rn
-        |      FROM ch),
-        |k AS (SELECT doc_id, cidx, span FROM s WHERE cnt < 2 OR rn = 1),
-        |r AS (SELECT doc_id, string_agg(span, ' ' ORDER BY cidx) AS text_clean,
-        |        count(*) AS n_kept FROM k GROUP BY doc_id)
-        |SELECT n.doc_id, coalesce(r.text_clean, '') AS text_clean,
-        |  n.nc AS n_spans, CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM n LEFT JOIN r ON n.doc_id = r.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
-    // the Bloom pre-filter is pure shuffle optimization (false positives
-    // corrected by the exact anti-join), so the oracle is the plain
-    // definition: in-batch winners whose content the snapshot lacks
-    "q101_incremental_dedup" ->
-      s"""SELECT doc_id, lang, source FROM documents
-         |WHERE doc_id % 10 = 0
-         |  AND doc_id IN (
-         |    SELECT min(doc_id) FROM documents
-         |    WHERE doc_id % 10 = 0 GROUP BY md5($normSql))
-         |  AND md5($normSql) NOT IN (
-         |    SELECT md5($normSql) FROM documents WHERE doc_id % 10 != 0)
-         |ORDER BY doc_id""".stripMargin,
-    "q102_incremental_neardup" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, $toksSql AS w FROM documents WHERE doc_id < 2000),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok)
-         |SELECT a.doc_id AS batch_id, b.doc_id AS corpus_id,
-         |  round(len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))), 4) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id % 10 = 0 AND b.doc_id % 10 != 0
-         |WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |      len(list_distinct(list_concat(a.s, b.s))) >= 0.8
-         |ORDER BY batch_id, corpus_id""".stripMargin,
-    // add-one bigram LM over the en slice; the CASE guard mirrors
-    // tokens('') = [] (toksSql alone yields [''] on empty text)
-    "q103_perplexity" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |bg AS (
-         |  SELECT doc_id, lang,
-         |    unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS g
-         |  FROM tok WHERE len(w) >= 2),
-         |uni AS (
-         |  SELECT u.w AS w, count(*) AS c1
-         |  FROM (SELECT unnest(w) AS w FROM tok WHERE lang = 'en') u
-         |  GROUP BY 1),
-         |bi AS (SELECT g, count(*) AS c2 FROM bg WHERE lang = 'en' GROUP BY 1),
-         |v AS (SELECT count(*) AS v FROM uni),
-         |sc AS (
-         |  SELECT bg.doc_id,
-         |    ln((coalesce(bi.c2, 0) + 1)::DOUBLE /
-         |       (coalesce(uni.c1, 0) + v.v)) AS logp
-         |  FROM bg LEFT JOIN bi USING (g)
-         |  LEFT JOIN uni ON string_split(bg.g, ' ')[1] = uni.w
-         |  CROSS JOIN v),
-         |agg AS (
-         |  SELECT doc_id, count(*) AS n_bigrams,
-         |    round(-avg(logp), 4) AS cross_entropy,
-         |    round(exp(-avg(logp)), 2) AS perplexity
-         |  FROM sc GROUP BY 1)
-         |SELECT d.doc_id, CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         |  a.cross_entropy, a.perplexity
-         |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q104_bm25" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |stats AS (SELECT count(*)::DOUBLE AS n, avg(len(w)) AS avgdl FROM tok),
-         |m AS (
-         |  SELECT doc_id, t, count(*) AS tf, min(dl) AS dl FROM (
-         |    SELECT doc_id, len(w) AS dl, unnest(w) AS t FROM tok) x
-         |  WHERE t IN ('spark', 'data', 'query') GROUP BY doc_id, t),
-         |dfs AS (SELECT t, count(*) AS df FROM m GROUP BY t)
-         |SELECT m.doc_id, round(sum(
-         |  ln(1 + (s.n - d.df + 0.5) / (d.df + 0.5)) * (m.tf * (1.2 + 1)) /
-         |  (m.tf + 1.2 * (1 - 0.75 + 0.75 * m.dl / s.avgdl))), 4) AS score
-         |FROM m JOIN dfs d USING (t) CROSS JOIN stats s
-         |GROUP BY m.doc_id ORDER BY m.doc_id""".stripMargin,
-    // The ORC write/read halves happen Spark-side; the oracle checks the
-    // round-tripped aggregate against the direct parquet aggregate.
-    "q105_orc_roundtrip" ->
-      """SELECT s_nationkey, count(*) AS n,
-        | round(sum(s_acctbal), 2) AS total_bal,
-        | min(s_suppkey) AS min_key, max(s_suppkey) AS max_key
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    // strip_accents ≡ the expression's NFKD+mark-strip on this ASCII
-    // fixture; the unicode divergences (compatibility folds) are pinned
-    // engine-side in ExpressionsSpec, not oracle-checked.
-    "q106_normalize_text" ->
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(strip_accents(lower(coalesce(text, ''))),
-        |                        '\s+', ' ', 'g')) AS norm_text
-        |  FROM documents)
-        |SELECT doc_id, norm_text, len(norm_text)::BIGINT AS n_chars_norm
-        |FROM n ORDER BY doc_id""".stripMargin,
-    "q107_rrf_fusion" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |stats AS (SELECT count(*)::DOUBLE AS n, avg(len(w)) AS avgdl FROM tok),
-         |m AS (
-         |  SELECT doc_id, t, count(*) AS tf, min(dl) AS dl FROM (
-         |    SELECT doc_id, len(w) AS dl, unnest(w) AS t FROM tok) x
-         |  WHERE t IN ('spark', 'data', 'query') GROUP BY doc_id, t),
-         |dfs AS (SELECT t, count(*) AS df FROM m GROUP BY t),
-         |bm AS (
-         |  SELECT m.doc_id AS id, round(sum(
-         |    ln(1 + (s.n - d.df + 0.5) / (d.df + 0.5)) * (m.tf * (1.2 + 1)) /
-         |    (m.tf + 1.2 * (1 - 0.75 + 0.75 * m.dl / s.avgdl))), 4) AS score
-         |  FROM m JOIN dfs d USING (t) CROSS JOIN stats s GROUP BY m.doc_id),
-         |sr AS (SELECT id, rank FROM (
-         |  SELECT id, row_number() OVER (ORDER BY score DESC, id) AS rank
-         |  FROM bm) WHERE rank <= 50),
-         |e AS (SELECT vec_id, $vecSql AS v FROM embeddings),
-         |qv AS (SELECT v AS q FROM e WHERE vec_id = 0),
-         |dr AS (SELECT id, rank FROM (
-         |  SELECT e.vec_id AS id, row_number() OVER (
-         |    ORDER BY round(${cosSql("qv.q", "e.v")}, 4) DESC, e.vec_id) AS rank
-         |  FROM e, qv WHERE e.vec_id <> 0) WHERE rank <= 50),
-         |u AS (
-         |  SELECT id, 1.0 / (60 + rank)::DOUBLE AS c FROM sr
-         |  UNION ALL SELECT id, 1.0 / (60 + rank)::DOUBLE FROM dr)
-         |SELECT id, round(sum(c), 6) AS rrf FROM u
-         |GROUP BY id ORDER BY rrf DESC, id LIMIT 20""".stripMargin,
-    // q108 is an accuracy GATE (q33/q60 pattern): Spark verifies SemDeDup
-    // against the exact all-pairs threshold graph in-plan and emits
-    // (metric, bound, ok); the oracle pins the expected verdict literally,
-    // so a clustering/recall regression (ok=false) hash-mismatches.
-    "q108_semdedup" ->
-      """SELECT * FROM (VALUES
-        |  ('semdedup_recall_of_exact', CAST(0.5 AS DOUBLE), TRUE),
-        |  ('semdedup_spurious_drops', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q109_hash_classifier" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id, list_concat(w,
-         |    list_transform(range(1, len(w)), i -> w[i] || '_' || w[i+1])) AS feats
-         |  FROM tok),
-         |sc AS (
-         |  SELECT doc_id, len(feats) AS n_feats,
-         |    CASE WHEN len(feats) = 0 THEN NULL ELSE
-         |      list_sum(list_transform(feats, t ->
-         |        (list_sum(list_transform(range(1, len(t) + 1),
-         |           i -> ascii(t[i]) * i)) % 997) / 997.0 - 0.5)) / len(feats)
-         |    END AS m
-         |  FROM f)
-         |SELECT doc_id, n_feats::BIGINT AS n_feats,
-         |  round(1.0 / (1.0 + exp(-4.0 * m)), 4) AS score,
-         |  (round(1.0 / (1.0 + exp(-4.0 * m)), 4) >= 0.5) AS accept
-         |FROM sc ORDER BY doc_id""".stripMargin,
-    // the cross-stratum sums are windowed ORDER BY stratum (frame
-    // unbounded-unbounded) on BOTH sides so the double accumulation order
-    // is pinned engine-independently
-    "q110_temperature_mix" ->
-      """WITH c AS (
-        |  SELECT lang::VARCHAR AS stratum, count(*) AS n_docs
-        |  FROM documents GROUP BY 1),
-        |w AS (
-        |  SELECT stratum, n_docs,
-        |    pow(n_docs::DOUBLE / sum(n_docs) OVER (ORDER BY stratum
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
-        |      0.5) AS raw
-        |  FROM c),
-        |n AS (
-        |  SELECT stratum, n_docs, raw / sum(raw) OVER (ORDER BY stratum
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |    AS weight
-        |  FROM w),
-        |r AS (
-        |  SELECT stratum, n_docs, weight,
-        |    round(least(1.0, weight * min(n_docs / weight) OVER (
-        |      ORDER BY stratum ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      UNBOUNDED FOLLOWING) / n_docs), 6) AS rate
-        |  FROM n)
-        |SELECT stratum, n_docs, round(weight, 6) AS weight, rate,
-        |  CAST(floor(rate * n_docs) AS BIGINT) AS sample_n
-        |FROM r ORDER BY stratum""".stripMargin,
-    "q111_vocab_coverage" ->
-      s"""WITH tok AS (
-         |  SELECT unnest(w) AS tok FROM (
-         |    SELECT CASE WHEN trim(coalesce(text, '')) = ''
-         |           THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |    FROM documents)),
-         |c AS (SELECT tok, count(*) AS n FROM tok GROUP BY tok),
-         |tot AS (SELECT sum(n)::DOUBLE AS t FROM c),
-         |r AS (SELECT tok, n, row_number() OVER (ORDER BY n DESC, tok)
-         |  AS rank FROM c)
-         |SELECT tok, n, rank,
-         |  round(sum(n) OVER (ORDER BY rank) / tot.t, 6) AS cum_share
-         |FROM r, tot WHERE rank <= 30 ORDER BY rank""".stripMargin,
-    // q112 is an accuracy GATE (q33/q60/q108 pattern): Spark verifies PQ
-    // reconstruction + ADC recall against exact in-plan answers and emits
-    // (metric, bound, ok); the oracle pins the verdict rows literally.
-    "q112_pq_ann" ->
-      """SELECT * FROM (VALUES
-        |  ('pq_recall_at_10', CAST(0.2 AS DOUBLE), TRUE),
-        |  ('pq_reconstruction_mean_cosine', CAST(0.7 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q113_ivfpq_ann" ->
-      """SELECT * FROM (VALUES
-        |  ('ivfpq_recall_at_10', CAST(0.15 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q114_negative_sampling" ->
-      """WITH cands AS (
-        |  SELECT doc_id AS cand_id,
-        |    substr(md5(doc_id::VARCHAR), 1, 1) AS bucket
-        |  FROM documents),
-        |draws AS (
-        |  SELECT doc_id AS anchor_id, r AS neg_rank,
-        |    substr(md5(doc_id::VARCHAR || '#' || r::VARCHAR), 1, 1) AS bucket
-        |  FROM documents, (SELECT unnest([1, 2, 3]) AS r)
-        |  WHERE doc_id % 50 = 0),
-        |j AS (
-        |  SELECT anchor_id, neg_rank, cand_id,
-        |    md5(anchor_id::VARCHAR || '#' || neg_rank::VARCHAR || '#' ||
-        |        cand_id::VARCHAR) AS h
-        |  FROM draws JOIN cands USING (bucket)
-        |  WHERE cand_id <> anchor_id)
-        |SELECT anchor_id, neg_rank, cand_id AS neg_id FROM (
-        |  SELECT j.*, row_number() OVER (
-        |    PARTITION BY anchor_id, neg_rank ORDER BY h, cand_id) AS rn
-        |  FROM j)
-        |WHERE rn = 1 ORDER BY anchor_id, neg_rank""".stripMargin,
-    "q115_int8_quantize" ->
-      s"""WITH e AS (SELECT vec_id, $vecSql AS v FROM embeddings),
-         |s AS (
-         |  SELECT vec_id, v,
-         |    list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
-         |  FROM e),
-         |q AS (
-         |  SELECT vec_id, v, scale,
-         |    CASE WHEN scale = 0
-         |      THEN list_transform(v, x -> 0)
-         |      ELSE list_transform(v,
-         |        x -> CAST(floor(x / scale + 0.5) AS INT)) END AS codes
-         |  FROM s),
-         |r AS (
-         |  SELECT vec_id, v, scale, codes,
-         |    list_transform(codes, c -> c * scale) AS recon
-         |  FROM q)
-         |SELECT vec_id, round(scale, 6) AS scale_r,
-         |  list_max(codes) AS max_code, list_min(codes) AS min_code,
-         |  round(${cosSql("v", "recon")}, 4) AS recon_cos
-         |FROM r ORDER BY vec_id""".stripMargin,
-    "q116_distinct_ngrams" ->
-      s"""WITH tok AS (
-         |  SELECT source,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |uni AS (
-         |  SELECT source, count(*) AS n_tok, count(DISTINCT g) AS d_tok
-         |  FROM (SELECT source, unnest(w) AS g FROM tok) GROUP BY source),
-         |bi AS (
-         |  SELECT source, count(*) AS n_bi, count(DISTINCT g) AS d_bi
-         |  FROM (SELECT source, unnest(list_transform(range(1, len(w)),
-         |    i -> w[i] || ' ' || w[i + 1])) AS g FROM tok) GROUP BY source)
-         |SELECT u.source, u.n_tok, u.d_tok,
-         |  round(u.d_tok::DOUBLE / u.n_tok, 6) AS distinct_1,
-         |  coalesce(b.n_bi, 0) AS n_bi, coalesce(b.d_bi, 0) AS d_bi,
-         |  round(b.d_bi::DOUBLE / b.n_bi, 6) AS distinct_2
-         |FROM uni u LEFT JOIN bi b USING (source)
-         |ORDER BY source""".stripMargin,
-    "q117_funnel" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, ts FROM events),
-        |s1 AS (
-        |  SELECT u, min(CASE WHEN t = 'view' THEN ts END) AS ts1
-        |  FROM e GROUP BY u),
-        |s2 AS (
-        |  SELECT s1.u, s1.ts1,
-        |    min(CASE WHEN e.t = 'click' AND e.ts > s1.ts1 THEN e.ts END) AS ts2
-        |  FROM s1 LEFT JOIN e ON e.u = s1.u GROUP BY s1.u, s1.ts1),
-        |s3 AS (
-        |  SELECT s2.u, s2.ts1, s2.ts2,
-        |    min(CASE WHEN e.t = 'purchase' AND e.ts > s2.ts2 THEN e.ts END) AS ts3
-        |  FROM s2 LEFT JOIN e ON e.u = s2.u GROUP BY s2.u, s2.ts1, s2.ts2)
-        |SELECT u AS user_id, ts1, ts2, ts3,
-        |  CASE WHEN ts3 IS NOT NULL THEN 3 WHEN ts2 IS NOT NULL THEN 2
-        |       WHEN ts1 IS NOT NULL THEN 1 ELSE 0 END AS stages_completed
-        |FROM s3 ORDER BY user_id""".stripMargin,
-    // q118 is a self-equivalence GATE (q112/q113 pattern): Spark verifies
-    // the cell-partitioned code store answers exactly like the ad-hoc
-    // recompute path and emits (metric, bound, ok); the oracle pins the
-    // verdict rows.
-    "q118_ivfpq_code_store" ->
-      """SELECT * FROM (VALUES
-        |  ('ivfpq_store_scores_equal', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('ivfpq_store_topk_equal', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q119 is a self-equivalence GATE (q118 pattern): the term-bucketed
-    // inverted index must score exactly like the scan-time BM25.
-    "q119_bm25_index" ->
-      """SELECT * FROM (VALUES
-        |  ('bm25_index_equals_scan', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('bm25_index_nonempty', CAST(1.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q120_funnel_conversion" ->
-      """WITH e AS (SELECT user_id AS u, event_type AS t, ts FROM events),
-        |s1 AS (
-        |  SELECT u, min(CASE WHEN t = 'view' THEN ts END) AS ts1
-        |  FROM e GROUP BY u),
-        |s2 AS (
-        |  SELECT s1.u, s1.ts1,
-        |    min(CASE WHEN e.t = 'click' AND e.ts > s1.ts1 THEN e.ts END) AS ts2
-        |  FROM s1 LEFT JOIN e ON e.u = s1.u GROUP BY s1.u, s1.ts1),
-        |s3 AS (
-        |  SELECT s2.u, s2.ts1, s2.ts2,
-        |    min(CASE WHEN e.t = 'purchase' AND e.ts > s2.ts2 THEN e.ts END) AS ts3
-        |  FROM s2 LEFT JOIN e ON e.u = s2.u GROUP BY s2.u, s2.ts1, s2.ts2),
-        |a AS (
-        |  SELECT count(*) AS n_total,
-        |    count(ts1) AS n1, count(ts2) AS n2, count(ts3) AS n3,
-        |    quantile_cont(epoch(ts2) - epoch(ts1), 0.5) AS med2,
-        |    quantile_cont(epoch(ts3) - epoch(ts2), 0.5) AS med3
-        |  FROM s3)
-        |SELECT 1 AS stage_idx, 'view' AS stage, n1 AS n_users,
-        |  round(CASE WHEN n_total > 0 THEN n1::DOUBLE / n_total
-        |    ELSE 0 END, 6) AS rate_from_prev,
-        |  CAST(NULL AS DOUBLE) AS median_gap_s FROM a
-        |UNION ALL
-        |SELECT 2, 'click', n2,
-        |  round(CASE WHEN n1 > 0 THEN n2::DOUBLE / n1 ELSE 0 END, 6),
-        |  round(med2, 3) FROM a
-        |UNION ALL
-        |SELECT 3, 'purchase', n3,
-        |  round(CASE WHEN n2 > 0 THEN n3::DOUBLE / n2 ELSE 0 END, 6),
-        |  round(med3, 3) FROM a
-        |ORDER BY stage_idx""".stripMargin,
-    "q121_substring_spans" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-        |    END AS w
-        |  FROM documents),
-        |win AS (
-        |  SELECT doc_id, unnest(range(0, len(w) - 4)) AS pos, w
-        |  FROM d WHERE len(w) >= 5),
-        |sh AS (
-        |  SELECT doc_id, pos,
-        |    array_to_string(w[pos + 1 : pos + 5], ' ') AS s
-        |  FROM win),
-        |occ AS (
-        |  SELECT doc_id, pos,
-        |    count(*) OVER (PARTITION BY s) AS cnt,
-        |    row_number() OVER (PARTITION BY s ORDER BY doc_id, pos) AS rn
-        |  FROM sh),
-        |rem AS (SELECT doc_id, pos FROM occ WHERE cnt >= 2 AND rn > 1),
-        |m AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN pos > coalesce(max(pos + 5) OVER (
-        |      PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-        |    THEN 1 ELSE 0 END AS ni
-        |  FROM rem),
-        |i AS (SELECT doc_id, pos, sum(ni) OVER (
-        |        PARTITION BY doc_id ORDER BY pos) AS isl FROM m)
-        |SELECT doc_id, min(pos) AS span_start, max(pos) + 5 AS span_end
-        |FROM i GROUP BY doc_id, isl
-        |ORDER BY doc_id, span_start""".stripMargin,
-    "q122_substring_contamination" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(coalesce(text, '')), '\s+')
-        |    END AS w
-        |  FROM documents),
-        |tw AS (
-        |  SELECT doc_id, len(w) - 3 AS n_windows,
-        |    unnest(range(0, len(w) - 3)) AS pos, w
-        |  FROM d WHERE len(w) >= 4 AND doc_id % 50 != 7),
-        |ts AS (
-        |  SELECT doc_id, n_windows,
-        |    array_to_string(w[pos + 1 : pos + 4], ' ') AS s
-        |  FROM tw),
-        |es AS (
-        |  SELECT DISTINCT array_to_string(w[pos + 1 : pos + 4], ' ') AS s
-        |  FROM (SELECT unnest(range(0, len(w) - 3)) AS pos, w
-        |        FROM d WHERE len(w) >= 4 AND doc_id % 50 = 7)),
-        |c AS (
-        |  SELECT doc_id, max(n_windows) AS n_windows, count(*) AS n_contam
-        |  FROM ts WHERE s IN (SELECT s FROM es) GROUP BY doc_id)
-        |SELECT doc_id, n_windows, n_contam,
-        |  round(n_contam::DOUBLE / n_windows, 4) AS contam_frac
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q123_split_assign" ->
-      """SELECT doc_id, lang,
-        |  CASE WHEN substr(md5(doc_id::VARCHAR), 1, 8) < 'cccccccc'
-        |       THEN 'train'
-        |       WHEN substr(md5(doc_id::VARCHAR), 1, 8) < 'e6666666'
-        |       THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // q124 is an accuracy GATE (q44 HLL pattern): Spark verifies the
-    // percentile_approx sketch against the exact percentile in-plan and
-    // emits (metric, bound, ok); the oracle pins the verdict rows.
-    "q124_approx_percentile" ->
-      """SELECT * FROM (VALUES
-        |  ('approx_p50_rel_err', CAST(0.01 AS DOUBLE), TRUE),
-        |  ('approx_p95_rel_err', CAST(0.01 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q125 is a self-equivalence GATE (q118/q119 pattern): the bucketed
-    // store path must emit exactly the in-plan path's pairs.
-    "q125_semdedup_store" ->
-      """SELECT * FROM (VALUES
-        |  ('semdedup_store_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('semdedup_store_pairs_equal', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q126/q127 are self-equivalence GATES (q125 pattern) for the
-    // incremental-dedup ingest stores: the bucketed fingerprint / LSH
-    // stores must answer exactly like the in-plan recompute paths.
-    "q126_fingerprint_store" ->
-      """SELECT * FROM (VALUES
-        |  ('fp_store_batch_equal', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('fp_store_nonempty', CAST(1.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q127_lsh_store" ->
-      """SELECT * FROM (VALUES
-        |  ('lsh_store_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('lsh_store_pairs_equal', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q128 is an accuracy GATE (q124 pattern): the approx-median funnel
-    // mode must match the exact mode within the pinned relative error.
-    "q128_funnel_approx" ->
-      """SELECT * FROM (VALUES
-        |  ('funnel_approx_med_stage2', CAST(0.03 AS DOUBLE), TRUE),
-        |  ('funnel_approx_med_stage3', CAST(0.03 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q129 is a self-equivalence GATE (q125's incremental companion):
-    // the batch-vs-store bipartite SemDeDup must emit exactly the
-    // in-plan bipartite compare's pairs at the same centroids.
-    "q129_semdedup_batch_store" ->
-      """SELECT * FROM (VALUES
-        |  ('semdedup_batch_store_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('semdedup_batch_store_pairs_equal', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q130 recomputes the composed pipeline from first principles:
-    // quality gate + exact dedup (q96's CTEs), the stride-1 duplicate
-    // windows (q121's CTEs) over the SURVIVING corpus, then the strip
-    // rebuild token-by-token — including the rebuilt text itself.
-    "q130_strip_pipeline" ->
-      s"""WITH qual AS (
-         |  SELECT doc_id, lang, text, $qualityExprSql AS quality
-         |  FROM (${qualityRawSql("doc_id, lang, text")}) raw),
-         |rk AS (SELECT doc_id, lang, text, quality,
-         |  row_number() OVER (PARTITION BY lang
-         |    ORDER BY quality DESC, doc_id) AS rk,
-         |  count(*) OVER (PARTITION BY lang) AS n FROM qual),
-         |kept AS (SELECT doc_id, text FROM rk
-         |  WHERE rk <= ceil(n * 0.5 - 1e-9)),
-         |dedup AS (SELECT * FROM kept WHERE doc_id IN (
-         |  SELECT min(doc_id) FROM kept GROUP BY md5($normSql))),
-         |d2 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-         |         ELSE string_split_regex(trim(coalesce(text, '')), '\\s+')
-         |    END AS w
-         |  FROM dedup),
-         |win AS (
-         |  SELECT doc_id, unnest(range(0, len(w) - 4)) AS pos, w
-         |  FROM d2 WHERE len(w) >= 5),
-         |sh AS (
-         |  SELECT doc_id, pos,
-         |    array_to_string(w[pos + 1 : pos + 5], ' ') AS s
-         |  FROM win),
-         |occ AS (
-         |  SELECT doc_id, pos,
-         |    count(*) OVER (PARTITION BY s) AS cnt,
-         |    row_number() OVER (PARTITION BY s ORDER BY doc_id, pos) AS rn
-         |  FROM sh),
-         |rem AS (SELECT doc_id, pos FROM occ WHERE cnt >= 2 AND rn > 1),
-         |cov AS (SELECT DISTINCT doc_id,
-         |  unnest(range(pos, pos + 5)) AS p FROM rem),
-         |toks AS (SELECT doc_id, unnest(range(0, len(w))) AS p, w
-         |  FROM d2 WHERE len(w) > 0),
-         |tok2 AS (SELECT doc_id, p, w[p + 1] AS tok FROM toks),
-         |keptt AS (
-         |  SELECT t.doc_id, t.p, t.tok FROM tok2 t
-         |  LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.p = c.p
-         |  WHERE c.p IS NULL),
-         |agg AS (
-         |  SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS text_clean,
-         |    count(*) AS n_kept
-         |  FROM keptt GROUP BY doc_id)
-         |SELECT d2.doc_id,
-         |  coalesce(a.text_clean, '') AS text_clean,
-         |  CAST(len(d2.w) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept
-         |FROM d2 LEFT JOIN agg a USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    // q131 is a self-equivalence GATE (q33's bipartite companion): the
-    // pigeonhole-blocked batch-vs-corpus SimHash pairs must equal the
-    // brute-force bipartite hamming join.
-    "q131_simhash_incremental" ->
-      """SELECT * FROM (VALUES
-        |  ('simhash_incr_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('simhash_incr_pairs_equal', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q132 generalizes the q104 oracle to several queries at once — the
-    // per-term df here is corpus-wide (the serving frame's precomputed
-    // form), identical to q104's per-query restriction because both
-    // count every doc containing the term.
-    // q135 recomputes the source-overlap matrix from the definition;
-    // the gram expression mirrors TextFunctions.shingles at n = 3
-    // (inclusive DuckDB slices: w[i:i+2] is 3 tokens; whole-text
-    // fallback for short docs, the q89/q96 oracle pattern).
-    "q135_source_overlap" ->
-      s"""WITH d AS (SELECT source, $toksSql AS w FROM documents),
-         |g AS (
-         |  SELECT DISTINCT source AS src,
-         |    unnest(CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |      ELSE list_distinct([array_to_string(w[i:i+2], ' ')
-         |                          for i in range(1, len(w) - 1)]) END) AS g
-         |  FROM d),
-         |c AS (SELECT src, count(*) AS n_grams FROM g GROUP BY src),
-         |s AS (
-         |  SELECT a.src AS src_a, b.src AS src_b, count(*) AS shared
-         |  FROM g a JOIN g b ON a.g = b.g AND a.src < b.src
-         |  GROUP BY 1, 2),
-         |p AS (
-         |  SELECT ca.src AS src_a, cb.src AS src_b,
-         |    ca.n_grams AS grams_a, cb.n_grams AS grams_b
-         |  FROM c ca JOIN c cb ON ca.src < cb.src)
-         |SELECT p.src_a, p.src_b,
-         |  CAST(p.grams_a AS BIGINT) AS grams_a,
-         |  CAST(p.grams_b AS BIGINT) AS grams_b,
-         |  CAST(coalesce(s.shared, 0) AS BIGINT) AS shared,
-         |  round(coalesce(s.shared, 0)::DOUBLE /
-         |    (p.grams_a + p.grams_b - coalesce(s.shared, 0)), 4) AS jaccard
-         |FROM p LEFT JOIN s USING (src_a, src_b)
-         |ORDER BY src_a, src_b""".stripMargin,
-    // q136 recomputes DSIR from the definition: unigram+bigram features
-    // (q109's list_concat order), the portable positional code-point hash
-    // into 1009 buckets, add-0.5-smoothed target/raw bucket histograms,
-    // per-doc log-ratio sums in feature order (list_sum is left-to-right,
-    // matching the fused expression's accumulation — the q109 discipline).
-    "q136_dsir_select" ->
-      s"""WITH ${dsirCtesOver("documents")}
-         |SELECT fb.doc_id, fb.is_target, len(fb.bks)::BIGINT AS n_feats,
-         |  CASE WHEN len(fb.bks) = 0 THEN NULL
-         |       ELSE round(list_sum(list_transform(fb.bks, b -> r.lrs[b + 1])), 4)
-         |  END AS weight
-         |FROM fb CROSS JOIN r ORDER BY fb.doc_id""".stripMargin,
-    // q143 rebuilds the whole pipeline: quality gate (q31's CTEs, >= 0.6
-    // on the rounded composite, AND the full A1 repetition keep rule —
-    // q162's CTEs), min-id dedup (q28's form), the DSIR model CTEs
-    // RE-POINTED at the deduped survivors, the rounded-weight raw-pool
-    // cut, and the content-keyed split CASE (q141's form).
-    "q143_ingest_pipeline" ->
-      s"""WITH raw AS (${qualityRawSql("doc_id, lang, text")}),
-         |rdoc AS (SELECT doc_id, coalesce(text,'') AS t FROM documents),
-         |${repetitionCtesSql("r", "rdoc")},
-         |qf AS (SELECT doc_id, lang, text FROM raw
-         |       WHERE $qualityExprSql >= 0.6
-         |         AND doc_id IN (SELECT doc_id FROM rfr WHERE keep)),
-         |d AS (SELECT doc_id, lang, text FROM qf
-         |      WHERE doc_id IN (SELECT min(doc_id) FROM qf
-         |                       GROUP BY md5($normSql))),
-         |${dsirCtesOver("d")},
-         |w AS (SELECT fb.doc_id,
-         |        round(list_sum(list_transform(fb.bks, b -> r.lrs[b + 1])), 4)
-         |          AS wr
-         |      FROM fb CROSS JOIN r
-         |      WHERE NOT fb.is_target AND len(fb.bks) > 0),
-         |sel AS (SELECT w.doc_id, w.wr, d.text FROM w JOIN d USING (doc_id)
-         |        WHERE w.wr > 0)
-         |SELECT doc_id, wr AS weight,
-         |  CASE WHEN substr(md5($normSql), 1, 8) < 'cccccccc' THEN 'train'
-         |       WHEN substr(md5($normSql), 1, 8) < 'e6666666' THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM sel ORDER BY doc_id""".stripMargin,
-    // q145 is a guarantee GATE (q108 pattern): the merged Misra–Gries
-    // summary's recall and error bounds verified in-plan vs exact counts.
-    "q145_heavy_ngrams" ->
-      """SELECT * FROM (VALUES
-        |  ('mg_estimates_within_bound', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('mg_heavy_recall', CAST(1.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q144 composes q29's two exactly-mirrored counters; fertility is
-    // one division of two exact BIGINT sums.
-    "q144_tokenizer_fertility" ->
-      s"""WITH t AS (
-         |  SELECT lang,
-         |    CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len($toksSql) END AS BIGINT) AS n_tok,
-         |    CAST(len(regexp_extract_all(coalesce(text,''),
-         |      '(''(?:s|d|m|t|ll|ve|re))|([\\p{L}]+)|([0-9]{1,3})|([^\\s\\p{L}0-9]+)'))
-         |      AS BIGINT) AS n_bpe
-         |  FROM documents)
-         |SELECT lang, count(*) AS n_docs,
-         |  sum(n_tok)::BIGINT AS ws_tokens,
-         |  sum(n_bpe)::BIGINT AS bpe_tokens,
-         |  round(sum(n_bpe)::DOUBLE / sum(n_tok), 4) AS fertility
-         |FROM t WHERE n_tok > 0
-         |GROUP BY lang ORDER BY lang""".stripMargin,
-    // q142 is q136's SELECTION step: rank the RAW pool by the ROUNDED
-    // weight (both engines cut the same 4-decimal value — the q134
-    // discipline), doc_id tiebreak, keep the top 50.
-    "q142_dsir_topk" ->
-      s"""WITH ${dsirCtesOver("documents")}
-         |SELECT doc_id, weight FROM (
-         |  SELECT fb.doc_id,
-         |    round(list_sum(list_transform(fb.bks, b -> r.lrs[b + 1])), 4)
-         |      AS weight
-         |  FROM fb CROSS JOIN r
-         |  WHERE NOT fb.is_target AND len(fb.bks) > 0) x
-         |ORDER BY weight DESC, doc_id LIMIT 50""".stripMargin,
-    // q137 recomputes BOTH ingest steps from the md5 definition: in-batch
-    // min-id dedup (q28's form), anti-join vs the store snapshot, and —
-    // the point of the gate — batch B's snapshot includes batch A's
-    // surviving fingerprints (the append must be visible and exact).
-    "q137_fp_store_ingest" ->
-      s"""WITH d AS (SELECT doc_id, md5($normSql) AS fp FROM documents),
-         |corpus AS (SELECT DISTINCT fp FROM d WHERE doc_id % 3 = 2),
-         |a1 AS (SELECT min(doc_id) AS doc_id, fp FROM d
-         |       WHERE doc_id % 3 = 0 GROUP BY fp),
-         |sa AS (SELECT doc_id, fp FROM a1
-         |       WHERE fp NOT IN (SELECT fp FROM corpus)),
-         |b1 AS (SELECT min(doc_id) AS doc_id, fp FROM d
-         |       WHERE doc_id % 3 = 1 GROUP BY fp),
-         |sb AS (SELECT doc_id FROM b1 WHERE fp NOT IN
-         |       (SELECT fp FROM corpus UNION SELECT fp FROM sa))
-         |SELECT 'a' AS batch, doc_id FROM sa
-         |UNION ALL SELECT 'b' AS batch, doc_id FROM sb
-         |ORDER BY batch, doc_id""".stripMargin,
-    // q138 is a verdict GATE (q126 pattern): compaction must preserve the
-    // store's exact content while collapsing to ≤1 file per bucket.
-    "q138_store_compact" ->
-      """SELECT * FROM (VALUES
-        |  ('compact_content_equal', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('compact_one_file_per_bucket', CAST(8.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q139 recomputes the whole data card from the raw definitions:
-    // q31's quality components + composite, q28's md5 fingerprint, the
-    // blank-doc n_tok contract, exact distinct counts per source.
-    "q139_corpus_report" ->
-      s"""WITH q AS (
-         |  SELECT source, lang, n_tok, $qualityExprSql AS quality,
-         |    md5($normSql) AS fp
-         |  FROM (${qualityRawSql("source, lang, text")}) raw)
-         |SELECT source,
-         |  count(*) AS n_docs,
-         |  count(DISTINCT fp)::BIGINT AS n_uniq,
-         |  round(1.0 - count(DISTINCT fp)::DOUBLE / count(*), 4) AS dup_frac,
-         |  sum(n_tok)::BIGINT AS total_tokens,
-         |  round(avg(n_tok), 2) AS avg_tokens,
-         |  count(DISTINCT lang)::BIGINT AS n_langs,
-         |  round(avg(quality), 4) AS avg_quality,
-         |  round(avg(CASE WHEN quality >= 0.8 THEN 1.0 ELSE 0.0 END), 4)
-         |    AS hi_quality_frac
-         |FROM q GROUP BY source ORDER BY source""".stripMargin,
-    // q140's contract is the ROW ORDER itself (the reproducible per-epoch
-    // shuffle); both engines sort by the same md5('<epoch>:<id>') key.
-    "q140_training_order" ->
-      """SELECT doc_id, md5('1:' || CAST(doc_id AS VARCHAR)) AS okey
-        |FROM documents
-        |ORDER BY okey, doc_id""".stripMargin,
-    // q141 is q123's content-keyed twin: the md5-interval CASE over the
-    // NORMALIZED TEXT, so exact duplicates share a split by construction.
-    "q141_leakage_safe_splits" ->
-      s"""SELECT doc_id,
-         |  CASE WHEN substr(md5($normSql), 1, 8) < 'cccccccc' THEN 'train'
-         |       WHEN substr(md5($normSql), 1, 8) < 'e6666666' THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // q134 recomputes the hard-negative definition from scratch: all
-    // pairs, tau cut on the ROUNDED cosine (both engines rank and
-    // filter the same 4-decimal value — the q34 discipline), top-3.
-    "q134_hard_negatives" ->
-      s"""WITH e AS (SELECT vec_id, $vecSql AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id % 100 = 0)
-         |SELECT query_id, corpus_id, cos_r, neg_rank FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-         |    round(${cosSql("q.v", "c.v")}, 4) AS cos_r,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY round(${cosSql("q.v", "c.v")}, 4) DESC, c.vec_id)
-         |      AS neg_rank
-         |  FROM q, e c
-         |  WHERE c.vec_id <> q.vec_id
-         |    AND round(${cosSql("q.v", "c.v")}, 4) < 0.45) x
-         |WHERE neg_rank <= 3 ORDER BY query_id, neg_rank""".stripMargin,
-    // q133 is an accuracy GATE (q113's production companion): the exact
-    // re-rank must dominate the plain ADC list and clear the pinned
-    // recall floor.
-    "q133_ivfpq_rerank" ->
-      """SELECT * FROM (VALUES
-        |  ('rerank_recall_at_10', CAST(0.4 AS DOUBLE), TRUE),
-        |  ('rerank_recall_ge_plain', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q132_bm25_serve" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |stats AS (SELECT count(*)::DOUBLE AS n, avg(len(w)) AS avgdl FROM tok),
-         |q(qid, t) AS (VALUES
-         |  (1, 'spark'), (1, 'data'), (1, 'query'),
-         |  (2, 'join'), (2, 'table'),
-         |  (3, 'stream')),
-         |m AS (
-         |  SELECT doc_id, t, count(*) AS tf, min(dl) AS dl FROM (
-         |    SELECT doc_id, len(w) AS dl, unnest(w) AS t FROM tok) x
-         |  WHERE t IN (SELECT t FROM q) GROUP BY doc_id, t),
-         |dfs AS (SELECT t, count(*) AS df FROM m GROUP BY t)
-         |SELECT CAST(q.qid AS BIGINT) AS query_id, m.doc_id, round(sum(
-         |  ln(1 + (s.n - d.df + 0.5) / (d.df + 0.5)) * (m.tf * (1.2 + 1)) /
-         |  (m.tf + 1.2 * (1 - 0.75 + 0.75 * m.dl / s.avgdl))), 4) AS score
-         |FROM q JOIN m USING (t) JOIN dfs d USING (t) CROSS JOIN stats s
-         |GROUP BY q.qid, m.doc_id
-         |ORDER BY query_id, m.doc_id""".stripMargin,
-    // q146/q147 are ingest-append equivalence GATES (q126/q127 pattern,
-    // extended to the LSH and semantic tiers): a sequence of ingests
-    // must serve exactly like the one-shot store.
-    "q146_lsh_store_ingest" ->
-      """SELECT * FROM (VALUES
-        |  ('lsh_ingest_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('lsh_ingest_seq_equals_oneshot', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q147_semdedup_store_ingest" ->
-      """SELECT * FROM (VALUES
-        |  ('sem_ingest_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('sem_ingest_seq_equals_oneshot', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q148/q149 are retraction GATES: a takedown must purge derived
-    // postings/codes and leave serving identical to a full rebuild.
-    "q148_index_retract" ->
-      """SELECT * FROM (VALUES
-        |  ('retract_index_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('retract_postings_purged', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('retract_removed_never_served', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('retract_scores_equal_rebuild', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    "q149_codestore_retract" ->
-      """SELECT * FROM (VALUES
-        |  ('codestore_removed_never_served', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('codestore_retract_equals_rebuild', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('codestore_retract_nonempty', CAST(1.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q157 is q149's twin on the VERSIONED (manifest) store: the oracle
-    // pins the verdict rows — retract-chain ≡ rebuild, takedown honored,
-    // generation chain + grace-manifest GC policy.
-    "q157_codestore_versioned" ->
-      """SELECT * FROM (VALUES
-        |  ('vstore_generation_chain', CAST(3.0 AS DOUBLE), TRUE),
-        |  ('vstore_removed_never_served', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('vstore_retract_equals_rebuild', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('vstore_retract_nonempty', CAST(1.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q159 is an accuracy GATE (q99 pattern): the oracle pins the resize
-    // verdicts literally; a rescale/guard regression flips ok.
-    "q159_multimodal_resize" ->
-      """SELECT * FROM (VALUES
-        |  ('resize_bomb_guard_holds', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('resize_inbounds_byte_identical', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('resize_jpeg_smaller', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('resize_jpeg_stays_jpeg', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('resize_nonimage_passthrough', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('resize_redecoded_dims', CAST(4.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q158 pins the code-store ingest verdicts (q146/q147 pattern on the
-    // ANN store): sequence ≡ one-shot, replay no-op, self-compacting.
-    "q158_codestore_ingest" ->
-      """SELECT * FROM (VALUES
-        |  ('cstore_ingest_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('cstore_ingest_one_file_per_cell', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('cstore_ingest_replay_noop', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('cstore_ingest_seq_equals_oneshot', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q160 pins the model-generation migration verdicts (q157's pattern
-    // on the retrain leg): retrained ≡ one-shot with the manifest's own
-    // models, chain + grace policy, serving through storedModels.
-    "q160_codestore_retrain" ->
-      """SELECT * FROM (VALUES
-        |  ('retrain_equals_oneshot_with_stored_models',
-        |   CAST(0.0 AS DOUBLE), TRUE),
-        |  ('retrain_generation_chain', CAST(2.0 AS DOUBLE), TRUE),
-        |  ('retrain_models_grace_kept', CAST(2.0 AS DOUBLE), TRUE),
-        |  ('retrain_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('retrain_serves_from_stored_models', CAST(1.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q161 pins the store-served flagship's parity against q156's exact
-    // tier (pair set and split assignment equal), leak-freedom on the
-    // served pairs, and the packing contract — all boolean verdicts, so
-    // the oracle is the literal row set.
-    "q161_training_batches_stored" ->
-      """SELECT * FROM (VALUES
-        |  ('stored_flagship_batches', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('stored_pack_budget', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('stored_pairs_equal_exact', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('stored_splits_equal_exact', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('stored_splits_leakfree', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q162 recomputes the COMPLETE Gopher A1 repetition family from
-    // first principles: explode + group-by counts per (doc,
-    // line/para/gram), where the operator folds sorted runs — two
-    // algorithms, one definition (repetitionCtesSql documents the
-    // tie-break and counting conventions; the keep rule is generated
-    // from the same threshold table the Spark side reads).
-    "q162_repetition_rules" -> {
-      val cols = repetitionFields.mkString(", ")
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 5 = 0 THEN base ||
-         |      chr(10) || chr(10) || substr(t0, 1, 60) ||
-         |      chr(10) || chr(10) || substr(t0, 1, 60)
-         |    ELSE base END AS t
-         |  FROM (
-         |    SELECT doc_id, coalesce(text,'') AS t0,
-         |      CASE WHEN doc_id % 3 = 0
-         |        THEN coalesce(text,'') || chr(10) ||
-         |             substr(coalesce(text,''), 1, 40) || chr(10) ||
-         |             substr(coalesce(text,''), 1, 40)
-         |        ELSE coalesce(text,'') END AS base
-         |    FROM documents) s0),
-         |${repetitionCtesSql("", "d")}
-         |SELECT doc_id, $cols, keep FROM fr ORDER BY doc_id""".stripMargin
-    },
-    // q163 pins the Bloom-screened fullIdCheck ingest verdicts (q158's
-    // pattern on the arbitrary-binding leg): screen never drops (replay
-    // no-op, stale positive re-ingests), never blocks (new batch lands
-    // in full), filter maintained across commits (store ≡ union).
-    "q163_codestore_bloom" ->
-      """SELECT * FROM (VALUES
-        |  ('cstore_bloom_new_batch_full', CAST(50.0 AS DOUBLE), TRUE),
-        |  ('cstore_bloom_recorded', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('cstore_bloom_replay_noop', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('cstore_bloom_stale_positive_corrected',
-        |   CAST(1.0 AS DOUBLE), TRUE),
-        |  ('cstore_bloom_store_equals_union', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q165 recomputes the A1 QUALITY family from first principles — the
-    // same decorations, token/line conventions (shared trim/lower/split
-    // semantics with toksSql), replace-based symbol counting, and the
-    // published bounds as one conjunction.
-    "q165_gopher_quality" -> {
-      val bullets = (1 to 10).map(i => s"'- item$i' || chr(10)")
-        .mkString(" || ")
-      val longWords =
-        " pneumonoultramicroscopicsilicovolcanoconiosis" * 4
-      val oneChars = " a" * 30
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE doc_id % 9
-         |      WHEN 0 THEN t0 || ' ## # ### ##'
-         |      WHEN 1 THEN $bullets || t0
-         |      WHEN 2 THEN t0 || chr(10) || 'wait...' || chr(10) ||
-         |                  'more...' || chr(10) || 'end…'
-         |      WHEN 3 THEN t0 || ' 111 222 333 444 555 666'
-         |      WHEN 4 THEN substr(t0, 1, 25)
-         |      WHEN 5 THEN t0 || ' the be to of and that have with'
-         |      WHEN 6 THEN t0 || '$longWords'
-         |      WHEN 7 THEN t0 || '$oneChars'
-         |      ELSE t0 END AS text
-         |  FROM (SELECT doc_id, coalesce(text, '') AS t0 FROM documents) s0),
-         |${gopherQualityStatsCtesSql("", "d")}
-         |SELECT doc_id, ${gopherQualityFields.mkString(", ")},
-         |  ${gopherQualityKeepSql()} AS keep
-         |FROM st ORDER BY doc_id""".stripMargin
-    },
-    // q166 pins the PARAMETERIZED quality rule -- the same stats family
-    // at the fixture-policy bounds over the RAW corpus (no decoration:
-    // the production-policy face, and the adjusted bounds discriminate
-    // on undecorated word-soup), keep recomputed from ONE interpolated
-    // bounds instance on both sides.
-    "q166_gopher_quality_bounds" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, coalesce(text, '') AS text FROM documents),
-         |${gopherQualityStatsCtesSql("", "d")}
-         |SELECT doc_id, n_words, stop_hits,
-         |  ${gopherQualityKeepSql(fixtureQualityBounds)} AS keep
-         |FROM st ORDER BY doc_id""".stripMargin,
-    // q167 recomputes the C4 line/page rules from first principles —
-    // same decorations, trim/split conventions, terminal-mark set, and
-    // the bounds interpolated from the SAME C4Bounds instance the Spark
-    // rule reads.
-    "q167_c4_filters" -> {
-      val b = TextFunctions.C4Bounds()
-      val five = s"chr(10) || '$c4FiveSentences'"
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE doc_id % 7
-         |      WHEN 0 THEN t0 || $five
-         |      WHEN 1 THEN t0 || chr(10) ||
-         |        'Please enable javascript to continue reading this page now.'
-         |      WHEN 2 THEN t0 || $five || chr(10) ||
-         |        'Lorem ipsum dolor sit amet consectetur adipiscing elit.'
-         |      WHEN 3 THEN t0 || $five || chr(10) ||
-         |        'function render() { return template; }'
-         |      WHEN 4 THEN t0 || chr(10) || 'Ok.' || chr(10) ||
-         |        'This works fine!' || chr(10) || 'Does this work too?'
-         |      WHEN 5 THEN t0 || $five || chr(10) ||
-         |        'The reviewer said it was "good enough."'
-         |      ELSE t0 END AS text
-         |  FROM (SELECT doc_id, coalesce(text, '') AS t0 FROM documents) s0),
-         |c4 AS (
-         |  SELECT doc_id, text,
-         |    list_transform(string_split(text, chr(10)), l -> trim(l))
-         |      AS lines
-         |  FROM d),
-         |k AS (
-         |  SELECT doc_id, text, len(lines) AS n_lines,
-         |    -- coalesce: DuckDB's array_to_string([]) is NULL where
-         |    -- Spark's array_join([]) is '' — a nothing-retained page
-         |    -- must hash as the empty string on both engines
-         |    coalesce(array_to_string(list_filter(lines, t ->
-         |      len(string_split_regex(t, '\\s+')) >= ${b.minWordsPerLine}
-         |      AND (ends_with(t, '.') OR ends_with(t, '!')
-         |           OR ends_with(t, '?') OR ends_with(t, '"'))
-         |      AND NOT contains(lower(t), 'javascript')), chr(10)), '')
-         |      AS clean,
-         |    len(list_filter(lines, t ->
-         |      len(string_split_regex(t, '\\s+')) >= ${b.minWordsPerLine}
-         |      AND (ends_with(t, '.') OR ends_with(t, '!')
-         |           OR ends_with(t, '?') OR ends_with(t, '"'))
-         |      AND NOT contains(lower(t), 'javascript'))) AS n_kept
-         |  FROM c4),
-         |st AS (
-         |  SELECT doc_id, n_lines, n_kept, md5(clean) AS clean_hash,
-         |    len(regexp_extract_all(clean, '[.!?]')) AS n_sentences,
-         |    contains(lower(text), 'lorem ipsum') AS has_lorem,
-         |    contains(text, '{') AS has_brace
-         |  FROM k)
-         |SELECT doc_id, n_lines, n_kept, clean_hash, n_sentences,
-         |  has_lorem, has_brace,
-         |  (n_sentences >= ${b.minSentences}
-         |   AND NOT has_lorem AND NOT has_brace) AS keep
-         |FROM st ORDER BY doc_id""".stripMargin
-    },
-    // q168 recomputes corpus-wide line keep-first from first principles,
-    // partitioned by segment TEXT (certifies the 128-bit segment keys
-    // collision-free on this corpus — the q100 discipline).
-    "q168_line_dedup" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE doc_id % 4
-         |      WHEN 0 THEN t0 || chr(10) || '$q168News'
-         |      WHEN 1 THEN t0 || chr(10) || '$q168News'
-         |                    || chr(10) || '$q168Foot'
-         |      WHEN 2 THEN t0 || chr(10) || '$q168Foot'
-         |      ELSE t0 END AS text
-         |  FROM (SELECT doc_id, coalesce(text, '') AS t0 FROM documents) s0),
-         |l AS (
-         |  SELECT doc_id,
-         |    list_filter(list_transform(string_split(text, chr(10)),
-         |      x -> trim(x)), x -> x <> '') AS segs
-         |  FROM d),
-         |c AS (SELECT doc_id, segs, unnest(range(0, len(segs))) AS cidx
-         |      FROM l),
-         |sseg AS (SELECT doc_id, cidx, segs[cidx + 1] AS seg FROM c),
-         |s2 AS (SELECT doc_id, cidx, seg,
-         |    count(*) OVER (PARTITION BY seg) AS cnt,
-         |    row_number() OVER (PARTITION BY seg
-         |      ORDER BY doc_id, cidx) AS rn
-         |  FROM sseg),
-         |k AS (SELECT doc_id, cidx, seg FROM s2 WHERE cnt < 2 OR rn = 1),
-         |r AS (SELECT doc_id,
-         |    string_agg(seg, chr(10) ORDER BY cidx) AS text_clean,
-         |    count(*) AS n_kept
-         |  FROM k GROUP BY doc_id),
-         |n AS (SELECT doc_id, len(segs) AS n_segs FROM l)
-         |SELECT n.doc_id, coalesce(r.text_clean, '') AS text_clean,
-         |  CAST(n.n_segs AS BIGINT) AS n_segs,
-         |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
-         |FROM n LEFT JOIN r ON n.doc_id = r.doc_id
-         |ORDER BY n.doc_id""".stripMargin,
-    // q169 pins the semantic-decontamination contract (q108's verdict
-    // pattern): recall vs the exact bipartite graph, structurally-zero
-    // spurious drops, corpus conservation, non-degenerate fixture.
-    "q169_semantic_decontaminate" ->
-      """SELECT * FROM (VALUES
-        |  ('semdecon_conservation', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('semdecon_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('semdecon_recall_of_exact', CAST(0.8 AS DOUBLE), TRUE),
-        |  ('semdecon_spurious_drops', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q170 recomputes UniMax end to end: token counts, the ascending
-    // capacity sort, the exact-BIGINT prefix-sum capping test (integer
-    // compare — bit-identical by construction), and the two final
-    // divisions. Budget 48000, cap 2.0 epochs, mirrored literally.
-    "q170_unimax" ->
-      s"""WITH t AS (
-         |  SELECT lang AS stratum,
-         |    CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len($toksSql) END AS n_tok
-         |  FROM documents),
-         |a AS (SELECT stratum, sum(n_tok)::BIGINT AS available_tokens,
-         |        CAST(floor(sum(n_tok) * 2.0) AS BIGINT) AS cap_tokens
-         |      FROM t GROUP BY stratum),
-         |${unimaxCtesSql(48000L)}
-         |SELECT stratum, available_tokens, cap_tokens,
-         |  round(alloc, 4) AS alloc_tokens,
-         |  round(CASE WHEN available_tokens > 0
-         |        THEN alloc / available_tokens ELSE 0.0 END, 4) AS epochs,
-         |  capped,
-         |  CAST(CASE WHEN k = n_tot THEN 48000 - sum_capped ELSE 0 END
-         |    AS BIGINT) AS leftover_tokens
-         |FROM al ORDER BY stratum""".stripMargin,
-    // q171 recomputes prototype pruning: per-label dimension-wise means
-    // rounded at 1e-6 (the engine-parity pin — both engines then rank
-    // from IDENTICAL centroid inputs), the q38-proven cosine, the same
-    // (cos DESC, vec_id) rank, the same ceil(frac*n) cut.
-    "q171_prototype_prune" ->
-      s"""WITH e AS (SELECT vec_id, label, $vecSql AS v FROM embeddings),
-         |${protoPruneSql("e", 0.25)}""".stripMargin,
-    // q172 recomputes the D4 composition end to end: the exact cosine
-    // pair graph (q38's proven-parity tier), recursive-CTE transitive
-    // closure with min-id representatives (q154's discipline), then the
-    // q171 centroid/rank arithmetic over the SURVIVORS.
-    "q172_d4_pipeline" ->
-      s"""WITH RECURSIVE e AS (
-         |  SELECT vec_id, label, $vecSql AS v FROM embeddings),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.vec_id AS ua, b.vec_id AS ub
-         |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |  WHERE ${cosSql("a.v", "b.v")} >= 0.45),
-         |nodes AS (SELECT ua AS id FROM pairs UNION SELECT ub FROM pairs),
-         |edges AS MATERIALIZED (
-         |  SELECT ua AS u, ub AS w FROM pairs
-         |  UNION SELECT ub AS u, ua AS w FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT reach.id, e2.w FROM reach JOIN edges e2 ON reach.r = e2.u),
-         |rep AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         |surv AS (SELECT e.vec_id, e.label, e.v
-         |         FROM e LEFT JOIN rep ON e.vec_id = rep.id
-         |         WHERE rep.id IS NULL OR rep.rep = e.vec_id),
-         |${protoPruneSql("surv", 0.2)}""".stripMargin,
-    // q173 recomputes the CCNet split: q103's smoothed bigram-LM CTEs
-    // verbatim, then ntile(3) per language over the ROUNDED perplexity
-    // (identical sort keys in both engines by q103's hash parity) with
-    // the doc-id tie-break; unscorable docs land in 'none' OUTSIDE the
-    // window (the engines' NULL sort orders differ — documented on the
-    // operator).
-    "q173_ccnet_buckets" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |bg AS (
-         |  SELECT doc_id, lang,
-         |    unnest([w[i] || ' ' || w[i+1] for i in range(1, len(w))]) AS g
-         |  FROM tok WHERE len(w) >= 2),
-         |uni AS (
-         |  SELECT u.w AS w, count(*) AS c1
-         |  FROM (SELECT unnest(w) AS w FROM tok WHERE lang = 'en') u
-         |  GROUP BY 1),
-         |bi AS (SELECT g, count(*) AS c2 FROM bg WHERE lang = 'en' GROUP BY 1),
-         |v AS (SELECT count(*) AS v FROM uni),
-         |sc AS (
-         |  SELECT bg.doc_id,
-         |    ln((coalesce(bi.c2, 0) + 1)::DOUBLE /
-         |       (coalesce(uni.c1, 0) + v.v)) AS logp
-         |  FROM bg LEFT JOIN bi USING (g)
-         |  LEFT JOIN uni ON string_split(bg.g, ' ')[1] = uni.w
-         |  CROSS JOIN v),
-         |agg AS (
-         |  SELECT doc_id, round(exp(-avg(logp)), 2) AS perplexity
-         |  FROM sc GROUP BY 1),
-         |scored AS (
-         |  SELECT d.doc_id, d.lang, a.perplexity
-         |  FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id),
-         |b AS (
-         |  SELECT doc_id, lang, perplexity,
-         |    ntile(3) OVER (PARTITION BY lang
-         |      ORDER BY perplexity, doc_id) AS t
-         |  FROM scored WHERE perplexity IS NOT NULL)
-         |SELECT doc_id, lang, perplexity,
-         |  CASE t WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-         |         ELSE 'tail' END AS bucket
-         |FROM b
-         |UNION ALL
-         |SELECT doc_id, lang, perplexity, 'none' AS bucket
-         |FROM scored WHERE perplexity IS NULL
-         |ORDER BY doc_id""".stripMargin,
-    // q174 recomputes the composition: q170's waterfilling CTEs (the
-    // integer-exact capping test and both divisions), epochs→plan
-    // arithmetic on the ROUNDED epochs, then q155's md5 hex-threshold
-    // repeat CASE and the range unnest.
-    "q174_unimax_materialize" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, lang,
-         |    CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len($toksSql) END AS BIGINT) AS n_tok
-         |  FROM documents),
-         |a AS (SELECT lang AS stratum, sum(n_tok)::BIGINT AS available_tokens,
-         |        CAST(floor(sum(n_tok) * 2.0) AS BIGINT) AS cap_tokens
-         |      FROM t GROUP BY 1),
-         |${unimaxCtesSql(48000L)},
-         |p AS (SELECT stratum AS lang,
-         |        round(alloc / available_tokens, 4) AS epochs
-         |      FROM al),
-         |p2 AS (SELECT lang,
-         |        CAST(floor(epochs) AS BIGINT) AS full_repeats,
-         |        round(epochs - floor(epochs), 4) AS partial_fraction
-         |       FROM p),
-         |r AS (SELECT t.doc_id, t.lang, t.n_tok,
-         |        p2.full_repeats + CASE WHEN
-         |          substr(md5(t.doc_id::VARCHAR), 1, 8) <
-         |          CASE WHEN p2.partial_fraction >= 1.0 THEN 'g'
-         |            ELSE lower(lpad(to_hex(CAST(floor(p2.partial_fraction
-         |              * 4294967296) AS BIGINT)), 8, '0')) END
-         |        THEN 1 ELSE 0 END AS reps
-         |      FROM t JOIN p2 USING (lang))
-         |SELECT doc_id, lang, n_tok,
-         |  CAST(unnest(range(1, reps + 1)) AS BIGINT) AS repeat_idx
-         |FROM r WHERE reps > 0
-         |ORDER BY doc_id, repeat_idx""".stripMargin,
-    // q175's signal is engine-local zlib (no DuckDB twin); the oracle
-    // pins the verdict frame the measured-then-pinned in-plan gates emit.
-    "q175_compression_signal" ->
-      """SELECT * FROM (VALUES
-        |  ('comp_empty_unscorable', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('comp_natural_long_in_band', CAST(0.0 AS DOUBLE), TRUE),
-        |  ('comp_noise_above_ceiling', CAST(0.8 AS DOUBLE), TRUE),
-        |  ('comp_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('comp_rep_below_floor', CAST(0.1 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q176 recomputes margin mining end to end: the planted-copy target
-    // construction, the all-pairs cosine, both endpoints' top-4 average
-    // (tie-broken on the partner id), the margin ratio, and the mutual
-    // argmax-at-tau cut.
-    "q176_margin_mine" ->
-      s"""WITH src AS (
-         |  SELECT vec_id AS src_id, $vecSql AS sv
-         |  FROM embeddings WHERE label < 5),
-         |tgt AS (
-         |  SELECT vec_id AS tgt_id, $vecSql AS tv
-         |  FROM embeddings WHERE label >= 5
-         |  UNION ALL
-         |  SELECT vec_id + 1000000 AS tgt_id, $vecSql AS tv
-         |  FROM embeddings WHERE label < 5 AND vec_id % 13 = 0),
-         |scored AS (
-         |  SELECT src_id, tgt_id, ${cosSql("sv", "tv")} AS cos
-         |  FROM src CROSS JOIN tgt),
-         |fa AS (SELECT src_id, avg(cos) AS asrc FROM (
-         |    SELECT src_id, cos, row_number() OVER (PARTITION BY src_id
-         |      ORDER BY cos DESC, tgt_id) AS r FROM scored) x
-         |  WHERE r <= 4 GROUP BY src_id),
-         |fb AS (SELECT tgt_id, avg(cos) AS atgt FROM (
-         |    SELECT tgt_id, cos, row_number() OVER (PARTITION BY tgt_id
-         |      ORDER BY cos DESC, src_id) AS r FROM scored) x
-         |  WHERE r <= 4 GROUP BY tgt_id),
-         |m AS (SELECT s.src_id, s.tgt_id, s.cos,
-         |        s.cos / ((fa.asrc + fb.atgt) / 2) AS margin
-         |      FROM scored s JOIN fa USING (src_id) JOIN fb USING (tgt_id)),
-         |r AS (SELECT *,
-         |        row_number() OVER (PARTITION BY src_id
-         |          ORDER BY margin DESC, tgt_id) AS fr,
-         |        row_number() OVER (PARTITION BY tgt_id
-         |          ORDER BY margin DESC, src_id) AS br
-         |      FROM m)
-         |SELECT src_id, tgt_id, round(cos, 4) AS cos_r,
-         |  round(margin, 4) AS margin_r
-         |FROM r WHERE fr = 1 AND br = 1 AND margin >= 1.2
-         |ORDER BY src_id""".stripMargin,
-    // q177 recomputes BPE merge learning round by round: the vocab
-    // word-frequency table, then 8 unrolled layers of pair counts,
-    // tie-broken argmax, and the identical boundary-preserving replace.
-    "q177_bpe_merges" ->
-      s"WITH ${bpeCtesSql(8, 2L)}",
-    // q189 is the PRODUCTION learner (driver-side merge loop over the
-    // distributed word collapse) at full-vocab topV — an exact drop-in
-    // for q177's algorithm, so the SAME unrolled oracle gates it.
-    "q189_bpe_local" ->
-      s"WITH ${bpeCtesSql(8, 2L)}",
-    // q178 recomputes the Efraimidis-Spirakis draw exactly: the same
-    // 12-hex-digit md5 prefix as an exact dyadic u, ln(u)/w rounded at
-    // 1e-9, the (key DESC, id) rank, and the top-120 cut. 2^48 =
-    // 281474976710656.
-    "q178_weighted_sample" ->
-      """WITH sc AS (
-        |  SELECT doc_id, n_chars,
-        |    round(ln((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))
-        |                ::UBIGINT + 0.5) / 281474976710656.0)
-        |          / n_chars, 9) AS es_key
-        |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0)
-        |SELECT doc_id, n_chars, es_key,
-        |  row_number() OVER (ORDER BY es_key DESC, doc_id) AS sample_rank
-        |FROM sc ORDER BY es_key DESC, doc_id LIMIT 120""".stripMargin,
-    // q179 recomputes k-center greedy with 8 unrolled layers (the q177
-    // discipline): min-id seed, per-layer round-6 distance to the new
-    // center folded into the running min, (md DESC, id) argmax.
-    "q179_kcenter_coreset" -> kCenterSql(8),
-    // q180 rebuilds the four Kneser-Ney model tables from the en slice
-    // and replays the discounted interpolation term by term (D = 0.75;
-    // the add-one continuation floor makes unseen words scoreable).
-    // Per-document logp folds as a window ORDERED by bigram position —
-    // the SAME fold order as the operator's posexplode window, so the
-    // cross-entropy doubles agree bitwise, not just post-rounding.
-    "q180_kn_perplexity" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents),
-         |bg AS (
-         |  SELECT doc_id, lang, pr.i AS pos, pr.g AS g, pr.a AS w1,
-         |    pr.b AS w2
-         |  FROM (SELECT doc_id, lang,
-         |          unnest([{'i': i, 'g': w[i] || ' ' || w[i+1], 'a': w[i],
-         |                   'b': w[i+1]} for i in range(1, len(w))]) AS pr
-         |        FROM tok WHERE len(w) >= 2)),
-         |bi AS (SELECT g, count(*) AS c2 FROM bg WHERE lang = 'en'
-         |       GROUP BY 1),
-         |ctx AS (SELECT w1, count(*) AS ctxc, count(DISTINCT w2) AS n1p
-         |        FROM bg WHERE lang = 'en' GROUP BY 1),
-         |cont AS (SELECT w2, count(DISTINCT w1) AS cont1
-         |         FROM bg WHERE lang = 'en' GROUP BY 1),
-         |scal AS (SELECT (SELECT count(*) FROM bi) AS b,
-         |  (SELECT count(DISTINCT u.w) FROM
-         |    (SELECT unnest(w) AS w FROM tok WHERE lang = 'en') u) AS v),
-         |sc AS (
-         |  SELECT d.doc_id, d.pos,
-         |    ln(CASE WHEN ctx.ctxc IS NULL
-         |         THEN (coalesce(cont.cont1, 0) + 1)::DOUBLE / (s.b + s.v + 1)
-         |         ELSE greatest(coalesce(bi.c2, 0)::DOUBLE - 0.75, 0.0)
-         |                / ctx.ctxc
-         |              + (0.75 * ctx.n1p / ctx.ctxc) *
-         |                ((coalesce(cont.cont1, 0) + 1)::DOUBLE
-         |                 / (s.b + s.v + 1)) END) AS logp
-         |  FROM bg d LEFT JOIN bi USING (g) LEFT JOIN ctx USING (w1)
-         |  LEFT JOIN cont USING (w2) CROSS JOIN scal s),
-         |f AS (
-         |  SELECT doc_id,
-         |    sum(logp) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         |    count(*) OVER (PARTITION BY doc_id) AS n,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY pos DESC)
-         |      AS rn
-         |  FROM sc),
-         |agg AS (
-         |  SELECT doc_id, n AS n_bigrams,
-         |    round(-cum / n, 4) AS cross_entropy,
-         |    round(exp(-cum / n), 2) AS perplexity
-         |  FROM f WHERE rn = 1)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         |  a.cross_entropy, a.perplexity
-         |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q184 recomputes the blocklist decision via the same distinct
-    // token-set intersection (both engines' intersect dedups; only the
-    // SIZE is compared — DuckDB's result order differs).
-    "q184_blocklist_filter" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS w
-         |  FROM documents)
-         |SELECT doc_id, lang,
-         |  len(list_intersect(w, ['dup', 'casino']))::BIGINT AS n_bad,
-         |  len(list_intersect(w, ['dup', 'casino'])) = 0 AS keep
-         |FROM tok ORDER BY doc_id""".stripMargin,
-    // q185 replays the CDC cut rule over list comprehensions: same
-    // normalized text, md5-window boundary test (hex prefix mod 64),
-    // [0 ∪ cuts ∪ n] bounds, chunk fingerprints, and the ≥2 report.
-    "q185_cdc_chunks" ->
-      s"""WITH nt AS (SELECT doc_id, $normSql AS t FROM documents),
-         |b AS (SELECT doc_id, t, len(t) AS n,
-         |  [i for i in range(16, len(t))
-         |   if ('0x' || substr(md5(t[i-15:i]), 1, 4))::INT % 64 = 0] AS cuts
-         |  FROM nt),
-         |ch AS (SELECT doc_id,
-         |  unnest([{'fp': md5(t[bounds[j]+1:bounds[j+1]]),
-         |           'ln': bounds[j+1]-bounds[j]}
-         |          for j in range(1, len(bounds))]) AS c
-         |  FROM (SELECT doc_id, t, ([0] || cuts || [n]) AS bounds
-         |        FROM b WHERE n > 0))
-         |SELECT c.fp AS chunk_fp, count(*)::BIGINT AS n_occ,
-         |  count(DISTINCT doc_id)::BIGINT AS n_docs,
-         |  min(c.ln)::BIGINT AS chunk_len
-         |FROM ch GROUP BY 1 HAVING count(*) >= 2
-         |ORDER BY n_occ DESC, chunk_fp""".stripMargin,
-    // q186 extends the q185 replay with the decision: the same chunks
-    // carry offsets, one fp-window computes occurrence + keep rank,
-    // and each document rebuilds by slicing its kept ranges back out
-    // of the normalized text (md5-pinned, coalesce for the empty-list
-    // NULL gotcha).
-    "q186_strip_blocks" ->
-      s"""WITH nt AS (SELECT doc_id, $normSql AS t FROM documents),
-         |b AS (SELECT doc_id, t, len(t) AS n,
-         |  [i for i in range(16, len(t))
-         |   if ('0x' || substr(md5(t[i-15:i]), 1, 4))::INT % 64 = 0] AS cuts
-         |  FROM nt),
-         |ch AS (SELECT doc_id, c.idx AS idx, c.off AS off, c.ln AS ln,
-         |         c.fp AS fp
-         |  FROM (SELECT doc_id,
-         |          unnest([{'idx': j-1, 'off': bounds[j],
-         |                   'ln': bounds[j+1]-bounds[j],
-         |                   'fp': md5(t[bounds[j]+1:bounds[j+1]])}
-         |                  for j in range(1, len(bounds))]) AS c
-         |        FROM (SELECT doc_id, t, ([0] || cuts || [n]) AS bounds
-         |              FROM b WHERE n > 0))),
-         |w AS (SELECT *, count(*) OVER (PARTITION BY fp) AS occ,
-         |        row_number() OVER (PARTITION BY fp
-         |          ORDER BY doc_id, idx) AS rn
-         |      FROM ch),
-         |k AS (SELECT doc_id, count(*)::BIGINT AS n_chunks,
-         |        sum(CASE WHEN occ < 2 OR rn = 1 THEN 1 ELSE 0 END)::BIGINT
-         |          AS n_kept,
-         |        array_agg({'off': off, 'ln': ln} ORDER BY idx)
-         |          FILTER (WHERE occ < 2 OR rn = 1) AS ks
-         |      FROM w GROUP BY doc_id)
-         |SELECT nt.doc_id,
-         |  md5(coalesce(array_to_string(
-         |    [nt.t[s.off+1:s.off+s.ln] for s in k.ks], ''), '')) AS clean_fp,
-         |  coalesce(k.n_chunks, 0) AS n_chunks,
-         |  coalesce(k.n_kept, 0) AS n_kept
-         |FROM nt LEFT JOIN k USING (doc_id)
-         |ORDER BY nt.doc_id""".stripMargin,
-    // q181 recomputes power-iteration centrality with 5 unrolled layers:
-    // the same exact pair graph, window-ordered neighbor folds, and
-    // interpolated damping literals.
-    "q181_graph_centrality" -> graphRankSql(5, 0.85, 0.3),
-    // q187 pins the store-served centrality's parity verdicts against
-    // the exact graph (recall/spurious/hub-overlap — all booleans, so
-    // the oracle is the literal row set, the q161 pattern).
-    "q187_store_centrality" ->
-      """SELECT * FROM (VALUES
-        |  ('stored_centrality_edge_recall', CAST(0.95 AS DOUBLE), TRUE),
-        |  ('stored_centrality_hub_overlap', CAST(16.0 AS DOUBLE), TRUE),
-        |  ('stored_centrality_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('stored_centrality_spurious_edges', CAST(0.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q188 pins the store-served margin mining's parity verdicts
-    // against the exact tier (planted recovery / recall / spurious —
-    // booleans, literal row set).
-    "q188_store_margin_mine" ->
-      """SELECT * FROM (VALUES
-        |  ('stored_mine_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('stored_mine_planted_recovered', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('stored_mine_recall_of_exact', CAST(0.9 AS DOUBLE), TRUE),
-        |  ('stored_mine_spurious', CAST(0.1 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q183 replays the span-corruption arithmetic over list
-    // comprehensions: same windows, md5-hex offsets, sentinel numbering,
-    // final-sentinel close, md5-pinned rebuilt texts.
-    "q183_span_corrupt" -> {
-      def winSize(w: String) = s"least(20, n - ($w) * 20)"
-      def spanStart(w: String) =
-        s"(($w) * 20 + ('0x' || substr(md5(doc_id || '_' || ($w)), 1, 6))" +
-          s"::BIGINT % (${winSize(w)} - 2))"
-      s"""WITH tok AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = ''
-         |         THEN CAST([] AS VARCHAR[]) ELSE $toksSql END AS tk
-         |  FROM documents),
-         |base AS (SELECT doc_id, tk, len(tk) AS n FROM tok),
-         |sp AS (SELECT doc_id, tk, n,
-         |  [w for w in range(0, (n + 19) // 20)
-         |   if ${winSize("w")} >= 3] AS mws FROM base),
-         |inp AS (SELECT doc_id, tk, n, mws,
-         |  list_filter([
-         |    CASE WHEN ${winSize("i//20")} < 3 THEN tk[i+1]
-         |         WHEN i = ${spanStart("i//20")}
-         |           THEN '<extra_id_' || (i//20) || '>'
-         |         WHEN i > ${spanStart("i//20")}
-         |           AND i < ${spanStart("i//20")} + 3 THEN NULL
-         |         ELSE tk[i+1] END
-         |    for i in range(0, n)], x -> x IS NOT NULL) AS itoks
-         |  FROM sp),
-         |t AS (SELECT doc_id, n, len(mws) AS nspans, itoks,
-         |  flatten([['<extra_id_' || w || '>'] ||
-         |           tk[${spanStart("w")}+1 : ${spanStart("w")}+3]
-         |           for w in mws]) ||
-         |    ['<extra_id_' || len(mws) || '>'] AS ttoks
-         |  FROM inp)
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-         |  CAST(nspans AS BIGINT) AS n_spans,
-         |  CAST(len(itoks) AS BIGINT) AS n_input_tokens,
-         |  md5(coalesce(array_to_string(itoks, ' '), '')) AS input_fp,
-         |  md5(array_to_string(ttoks, ' ')) AS target_fp
-         |FROM t ORDER BY doc_id""".stripMargin
-    },
-    // q182 replays the q177 layers (word carried through), reads the
-    // final layer as the segmented vocabulary, and recomputes the
-    // per-language fit ratios from exact BIGINT sums.
-    "q182_bpe_fit" ->
-      s"""WITH ${bpeLayersSql(8, 2L)},
-         |seg AS (SELECT word, len(string_split(seg, '  '))::BIGINT AS n_sym
-         |        FROM s8),
-         |wl AS (SELECT lang, word, count(*)::BIGINT AS freq
-         |  FROM (SELECT lang, unnest($toksSql) AS word FROM documents)
-         |  WHERE word <> '' GROUP BY 1, 2)
-         |SELECT wl.lang, sum(wl.freq)::BIGINT AS n_tokens,
-         |  count(DISTINCT wl.word)::BIGINT AS vocab_words,
-         |  round(sum(wl.freq * s.n_sym)::DOUBLE / sum(wl.freq), 4)
-         |    AS symbols_per_word,
-         |  round(sum(wl.freq * len(wl.word))::DOUBLE /
-         |    sum(wl.freq * s.n_sym), 4) AS chars_per_symbol
-         |FROM wl JOIN seg s USING (word)
-         |GROUP BY wl.lang ORDER BY wl.lang""".stripMargin,
-    // q164 pins the drift metric's actionability contract: calm on an
-    // in-distribution control, loud on the concentrated-drift fixture,
-    // wide separation between the two (ratio AND skew).
-    "q164_codestore_drift" ->
-      """SELECT * FROM (VALUES
-        |  ('drift_control_ratio_calm', CAST(2.0 AS DOUBLE), TRUE),
-        |  ('drift_drifted_ratio_loud', CAST(10.0 AS DOUBLE), TRUE),
-        |  ('drift_nonempty', CAST(1.0 AS DOUBLE), TRUE),
-        |  ('drift_separation', CAST(5.0 AS DOUBLE), TRUE),
-        |  ('drift_skew_separation', CAST(2.0 AS DOUBLE), TRUE))
-        |  AS t(metric, bound, ok)
-        |ORDER BY metric""".stripMargin,
-    // q150 recomputes the whole boilerplate-removal composition from
-    // exact counts: the planted footer, the stride-1 trigram windows
-    // (whole-text window for short docs, shingles' contract), the
-    // exact-count phrase cut (2/5 of the doc count, matching the
-    // query's minCount), covered-position union, and the token-by-token
-    // rebuild (q130's machinery). The MG detection stage must be
-    // invisible here - that is the determinism contract.
-    "q150_strip_boilerplate" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0
-        |         THEN trim(coalesce(text, '') ||
-        |                   ' subscribe to our newsletter now')
-        |         ELSE coalesce(text, '') END AS text
-        |  FROM documents),
-        |t AS (
-        |  SELECT doc_id,
-        |    CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-        |         ELSE string_split_regex(trim(text), '\s+') END AS w
-        |  FROM d),
-        |win AS (
-        |  SELECT doc_id, 0 AS pos, len(w) AS pend,
-        |    array_to_string(w, ' ') AS g
-        |  FROM t WHERE len(w) <= 3
-        |  UNION ALL
-        |  SELECT doc_id, pos, pos + 3 AS pend,
-        |    array_to_string(w[pos + 1 : pos + 3], ' ') AS g
-        |  FROM (SELECT doc_id, unnest(range(0, len(w) - 2)) AS pos, w
-        |        FROM t WHERE len(w) > 3) x),
-        |cnt AS (SELECT g, count(*) AS c FROM win GROUP BY g),
-        |ph AS (SELECT g FROM cnt
-        |       WHERE c >= (SELECT (count(*) * 2) // 5 FROM documents)
-        |         AND g <> ''),
-        |cov AS (SELECT DISTINCT w2.doc_id,
-        |          unnest(range(w2.pos, w2.pend)) AS p
-        |        FROM win w2 JOIN ph USING (g)),
-        |toks AS (SELECT doc_id, unnest(range(0, len(w))) AS p, w
-        |         FROM t WHERE len(w) > 0),
-        |tok2 AS (SELECT doc_id, p, w[p + 1] AS tok FROM toks),
-        |keptt AS (
-        |  SELECT t2.doc_id, t2.p, t2.tok FROM tok2 t2
-        |  LEFT JOIN cov c ON t2.doc_id = c.doc_id AND t2.p = c.p
-        |  WHERE c.p IS NULL),
-        |agg AS (
-        |  SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS text_clean,
-        |    count(*) AS n_kept
-        |  FROM keptt GROUP BY doc_id)
-        |SELECT t.doc_id,
-        |  coalesce(a.text_clean, '') AS text_clean,
-        |  CAST(len(t.w) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM t LEFT JOIN agg a USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-    // q151 recomputes the EXTENDED card from raw definitions: q139's
-    // card columns over the non-eval corpus, the exact-Jaccard near-dup
-    // id set (q50's CTEs), and the stride-window contamination id set
-    // (q122's CTEs), each attributed per source.
-    "q151_datacard_ext" ->
-      s"""WITH q AS (
-         |  SELECT doc_id, source, lang, n_tok, $qualityExprSql AS quality,
-         |    md5($normSql) AS fp
-         |  FROM (${qualityRawSql("doc_id, source, lang, text")}) raw
-         |  WHERE doc_id % 50 != 7),
-         |base AS (
-         |  SELECT source,
-         |    count(*) AS n_docs,
-         |    count(DISTINCT fp)::BIGINT AS n_uniq,
-         |    round(1.0 - count(DISTINCT fp)::DOUBLE / count(*), 4) AS dup_frac,
-         |    sum(n_tok)::BIGINT AS total_tokens,
-         |    round(avg(n_tok), 2) AS avg_tokens,
-         |    count(DISTINCT lang)::BIGINT AS n_langs,
-         |    round(avg(quality), 4) AS avg_quality,
-         |    round(avg(CASE WHEN quality >= 0.8 THEN 1.0 ELSE 0.0 END), 4)
-         |      AS hi_quality_frac
-         |  FROM q GROUP BY source),
-         |tok AS (SELECT doc_id, source, $toksSql AS w FROM documents
-         |        WHERE doc_id % 50 != 7),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok),
-         |pr AS (
-         |  SELECT a.doc_id AS ia, b.doc_id AS ib
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))) >= 0.6),
-         |nd AS (SELECT DISTINCT doc_id FROM (
-         |  SELECT ia AS doc_id FROM pr UNION ALL SELECT ib AS doc_id FROM pr)),
-         |ndc AS (SELECT t.source, count(*) AS ndocs
-         |        FROM nd JOIN tok t USING (doc_id) GROUP BY t.source),
-         |d2 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-         |         ELSE string_split_regex(trim(coalesce(text, '')), '\\s+')
-         |    END AS w
-         |  FROM documents),
-         |twn AS (
-         |  SELECT doc_id, unnest(range(0, len(w) - 3)) AS pos, w
-         |  FROM d2 WHERE len(w) >= 4 AND doc_id % 50 != 7),
-         |es AS (
-         |  SELECT DISTINCT array_to_string(w[pos + 1 : pos + 4], ' ') AS s2
-         |  FROM (SELECT unnest(range(0, len(w) - 3)) AS pos, w
-         |        FROM d2 WHERE len(w) >= 4 AND doc_id % 50 = 7)),
-         |cd AS (SELECT DISTINCT doc_id FROM twn
-         |       WHERE array_to_string(w[pos + 1 : pos + 4], ' ')
-         |             IN (SELECT s2 FROM es)),
-         |cdc AS (SELECT t.source, count(*) AS cdocs
-         |        FROM cd JOIN tok t USING (doc_id) GROUP BY t.source)
-         |SELECT base.*,
-         |  round(coalesce(ndc.ndocs, 0)::DOUBLE / base.n_docs, 4)
-         |    AS near_dup_frac,
-         |  round(coalesce(cdc.cdocs, 0)::DOUBLE / base.n_docs, 4)
-         |    AS contam_frac
-         |FROM base LEFT JOIN ndc USING (source) LEFT JOIN cdc USING (source)
-         |ORDER BY source""".stripMargin,
-    // q152 recomputes the hardened split assignment: q141's content-keyed
-    // CASE, then q122's stride-window contamination between the resulting
-    // split partitions, then the quarantine relabel.
-    "q152_decontaminated_splits" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, text,
-         |    CASE WHEN substr(md5($normSql), 1, 8) < 'cccccccc' THEN 'train'
-         |         WHEN substr(md5($normSql), 1, 8) < 'e6666666' THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM documents),
-         |d AS (
-         |  SELECT doc_id, split,
-         |    CASE WHEN trim(coalesce(text, '')) = '' THEN CAST([] AS VARCHAR[])
-         |         ELSE string_split_regex(trim(coalesce(text, '')), '\\s+')
-         |    END AS w
-         |  FROM base),
-         |tw AS (
-         |  SELECT doc_id, unnest(range(0, len(w) - 3)) AS pos, w
-         |  FROM d WHERE len(w) >= 4 AND split = 'train'),
-         |es AS (
-         |  SELECT DISTINCT array_to_string(w[pos + 1 : pos + 4], ' ') AS s2
-         |  FROM (SELECT unnest(range(0, len(w) - 3)) AS pos, w
-         |        FROM d WHERE len(w) >= 4 AND split != 'train')),
-         |cid AS (SELECT DISTINCT doc_id FROM tw
-         |        WHERE array_to_string(w[pos + 1 : pos + 4], ' ')
-         |              IN (SELECT s2 FROM es))
-         |SELECT b.doc_id,
-         |  CASE WHEN b.split = 'train' AND b.doc_id IN (SELECT doc_id FROM cid)
-         |       THEN 'quarantined' ELSE b.split END AS split
-         |FROM base b ORDER BY b.doc_id""".stripMargin,
-    // q153 recomputes the repeat plan's arithmetic from the token counts:
-    // same double-precision floor/divide on both engines, same full-outer
-    // edge contract (the corpus-less 'xx' stratum surfaces unsatisfiable).
-    "q153_repeat_plan" ->
-      s"""WITH t AS (
-         |  SELECT lang AS stratum,
-         |    CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len($toksSql) END AS n_tok
-         |  FROM documents),
-         |a AS (SELECT stratum, sum(n_tok)::BIGINT AS available_tokens
-         |      FROM t GROUP BY stratum),
-         |wt AS (SELECT * FROM (VALUES ('de', 0.2), ('en', 0.5),
-         |         ('es', 0.15), ('fr', 0.1), ('xx', 0.01), ('zh', 0.04))
-         |         AS v(stratum, w)),
-         |j AS (SELECT coalesce(a.stratum, wt.stratum) AS stratum,
-         |        coalesce(a.available_tokens, 0) AS available_tokens,
-         |        CAST(coalesce(wt.w, 0.0) AS DOUBLE) AS weight
-         |      FROM a FULL OUTER JOIN wt ON a.stratum = wt.stratum),
-         |r AS (SELECT stratum, available_tokens, weight,
-         |        CAST(floor(200000 * weight) AS BIGINT) AS target_tokens,
-         |        CASE WHEN available_tokens > 0
-         |             THEN floor(200000 * weight) / available_tokens
-         |             WHEN floor(200000 * weight) > 0 THEN NULL
-         |             ELSE 0.0 END AS ratio
-         |      FROM j)
-         |SELECT stratum, available_tokens, weight, target_tokens,
-         |  round(ratio, 4) AS epochs,
-         |  CAST(floor(ratio) AS BIGINT) AS full_repeats,
-         |  round(ratio - floor(ratio), 4) AS partial_fraction,
-         |  ratio > 8.0 AS capped,
-         |  (target_tokens > 0 AND available_tokens = 0) AS unsatisfiable
-         |FROM r ORDER BY stratum""".stripMargin,
-    // q154 recomputes the near-dup-safe assignment end to end: exact
-    // pair CTEs (q50), recursive-CTE transitive closure (q86), the
-    // min-id representative per doc (self for singletons), and the
-    // content-keyed CASE over the REPRESENTATIVE's normalized text.
-    "q154_cluster_safe_splits" ->
-      s"""WITH RECURSIVE tok AS (SELECT doc_id, $toksSql AS w FROM documents),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))) >= 0.6),
-         |nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-         |edges AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM pairs
-         |          UNION SELECT id_b AS u, id_a AS v FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |rep AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         |r2 AS (SELECT d.doc_id, coalesce(rep.rep, d.doc_id) AS rep
-         |       FROM documents d LEFT JOIN rep ON d.doc_id = rep.id),
-         |k AS (SELECT r2.doc_id, substr(md5($normSql), 1, 8) AS key
-         |      FROM r2 JOIN documents ON r2.rep = documents.doc_id)
-         |SELECT doc_id,
-         |  CASE WHEN key < 'cccccccc' THEN 'train'
-         |       WHEN key < 'e6666666' THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM k ORDER BY doc_id""".stripMargin,
-    // q155 recomputes the epoch materialization: the plan arithmetic
-    // (q153), the per-stratum floor(frac*2^32)-as-hex threshold
-    // (thresholdHex's exact form), and the 1..reps range explode.
-    "q155_epoch_materialize" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, lang,
-         |    CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |         ELSE len($toksSql) END AS BIGINT) AS n_tok
-         |  FROM documents),
-         |a AS (SELECT lang, sum(n_tok)::BIGINT AS avail FROM t GROUP BY lang),
-         |p AS (SELECT lang,
-         |        CAST(floor(floor(200000 * CASE lang WHEN 'de' THEN 0.2
-         |          WHEN 'en' THEN 0.5 WHEN 'es' THEN 0.15 WHEN 'fr' THEN 0.1
-         |          WHEN 'zh' THEN 0.05 ELSE 0.0 END) / avail) AS BIGINT)
-         |          AS full_repeats,
-         |        round(floor(200000 * CASE lang WHEN 'de' THEN 0.2
-         |          WHEN 'en' THEN 0.5 WHEN 'es' THEN 0.15 WHEN 'fr' THEN 0.1
-         |          WHEN 'zh' THEN 0.05 ELSE 0.0 END) / avail -
-         |          floor(floor(200000 * CASE lang WHEN 'de' THEN 0.2
-         |            WHEN 'en' THEN 0.5 WHEN 'es' THEN 0.15
-         |            WHEN 'fr' THEN 0.1 WHEN 'zh' THEN 0.05 ELSE 0.0 END)
-         |            / avail), 4) AS partial_fraction
-         |      FROM a),
-         |r AS (
-         |  SELECT t.doc_id, t.lang, t.n_tok,
-         |    p.full_repeats + CASE WHEN
-         |      substr(md5(t.doc_id::VARCHAR), 1, 8) <
-         |      CASE WHEN p.partial_fraction >= 1.0 THEN 'g'
-         |        ELSE lower(lpad(to_hex(CAST(floor(p.partial_fraction
-         |          * 4294967296) AS BIGINT)), 8, '0')) END
-         |    THEN 1 ELSE 0 END AS reps
-         |  FROM t JOIN p USING (lang))
-         |SELECT doc_id, lang, n_tok,
-         |  CAST(unnest(range(1, reps + 1)) AS BIGINT) AS repeat_idx
-         |FROM r WHERE reps > 0
-         |ORDER BY doc_id, repeat_idx""".stripMargin,
-    // q156 recomputes the COMPOSED flagship end to end in one CTE chain:
-    // quality gate incl. the A1 repetition keep (q143/q162's CTEs) +
-    // exact dedup, shingle pairs + recursive-CTE
-    // closure + rep-keyed split CASE (q154), the train-split repeat plan
-    // (q153), the clamped hex-threshold materialization (q155), the
-    // per-epoch md5 order key (q140), and the (epoch, shard)-partitioned
-    // running-sum packing (q97).
-    "q156_training_batches" ->
-      s"""WITH RECURSIVE raw AS (${qualityRawSql("doc_id, lang, text")}),
-         |rdoc AS (SELECT doc_id, coalesce(text,'') AS t FROM documents),
-         |${repetitionCtesSql("r", "rdoc")},
-         |qf AS (SELECT doc_id, lang, text FROM raw
-         |       WHERE $qualityExprSql >= 0.6
-         |         AND doc_id IN (SELECT doc_id FROM rfr WHERE keep)),
-         |d AS (SELECT doc_id, lang, text FROM qf
-         |      WHERE doc_id IN (SELECT min(doc_id) FROM qf
-         |                       GROUP BY md5($normSql))),
-         |tok AS (SELECT doc_id, $toksSql AS w FROM d),
-         |sh AS (
-         |  SELECT doc_id, CASE WHEN len(w) <= 3 THEN [array_to_string(w, ' ')]
-         |    ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-         |                        for i in range(1, len(w) - 1)]) END AS s
-         |  FROM tok),
-         |pairs AS MATERIALIZED (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE len(list_intersect(a.s, b.s))::DOUBLE /
-         |        len(list_distinct(list_concat(a.s, b.s))) >= 0.6),
-         |nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
-         |edges AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM pairs
-         |          UNION SELECT id_b AS u, id_a AS v FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT reach.id, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |rep AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
-         |r2 AS (SELECT d.doc_id, coalesce(rep.rep, d.doc_id) AS rep
-         |       FROM d LEFT JOIN rep ON d.doc_id = rep.id),
-         |k AS (SELECT r2.doc_id, substr(md5($normSql), 1, 8) AS key
-         |      FROM r2 JOIN d dd ON r2.rep = dd.doc_id),
-         |tr AS (SELECT d.doc_id, d.lang,
-         |         CAST(CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-         |              ELSE len($toksSql) END AS BIGINT) AS n_tok
-         |       FROM d JOIN k USING (doc_id)
-         |       WHERE k.key < 'cccccccc'),
-         |a AS (SELECT lang, sum(n_tok)::BIGINT AS avail FROM tr GROUP BY lang),
-         |p AS (SELECT lang,
-         |        CAST(floor(floor(150000 * CASE lang WHEN 'de' THEN 0.2
-         |          WHEN 'en' THEN 0.5 WHEN 'es' THEN 0.15 WHEN 'fr' THEN 0.1
-         |          WHEN 'zh' THEN 0.05 ELSE 0.0 END) / avail) AS BIGINT)
-         |          AS full_repeats,
-         |        round(floor(150000 * CASE lang WHEN 'de' THEN 0.2
-         |          WHEN 'en' THEN 0.5 WHEN 'es' THEN 0.15 WHEN 'fr' THEN 0.1
-         |          WHEN 'zh' THEN 0.05 ELSE 0.0 END) / avail -
-         |          floor(floor(150000 * CASE lang WHEN 'de' THEN 0.2
-         |            WHEN 'en' THEN 0.5 WHEN 'es' THEN 0.15
-         |            WHEN 'fr' THEN 0.1 WHEN 'zh' THEN 0.05 ELSE 0.0 END)
-         |            / avail), 4) AS partial_fraction
-         |      FROM a),
-         |m AS (
-         |  SELECT tr.doc_id, tr.lang, tr.n_tok,
-         |    p.full_repeats + CASE WHEN
-         |      substr(md5(tr.doc_id::VARCHAR), 1, 8) <
-         |      CASE WHEN p.partial_fraction >= 1.0 THEN 'g'
-         |        ELSE lower(lpad(to_hex(CAST(floor(p.partial_fraction
-         |          * 4294967296) AS BIGINT)), 8, '0')) END
-         |    THEN 1 ELSE 0 END AS reps
-         |  FROM tr JOIN p USING (lang)),
-         |x AS (SELECT doc_id, lang, n_tok,
-         |        CAST(unnest(range(1, reps + 1)) AS BIGINT) AS repeat_idx
-         |      FROM m WHERE reps > 0),
-         |o AS (SELECT doc_id, lang, n_tok, repeat_idx,
-         |        md5(CAST(repeat_idx AS VARCHAR) || ':' ||
-         |            CAST(doc_id AS VARCHAR)) AS okey,
-         |        CAST(doc_id % 8 AS BIGINT) AS shard
-         |      FROM x),
-         |c AS (SELECT *, sum(n_tok) OVER (PARTITION BY repeat_idx, shard
-         |        ORDER BY okey, doc_id ROWS UNBOUNDED PRECEDING) - n_tok
-         |        AS strt
-         |      FROM o)
-         |SELECT doc_id, lang, n_tok, repeat_idx, okey, shard,
-         |  CAST(floor(strt / 2048.0) AS BIGINT) AS bin,
-         |  CAST(strt % 2048 AS BIGINT) AS bin_offset
-         |FROM c ORDER BY doc_id, repeat_idx""".stripMargin,
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.run).toMap
+
+  def oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracle).toMap
 }

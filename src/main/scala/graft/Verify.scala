@@ -3,6 +3,8 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Both come from the catalog: one [[catalog.QuerySpec]] (Spark body +
+  * oracle SQL) per query.
   *
   * Failure contract: a query that throws leaves NO output dir (any stale
   * dump from a previous run into the same outDir is deleted up front, so
@@ -55,7 +57,7 @@ object Verify {
       }
       finally
         // operators persist reused intermediates; without a per-query
-        // release an 89-query sweep holds every dedup/similarity cache
+        // release a full sweep holds every dedup/similarity cache
         // simultaneously
         operators.OpCache.release()
       }

@@ -40,14 +40,6 @@ object VectorFunctions {
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
 
-  /** Squared Euclidean distance. */
-  def l2DistanceSq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double"); d * d
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
   /** L2-normalized copy of the vector (doubles); zero vector stays zero. */
   def normalize(a: Column): Column = {
     val n = l2Norm(a)

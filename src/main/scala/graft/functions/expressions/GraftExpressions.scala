@@ -567,8 +567,9 @@ object RepetitionStatsExpr {
   val topGramKs: Seq[Int] = Seq(2, 3, 4)
   val dupGramKs: Seq[Int] = Seq(5, 6, 7, 8, 9, 10)
 
-  /** Field order is the published API — `SparkEntry.repetitionFields`,
-    * the q162 oracle, and `gopherRepetitionThresholds` all key on it. */
+  /** Field order is the published API —
+    * `catalog.TextQuality.repetitionFields`, the q162 oracle, and
+    * `gopherRepetitionThresholds` all key on it. */
   val schema: StructType = StructType(
     Seq(StructField("n_lines", IntegerType, nullable = false),
       StructField("dup_line_frac", DoubleType, nullable = false),
@@ -1761,15 +1762,51 @@ object GraftExpressions {
   private def columnBuilt(f: Column => Column)(e: Expression): Expression =
     GraftColumnBridge.eagerExpression(f(GraftColumnBridge.column(e)))
 
-  /** The published-filter-family SQL registrations (Gopher A1 + C4) —
-    * (name, ExpressionInfo class, builder) — as ONE table consumed by
-    * BOTH [[registerAll]] and [[graft.GraftExtensions]], so the
-    * programmatic and extension-built registration routes cannot drift
-    * apart (name, arity, or builder changed on one path only). */
-  private[graft] val curationFunctionBuilders
+  /** Every native SQL function — (name, ExpressionInfo class, builder) —
+    * as ONE table consumed by BOTH [[registerAll]] and
+    * [[graft.GraftExtensions]], so the programmatic and extension-built
+    * registration routes cannot drift apart (a function, arity, or
+    * builder changed on one path only). */
+  private[graft] val functionBuilders
       : Seq[(String, String, Seq[Expression] => Expression)] = {
     val tf = graft.functions.TextFunctions
     Seq(
+      ("cosine_similarity", classOf[CosineSimilarity].getName,
+        exprs => { checkArity("cosine_similarity", exprs, 2, 2)
+          CosineSimilarity(exprs(0), exprs(1)) }),
+      ("rolling_hash", classOf[RollingHash].getName,
+        exprs => { checkArity("rolling_hash", exprs, 1, 1)
+          RollingHash(exprs.head) }),
+      ("simhash64", classOf[SimHash64].getName,
+        exprs => { checkArity("simhash64", exprs, 1, 1)
+          SimHash64(exprs.head) }),
+      ("minhash_signature", classOf[MinHashSignature].getName,
+        exprs => { checkArity("minhash_signature", exprs, 2, 2)
+          MinHashSignature(exprs(0),
+            constInt(exprs(1), "minhash_signature", "num_hashes")) }),
+      ("normalize_text", classOf[NormalizeText].getName,
+        exprs => { checkArity("normalize_text", exprs, 1, 1)
+          NormalizeText(exprs.head) }),
+      ("hashed_ngram_score", classOf[HashedNgramScore].getName,
+        exprs => { checkArity("hashed_ngram_score", exprs, 1, 1)
+          HashedNgramScore(exprs.head) }),
+      ("ngram_buckets", classOf[NgramBuckets].getName,
+        exprs => { checkArity("ngram_buckets", exprs, 2, 2)
+          NgramBuckets(exprs.head,
+            constInt(exprs(1), "ngram_buckets", "n_buckets")) }),
+      ("ngram_bucket_weight_sum", classOf[NgramBucketWeightSum].getName,
+        exprs => { checkArity("ngram_bucket_weight_sum", exprs, 2, 2)
+          NgramBucketWeightSum(exprs(0), exprs(1)) }),
+      ("hyperplane_lsh_key", classOf[HyperplaneLshKey].getName,
+        exprs => { checkArity("hyperplane_lsh_key", exprs, 2, 3)
+          HyperplaneLshKey(exprs(0),
+            constInt(exprs(1), "hyperplane_lsh_key", "n_bits"),
+            // optional 3rd arg; default seed mirrors the Scala API
+            if (exprs.length > 2)
+              constInt(exprs(2), "hyperplane_lsh_key", "seed")
+            else 42) }),
+      // the published filter families (Gopher A1 + C4): native
+      // repetition_stats plus the composed keep/stats column functions
       ("repetition_stats", classOf[RepetitionStatsExpr].getName,
         exprs => { checkArity("repetition_stats", exprs, 1, 1)
           RepetitionStatsExpr(exprs.head) }),
@@ -1801,42 +1838,8 @@ object GraftExpressions {
   /** Expose as SQL functions on a session. */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    curationFunctionBuilders.foreach { case (name, _, builder) =>
+    functionBuilders.foreach { case (name, _, builder) =>
       registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    registry.createOrReplaceTempFunction("cosine_similarity",
-      exprs => { checkArity("cosine_similarity", exprs, 2, 2)
-        CosineSimilarity(exprs(0), exprs(1)) }, "scala_udf")
-    registry.createOrReplaceTempFunction("rolling_hash",
-      exprs => { checkArity("rolling_hash", exprs, 1, 1)
-        RollingHash(exprs.head) }, "scala_udf")
-    registry.createOrReplaceTempFunction("simhash64",
-      exprs => { checkArity("simhash64", exprs, 1, 1)
-        SimHash64(exprs.head) }, "scala_udf")
-    registry.createOrReplaceTempFunction("minhash_signature",
-      exprs => { checkArity("minhash_signature", exprs, 2, 2)
-        MinHashSignature(exprs(0),
-          constInt(exprs(1), "minhash_signature", "num_hashes")) }, "scala_udf")
-    registry.createOrReplaceTempFunction("normalize_text",
-      exprs => { checkArity("normalize_text", exprs, 1, 1)
-        NormalizeText(exprs.head) }, "scala_udf")
-    registry.createOrReplaceTempFunction("hashed_ngram_score",
-      exprs => { checkArity("hashed_ngram_score", exprs, 1, 1)
-        HashedNgramScore(exprs.head) }, "scala_udf")
-    registry.createOrReplaceTempFunction("ngram_buckets",
-      exprs => { checkArity("ngram_buckets", exprs, 2, 2)
-        NgramBuckets(exprs.head,
-          constInt(exprs(1), "ngram_buckets", "n_buckets")) }, "scala_udf")
-    registry.createOrReplaceTempFunction("ngram_bucket_weight_sum",
-      exprs => { checkArity("ngram_bucket_weight_sum", exprs, 2, 2)
-        NgramBucketWeightSum(exprs(0), exprs(1)) }, "scala_udf")
-    registry.createOrReplaceTempFunction("hyperplane_lsh_key",
-      exprs => { checkArity("hyperplane_lsh_key", exprs, 2, 3)
-        HyperplaneLshKey(exprs(0),
-          constInt(exprs(1), "hyperplane_lsh_key", "n_bits"),
-          // optional 3rd arg; default seed mirrors the Scala API
-          if (exprs.length > 2)
-            constInt(exprs(2), "hyperplane_lsh_key", "seed")
-          else 42) }, "scala_udf")
   }
 }

@@ -502,16 +502,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Rows per duplicate-cluster of identical normalized text (cluster size
-    * ≥ minSize), for corpus-duplication profiling. */
-  def exactClusters(df: DataFrame, textCol: String, idCol: String,
-                    minSize: Int = 2): DataFrame =
-    df.withColumn("__graft_dedup_fp", fingerprint(col(textCol)))
-      .groupBy(col("__graft_dedup_fp"))
-      .agg(count(lit(1)).as("cluster_size"), min(col(idCol)).as("min_id"))
-      .filter(col("cluster_size") >= minSize)
-      .select(col("min_id"), col("cluster_size"))
-
   /**
    * MinHash signature from a shingle-hash array column: all `numHashes`
    * (a*x+b mod p) lane minima in ONE codegen'd pass over the array — the

@@ -61,10 +61,4 @@ private[graft] object Par {
       r(3).asInstanceOf[D])
   }
 
-  def par5[A, B, C, D, E](a: => A, b: => B, c: => C, d: => D, e: => E)
-      : (A, B, C, D, E) = {
-    val r = all(Seq(() => a, () => b, () => c, () => d, () => e))
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
-      r(3).asInstanceOf[D], r(4).asInstanceOf[E])
-  }
 }

@@ -35,14 +35,6 @@ object StreamingFlows {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Session windows keyed by `keyCol` with `gap` inactivity timeout. */
-  def sessionCounts(events: DataFrame, tsCol: String, keyCol: String,
-                    gap: String, watermark: String = "30 seconds"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-
   /** Drain-everything-then-stop execution (≙ `die_when_empty`):
     * starts the sink with Trigger.AvailableNow and blocks to completion. */
   def runUntilDrained[T](writer: DataStreamWriter[T]): Unit = {

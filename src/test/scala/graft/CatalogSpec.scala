@@ -1,0 +1,65 @@
+package graft
+
+import org.apache.spark.sql.functions.when
+import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType}
+
+import graft.catalog.Gate
+
+/** The query catalog is one list of specs, and its verdict kit can fail. */
+class CatalogSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val names = SparkEntry.specs.map(_.name)
+
+  test("catalog holds 191 uniquely named specs, each with an oracle") {
+    assert(names.size == 191)
+    assert(names.distinct.size == names.size,
+      s"duplicates: ${names.diff(names.distinct)}")
+    val bad = names.filterNot(_.matches("q\\d+_[a-z0-9_]+"))
+    assert(bad.isEmpty, s"malformed names: $bad")
+    val noOracle = SparkEntry.specs.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(noOracle.isEmpty, s"empty oracles: $noOracle")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+  }
+
+  test("every Bench headline query resolves to a spec") {
+    val missing = Bench.headline.filterNot(names.toSet)
+    assert(missing.isEmpty, s"headline names without a spec: $missing")
+  }
+
+  test("Gate.parity and Gate.verdict fail on a one-row difference") {
+    val a = Seq((1L, 0.5), (2L, 0.25), (3L, 0.125)).toDF("id", "score")
+    def verdict(b: org.apache.spark.sql.DataFrame) =
+      Gate.verdict(Gate.parity(a, b, Seq("id"), Seq("score")))(
+        ("scores_equal", 0.0, $"bad" === 0),
+        ("nonempty", 1.0, $"n" >= 1))
+    val same = verdict(a)
+    assert(same.schema.map(_.dataType) == Seq(StringType, DoubleType,
+      BooleanType))
+    assert(same.as[(String, Double, Boolean)].collect().toSeq ==
+      Seq(("nonempty", 1.0, true), ("scores_equal", 0.0, true)))
+    // one missing row, one changed value: each is a bad row
+    val dropped = a.filter($"id" =!= 3L)
+    assert(Gate.parity(a, dropped, Seq("id")).as[(Long, Long)].head() ==
+      (1L, 3L))
+    val changed = a.withColumn("score",
+      when($"id" === 2L, $"score" * 2).otherwise($"score"))
+    assert(Gate.parity(a, changed, Seq("id"), Seq("score"))
+      .as[(Long, Long)].head() == (1L, 3L))
+    assert(verdict(changed).as[(String, Double, Boolean)].collect().toSeq ==
+      Seq(("nonempty", 1.0, true), ("scores_equal", 0.0, false)))
+    // a tolerance absorbs differences within it, not beyond
+    val nudged = a.withColumn("score", $"score" + 1e-12)
+    assert(Gate.parity(a, nudged, Seq("id"), Seq("score"), tol = 1e-9)
+      .as[(Long, Long)].head() == (0L, 3L))
+    assert(Gate.parity(a, nudged, Seq("id"), Seq("score"))
+      .as[(Long, Long)].head() == (3L, 3L))
+  }
+
+  test("Gate.verdict from driver booleans sorts by metric") {
+    val rows = Gate.verdict(spark)(("b_metric", 2.0, false), ("a_metric", 1.0,
+      true)).as[(String, Double, Boolean)].collect().toSeq
+    assert(rows == Seq(("a_metric", 1.0, true), ("b_metric", 2.0, false)))
+  }
+}

@@ -231,6 +231,20 @@ class ExpressionsSpec extends SparkSpec {
     assert(registry.functionExists(FunctionIdentifier("gopher_quality_keep")))
     assert(registry.functionExists(FunctionIdentifier("c4_stats")))
     assert(registry.functionExists(FunctionIdentifier("c4_keep")))
+    // both registration routes expose the same graft function set: a
+    // fresh session's registry before and after registerAll brackets it
+    def names(r: org.apache.spark.sql.catalyst.analysis.FunctionRegistry) =
+      r.listFunction().map(_.funcName).toSet
+    val before = names(spark.newSession().sessionState.functionRegistry)
+    val fresh = spark.newSession()
+    GraftExpressions.registerAll(fresh)
+    val viaRegisterAll = names(fresh.sessionState.functionRegistry) -- before
+    val viaExtension = names(registry) --
+      names(org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin)
+    assert(viaRegisterAll.contains("normalize_text"))
+    assert(viaExtension == viaRegisterAll,
+      s"extension-only: ${viaExtension -- viaRegisterAll}, " +
+        s"registerAll-only: ${viaRegisterAll -- viaExtension}")
   }
 
   test("C4 filter family is callable through the SQL surface and agrees " +

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two bench_full JSON records (per-query min/median spread).
 
-Usage: bench_compare.py OLD.json NEW.json [--key min|median]
+Usage: bench_compare.py OLD.json NEW.json [--key min|median | --key=min|median]
 
 OLD/NEW accept either the compact driver record (queries = scalar
 seconds) or the full record (spread = {min, median, max} per query).
@@ -23,11 +23,15 @@ def load(path, key):
 
 
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    key = "min"
-    for a in sys.argv[1:]:
-        if a.startswith("--key"):
+    args, key = [], "min"
+    it = iter(sys.argv[1:])
+    for a in it:
+        if a == "--key":
+            key = next(it, key)
+        elif a.startswith("--key="):
             key = a.split("=", 1)[1]
+        else:
+            args.append(a)
     old, new = load(args[0], key), load(args[1], key)
     shared = sorted(set(old) & set(new))
     rows = [(q, old[q], new[q], new[q] / old[q] if old[q] > 0 else float("inf"))

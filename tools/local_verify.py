@@ -4,6 +4,10 @@ parquet dumped by graft.Verify, run the corresponding oracle SQL in DuckDB
 over the same fixture tables and compare values exactly (columns sorted by
 name, rows compared in order and as multisets).
 
+When the dump carries Verify's `_report.json`, only the queries it lists
+as swept are checked, so a restricted `graft.Verify ... <query>` dump
+exits 0 when those queries pass.
+
 Usage: python3 tools/local_verify.py <sfDir> <outDir> [query ...]
 """
 import json, sys, glob, os
@@ -19,6 +23,8 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+report = f"{outdir}/_report.json"
+swept = set(json.load(open(report))) if os.path.exists(report) else set(oracle)
 
 def norm(v):
     if isinstance(v, float):
@@ -33,7 +39,7 @@ def norm(v):
 
 fails = 0
 for name in sorted(oracle):
-    if only and name not in only:
+    if name not in swept or (only and name not in only):
         continue
     res_dir = f"{outdir}/{name}"
     files = glob.glob(f"{res_dir}/*.parquet")
@@ -57,8 +63,8 @@ for name in sorted(oracle):
         print(f"FAIL {name}: rows {len(got)} vs {len(exp)}")
         fails += 1
         continue
-    g = got[gcols].applymap(norm)
-    e = exp[ecols].applymap(norm)
+    g = got[gcols].map(norm)
+    e = exp[ecols].map(norm)
     # order-sensitive first; fall back to multiset compare
     if g.values.tolist() == e.values.tolist():
         print(f"PASS {name} ({len(got)} rows)")
