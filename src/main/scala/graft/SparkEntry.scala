@@ -21,7 +21,7 @@ object SparkEntry {
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): the star-join
     * revenue rollup — scan, broadcast dims, hash agg, sort in one plan. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q05_star_join")(spark, "/root/testdata/sf0.001")
+    Relational.starJoin.run(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     specs.map(q => q.name -> q.run).toMap

@@ -309,7 +309,7 @@ object Curation extends Family {
     * q95/q186/q92); what this query gates is the COMPOSITION,
     * oracle-checked as the same CTE chain. Scale shape: both A1 gates
     * are pure maps over
-    * the scan (no shuffle — Probe `repfilter` prices the pair at
+    * the scan (no shuffle — SURVEY §6 prices the pair at
     * 2.95 + 1.80 s per 500k docs), the quality window shuffles once
     * per language, dedup shuffles (fingerprint, id) pairs,
     * decontamination ships only (id, gram) pairs semi-joined against

@@ -79,10 +79,7 @@ object Deduplication extends Family {
     val exact = Dedup.jaccardSelfJoin(docs, "text", "doc_id",
         shingleK = 3, threshold = 0.9)
       .select(col("id_a"), col("id_b"))
-    val recall = exact.join(sim.withColumn("hit", lit(1)),
-        Seq("id_a", "id_b"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("recall"))
+    val recall = Gate.recall(exact, sim, Seq("id_a", "id_b"))
     val simCount = sim.agg(count(lit(1)).as("n"))
     Gate.verdict(recall.crossJoin(simCount))(
       ("simhash_pairs_bounded", 200.0, col("n") >= 1L && col("n") <= 200L),
@@ -374,15 +371,13 @@ object Deduplication extends Family {
       .filter(!col("keep")).select(col("id")).persist())
     val exactDropped = operators.OpCache.track(exactResolved
       .filter(!col("keep")).select(col("id")).persist())
-    val recall = exactDropped
-      .join(semDropped.withColumn("hit", lit(1)), Seq("id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("v"))
+    val recall = Gate.recall(exactDropped, semDropped, Seq("id"))
     val spurious = semDropped.join(exactDropped, Seq("id"), "left_anti")
       .agg(count(lit(1)).as("n"))
     Gate.verdict(recall.crossJoin(spurious))(
       // empty exact-dup set would make recall NULL; surface false
-      ("semdedup_recall_of_exact", 0.5, coalesce(col("v") >= 0.5, lit(false))),
+      ("semdedup_recall_of_exact", 0.5,
+        coalesce(col("recall") >= 0.5, lit(false))),
       ("semdedup_spurious_drops", 0.0, col("n") === 0))
   } {
     // q108 is an accuracy GATE (q33/q60 pattern): Spark verifies SemDeDup

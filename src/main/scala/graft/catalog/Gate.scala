@@ -32,6 +32,16 @@ object Gate {
           count(lit(1)).as("n")))
   }
 
+  /** Recall of `approx` against `exact`: the share of `exact` rows whose
+    * `keys` appear in `approx`. Returns the lazy one-row `recall` frame;
+    * an empty `exact` gives NULL, so a verdict wraps its check in
+    * `coalesce(..., lit(false))`. */
+  def recall(exact: DataFrame, approx: DataFrame, keys: Seq[String]): DataFrame =
+    exact.join(approx.select(keys.map(col) :+ lit(1).as("__hit"): _*),
+        keys, "left_outer")
+      .agg((sum(coalesce(col("__hit"), lit(0))).cast("double") / count(lit(1)))
+        .as("recall"))
+
   /** Verdict rows whose `ok` columns are evaluated over the one-row frame
     * `from` (a [[parity]] result, an aggregate); a driver-side boolean
     * enters as `lit(b)`. */

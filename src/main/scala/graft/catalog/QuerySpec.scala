@@ -22,13 +22,17 @@ final case class QuerySpec(
 /** A family of catalog queries. Each query is declared once, as
   * `query(name) { (s, dir) => spark body } { oracle SQL }`, and registered
   * in declaration order — the catalog's analogue of stepist's `@app.step`
-  * registry. Values an oracle reads must be defined above the query. */
+  * registry; `query` returns the spec for callers that need one by value.
+  * Values an oracle reads must be defined above the query. */
 abstract class Family {
   private val registered = mutable.ArrayBuffer.empty[QuerySpec]
 
   final def specs: Seq[QuerySpec] = registered.toSeq
 
   protected final def query(name: String)(
-      run: (SparkSession, String) => DataFrame)(oracle: String): Unit =
-    registered += QuerySpec(name, run, oracle)
+      run: (SparkSession, String) => DataFrame)(oracle: String): QuerySpec = {
+    val spec = QuerySpec(name, run, oracle)
+    registered += spec
+    spec
+  }
 }

@@ -95,7 +95,8 @@ object Relational extends Family {
       |GROUP BY p_brand ORDER BY p_brand""".stripMargin
   }
 
-  query("q05_star_join") { (s, dir) =>
+  /** The flagship query that [[graft.SparkEntry.entry]] runs. */
+  val starJoin: QuerySpec = query("q05_star_join") { (s, dir) =>
     val l = t(s, dir, "lineitem")
     val o = t(s, dir, "orders")
     val c = t(s, dir, "customer")

@@ -117,10 +117,8 @@ object Retrieval extends Family {
     val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id", k = 5)
       .select(col("query_id"), col("corpus_id"))
     val approx = Similarity.lshTopK(e, queries, "embedding", "vec_id", k = 5, nBits = 8)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    Gate.verdict(exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-        .agg((sum(coalesce(col("hit"), lit(0))).cast("double") /
-          count(lit(1))).as("recall")))(
+      .select(col("query_id"), col("corpus_id"))
+    Gate.verdict(Gate.recall(exact, approx, Seq("query_id", "corpus_id")))(
       // empty exact set would make recall NULL; surface false, not NULL
       ("lsh_recall_at_5", 0.05, coalesce(col("recall") >= 0.05, lit(false))))
   } {
@@ -144,10 +142,8 @@ object Retrieval extends Family {
       .select(col("query_id"), col("corpus_id"))
     val approx = Similarity.ivfTopK(e, queries, centroids, "embedding",
         "vec_id", k = 5, nProbe = 3)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    Gate.verdict(exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-        .agg((sum(coalesce(col("hit"), lit(0))).cast("double") /
-          count(lit(1))).as("recall")))(
+      .select(col("query_id"), col("corpus_id"))
+    Gate.verdict(Gate.recall(exact, approx, Seq("query_id", "corpus_id")))(
       // empty exact set would make recall NULL; surface false, not NULL
       ("ivf_recall_at_5", 0.3, coalesce(col("recall") >= 0.3, lit(false))))
   } {
@@ -296,10 +292,8 @@ object Retrieval extends Family {
         "embedding", "vec_id", m, subDim)
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    val rc = exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("recall"))
+      .select(col("query_id"), col("corpus_id"))
+    val rc = Gate.recall(exact, approx, Seq("query_id", "corpus_id"))
     Gate.verdict(rec.crossJoin(rc))(
       ("pq_reconstruction_mean_cosine", 0.7,
         coalesce(col("cos") >= 0.7, lit(false))),
@@ -331,11 +325,10 @@ object Retrieval extends Family {
       .select(col("query_id"), col("corpus_id"))
     val approx = operators.Quantize.ivfPqTopK(e, queries, cents, cb,
         "embedding", "vec_id", m, subDim, k = 10, nProbe = 3)
-      .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-    Gate.verdict(exact.join(approx, Seq("query_id", "corpus_id"), "left_outer")
-        .agg((sum(coalesce(col("hit"), lit(0))).cast("double") /
-          count(lit(1))).as("v")))(
-      ("ivfpq_recall_at_10", 0.15, coalesce(col("v") >= 0.15, lit(false))))
+      .select(col("query_id"), col("corpus_id"))
+    Gate.verdict(Gate.recall(exact, approx, Seq("query_id", "corpus_id")))(
+      ("ivfpq_recall_at_10", 0.15,
+        coalesce(col("recall") >= 0.15, lit(false))))
   } {
     """SELECT * FROM (VALUES
       |  ('ivfpq_recall_at_10', CAST(0.15 AS DOUBLE), TRUE))
@@ -400,12 +393,8 @@ object Retrieval extends Family {
     val exact = Similarity.bruteForceTopK(e, queries, "embedding", "vec_id",
         k = 10)
       .select(col("query_id"), col("corpus_id"))
-    def recallOf(approx: DataFrame) = exact
-      .join(approx.select(col("query_id"), col("corpus_id"),
-          lit(1).as("hit")),
-        Seq("query_id", "corpus_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1)))
-        .as("v"))
+    def recallOf(approx: DataFrame) =
+      Gate.recall(exact, approx, Seq("query_id", "corpus_id"))
     val plain = operators.Quantize.ivfPqTopK(e, queries, cents, cb,
       "embedding", "vec_id", m, subDim, k = 10, nProbe = 3)
     val rerank = operators.Quantize.ivfPqRerank(e, queries, cents, cb,
@@ -416,10 +405,11 @@ object Retrieval extends Family {
     // bound 0.4, measured (verify-skill protocol): rerank recall 0.54 at
     // sf0.001, 0.46 at sf0.01 — vs plain ADC 0.34 / 0.32 (+~40%
     // relative, the exact-re-rank lift at shortlist = 50)
-    Gate.verdict(rr.crossJoin(rp.withColumnRenamed("v", "vp")))(
+    Gate.verdict(rr.crossJoin(rp.withColumnRenamed("recall", "recall_plain")))(
       ("rerank_recall_ge_plain", 0.0,
-        coalesce(col("v") >= col("vp"), lit(false))),
-      ("rerank_recall_at_10", 0.4, coalesce(col("v") >= 0.4, lit(false))))
+        coalesce(col("recall") >= col("recall_plain"), lit(false))),
+      ("rerank_recall_at_10", 0.4,
+        coalesce(col("recall") >= 0.4, lit(false))))
   } {
     // q133 is an accuracy GATE (q113's production companion): the exact
     // re-rank must dominate the plain ADC list and clear the pinned

@@ -935,7 +935,7 @@ object Stores extends Family {
     * — the "WHEN to retrain" diagnostic q160's retrain leg was missing):
     * an in-distribution control batch must read err_ratio ≈ 1 with
     * bounded fill skew, and a concentrated new-domain batch (the
-    * Probe-`retrain` drift shape whose stale recall@10 measured 0.004 vs
+    * SURVEY §6 drift shape whose stale recall@10 measured 0.004 vs
     * 0.328 retrained) must read err_ratio and fill_skew FAR above the
     * control — the separation that makes the metric an actionable
     * retrain trigger rather than a number. */
@@ -954,7 +954,7 @@ object Stores extends Family {
     val control = e.filter(pmod(col("vec_id"), lit(7)) === 3)
     // drift: a tight NEW domain the stored models never saw (the
     // realistic shape — a fresh data source arriving; same fixture
-    // family as graft.Probe retrain/drift)
+    // family as the SURVEY §6 retrain/drift measurements)
     val drifted = e.select(col("vec_id"),
       transform(sequence(lit(1), lit(64)),
         i => (sin(lit(7) * i) + sin(col("vec_id") * i) * lit(0.2))

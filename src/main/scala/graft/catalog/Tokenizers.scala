@@ -211,7 +211,7 @@ object Tokenizers extends Family {
     * same counts, argmaxes, tie-breaks, and early stop. What the path
     * buys at 32k merges (and the native [[operators.Tokenize.bpeEncode]]
     * apply that replaces 32k chained literal replaces) is priced by
-    * `graft.Probe bpelocal`; TokenizeSpec pins local≡distributed parity
+    * SURVEY §6; TokenizeSpec pins local≡distributed parity
     * across seeds, the topV cap semantics, and encode equivalence. */
   query("q189_bpe_local") { (s, dir) =>
     operators.Tokenize.bpeMergesLocal(parallelize(t(s, dir, "documents")),

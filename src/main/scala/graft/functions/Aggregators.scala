@@ -123,8 +123,7 @@ object Aggregators {
    * full map allocation per item on the hot reduce path). The kryo
    * buffer encoder matters only at partial→final boundaries and spills —
    * exactly where a summary should pay its serialization, once per
-   * partition rather than per row. Measured in `graft.Probe mg`
-   * (SURVEY §6).
+   * partition rather than per row. Measured in SURVEY §6.
    */
   final case class MisraGries(capacity: Int)
       extends Aggregator[String, scala.collection.mutable.HashMap[String, Long],

@@ -246,7 +246,7 @@ object TextFunctions {
    * shape when the per-gram counts are themselves wanted downstream.
    * This is the FILTER face: the paper's character-fraction units and
    * line rules at its published thresholds, computed entirely inside the
-   * scan. MEASURED (`graft.Probe repfilter`, 50k/500k docs, local[32]):
+   * scan. MEASURED (SURVEY §6, 50k/500k docs, local[32]):
    * all 13 fractions in 3.4 s at 500k with ZERO exchange, vs 25.3 s and
    * 551 MiB of (id, gram) shuffle (~1.1 KB/doc ⇒ tens of TB of exchange
    * at a 100 TB corpus) for the single-gram profile — 7.5× the wall AND
@@ -426,7 +426,7 @@ object TextFunctions {
     * gate at fixture-appropriate [[GopherQualityBounds]] instead (q96
     * does, q166 oracle-gates the parameterized form); q165 gates the
     * published defaults on decorated fixtures that exercise every bound
-    * in both directions. MEASURED (`graft.Probe repfilter`, 50k/500k):
+    * in both directions. MEASURED (SURVEY §6, 50k/500k):
     * 1.27 → 1.80 s across the decade, zero shuffle — scan-dominated,
     * cheaper than the native repetition pass riding beside it, so the
     * interpreted-HOF formulation stays (no q162-style tax at this

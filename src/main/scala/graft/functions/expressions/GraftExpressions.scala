@@ -1133,7 +1133,7 @@ final class CentroidSet(val ids: Array[Long],
  * — but a struct-with-array aggregation buffer is not hash-aggregable,
  * so Catalyst planned a SortAggregate that SORTED the corpus×k joined
  * stream per task. Invisible at fixture scale; at 500k vectors × 1953
- * cells (the `Probe semdecon` decade) the ~1B-row sort spilled the disk
+ * cells (the SURVEY §6 decade) the ~1B-row sort spilled the disk
  * to ENOSPC. Centroids are a plan-time artifact, so assignment is a
  * per-row expression, not a join: zero shuffle, zero sort, the corpus
  * never moves. Cosine accumulation mirrors [[CosineSimilarity.compute]]
@@ -1325,7 +1325,7 @@ object DeflateRatio {
  * hash of the trailing `window` code points has its low `maskBits` bits
  * zero. O(1) per position — no substring, no hex, no per-position
  * allocation — where the md5-window form pays ~40 µs/position in
- * expression overhead (measured, `graft.Probe cdc`). The CUT RULE
+ * expression overhead (measured, SURVEY §6). The CUT RULE
  * differs from the md5 form by design (a different hash family), so this
  * face is gated on the CDC invariants (resync after insertion, length
  * reconstruction, determinism — DedupSpec) rather than the DuckDB

@@ -33,7 +33,6 @@ object Signals {
 
   def addListener(l: FlowListener): Unit = listeners.add(l)
   def removeListener(l: FlowListener): Unit = listeners.remove(l)
-  def clearListeners(): Unit = listeners.clear()
 
   // a faulty observer must never abort the flow it observes (nor starve
   // the listeners queued behind it) — log and continue

@@ -229,23 +229,17 @@ object Curate {
    * representatives' fingerprints, keys are 8-hex strings), and
    * un-clustered documents — the overwhelming majority — take their own
    * fingerprint AT THE SCAN with no join at all. The label frame is
-   * BROADCAST by default (it is resolveClusters-materialized, so its
-   * stats are opaque to the planner and AQE can only convert the join
-   * AFTER both exchanges ran — an explicit hint is what actually keeps
-   * corpus text out of the wire; PlanSpec-gated). Set
-   * `broadcastLabels = false` for an adversarially duplicate-heavy
-   * corpus whose clustered fraction outgrows executor memory — the join
-   * then degrades to one id-keyed corpus shuffle (the broadcast-off
-   * cost `graft.Probe splits` prices; bucket the corpus by id to make
-   * even that exchange-free). The first shape (a corpus-sized
-   * fingerprint frame joined on the cluster id) forced a full-corpus
-   * text shuffle that NO setting could remove — measured 370 MiB at
-   * 500k docs, SURVEY §6.
+   * always BROADCAST (it is resolveClusters-materialized, so its stats
+   * are opaque to the planner and AQE can only convert the join AFTER
+   * both exchanges ran — an explicit hint is what actually keeps corpus
+   * text out of the wire; PlanSpec-gated). The first shape (a
+   * corpus-sized fingerprint frame joined on the cluster id) forced a
+   * full-corpus text shuffle that NO setting could remove — measured
+   * 370 MiB at 500k docs, SURVEY §6.
    */
   def clusterSafeSplits(df: DataFrame, textCol: String, idCol: String,
                         pairs: DataFrame,
-                        splits: Seq[(String, Double)],
-                        broadcastLabels: Boolean = true): DataFrame = {
+                        splits: Seq[(String, Double)]): DataFrame = {
     val ownKey = substring(
       graft.functions.TextFunctions.fingerprint(col(textCol)), 1, 8)
     val reps = graft.operators.Dedup.resolveClusters(pairs)
@@ -254,8 +248,7 @@ object Curate {
     // rep-id frame shares labels' opaque-stats problem — hint it too
     val repIds = reps.select(col("cluster_id").as(idCol)).distinct()
     val repKey = df
-      .join(if (broadcastLabels) broadcast(repIds) else repIds,
-        Seq(idCol), "left_semi")
+      .join(broadcast(repIds), Seq(idCol), "left_semi")
       .select(col(idCol).as("__graft_rep_id"),
         ownKey.as("__graft_rep_key"))
     // (id, key) for CLUSTERED docs only (|clustered-docs| rows).
@@ -269,8 +262,7 @@ object Curate {
       .join(repKey, col("cluster_id") === col("__graft_rep_id"), "left")
       .select(col(idCol), coalesce(col("__graft_rep_key"),
         sampleKey(col("cluster_id"))).as("__graft_key"))
-    df.join(if (broadcastLabels) broadcast(labels) else labels,
-        Seq(idCol), "left")
+    df.join(broadcast(labels), Seq(idCol), "left")
       .withColumn("split",
         splitLabel(coalesce(col("__graft_key"), ownKey), splits))
       .drop("__graft_key")
@@ -872,7 +864,7 @@ object Curate {
    * k. (The first cut re-materialized the frame per round through an
    * RDD round-trip — the known Tungsten-deserialization tax — and
    * measured 44 s for k=8 at 50k rows; this form is the same algorithm
-   * priced at scan speed, `graft.Probe kcenter`.) k rounds = k scans —
+   * priced at scan speed, SURVEY §6.) k rounds = k scans —
    * the algorithm is inherently sequential (each pick depends on all
    * prior picks); at 100 TB pick batches of b per round (the standard
    * batched-greedy relaxation) to amortize scans.

@@ -576,10 +576,8 @@ object Dedup {
   }
 
   /** The blocking stage of [[minhashLsh]]: (persisted signatures as
-    * (id, sig), deduped candidate pairs from the band-bucket self-join).
-    * Exposed `private[graft]` so the scale probe counts exactly the
-    * candidate set the operator verifies — no duplicated logic to drift. */
-  private[graft] def minhashCandidates(
+    * (id, sig), deduped candidate pairs from the band-bucket self-join). */
+  private def minhashCandidates(
       df: DataFrame, textCol: String, idCol: String, shingleK: Int,
       numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -875,18 +873,9 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** The blocking stage of [[jaccardSelfJoin]]: (persisted shingle sets as
-    * (id, sh, len), candidate pairs surviving the prefix + position +
-    * length filters, pre-verify). Exposed `private[graft]` so the scale
-    * probe counts exactly the candidate set the operator verifies. */
-  private[graft] def jaccardCandidates(
-      df: DataFrame, textCol: String, idCol: String, shingleK: Int,
-      threshold: Double): (DataFrame, DataFrame) = {
-    val sets = shingleSets(df, textCol, idCol, shingleK)
-    (sets, jaccardCandidatesOnSets(sets, threshold))
-  }
-
-  /** The blocking stage over a prebuilt [[shingleSets]] frame. */
+  /** The blocking stage of [[jaccardSelfJoin]] over a prebuilt
+    * [[shingleSets]] frame: candidate pairs surviving the prefix +
+    * position + length filters, pre-verify. */
   private def jaccardCandidatesOnSets(
       sets: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
@@ -1645,7 +1634,7 @@ object Dedup {
       // ([[graft.functions.expressions.CdcChunksExpr]] — a different cut
       // family than the md5 windows, invariant-gated rather than
       // oracle-replayed; measured 6.8-7.5× over the md5 face across the
-      // 50k/500k decade, `graft.Probe cdc` — the residual cost is the
+      // 50k/500k decade, SURVEY §6 — the residual cost is the
       // per-CHUNK fingerprint digest both faces share)
       val c = graft.functions.expressions.GraftExpressions.cdcChunks(
         concat_ws(" ", tokens(col(textCol))), window, maskBits)

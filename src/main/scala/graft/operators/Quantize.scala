@@ -673,7 +673,7 @@ object Quantize {
    * inside its own assigned cell. Total per-ingest I/O is therefore
    * O(assigned cells), execution-gated in QuantizeSpec (every
    * NON-assigned cell's files are corrupted before an ingest, which must
-   * still succeed) and priced by `graft.Probe csingest`. The one case
+   * still succeed) and priced in SURVEY §6. The one case
    * this contract excludes: re-ingesting an id with a DIFFERENT vector
    * may assign to a different cell, escape the check, and store the id
    * twice — id→vector bindings must be stable across ingests (a changed
@@ -1021,9 +1021,9 @@ object Quantize {
    * and is identical to a store rebuilt from the remaining corpus
    * (QuantizeSpec-gated), and [[prunedCodeStore]]'s static partition
    * pruning is untouched (the layout is still one directory per cell).
-   * Cost is O(affected cells), not O(store) — `graft.Probe retract`
-   * prices both the clustered takedown (cells-proportional) and the
-   * fully scattered worst case (approaches rebuild, SURVEY §6).
+   * Cost is O(affected cells), not O(store) — SURVEY §6 prices both
+   * the clustered takedown (cells-proportional) and the fully scattered
+   * worst case (approaches rebuild).
    */
   def removeFromCodeStore(spark: org.apache.spark.sql.SparkSession,
                           path: String, removedIds: DataFrame,
@@ -1151,8 +1151,7 @@ object Quantize {
    * O(assigned cells) of ingest). Afterwards [[storedModels]] returns the
    * NEW models and the store equals a one-shot
    * `writeCodeStore(corpus, newModels, …)` (q160-gated); recall
-   * before/after on a drifted corpus is measured by `graft.Probe retrain`
-   * (SURVEY §6).
+   * before/after on a drifted corpus is measured in SURVEY §6.
    */
   def retrainCodeStore(spark: org.apache.spark.sql.SparkSession,
                        path: String, corpus: DataFrame, vecCol: String,
@@ -1217,10 +1216,10 @@ object Quantize {
    * on a drifted batch the frozen centroids sit far from the new
    * region while the yardstick follows it, so the ratio grows with
    * exactly the degradation that costs recall and pruning power
-   * (`graft.Probe drift` ties the ratio to the measured cliff: the
+   * (SURVEY §6 ties the ratio to the measured cliff: the
    * concentrated-drift fixture whose stale recall@10 was 0.004 vs
    * 0.328 retrained reads err_ratio ≫ 1 while the same-distribution
-   * control reads ≈ 1 — see SURVEY §6). `fill_skew` is the second
+   * control reads ≈ 1). `fill_skew` is the second
    * face: max assigned-cell share × cells (uniform ≈ small, a drifted
    * domain funneling into the few nearest stale cells → large), the
    * direct driver of the swollen-cell scan tax.

@@ -101,7 +101,7 @@ object Similarity {
     // broadcast-join + max_by formulation looked shuffle-free too, but
     // max_by's struct-with-array buffer is not hash-aggregable, so
     // Catalyst planned a SortAggregate that sorted the corpus×k joined
-    // stream per task — measured ENOSPC at 500k×1953 (Probe semdecon).
+    // stream per task — measured ENOSPC at 500k×1953 (SURVEY §6).
     // Tiebreak unchanged: (cosine, -centroid_id), bit-identical cosine.
     // Collecting k centroid rows is catalog-sized by policy (the
     // dsirScore / probeCellsExpr artifact class).

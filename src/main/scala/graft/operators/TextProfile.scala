@@ -362,17 +362,14 @@ object TextProfile {
    * bytes: −18% wall time from fixed-width key partitioning/compare in
    * the sort-merge stages, while COMPRESSED shuffle bytes grow ~11%
    * because Zipf-distributed gram strings lz4-compress and random hash
-   * lanes do not. Gram strings never leave their scan. The byte lever is
-   * `broadcastModel` — set it when the reference slice is policy-sized
-   * (measured −67% shuffle bytes: the scoring joins stop exchanging
-   * entirely); leave it off for corpus-scale references — AQE still
-   * converts small model tables at runtime. Docs with fewer than 2
+   * lanes do not. Gram strings never leave their scan. Model tables carry
+   * no broadcast hint: AQE converts small ones at runtime and leaves
+   * corpus-scale references shuffled. Docs with fewer than 2
    * tokens have no bigram and are emitted with n_bigrams=0 and NULL
    * scores rather than dropped (corpus accounting keeps rows).
    */
   def bigramPerplexity(docs: DataFrame, reference: DataFrame,
-                       textCol: String, idCol: String,
-                       broadcastModel: Boolean = false): DataFrame = {
+                       textCol: String, idCol: String): DataFrame = {
     def toks(df: DataFrame) = df.withColumn("__toks",
       TextFunctions.tokens(col(textCol)))
     def bigrams(df: DataFrame) = toks(df)
@@ -384,14 +381,13 @@ object TextProfile {
     // 128-bit pair ≡ grouping by the string at negligible collision odds)
     def hpair(c: org.apache.spark.sql.Column, p: String) =
       Seq(xxhash64(c).as(s"${p}1"), xxhash64(c, lit(1L)).as(s"${p}2"))
-    def hint(df: DataFrame) = if (broadcastModel) broadcast(df) else df
-    val uniH = hint(toks(reference)
+    val uniH = toks(reference)
       .select(explode(col("__toks")).as("w"))
       .select(hpair(col("w"), "u"): _*)
-      .groupBy(col("u1"), col("u2")).agg(count(lit(1)).as("c1")))
-    val biH = hint(bigrams(reference)
+      .groupBy(col("u1"), col("u2")).agg(count(lit(1)).as("c1"))
+    val biH = bigrams(reference)
       .select(hpair(col("g"), "b"): _*)
-      .groupBy(col("b1"), col("b2")).agg(count(lit(1)).as("c2")))
+      .groupBy(col("b1"), col("b2")).agg(count(lit(1)).as("c2"))
     // vocab size rides an in-plan 1-row broadcast, no driver action
     val vocab = uniH.agg(count(lit(1)).as("__v"))
     val scored = bigrams(docs)
@@ -444,8 +440,7 @@ object TextProfile {
    */
   def knBigramPerplexity(docs: DataFrame, reference: DataFrame,
                          textCol: String, idCol: String,
-                         discount: Double = 0.75,
-                         broadcastModel: Boolean = false): DataFrame = {
+                         discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"discount must be in (0, 1), got $discount")
     import org.apache.spark.sql.expressions.Window
@@ -465,18 +460,17 @@ object TextProfile {
       .withColumn("w2", substring_index(col("g"), " ", -1))
     def hpair(c: org.apache.spark.sql.Column, p: String) =
       Seq(xxhash64(c).as(s"${p}1"), xxhash64(c, lit(1L)).as(s"${p}2"))
-    def hint(df: DataFrame) = if (broadcastModel) broadcast(df) else df
 
     val refBg = bigrams(reference)
       .select(hpair(col("g"), "b") ++ hpair(col("w1"), "x") ++
         hpair(col("w2"), "y"): _*)
-    val biH = hint(refBg.groupBy(col("b1"), col("b2"))
-      .agg(count(lit(1)).as("c2")))
-    val ctxH = hint(refBg.groupBy(col("x1"), col("x2"))
+    val biH = refBg.groupBy(col("b1"), col("b2"))
+      .agg(count(lit(1)).as("c2"))
+    val ctxH = refBg.groupBy(col("x1"), col("x2"))
       .agg(count(lit(1)).as("ctxc"),
-        countDistinct(col("y1"), col("y2")).as("n1p")))
-    val contH = hint(refBg.groupBy(col("y1"), col("y2"))
-      .agg(countDistinct(col("x1"), col("x2")).as("cont1")))
+        countDistinct(col("y1"), col("y2")).as("n1p"))
+    val contH = refBg.groupBy(col("y1"), col("y2"))
+      .agg(countDistinct(col("x1"), col("x2")).as("cont1"))
     // scalar frame: B (distinct bigrams) and V (vocabulary) ride one
     // 1-row broadcast — no driver action
     val scal = biH.agg(count(lit(1)).as("__b")).crossJoin(

@@ -158,7 +158,7 @@ object Tokenize {
    * a global sort) and collected, and the merge loop runs in driver
    * memory with incremental pair-count maintenance — a TreeSet argmax
    * plus per-affected-word deltas, so each merge costs O(affected
-   * words), not one Spark job. Measured (`graft.Probe bpelocal`, 500k
+   * words), not one Spark job. Measured (SURVEY §6, 500k
    * docs / 8k-word vocab): learning to the corpus's 10,152-merge
    * exhaustion point adds ~1-2 s of driver time to the ~10 s
    * distributed collapse — the whole run prices like ONE [[bpeMerges]]
@@ -326,7 +326,7 @@ object Tokenize {
    * Everything is deterministic: words iterate in the collected
    * (freq DESC, word) order, pieces in code-point order, so the learned
    * doubles are bit-identical on every run and cluster. Measured
-   * (`graft.Probe unilocal`, 500k docs / 8k-word vocab): the full
+   * (SURVEY §6, 500k docs / 8k-word vocab): the full
    * seed→EM→prune→EM descent to a 4096-piece vocabulary runs in ~15 s
    * total, ~10 s of which is the distributed collapse; the native
    * Viterbi encode of the whole distinct vocabulary adds ~12 s. Returns one row

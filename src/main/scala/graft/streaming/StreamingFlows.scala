@@ -162,24 +162,32 @@ object StreamingFlows {
       textCol: String, idCol: String, table: String, checkpoint: String,
       onBatch: (DataFrame, Long) => Unit = (_, _) => ())
       : DataStreamWriter[Row] =
+    ingestWriter(stream, checkpoint) { (batch, batchId) =>
+      // the micro-batch frame belongs to the stream's CLONED session;
+      // read and append through THAT session, not the caller's — the
+      // append invalidates the table's cached file listing only in the
+      // session that wrote, so a caller-session read here would serve
+      // batch N+1 a stale pre-append snapshot (observed: a duplicate
+      // of batch N's content passed the anti-join)
+      onBatch(graft.operators.Dedup.ingestBatch(
+        batch.sparkSession, batch, textCol, idCol, table), batchId)
+    }
+
+  /** The skeleton every `streamingIngest*` writer shares: a checkpointed
+    * `foreachBatch` that runs `tick` (the ingest step and its callbacks)
+    * on each micro-batch, then releases OpCache. Each ingest step
+    * persists batch-scoped intermediates (the materialized pre-append
+    * snapshot among them) through OpCache; a continuous stream must
+    * release them per micro-batch or executor storage grows one pinned
+    * RDD per batch forever. Releasing here is safe: `tick` has returned,
+    * and an OpCache release only forfeits cache reuse, never
+    * correctness. */
+  private def ingestWriter(stream: DataFrame, checkpoint: String)(
+      tick: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the micro-batch frame belongs to the stream's CLONED session;
-        // read and append through THAT session, not the caller's — the
-        // append invalidates the table's cached file listing only in the
-        // session that wrote, so a caller-session read here would serve
-        // batch N+1 a stale pre-append snapshot (observed: a duplicate
-        // of batch N's content passed the anti-join)
-        val survivors = graft.operators.Dedup.ingestBatch(
-          batch.sparkSession, batch, textCol, idCol, table)
-        onBatch(survivors, batchId)
-        // each ingest step persists batch-scoped intermediates (the
-        // materialized pre-append snapshot among them) through OpCache;
-        // a continuous stream must release them per micro-batch or
-        // executor storage grows one pinned RDD per batch forever.
-        // Releasing here is safe: onBatch has returned, and an OpCache
-        // release only forfeits cache reuse, never correctness.
+        tick(batch, batchId)
         graft.operators.OpCache.release()
         ()
       }
@@ -203,22 +211,11 @@ object StreamingFlows {
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.7,
       onBatch: (DataFrame, Long) => Unit = (_, _) => ())
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val survivors = graft.operators.Dedup.ingestBatchLsh(
-          batch.sparkSession, batch, textCol, idCol, table,
-          shingleK, numHashes, bands, threshold)
-        onBatch(survivors, batchId)
-        // each ingest step persists batch-scoped intermediates (the
-        // materialized pre-append snapshot among them) through OpCache;
-        // a continuous stream must release them per micro-batch or
-        // executor storage grows one pinned RDD per batch forever.
-        // Releasing here is safe: onBatch has returned, and an OpCache
-        // release only forfeits cache reuse, never correctness.
-        graft.operators.OpCache.release()
-        ()
-      }
+    ingestWriter(stream, checkpoint) { (batch, batchId) =>
+      onBatch(graft.operators.Dedup.ingestBatchLsh(
+        batch.sparkSession, batch, textCol, idCol, table,
+        shingleK, numHashes, bands, threshold), batchId)
+    }
 
   /**
    * [[streamingIngest]]'s SEMANTIC-TIER sibling — the continuous form of
@@ -236,22 +233,11 @@ object StreamingFlows {
       tau: Double, checkpoint: String,
       onBatch: (DataFrame, Long) => Unit = (_, _) => ())
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val survivors = graft.operators.Dedup.ingestBatchSemDedup(
-          batch.sparkSession, batch, table, centroids, vecCol, idCol,
-          probes, tau)
-        onBatch(survivors, batchId)
-        // each ingest step persists batch-scoped intermediates (the
-        // materialized pre-append snapshot among them) through OpCache;
-        // a continuous stream must release them per micro-batch or
-        // executor storage grows one pinned RDD per batch forever.
-        // Releasing here is safe: onBatch has returned, and an OpCache
-        // release only forfeits cache reuse, never correctness.
-        graft.operators.OpCache.release()
-        ()
-      }
+    ingestWriter(stream, checkpoint) { (batch, batchId) =>
+      onBatch(graft.operators.Dedup.ingestBatchSemDedup(
+        batch.sparkSession, batch, table, centroids, vecCol, idCol,
+        probes, tau), batchId)
+    }
 
   /**
    * [[streamingIngest]]'s ANN-STORE sibling — the continuous form of
@@ -263,9 +249,9 @@ object StreamingFlows {
    * QuantizeSpec-gated), and only touched cells are rewritten into a new
    * generation behind one atomic manifest swap, so concurrent ANN
    * serving never observes a partial ingest. StreamingSpec gates
-   * stream ≡ sequential-batch store equality; `graft.Probe cscadence`
-   * measures the cadence claims (manifests stay current+grace, one file
-   * per cell, no staging debris across micro-batches).
+   * stream ≡ sequential-batch store equality; the cadence claims
+   * (manifests stay current+grace, one file per cell, no staging debris
+   * across micro-batches) are measured in SURVEY §6.
    *
    * Inherits [[graft.operators.Quantize.ingestBatchCodeStore]]'s
    * BOUNDED idempotence contract: the already-held check reads only the
@@ -292,31 +278,26 @@ object StreamingFlows {
       onBatch: (DataFrame, Long) => Unit = (_, _) => (),
       onDrift: Option[(DataFrame, Long) => Unit] = None)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ingested = graft.operators.Quantize.ingestBatchCodeStore(
-          batch.sparkSession, path, batch, centroids, codebook,
-          vecCol, idCol, m, subDim)
-        onBatch(ingested, batchId)
-        // drift observer: after the ingest (same tick, same batch), on
-        // the RAW batch — drift is a property of what arrived, not of
-        // the replay-deduped survivor set. The (id, vec) projection is
-        // persisted for the observer's lifetime (released with the
-        // tick's OpCache sweep below): the drift computation makes ~6
-        // passes over the batch (emptiness probe, yardstick k-means
-        // iterations, two assign passes), each of which would otherwise
-        // re-read the micro-batch's source offsets
-        onDrift.foreach { cb =>
-          val b = graft.operators.OpCache.track(
-            batch.select(batch.col(idCol), batch.col(vecCol)).persist())
-          if (!b.isEmpty)
-            cb(graft.operators.Quantize.codeStoreDriftStats(
-              b, centroids, vecCol, idCol, 0, 2), batchId)
-        }
-        graft.operators.OpCache.release() // see streamingIngest's note
-        ()
+    ingestWriter(stream, checkpoint) { (batch, batchId) =>
+      onBatch(graft.operators.Quantize.ingestBatchCodeStore(
+        batch.sparkSession, path, batch, centroids, codebook,
+        vecCol, idCol, m, subDim), batchId)
+      // drift observer: after the ingest (same tick, same batch), on
+      // the RAW batch — drift is a property of what arrived, not of
+      // the replay-deduped survivor set. The (id, vec) projection is
+      // persisted for the observer's lifetime (released with the
+      // tick's OpCache sweep): the drift computation makes ~6 passes
+      // over the batch (emptiness probe, yardstick k-means iterations,
+      // two assign passes), each of which would otherwise re-read the
+      // micro-batch's source offsets
+      onDrift.foreach { cb =>
+        val b = graft.operators.OpCache.track(
+          batch.select(batch.col(idCol), batch.col(vecCol)).persist())
+        if (!b.isEmpty)
+          cb(graft.operators.Quantize.codeStoreDriftStats(
+            b, centroids, vecCol, idCol, 0, 2), batchId)
       }
+    }
 
   /**
    * Streaming near-duplicate candidates off a

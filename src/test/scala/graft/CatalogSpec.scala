@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions.when
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, lit, when}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType}
 
 import graft.catalog.Gate
@@ -26,11 +27,13 @@ class CatalogSpec extends SparkSpec {
   test("every Bench headline query resolves to a spec") {
     val missing = Bench.headline.filterNot(names.toSet)
     assert(missing.isEmpty, s"headline names without a spec: $missing")
+    assert(SparkEntry.specs.contains(graft.catalog.Relational.starJoin),
+      "the flagship entry query is not a registered spec")
   }
 
   test("Gate.parity and Gate.verdict fail on a one-row difference") {
     val a = Seq((1L, 0.5), (2L, 0.25), (3L, 0.125)).toDF("id", "score")
-    def verdict(b: org.apache.spark.sql.DataFrame) =
+    def verdict(b: DataFrame) =
       Gate.verdict(Gate.parity(a, b, Seq("id"), Seq("score")))(
         ("scores_equal", 0.0, $"bad" === 0),
         ("nonempty", 1.0, $"n" >= 1))
@@ -55,6 +58,27 @@ class CatalogSpec extends SparkSpec {
       .as[(Long, Long)].head() == (0L, 3L))
     assert(Gate.parity(a, nudged, Seq("id"), Seq("score"))
       .as[(Long, Long)].head() == (3L, 3L))
+  }
+
+  test("Gate.recall fails on a missing approx row and on an empty exact set") {
+    val keys = Seq("query_id", "corpus_id")
+    val exact = Seq((1L, 10L), (1L, 11L), (2L, 20L), (2L, 21L))
+      .toDF("query_id", "corpus_id")
+    def recall(ex: DataFrame, approx: DataFrame) =
+      Gate.recall(ex, approx.withColumn("score", lit(0.5)), keys)
+    def ok(ex: DataFrame, approx: DataFrame) =
+      Gate.verdict(recall(ex, approx))(("recall_at_2", 1.0,
+        coalesce($"recall" >= 1.0, lit(false))))
+        .as[(String, Double, Boolean)].head()._3
+    assert(recall(exact, exact).as[Double].head() == 1.0)
+    assert(ok(exact, exact))
+    val missing = exact.filter(!($"query_id" === 2L && $"corpus_id" === 21L))
+    assert(recall(exact, missing).as[Double].head() == 0.75)
+    assert(!ok(exact, missing))
+    // an empty exact set has no recall (NULL); the verdict reads false
+    val none = exact.filter(lit(false))
+    assert(recall(none, exact).head().isNullAt(0))
+    assert(!ok(none, exact))
   }
 
   test("Gate.verdict from driver booleans sorts by metric") {

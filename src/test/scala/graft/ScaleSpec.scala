@@ -22,19 +22,6 @@ class ScaleSpec extends SparkSpec {
 
   test("bucketed tables join without any exchange") {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // a prior run's managed-table directory blocks CREATE even after the
-    // in-memory catalog forgot the table — clear both
-    Seq("li_bkt", "o_bkt").foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new java.io.File(s"spark-warehouse/$tbl")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
     try {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select($"l_orderkey", $"l_quantity")

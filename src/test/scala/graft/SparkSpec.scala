@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,10 +13,22 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** A fresh warehouse per test JVM, deleted at exit, so the managed
+    * tables suites create never pile up in the working directory. */
+  private def tempWarehouse(): String = {
+    val dir = Files.createTempDirectory("graft-test-warehouse")
+    sys.addShutdownHook {
+      Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => { Files.deleteIfExists(p); () })
+    }
+    dir.toString
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config("spark.sql.warehouse.dir", tempWarehouse())
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

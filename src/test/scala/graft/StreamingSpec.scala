@@ -566,6 +566,81 @@ class StreamingSpec extends SparkSpec {
     graft.operators.OpCache.release()
   }
 
+  test("streaming ingest writers leave no cached frames after a drained run") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    import graft.operators.{Dedup, OpCache, Quantize}
+    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def noDatasets = spark.sharedState.cacheManager.isEmpty
+    // drains `rows` through `writer` as a two-file parquet stream (one
+    // file per tick); `tick` marks how many RDDs a tick held beyond the
+    // pre-run set, so the check below cannot pass on a run that never
+    // cached anything
+    def drained(rows: DataFrame)(
+        writer: (DataFrame, String, () => Unit) => DataStreamWriter[Row])
+        : Unit = {
+      val src = java.nio.file.Files.createTempDirectory("drain_src").toString
+      rows.repartition(2).write.mode("overwrite").parquet(src)
+      val stream = spark.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+      val ckpt = java.nio.file.Files.createTempDirectory("drain_ckpt").toString
+      OpCache.release()
+      spark.catalog.clearCache()
+      val rdds = persisted()
+      val held = new java.util.concurrent.atomic.AtomicInteger(0)
+      StreamingFlows.runUntilDrained(writer(stream, ckpt,
+        () => held.accumulateAndGet((persisted() -- rdds).size, math.max)))
+      assert(held.get > 0, "the drained run cached nothing to release")
+      def clean = (persisted() -- rdds).isEmpty && noDatasets
+      val deadline = System.currentTimeMillis() + 10000
+      while (!clean && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert((persisted() -- rdds).isEmpty,
+        s"RDDs left persisted: ${persisted() -- rdds}")
+      assert(noDatasets, "cached Datasets left behind")
+    }
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six seven"),
+      (3L, "ALPHA beta gamma delta epsilon zeta"),
+      (4L, "totally different words appear here now"))
+      .toDF("doc_id", "text")
+    val fp = s"streamspec_drain_fp_$pid"
+    spark.sql(s"DROP TABLE IF EXISTS $fp")
+    Dedup.writeFingerprintStore(Seq("seed one").toDF("text"), "text", fp,
+      buckets = 2)
+    drained(docs)((st, ckpt, tick) => StreamingFlows.streamingIngest(
+      st, "text", "doc_id", fp, ckpt, onBatch = (_, _) => tick()))
+    val lsh = s"streamspec_drain_lsh_$pid"
+    Seq("_bands", "_sigs").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $lsh$x"))
+    Dedup.writeLshStore(Seq((100L, "seed words for the band store here"))
+      .toDF("doc_id", "text"), "text", "doc_id", lsh,
+      shingleK = 3, numHashes = 64, bands = 16, buckets = 2)
+    drained(docs)((st, ckpt, tick) => StreamingFlows.streamingIngestLsh(
+      st, "text", "doc_id", lsh, ckpt, onBatch = (_, _) => tick()))
+    val vecs = Seq((1L, Seq(0.99f, 0.1f, 0f, 0f)), (2L, Seq(0f, 0f, 1f, 0f)),
+      (3L, Seq(0f, 0.05f, 0.99f, 0f)), (4L, Seq(0f, 0f, 0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 0f, 1f, 0f)))
+      .toDF("centroid_id", "embedding")
+    val seed = Seq((100L, Seq(0.9f, 0.1f, 0.1f, 0f))).toDF("vec_id", "embedding")
+    val sem = s"streamspec_drain_sem_$pid"
+    spark.sql(s"DROP TABLE IF EXISTS $sem")
+    Dedup.writeAssignedCorpus(seed, cents, "embedding", "vec_id", probes = 2,
+      sem, buckets = 2)
+    drained(vecs)((st, ckpt, tick) => StreamingFlows.streamingIngestSemDedup(
+      st, sem, cents, "embedding", "vec_id", probes = 2, tau = 0.95, ckpt,
+      onBatch = (_, _) => tick()))
+    val cb = Seq((0, 0, Seq(1f, 0f)), (0, 1, Seq(0f, 1f)),
+      (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f))).toDF("sub", "code", "codeword")
+    val store = java.nio.file.Files.createTempDirectory("drain_cs").toString
+    Quantize.writeCodeStore(seed, cents, cb, "embedding", "vec_id", 2, 2,
+      store, versioned = true)
+    drained(vecs)((st, ckpt, tick) => StreamingFlows.streamingIngestCodeStore(
+      st, store, cents, cb, "embedding", "vec_id", m = 2, subDim = 2, ckpt,
+      onDrift = Some((_, _) => tick())))
+  }
+
   test("streaming near-dup off the LSH store equals the batch store path") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col

@@ -11,8 +11,8 @@ docs), mirroring the TESTDATA recipe observed in
     n_chars BIGINT), seed 42 => deterministic output
 
 Measurement apparatus only (like local_verify.py) - generates the sf1
-corpus for graft.Probe's dedup-tier scaling run. Never part of the
-library; writes ONLY under /tmp.
+corpus for the dedup-tier scaling runs recorded in SURVEY §6. Never
+part of the library; writes ONLY under /tmp.
 
 Usage: gen_scale_docs.py [out.parquet] [n_docs]
 """
@@ -34,7 +34,7 @@ LANGS = ["en"] * 41 + ["de"] * 15 + ["es"] * 15 + ["fr"] * 15 + ["zh"] * 14
 def big_vocab(size: int) -> list:
     """Deterministic pseudo-English vocabulary with realistic word lengths
     (5-12 chars, mean ~7.5 like English prose) — for measurements where the
-    shuffle-byte cost of STRING keys matters (Probe ppl); the 31-word soup
+    shuffle-byte cost of STRING keys matters (SURVEY §6); the 31-word soup
     above would make every bigram ~9 bytes and understate real key widths."""
     rng = random.Random(7)
     syl = ["ba", "con", "de", "fi", "gra", "jo", "ku", "lem", "mo", "nar",
