@@ -156,19 +156,18 @@ object TextFunctions {
   // --- repetition / quality rules (Gopher, Rae et al. 2021) -------------
 
   /** Evaluate `c` ONCE per row and hand it to `f` as a BOUND lambda
-    * variable: expressions CAPTURED inside higher-order-function lambdas
-    * are re-evaluated on every element (HOF lambdas are exempt from
-    * subexpression elimination — the [[winnowFromGramHashes]] materialization note),
-    * so an O(n) fold whose lambda references a captured
-    * `array_sort(grams)` silently re-tokenizes and re-sorts the document
-    * PER ELEMENT — O(n²·sort), measured as 29 s for a 5k-doc map stage
-    * before this binding. A lambda VARIABLE is a slot read. */
-  /** Evaluate `c` ONCE per row and pass the bound value to `f` — the
-    * lambda-variable trick (1-element array + transform) that stops a
-    * HOF lambda from re-evaluating a non-trivial expression per element
-    * (q185's first cut re-tokenized the whole document once per
-    * CHARACTER position through exactly this hole). Use it around any
-    * expression a `filter`/`transform` lambda references. */
+    * variable (the 1-element array + transform trick). An expression
+    * CAPTURED inside a higher-order-function lambda is re-evaluated on
+    * every element, because HOF lambdas are exempt from subexpression
+    * elimination (the [[winnowFromGramHashes]] materialization note); a
+    * lambda VARIABLE is a slot read. Measured costs of a captured
+    * expression: an O(n) fold over a captured `array_sort(grams)`
+    * re-tokenized and re-sorted the document per element (29 s for a
+    * 5k-doc map stage); q185's first cut re-tokenized the whole document
+    * once per CHARACTER position; [[shingles]] re-tokenized it once per
+    * window (2.8 s vs 0.66 s bound, 10k docs on 4 cores). Use it around
+    * any expression a `filter`/`transform` lambda references —
+    * LambdaCaptureSpec fails on a text kernel that captures one. */
   private[graft] def bindOnce(c: Column)(f: Column => Column): Column =
     element_at(transform(array(c), x => f(x)), 1)
 
@@ -649,15 +648,17 @@ object TextFunctions {
    * Word k-shingles: overlapping windows of `k` consecutive tokens joined by
    * a space. Built from sequence+transform+slice — no UDF, no explode unless
    * the caller wants one. Documents shorter than k yield a single shingle of
-   * the whole text.
+   * the whole text. The token array is bound once per row ([[bindOnce]]),
+   * so the per-window lambda slices it instead of re-tokenizing the
+   * document at every window position.
    */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) <= k, array(concat_ws(" ", toks)))
-      .otherwise(transform(
-        sequence(lit(1), size(toks) - (k - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(k)))))
-  }
+  def shingles(text: Column, k: Int): Column =
+    bindOnce(tokens(text)) { toks =>
+      when(size(toks) <= k, array(concat_ws(" ", toks)))
+        .otherwise(transform(
+          sequence(lit(1), size(toks) - (k - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(k)))))
+    }
 
   /** Hashed shingle set (distinct), the MinHash input domain. */
   def shingleHashes(text: Column, k: Int): Column =

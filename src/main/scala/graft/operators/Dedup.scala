@@ -29,20 +29,23 @@ object Dedup {
    * or a reproducible 100 TB pipeline run).
    */
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // namespaced temp column (like streamingDedup) so a caller's own
+    // namespaced temp columns (like streamingDedup) so a caller's own
     // "__fp" survives untouched
     val fp = "__graft_dedup_fp"
-    val keyed = df.withColumn(fp, fingerprint(col(textCol)))
-    val winners = keyed.groupBy(col(fp))
-      .agg(min(col(idCol)).as(idCol))
-    // join back on (fp, id): shuffle carries only the 2-column winner set.
+    val winner = "__graft_dedup_min_id"
+    // ONE scan of `df`: the winner is a window min over the fingerprint,
+    // so an unpersisted upstream is evaluated once. The window's hash
+    // partitioning on fp satisfies the dropDuplicates aggregate too — one
+    // full-row shuffle in all.
     // The trailing dropDuplicates guards a dirty corpus where the SAME
-    // (id, content) row was ingested twice (retry) — the semi join alone
+    // (id, content) row was ingested twice (retry) — the min filter alone
     // would keep both copies, defeating the dedup. Rows agreeing on
     // (id, content) but differing elsewhere collapse to one arbitrarily;
     // ids are expected unique per row, as in minhashLsh.
-    keyed.join(winners, Seq(fp, idCol), "left_semi")
-      .dropDuplicates(fp, idCol).drop(fp)
+    df.withColumn(fp, fingerprint(col(textCol)))
+      .withColumn(winner, min(col(idCol)).over(Window.partitionBy(col(fp))))
+      .filter(col(idCol) === col(winner))
+      .dropDuplicates(fp, idCol).drop(fp, winner)
   }
 
   /**

@@ -322,14 +322,19 @@ object Multimodal {
    * frame_fingerprint) rows per input via posexplode — the 1→N shape a
    * real frame sampler has. The fingerprints are content-derived md5 hex
    * strings standing in for frame payloads (a real sampler swaps in codec
-   * output at the same column contract).
+   * output at the same column contract). The payload digest is bound
+   * once per row ([[graft.functions.TextFunctions.bindOnce]]), so the
+   * per-frame lambda does not re-hash the whole payload for every frame.
    */
-  def sampleFrames(df: DataFrame, payloadCol: String, n: Int): DataFrame =
+  def sampleFrames(df: DataFrame, payloadCol: String, n: Int): DataFrame = {
+    val frames = graft.functions.TextFunctions.bindOnce(
+        md5(col(payloadCol)).cast(BinaryType)) { digest =>
+      transform(sequence(lit(0), lit(n - 1)), i =>
+        md5(concat(digest, i.cast(StringType).cast(BinaryType))))
+    }
     df.select(col("*"),
-        posexplode(transform(sequence(lit(0), lit(n - 1)), i =>
-          md5(concat(md5(col(payloadCol)).cast(BinaryType),
-            i.cast(StringType).cast(BinaryType)))))
-          .as(Seq("frame_idx", "frame_fingerprint")))
+      posexplode(frames).as(Seq("frame_idx", "frame_fingerprint")))
+  }
 
   /**
    * "Resize" stage contract: payload in, payload out with updated meta.

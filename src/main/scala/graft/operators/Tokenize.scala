@@ -558,51 +558,57 @@ object Tokenize {
    * not the tail window masks. Empty docs emit an empty input and the
    * bare closing sentinel.
    *
-   * Scale shape: pure per-row column expressions over one bound token
-   * array — zero shuffle, zero state, linear scan at any corpus size.
+   * Scale shape: pure per-row column expressions over one token array,
+   * bound once per row ([[TextFunctions.bindOnce]]) so the per-token and
+   * per-window lambdas read it instead of re-tokenizing the document for
+   * every element — zero shuffle, zero state, linear scan at any corpus
+   * size.
    */
   def spanCorrupt(docs: DataFrame, textCol: String, idCol: String,
                   windowTokens: Int = 20, spanLen: Int = 3,
                   salt: String = ""): DataFrame = {
     require(windowTokens > spanLen && spanLen >= 1,
       s"need windowTokens > spanLen >= 1, got $windowTokens/$spanLen")
-    val toks = TextFunctions.tokens(col(textCol))
-    val n = size(toks)
     val W = lit(windowTokens)
     val L = lit(spanLen)
-    def wsize(w: Column) = least(W, n - w * W)
-    def sstart(w: Column) = w * W + pmod(
-      Curate.md5PrefixLong(concat(col(idCol).cast("string"), lit("_"),
-        w.cast("string"), lit(salt)), 6).cast("int"),
-      wsize(w) - L + 1)
     def sentinel(k: Column) =
       concat(lit("<extra_id_"), k.cast("string"), lit(">"))
-    def tokAt(i: Column) = element_at(toks, i + 1)
     // guard: Spark's sequence(0, -1) counts DOWN, so empty docs need an
     // explicit empty index range
     def idxTo(hi: Column) = when(hi <= 0, array().cast("array<int>"))
       .otherwise(sequence(lit(0), hi - 1))
 
-    val inputToks = filter(transform(idxTo(n), i => {
-      val w = (i / W).cast("int")
-      val s = sstart(w)
-      when(wsize(w) < L, tokAt(i))
-        .when(i === s, sentinel(w))
-        .when(i > s && i < s + L, lit(null).cast("string"))
-        .otherwise(tokAt(i))
-    }), x => x.isNotNull)
-    val nWin = ((n + lit(windowTokens - 1)) / W).cast("int")
-    val maskedWins = filter(idxTo(nWin), w => wsize(w) >= L)
-    val targetToks = concat(
-      flatten(transform(maskedWins, w =>
-        concat(array(sentinel(w)), slice(toks, sstart(w) + 1, L)))),
-      array(sentinel(size(maskedWins))))
-
-    docs.select(col(idCol), n.cast("long").as("n_tokens"),
-      size(maskedWins).cast("long").as("n_spans"),
-      size(inputToks).cast("long").as("n_input_tokens"),
-      array_join(inputToks, " ").as("input_text"),
-      array_join(targetToks, " ").as("target_text"))
+    val corrupted =
+      TextFunctions.bindOnce(TextFunctions.tokens(col(textCol))) { toks =>
+      val n = size(toks)
+      def wsize(w: Column) = least(W, n - w * W)
+      def sstart(w: Column) = w * W + pmod(
+        Curate.md5PrefixLong(concat(col(idCol).cast("string"), lit("_"),
+          w.cast("string"), lit(salt)), 6).cast("int"),
+        wsize(w) - L + 1)
+      def tokAt(i: Column) = element_at(toks, i + 1)
+      val inputToks = filter(transform(idxTo(n), i => {
+        val w = (i / W).cast("int")
+        val s = sstart(w)
+        when(wsize(w) < L, tokAt(i))
+          .when(i === s, sentinel(w))
+          .when(i > s && i < s + L, lit(null).cast("string"))
+          .otherwise(tokAt(i))
+      }), x => x.isNotNull)
+      val nWin = ((n + lit(windowTokens - 1)) / W).cast("int")
+      val maskedWins = filter(idxTo(nWin), w => wsize(w) >= L)
+      val targetToks = concat(
+        flatten(transform(maskedWins, w =>
+          concat(array(sentinel(w)), slice(toks, sstart(w) + 1, L)))),
+        array(sentinel(size(maskedWins))))
+      struct(n.cast("long").as("n_tokens"),
+        size(maskedWins).cast("long").as("n_spans"),
+        size(inputToks).cast("long").as("n_input_tokens"),
+        array_join(inputToks, " ").as("input_text"),
+        array_join(targetToks, " ").as("target_text"))
+    }
+    docs.select(col(idCol), corrupted.as("__graft_span"))
+      .select(col(idCol), col("__graft_span.*"))
   }
 
   /**

@@ -197,7 +197,7 @@ class PlanSpec extends SparkSpec {
       emb, "embedding", "vec_id", k = 4)
     val assigned = graft.operators.Similarity.ivfAssign(
       emb, centroids, "embedding", "vec_id")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_cells").toString
+    val dir = tempDir("ivf_cells").toString
     assigned.write.partitionBy("cell").mode("overwrite").parquet(dir)
     graft.operators.OpCache.release()
     // trained cell ids are the surviving seed ids — pick a real one
@@ -231,7 +231,7 @@ class PlanSpec extends SparkSpec {
       emb, "embedding", "vec_id", k = 8)
     val cb = graft.operators.Quantize.trainCodebook(
       emb, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pq_store").toString
+    val dir = tempDir("pq_store").toString
     graft.operators.Quantize.writeCodeStore(
       emb, cents, cb, "embedding", "vec_id", 4, 16, dir)
     // ONE query, nProbe=2 of 8 cells: the probed subset is provably
@@ -284,7 +284,7 @@ class PlanSpec extends SparkSpec {
       emb, "embedding", "vec_id", k = 8)
     val cb = graft.operators.Quantize.trainCodebook(
       emb, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pq_vstore").toString
+    val dir = tempDir("pq_vstore").toString
     graft.operators.Quantize.writeCodeStore(
       emb, cents, cb, "embedding", "vec_id", 4, 16, dir, versioned = true)
     // retraction first: pruning must hold on a multi-generation store
@@ -735,7 +735,7 @@ class PlanSpec extends SparkSpec {
       emb, "embedding", "vec_id", k = 8)
     val cb = graft.operators.Quantize.trainCodebook(
       emb, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pq_rm_plan").toString
+    val dir = tempDir("pq_rm_plan").toString
     graft.operators.Quantize.writeCodeStore(
       emb, cents, cb, "embedding", "vec_id", 4, 16, dir)
     graft.operators.Quantize.removeFromCodeStore(spark, dir,

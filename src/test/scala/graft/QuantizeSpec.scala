@@ -131,8 +131,8 @@ class QuantizeSpec extends SparkSpec {
       e, "embedding", "vec_id", k = 8)
     val cbT = Quantize.trainCodebook(e, "embedding", "vec_id",
       dim = 64, m = 4, ksub = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pq_rm").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("pq_rb").toString
+    val dir = tempDir("pq_rm").toString
+    val dir2 = tempDir("pq_rb").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16, dir)
     val removed = e.filter($"vec_id" % 5 === 0).select($"vec_id")
     Quantize.removeFromCodeStore(spark, dir, removed, "vec_id")
@@ -184,7 +184,7 @@ class QuantizeSpec extends SparkSpec {
       e, "embedding", "vec_id", k = 8)
     val cbT = Quantize.trainCodebook(e, "embedding", "vec_id",
       dim = 64, m = 4, ksub = 8)
-    val dir = java.nio.file.Files.createTempDirectory("pq_drift").toString
+    val dir = tempDir("pq_drift").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16, dir)
     val queries = e.filter($"vec_id" === 0)
     def rerank(raw: org.apache.spark.sql.DataFrame) =
@@ -215,7 +215,7 @@ class QuantizeSpec extends SparkSpec {
   test("versioned code store: retract equals rebuild; manifest swap is " +
     "atomic for a concurrent reader loop") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_ver").toString
+    val dir = tempDir("pq_ver").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     assert(Quantize.codeStoreVersion(spark, dir).contains(1L))
@@ -262,7 +262,7 @@ class QuantizeSpec extends SparkSpec {
       Seq("_graft_manifest-v000003", "_graft_manifest-v000004"),
       s"expected exactly v3 (grace) and v4 (current), got $manifests")
     // equals a store rebuilt from the remaining corpus
-    val dir2 = java.nio.file.Files.createTempDirectory("pq_ver_rb").toString
+    val dir2 = tempDir("pq_ver_rb").toString
     Quantize.writeCodeStore(
       e.join(remaining.toSeq.toDF("vec_id"), Seq("vec_id"), "left_semi"),
       cents, cbT, "embedding", "vec_id", 4, 16, dir2, versioned = true)
@@ -294,7 +294,7 @@ class QuantizeSpec extends SparkSpec {
 
   test("enableCodeStoreVersioning migrates a flat store in place") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_mig").toString
+    val dir = tempDir("pq_mig").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16, dir)
     val before = Quantize.readCodeStore(spark, dir)
       .select($"vec_id", $"codes", $"cell")
@@ -324,8 +324,8 @@ class QuantizeSpec extends SparkSpec {
   test("versioned code store ingest: sequence equals one-shot, " +
     "idempotent, self-compacting") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_ing").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("pq_ing_os").toString
+    val dir = tempDir("pq_ing").toString
+    val dir2 = tempDir("pq_ing_os").toString
     val m3 = pmod($"vec_id", lit(3))
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
       "embedding", "vec_id", 4, 16, dir, versioned = true)
@@ -370,7 +370,7 @@ class QuantizeSpec extends SparkSpec {
     assert(topk.nonEmpty && topk.exists(_ % 3 == 1),
       s"no ingested vector served in a top-k: ${topk.toSeq}")
     // flat stores are refused (appends need atomic swaps)
-    val flat = java.nio.file.Files.createTempDirectory("pq_ing_flat").toString
+    val flat = tempDir("pq_ing_flat").toString
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
       "embedding", "vec_id", 4, 16, flat)
     val ex = intercept[IllegalArgumentException] {
@@ -384,7 +384,7 @@ class QuantizeSpec extends SparkSpec {
   test("versioned code store: a crash-orphaned generation never serves " +
     "and is GC'd by the next commit") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_crash").toString
+    val dir = tempDir("pq_crash").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     val before = Quantize.readCodeStore(spark, dir)
@@ -425,7 +425,7 @@ class QuantizeSpec extends SparkSpec {
     // exists (plain FileSystem.rename silently replaces on POSIX local
     // FS) — pin the primitive itself so a Hadoop upgrade that changes it
     // fails here, not as a silently lost manifest
-    val dir = java.nio.file.Files.createTempDirectory("fc_excl")
+    val dir = tempDir("fc_excl")
     java.nio.file.Files.write(dir.resolve("a"), "aa".getBytes("UTF-8"))
     java.nio.file.Files.write(dir.resolve("b"), "bb".getBytes("UTF-8"))
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
@@ -462,7 +462,7 @@ class QuantizeSpec extends SparkSpec {
   test("ingest idempotence check is cell-bounded: every non-assigned " +
     "cell's files corrupted, ingest and replay still succeed") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_bound").toString
+    val dir = tempDir("pq_bound").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     // a batch of NEW ids carrying vectors copied from ONE cell's corpus
@@ -519,7 +519,7 @@ class QuantizeSpec extends SparkSpec {
   test("ingest collapses in-batch duplicate ids; fullIdCheck catches a " +
     "changed-vector re-ingest the bounded contract excludes") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_dup").toString
+    val dir = tempDir("pq_dup").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     // one NEW id arriving twice in the same batch: exactly one row lands
@@ -554,7 +554,7 @@ class QuantizeSpec extends SparkSpec {
     "a bloom-negative batch; stale positives fall through to the exact " +
     "check; every committing ingest maintains the filter") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_bloom").toString
+    val dir = tempDir("pq_bloom").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     Quantize.enableCodeStoreIdBloom(spark, dir, "vec_id", 10000L, 0.01)
@@ -652,7 +652,7 @@ class QuantizeSpec extends SparkSpec {
   test("heavy retraction rebuilds the id Bloom once stale rows cross the " +
     "fraction of recorded capacity; light retraction only ledgers") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_bstale").toString
+    val dir = tempDir("pq_bstale").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     def meta = Quantize.readManifestMeta(spark, dir,
@@ -711,7 +711,7 @@ class QuantizeSpec extends SparkSpec {
   test("gcCodeStore age fallback collects idle orphans on a quiet store, " +
     "spares fresh and future-versioned artifacts") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_age").toString
+    val dir = tempDir("pq_age").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     val old = System.currentTimeMillis() - 48L * 3600 * 1000
@@ -796,7 +796,7 @@ class QuantizeSpec extends SparkSpec {
   test("writeCodeStore(versioned) refuses a non-empty path — a flat " +
     "store must migrate, not be shadowed") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_flatclash").toString
+    val dir = tempDir("pq_flatclash").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16, dir)
     val ex = intercept[IllegalArgumentException] {
       Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
@@ -813,7 +813,7 @@ class QuantizeSpec extends SparkSpec {
     "equals one-shot with the stored models; old models GC'd past grace") {
     val (e, cents, cbT) = storeModels()
     val half = e.filter($"vec_id" % 2 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("pq_retrain").toString
+    val dir = tempDir("pq_retrain").toString
     Quantize.writeCodeStore(half, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     def ids(p: String): Set[Long] =
@@ -844,7 +844,7 @@ class QuantizeSpec extends SparkSpec {
     // the manifest now pairs the new codes with the NEW models
     val (c2, cb2) = Quantize.storedModels(spark, dir).getOrElse(
       fail("retrained store lost its models pointer"))
-    val dir2 = java.nio.file.Files.createTempDirectory("pq_retrain_os").toString
+    val dir2 = tempDir("pq_retrain_os").toString
     Quantize.writeCodeStore(e, c2, cb2, "embedding", "vec_id", 4, 16,
       dir2, versioned = true)
     def rows(p: String) = Quantize.readCodeStore(spark, p)
@@ -877,8 +877,8 @@ class QuantizeSpec extends SparkSpec {
     "stores refuse") {
     val (e, cents, cbT) = storeModels()
     val m3 = pmod($"vec_id", lit(3))
-    val dir = java.nio.file.Files.createTempDirectory("pq_stored").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("pq_stored2").toString
+    val dir = tempDir("pq_stored").toString
+    val dir2 = tempDir("pq_stored2").toString
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
       "embedding", "vec_id", 4, 16, dir, versioned = true)
     val (_, _, m1, sd1) = Quantize.storedPq(spark, dir).getOrElse(
@@ -917,7 +917,7 @@ class QuantizeSpec extends SparkSpec {
     assert(Quantize.ivfPqTopKStored(spark, dir, q, "embedding", "vec_id",
       k = 5, nProbe = 3).count() > 0)
     // flat stores record nothing — both stored forms refuse loudly
-    val flat = java.nio.file.Files.createTempDirectory("pq_stored_f").toString
+    val flat = tempDir("pq_stored_f").toString
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
       "embedding", "vec_id", 4, 16, flat)
     assert(Quantize.storedPq(spark, flat).isEmpty)
@@ -933,7 +933,7 @@ class QuantizeSpec extends SparkSpec {
 
   test("versioned code store refuses a concurrent writer's lost update") {
     val (e, cents, cbT) = storeModels()
-    val dir = java.nio.file.Files.createTempDirectory("pq_race").toString
+    val dir = tempDir("pq_race").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
       dir, versioned = true)
     // writer A resolves v1, then writer B commits v2 first

@@ -10,6 +10,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory, deleted when the current test ends, whether
+    * it passes or fails. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    testDirs.add(dir)
+    dir
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally while (!testDirs.isEmpty) SparkSpec.deleteTree(testDirs.poll())
 }
 
 object SparkSpec {
@@ -17,11 +31,16 @@ object SparkSpec {
     * tables suites create never pile up in the working directory. */
   private def tempWarehouse(): String = {
     val dir = Files.createTempDirectory("graft-test-warehouse")
-    sys.addShutdownHook {
+    sys.addShutdownHook(deleteTree(dir))
+    dir.toString
+  }
+
+  /** Best-effort recursive delete: a streaming thread still winding down
+    * may race it, and a cleanup error must not replace a test's verdict. */
+  def deleteTree(dir: Path): Unit = scala.util.Try {
+    if (Files.exists(dir))
       Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
         .forEach(p => { Files.deleteIfExists(p); () })
-    }
-    dir.toString
   }
 
   lazy val session: SparkSession = {

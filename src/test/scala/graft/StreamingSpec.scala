@@ -106,7 +106,7 @@ class StreamingSpec extends SparkSpec {
     // (die_when_empty); the file stream source needs a DIRECTORY, so stage
     // the single-file fixture into one
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = tempDir("events_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))
@@ -322,8 +322,7 @@ class StreamingSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     graft.operators.Dedup.writeFingerprintStore(
       Seq("seed one").toDF("text"), "text", tbl, buckets = 2)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ingest_ckpt").toString
+    val ckpt = tempDir("graft_ingest_ckpt").toString
     val input = MemoryStream[(Long, String)]
     val survivorIds = scala.collection.mutable.ArrayBuffer.empty[Long]
     val writer = StreamingFlows.streamingIngest(
@@ -378,8 +377,7 @@ class StreamingSpec extends SparkSpec {
       (3L, "one two THREE four five six seven")) // in-batch near-dup of 1
     val b2 = Seq((4L, "totally different words appear here now indeed"),
       (5L, "one two three four five six seven extra")) // near-dup of 1
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_lsh_ingest_ckpt").toString
+    val ckpt = tempDir("graft_lsh_ingest_ckpt").toString
     val input = MemoryStream[(Long, String)]
     val q = StreamingFlows.streamingIngestLsh(
       input.toDF().toDF("doc_id", "text"), "text", "doc_id", tblS, ckpt,
@@ -430,8 +428,7 @@ class StreamingSpec extends SparkSpec {
       (3L, Seq(0f, 0.05f, 0.99f, 0f))) // in-batch dup of 2
     val b2 = Seq((4L, Seq(0f, 0f, 0f, 1f)),
       (5L, Seq(0.1f, 0f, 0.99f, 0f))) // dup of batch-1 survivor 2
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_sem_ingest_ckpt").toString
+    val ckpt = tempDir("graft_sem_ingest_ckpt").toString
     val input = MemoryStream[(Long, Seq[Float])]
     val q = StreamingFlows.streamingIngestSemDedup(
       input.toDF().toDF("vec_id", "embedding"), tblS, cents,
@@ -463,8 +460,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming code-store ingest: stream equals sequential batches; " +
     "replay is a no-op") {
     implicit val sqlCtx = spark.sqlContext
-    val dirS = java.nio.file.Files.createTempDirectory("cs_ing_s").toString
-    val dirQ = java.nio.file.Files.createTempDirectory("cs_ing_q").toString
+    val dirS = tempDir("cs_ing_s").toString
+    val dirQ = tempDir("cs_ing_q").toString
     // 4-dim vectors, m=2 subspaces of 2; hand-built models (stored with
     // the store in production — re-training would shift cell boundaries)
     val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 0f, 1f, 0f)))
@@ -480,8 +477,7 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq((1L, Seq(0.8f, 0.2f, 0f, 0f)), (2L, Seq(0f, 0.1f, 0.9f, 0.2f)))
     val b2 = Seq((3L, Seq(0.1f, 0.9f, 0.2f, 0f)),
       (100L, Seq(0.9f, 0.1f, 0.1f, 0f))) // already held — skipped
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cs_ingest_ckpt").toString
+    val ckpt = tempDir("graft_cs_ingest_ckpt").toString
     val input = MemoryStream[(Long, Seq[Float])]
     val q = StreamingFlows.streamingIngestCodeStore(
       input.toDF().toDF("vec_id", "embedding"), dirS, cents, cb,
@@ -520,7 +516,7 @@ class StreamingSpec extends SparkSpec {
       e, "embedding", "vec_id", k = 8)
     val cb = graft.operators.Quantize.trainCodebook(
       e, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
-    val store = java.nio.file.Files.createTempDirectory("cs_drift_s").toString
+    val store = tempDir("cs_drift_s").toString
     graft.operators.Quantize.writeCodeStore(e, cents, cb, "embedding",
       "vec_id", 4, 16, store, versioned = true)
     // two CALM ticks (new ids, same distribution — disjoint corpus
@@ -536,8 +532,7 @@ class StreamingSpec extends SparkSpec {
         i => (sin(lit(7) * i) + sin(col("vec_id") * i) * lit(0.2))
           .cast("float")).as("embedding")), 3000000L)
     val ratios = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("cs_drift_ckpt").toString
+    val ckpt = tempDir("cs_drift_ckpt").toString
     val input = MemoryStream[(Long, Seq[Float])]
     val q = StreamingFlows.streamingIngestCodeStore(
       input.toDF().toDF("vec_id", "embedding"), store, cents, cb,
@@ -581,11 +576,11 @@ class StreamingSpec extends SparkSpec {
     def drained(rows: DataFrame)(
         writer: (DataFrame, String, () => Unit) => DataStreamWriter[Row])
         : Unit = {
-      val src = java.nio.file.Files.createTempDirectory("drain_src").toString
+      val src = tempDir("drain_src").toString
       rows.repartition(2).write.mode("overwrite").parquet(src)
       val stream = spark.readStream.schema(rows.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      val ckpt = java.nio.file.Files.createTempDirectory("drain_ckpt").toString
+      val ckpt = tempDir("drain_ckpt").toString
       OpCache.release()
       spark.catalog.clearCache()
       val rdds = persisted()
@@ -633,7 +628,7 @@ class StreamingSpec extends SparkSpec {
       onBatch = (_, _) => tick()))
     val cb = Seq((0, 0, Seq(1f, 0f)), (0, 1, Seq(0f, 1f)),
       (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f))).toDF("sub", "code", "codeword")
-    val store = java.nio.file.Files.createTempDirectory("drain_cs").toString
+    val store = tempDir("drain_cs").toString
     Quantize.writeCodeStore(seed, cents, cb, "embedding", "vec_id", 2, 2,
       store, versioned = true)
     drained(vecs)((st, ckpt, tick) => StreamingFlows.streamingIngestCodeStore(
@@ -862,7 +857,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ParquetBoundary: write side feeds both batch and streaming readers") {
-    val dir = java.nio.file.Files.createTempDirectory("boundary").toString
+    val dir = tempDir("boundary").toString
     val b = new ParquetBoundary(s"$dir/stage")
     b.write(Seq((1, "a"), (2, "b")).toDF("id", "s"))
     b.write(Seq((3, "c")).toDF("id", "s"))

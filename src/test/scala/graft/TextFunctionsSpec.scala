@@ -67,6 +67,16 @@ class TextFunctionsSpec extends SparkSpec {
     val out = df.select(shingles($"text", 3).as("s")).as[Seq[String]].collect()
     assert(out(0) == Seq("a b c", "b c d"))
     assert(out(1) == Seq("a b")) // shorter than k → single whole-text shingle
+    // the edge strings the DuckDB oracle fragments reproduce exactly
+    val edge = Seq(None, Some(""), Some("x y"), Some("x y z"),
+        Some("\tx y z w")).toDF("text")
+      .select(shingles($"text", 3)).as[Seq[String]].collect().toSeq
+    assert(edge == Seq(
+      Seq(""),                         // NULL ≡ empty text
+      Seq(""),                         // empty → one empty shingle
+      Seq("x y"),                      // fewer than k tokens → whole text
+      Seq("x y z"),                    // exactly k tokens → one window
+      Seq(" x y", "x y z", "y z w")))  // tokens' tab-edge KNOWN QUIRK
   }
 
   test("winnowing: shared run of >= w+k-1 tokens guarantees a shared fingerprint") {

@@ -39,7 +39,7 @@ class WorkerFlowSpec extends SparkSpec {
 
     // ---- async path: same branch stages, but each branch's output goes
     // through a durable boundary instead of an in-plan union ----
-    val dir = java.nio.file.Files.createTempDirectory("worker_flow").toString
+    val dir = tempDir("worker_flow").toString
     val boundary = new ParquetBoundary(s"$dir/stage")
     val appS = new App(spark)
     // branch terminal steps write to the boundary (≙ Step.add_job enqueue)
@@ -72,7 +72,7 @@ class WorkerFlowSpec extends SparkSpec {
   }
 
   test("boundary introspection: jobsCount / isEmpty / flush") {
-    val dir = java.nio.file.Files.createTempDirectory("wf_introspect").toString
+    val dir = tempDir("wf_introspect").toString
     val b = new ParquetBoundary(s"$dir/q")
     assert(b.isEmpty(spark) && b.jobsCount(spark) == 0L) // before any write
     b.write(Seq(1, 2, 3).toDF("x"))
@@ -89,7 +89,7 @@ class WorkerFlowSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = java.nio.file.Files.createTempDirectory("wf_limit").toString
+    val dir = tempDir("wf_limit").toString
     val b = new ParquetBoundary(s"$dir/q", limit = Some(3L))
     b.write(Seq(1, 2, 3).toDF("x")) // fills to the limit
     val blocked = Future { b.write(Seq(4).toDF("x")) }
@@ -109,7 +109,7 @@ class WorkerFlowSpec extends SparkSpec {
     // log upgrades the resulting at-least-once redelivery to exactly-once
     // output (no dupes from the failed attempt, no losses).
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("wf_retry").toString
+    val dir = tempDir("wf_retry").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1, 2, 3, 4).toDF("x"))
     WorkerFlowSpec.crashArmed.set(true)
@@ -157,7 +157,7 @@ class WorkerFlowSpec extends SparkSpec {
 
   test("trimCommitted releases exactly the checkpoint-committed files") {
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("wf_trimck").toString
+    val dir = tempDir("wf_trimck").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1, 2, 3).toDF("x"))
     b.write(Seq(4, 5).toDF("x"))
@@ -193,7 +193,7 @@ class WorkerFlowSpec extends SparkSpec {
     // source log batch 1 (fileB) belongs to query batch 2, which is NOT
     // yet committed — a trim keyed naively on commits/ max (= 1) would
     // delete fileB and silently lose its rows on replay.
-    val dir = java.nio.file.Files.createTempDirectory("wf_offsets").toString
+    val dir = tempDir("wf_offsets").toString
     val b = new ParquetBoundary(s"$dir/q")
     def dataFiles = new java.io.File(s"$dir/q").listFiles
       .filter(f => f.isFile && !f.getName.startsWith("_") &&
@@ -237,7 +237,7 @@ class WorkerFlowSpec extends SparkSpec {
     // directly ("v1" since Spark 2.1). If an upgrade ever bumps the
     // serialization version, trimming must throw with a clear message —
     // not silently no-trim (space leak) or misparse (data loss).
-    val dir = java.nio.file.Files.createTempDirectory("wf_ckver").toString
+    val dir = tempDir("wf_ckver").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1).toDF("x"))
     def writeLog(rel: String, lines: Seq[String]): Unit = {
@@ -261,7 +261,7 @@ class WorkerFlowSpec extends SparkSpec {
   test("autoTrim keeps the boundary bounded across many micro-batches") {
     // ≙ BRPOP consume-on-read with no manual trim calls: a long-lived
     // worker's queue directory must hold only not-yet-committed files.
-    val dir = java.nio.file.Files.createTempDirectory("wf_autotrim").toString
+    val dir = tempDir("wf_autotrim").toString
     val b = new ParquetBoundary(s"$dir/q")
     def dataFileCount = {
       val d = new java.io.File(s"$dir/q")
@@ -311,7 +311,7 @@ class WorkerFlowSpec extends SparkSpec {
     // must, after a trim + checkpoint restart, still emit every row
     // exactly once — i.e. the trim never deletes a file the restarted
     // reader still needs.
-    val dir = java.nio.file.Files.createTempDirectory("wf_crashtrim").toString
+    val dir = tempDir("wf_crashtrim").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1, 2).toDF("x"))
     WorkerFlowSpec.crashArmed.set(true)
@@ -349,7 +349,7 @@ class WorkerFlowSpec extends SparkSpec {
     // A worker draining TWO queues in one query has one offsets line and
     // one sources/<idx>/ log per source; trimming boundary B with source
     // A's index would delete the wrong queue's files. Pin the mapping.
-    val dir = java.nio.file.Files.createTempDirectory("wf_unionidx").toString
+    val dir = tempDir("wf_unionidx").toString
     val b0 = new ParquetBoundary(s"$dir/q0")
     val b1 = new ParquetBoundary(s"$dir/q1")
     b0.write(Seq(1, 2).toDF("x"))
@@ -375,7 +375,7 @@ class WorkerFlowSpec extends SparkSpec {
   }
 
   test("trim(upToEpochMs) releases files by age") {
-    val dir = java.nio.file.Files.createTempDirectory("wf_trimage").toString
+    val dir = tempDir("wf_trimage").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1, 2).toDF("x"))
     val afterFirst = System.currentTimeMillis()
@@ -388,7 +388,7 @@ class WorkerFlowSpec extends SparkSpec {
   }
 
   test("limitTimeoutMs fails a stuck producer instead of wedging it") {
-    val dir = java.nio.file.Files.createTempDirectory("wf_timeout").toString
+    val dir = tempDir("wf_timeout").toString
     val b = new ParquetBoundary(s"$dir/q", limit = Some(1L),
       limitTimeoutMs = Some(400L))
     b.write(Seq(1).toDF("x")) // fills to the limit
@@ -431,7 +431,7 @@ class WorkerFlowSpec extends SparkSpec {
 
   test("a fully-drained queue reads as empty, not a schema-inference crash") {
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("wf_drained").toString
+    val dir = tempDir("wf_drained").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1, 2).toDF("x"))
     b.readStream(spark).writeStream.format("parquet")
@@ -450,7 +450,7 @@ class WorkerFlowSpec extends SparkSpec {
   }
 
   test("schema-divergent append to a queue is rejected at write time") {
-    val dir = java.nio.file.Files.createTempDirectory("wf_schema").toString
+    val dir = tempDir("wf_schema").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(1).toDF("x"))
     val err = intercept[IllegalArgumentException] {
@@ -482,7 +482,7 @@ class WorkerFlowSpec extends SparkSpec {
   }
 
   test("empty-queue reads: missing directory means empty, not a crash") {
-    val dir = java.nio.file.Files.createTempDirectory("wf_empty").toString
+    val dir = tempDir("wf_empty").toString
     val b = new ParquetBoundary(s"$dir/q")
     // consumer-before-producer: batch read sees an empty queue
     assert(b.read(spark).isEmpty)
@@ -518,7 +518,7 @@ class WorkerFlowSpec extends SparkSpec {
 
   test("reducer drops a malformed hub id instead of crash-looping") {
     import graft.streaming.StreamingReducer.Arrival
-    val dir = java.nio.file.Files.createTempDirectory("wf_badkey").toString
+    val dir = tempDir("wf_badkey").toString
     val b = new ParquetBoundary(s"$dir/q")
     b.write(Seq(
       Arrival("job:2", 0, """{"v":1}"""),
