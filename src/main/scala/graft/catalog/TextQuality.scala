@@ -402,17 +402,20 @@ object TextQuality extends Family {
        |FROM q GROUP BY source ORDER BY source""".stripMargin
   }
 
-  /** Heavy-hitter n-gram gate ([[operators.TextProfile.heavyNgrams]],
-    * q108 verdict pattern): the merged Misra–Gries summary must contain
-    * EVERY trigram whose exact count exceeds N/(capacity+1) and report
-    * only counts in [true − N/(capacity+1), true] — the mergeable-MG
-    * guarantee checked in-plan against exact counts at fixture scale
-    * (capacity 64 ≪ the fixture's trigram vocabulary, so evictions and
-    * merge trims genuinely happen). Oracle pins the verdicts. */
-  query("q145_heavy_ngrams") { (s, dir) =>
+  /** q145's verdicts over any document frame. The fixture's own trigram
+    * counts all stay under N/(capacity+1) (at most 9 against ~400 at 500
+    * docs), which left the summary empty at some partition counts, so a
+    * footer is planted twice on every document IN-PLAN (q150's
+    * planting): its three trigrams occur 2×|docs| times, about twice the
+    * bound, and the recall clause and `mgRows.nonEmpty` test real heavy
+    * hitters at any partition layout (PropertySpec runs 1, 4 and 8). */
+  private[graft] def heavyNgramsGate(s: SparkSession,
+                                     documents: DataFrame): DataFrame = {
     import s.implicits._
-    val docs = parallelize(t(s, dir, "documents"))
     val cap = 64
+    val footer = " subscribe to our newsletter now"
+    val docs = documents.select(
+      concat(coalesce(col("text"), lit("")), lit(footer + footer)).as("text"))
     val grams = operators.OpCache.track(docs
       .select(explode(TextFunctions.shingles(col("text"), 3)).as("g"))
       .persist())
@@ -429,6 +432,17 @@ object TextQuality extends Family {
     Gate.verdict(s)(
       ("mg_estimates_within_bound", 0.0, bad == 0L && mgRows.nonEmpty),
       ("mg_heavy_recall", 1.0, missed == 0L))
+  }
+
+  /** Heavy-hitter n-gram gate ([[operators.TextProfile.heavyNgrams]],
+    * q108 verdict pattern): the merged Misra–Gries summary must contain
+    * EVERY trigram whose exact count exceeds N/(capacity+1) and report
+    * only counts in [true − N/(capacity+1), true] — the mergeable-MG
+    * guarantee checked in-plan against exact counts at fixture scale
+    * (capacity 64 ≪ the fixture's trigram vocabulary, so evictions and
+    * merge trims genuinely happen). Oracle pins the verdicts. */
+  query("q145_heavy_ngrams") { (s, dir) =>
+    heavyNgramsGate(s, parallelize(t(s, dir, "documents")))
   } {
     // q145 is a guarantee GATE (q108 pattern): the merged Misra–Gries
     // summary's recall and error bounds verified in-plan vs exact counts.

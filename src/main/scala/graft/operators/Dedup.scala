@@ -906,21 +906,27 @@ object Dedup {
 
   /**
    * Exact n-gram Jaccard similarity for candidate pairs: token-set overlap
-   * of word-k-shingles. Joins the *shingle sets* through the candidate pair
-   * list, so cost is |candidates|, not |corpus|².
+   * of word-k-shingles. Each candidate row picks up both TEXTS by id and
+   * shingles them on the pair (each side bound once), so cost tracks
+   * |candidates|, never |corpus|: no corpus-wide shingle table is built
+   * or shipped, and a join moves a text, which is smaller than its
+   * shingle array. `array_intersect`/`array_union` dedup, so a repeated
+   * shingle counts once. A candidate id missing from `df` yields no row;
+   * a duplicated candidate row yields a duplicated row.
    */
   def ngramJaccard(df: DataFrame, candidates: DataFrame, textCol: String,
                    idCol: String, shingleK: Int = 3): DataFrame = {
-    val sets = df.select(col(idCol).as("id"),
-      array_distinct(shingles(col(textCol), shingleK)).as("sh"))
-    val a = sets.alias("a")
-    val b = sets.alias("b")
+    def side(s: String) =
+      df.select(col(idCol).as(s"__${s}_id"), col(textCol).as(s"__${s}_text"))
     candidates
-      .join(a, col("id_a") === col("a.id"))
-      .join(b, col("id_b") === col("b.id"))
+      .join(side("a"), col("id_a") === col("__a_id"))
+      .join(side("b"), col("id_b") === col("__b_id"))
       .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /
-          size(array_union(col("a.sh"), col("b.sh")))).as("jaccard"))
+        bindOnce(shingles(col("__a_text"), shingleK)) { a =>
+          bindOnce(shingles(col("__b_text"), shingleK)) { b =>
+            size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+          }
+        }.as("jaccard"))
   }
 
   /**
@@ -949,7 +955,7 @@ object Dedup {
    * singleton documents (no near-dup edge, or a degenerate self-pair) are
    * trivially their own cluster and are left untouched — callers drop
    * `keep = false` ids with [[keepRepresentatives]]. The final
-   * edge set and node list stay cached for the returned frame; release with
+   * edge set stays cached for the returned frame; release with
    * [[OpCache.release]] after consuming it.
    *
    * If `maxRounds` exhausts before the fixpoint, the result may label
@@ -959,10 +965,33 @@ object Dedup {
   def resolveClusters(pairs: DataFrame, idACol: String = "id_a",
                       idBCol: String = "id_b", maxRounds: Int = 50,
                       strict: Boolean = false): DataFrame = {
+    val (edges, _) = clusterEdges(pairs, idACol, idBCol, maxRounds, strict)
+    // the members are the final edge set's ids: a round keeps the node set
+    // (an id with a smaller neighbor stays the u of an edge, any other id
+    // stays the v of one), so the input's ids are all still there
+    val nodes = edges.select(col("u").as("id"))
+      .union(edges.select(col("v").as("id")))
+      .distinct()
+    // at the fixpoint the edge set is a star forest (each non-root id has
+    // exactly one edge, to its component min); the groupBy-min is a cheap
+    // defensive reduction in case maxRounds cut the loop short
+    val labels = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("root"))
+    nodes.join(labels, Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("root"), col("id")).as("cluster_id"),
+        col("root").isNull.as("keep"))
+  }
+
+  /** [[resolveClusters]]' star-round loop: the final (u, v) edge set, its
+    * cache tracked for [[OpCache.release]], and its size. */
+  private def clusterEdges(pairs: DataFrame, idACol: String, idBCol: String,
+                           maxRounds: Int, strict: Boolean): (DataFrame, Long) = {
     // canonical larger→smaller directed edges; the loop preserves this
     // invariant (every emitted edge points at a strictly smaller id).
     // Rounds materialize via OpCache.materializeHandle (persisted-RDD
     // lineage truncation — localCheckpoint has no public release path).
+    // (Degenerate self-pairs are dropped here; a doc paired only with
+    // itself is a singleton and is handled like any un-paired doc.)
     var (edges, edgesRdd, edgeCount) = OpCache.materializeHandle(pairs
       .select(greatest(col(idACol), col(idBCol)).as("u"),
         least(col(idACol), col(idBCol)).as("v"))
@@ -971,14 +1000,6 @@ object Dedup {
     // the not-yet-swapped round result, for failure cleanup only
     var inFlightRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
     try {
-      // derive the member list from the materialized edge set, NOT from
-      // `pairs` — the pair frame is typically an expensive similarity join,
-      // and a second scan of it would recompute that join just to list ids.
-      // (Degenerate self-pairs are dropped above; a doc paired only with
-      // itself is a singleton and is handled like any un-paired doc.)
-      val nodes = OpCache.materialize(edges.select(col("u").as("id"))
-        .union(edges.select(col("v").as("id")))
-        .distinct())
       var converged = edgeCount == 0L
       var round = 0
       while (!converged && round < maxRounds) {
@@ -995,8 +1016,8 @@ object Dedup {
         round += 1
       }
       // maxRounds exhausting mid-chain is a silent-wrong-answer hazard: the
-      // defensive groupBy-min below still leaves multi-hop chains pointing
-      // at a non-canonical root. Never fall through quietly.
+      // defensive groupBy-min in resolveClusters still leaves multi-hop
+      // chains pointing at a non-canonical root. Never fall through quietly.
       if (!converged) {
         val msg = s"resolveClusters did not converge after $maxRounds " +
           s"round(s) ($edgeCount edges left): cluster ids are approximate " +
@@ -1007,18 +1028,9 @@ object Dedup {
         log.warn(msg)
       }
       OpCache.trackRdd(edgesRdd)
-      // at the fixpoint the edge set is a star forest (each non-root id has
-      // exactly one edge, to its component min); the groupBy-min is a cheap
-      // defensive reduction in case maxRounds cut the loop short
-      val labels = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("root"))
-      nodes.join(labels, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("root"), col("id")).as("cluster_id"),
-          col("root").isNull.as("keep"))
+      (edges, edgeCount)
     } catch { case e: Throwable =>
       // a failed round must not strand cache entries no release() can reach
-      // (nodes is already tracked; double-unpersist after trackRdd is a
-      // harmless no-op)
       edgesRdd.unpersist(blocking = false)
       if (inFlightRdd != null) inFlightRdd.unpersist(blocking = false)
       throw e
@@ -1091,8 +1103,17 @@ object Dedup {
   /**
    * Applies a cluster resolution back to the corpus: keeps every document
    * that is either untouched by `pairs` (no near-dup edge) or its cluster's
-   * canonical survivor. The anti-join ships only the loser id list.
-   * `idACol`/`idBCol` name the pair columns, as in [[resolveClusters]].
+   * canonical survivor. `idACol`/`idBCol` name the pair columns, as in
+   * [[resolveClusters]].
+   *
+   * The loser filter is a left anti-join sized by the losers, not the
+   * corpus: they are the distinct `u` of the CC loop's final edge set,
+   * so their number is at most its edge count. When that bound fits the
+   * session's `autoBroadcastJoinThreshold` the loser ids broadcast and
+   * the document rows never shuffle. Above it the planner's shuffle
+   * anti-join stays (the loser frame is RDD-backed and carries no size
+   * statistics, so without this sizing it never broadcasts, and a
+   * blanket hint would broadcast any size).
    */
   def keepRepresentatives(df: DataFrame, pairs: DataFrame, idCol: String,
                           idACol: String = "id_a",
@@ -1102,9 +1123,13 @@ object Dedup {
     // maxRounds/strict forward to the CC loop: a caller shipping a corpus
     // can opt into failing on non-convergence instead of silently keeping
     // several "representatives" of one under-contracted cluster
-    val losers = resolveClusters(pairs, idACol, idBCol, maxRounds, strict)
-      .filter(!col("keep")).select(col("id"))
-    df.join(losers.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    val (edges, edgeCount) = clusterEdges(pairs, idACol, idBCol, maxRounds, strict)
+    // resolveClusters' keep = false rows are exactly the final edges' u
+    val losers = edges.select(col("u").as(idCol)).distinct()
+    // Spark's own row-size estimate: 8 bytes of row overhead plus the id
+    val maxBytes = edgeCount * (8L + losers.schema.head.dataType.defaultSize)
+    val fits = maxBytes <= df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    df.join(if (fits) broadcast(losers) else losers, Seq(idCol), "left_anti")
   }
 
   /**
@@ -1336,7 +1361,7 @@ object Dedup {
   /** The full SemDeDup decision: cluster, compare within clusters, resolve
     * duplicate components, keep one representative per component (minimum
     * id) — the corpus that ships. Composes [[semDedupPairs]] with
-    * [[keepRepresentatives]]; the anti-join moves only loser ids. */
+    * [[keepRepresentatives]]. */
   def semDedup(df: DataFrame, vecCol: String, idCol: String,
                k: Int, tau: Double, iters: Int = 2,
                probes: Int = 2): DataFrame =

@@ -262,6 +262,38 @@ class CurateSpec extends SparkSpec {
       s"a missing target stratum must zero the whole mix: ${rates("en")}")
   }
 
+  /** mixingRates' rows as (stratum, n_docs, weight, rate, sample_n). */
+  private def rateRows(df: org.apache.spark.sql.DataFrame,
+                       targets: Map[String, Double]) =
+    Curate.mixingRates(df, "lang", targets).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getDouble(2),
+        r.getDouble(3), r.getLong(4))).toSet
+
+  test("mixingRates counts NULL-stratum rows at weight 0") {
+    import spark.implicits._
+    // capacities en 12, de 6, so T = 6; the NULL stratum matches no target,
+    // keeps its own row with its count and is never sampled
+    val df = ((1L to 6L).map(i => (i, Option("en"))) ++
+      (7L to 9L).map(i => (i, Option("de"))) :+ ((10L, Option.empty[String])))
+      .toDF("doc_id", "lang")
+    assert(rateRows(df, Map("en" -> 0.5, "de" -> 0.5)) == Set(
+      (Some("en"), 6L, 0.5, 0.5, 3L),
+      (Some("de"), 3L, 0.5, 1.0, 3L),
+      (None, 1L, 0.0, 0.0, 0L)))
+  }
+
+  test("mixingRates gives an observed stratum absent from targets rate 0") {
+    import spark.implicits._
+    // capacities en 10/0.7, de 2/0.3: de binds at rate 1 (2 rows), en
+    // takes 0.7 T = 4.67 of its 10; fr is counted but never sampled
+    val df = ((1L to 10L).map(i => (i, "en")) ++ (11L to 12L).map(i => (i, "de")) ++
+      (13L to 17L).map(i => (i, "fr"))).toDF("doc_id", "lang")
+    assert(rateRows(df, Map("en" -> 0.7, "de" -> 0.3)) == Set(
+      (Some("en"), 10L, 0.7, 0.466667, 4L),
+      (Some("de"), 2L, 0.3, 1.0, 2L),
+      (Some("fr"), 5L, 0.0, 0.0, 0L)))
+  }
+
   test("packSequences: concatenation-offset bins, oversized docs included") {
     import spark.implicits._
     // one shard (ids all ≡ 0 mod 1): tokens 1000, 1000, 5000, 100 with

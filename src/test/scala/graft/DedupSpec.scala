@@ -48,6 +48,52 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("ngramJaccard equals a driver-side word-shingle set reference") {
+    // the reference restates the `tokens` contract (NULL ≡ "", lower-cased,
+    // space-trimmed, split on whitespace runs) and the `shingles` one (a
+    // document of at most k tokens is one whole-text shingle), then takes
+    // |A ∩ B| / |A ∪ B| over Scala sets of word 3-shingles
+    val k = 3
+    def shingleSet(t: String): Set[String] = {
+      val s = Option(t).getOrElse("").toLowerCase.replaceAll("^ +| +$", "")
+      val toks = if (s.isEmpty) Seq.empty[String] else s.split("\\s+", -1).toSeq
+      if (toks.size <= k) Set(toks.mkString(" "))
+      else toks.sliding(k).map(_.mkString(" ")).toSet
+    }
+    val texts = Seq(
+      1L -> null,                          // NULL text
+      2L -> "",                            // empty text
+      3L -> "a b",                         // fewer than k tokens
+      4L -> "a b c",                       // exactly k tokens
+      5L -> "a b c a b c a b c",           // repeated shingles
+      6L -> "A  b c d",                    // case and space runs
+      7L -> "a b c d e",
+      8L -> "x y")
+    val df = texts.toDF("doc_id", "text")
+    val cands = Seq(
+      (1L, 2L), (1L, 3L), (2L, 3L), (3L, 8L), (4L, 5L), (4L, 7L), (5L, 7L),
+      (6L, 7L), (3L, 4L),
+      (4L, 5L),                            // duplicated candidate row
+      (3L, 99L), (99L, 4L))                // an id missing from df
+      .toDF("id_a", "id_b")
+    val byId = texts.toMap
+    val want = cands.as[(Long, Long)].collect().toSeq
+      .filter { case (a, b) => byId.contains(a) && byId.contains(b) }
+      .map { case (a, b) =>
+        val (sa, sb) = (shingleSet(byId(a)), shingleSet(byId(b)))
+        (a, b, (sa & sb).size.toDouble / (sa | sb).size)
+      }.sorted
+    val got = Dedup.ngramJaccard(df, cands, "text", "doc_id", k)
+      .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)]
+      .collect().toSeq.sorted
+    assert(got == want)
+    // the cases above really cover what they claim
+    assert(want.count(_._1 == 4L) == 3, "the duplicated (4, 5) row must stay two rows")
+    assert(want.contains((1L, 2L, 1.0)), "NULL and empty text share the empty shingle")
+    assert(want.contains((4L, 5L, 1.0 / 3)), "a repeated shingle counts once")
+    assert(want.contains((6L, 7L, 2.0 / 3)))
+  }
+
   test("simhash blocking finds near-identical docs within hamming budget") {
     val pairs = Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = 3)
       .collect()

@@ -89,7 +89,11 @@ class LambdaCaptureSpec extends SparkSpec {
     "Tokenize.spanCorrupt" ->
       graft.operators.Tokenize.spanCorrupt(docs, "text", "doc_id"),
     "Multimodal.sampleFrames" ->
-      graft.operators.Multimodal.sampleFrames(docs, "payload", 3))
+      graft.operators.Multimodal.sampleFrames(docs, "payload", 3),
+    "Dedup.ngramJaccard" ->
+      graft.operators.Dedup.ngramJaccard(docs,
+        docs.select(col("doc_id").as("id_a"), col("doc_id").as("id_b")),
+        "text", "doc_id").select(col("jaccard")))
 
   kernels.foreach { case (name, df) =>
     test(s"no per-element lambda captures a computed expression: $name") {

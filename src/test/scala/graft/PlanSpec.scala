@@ -142,6 +142,74 @@ class PlanSpec extends SparkSpec {
       s"dedup pipeline must stay blocked/joined, not quadratic:\n$plan")
   }
 
+  /** The survivor filter's anti-joins as planned (AQE's initial plan,
+    * before any stage runs). */
+  private def plannedAntiJoins(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      case j: SortMergeJoinExec if j.joinType == LeftAnti => j
+    }
+  }
+
+  private lazy val clusterFixture = {
+    import spark.implicits._
+    (Seq((1L, "x"), (2L, "x"), (3L, "y"), (4L, "z")).toDF("doc_id", "text"),
+      Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")) // 1-2-3 one cluster
+  }
+
+  private def survivors(kept: org.apache.spark.sql.DataFrame): Seq[Long] =
+    kept.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("keepRepresentatives broadcasts a small loser set: documents never shuffle") {
+    // the loser ids are at most the CC loop's final edge count, so a set
+    // under autoBroadcastJoinThreshold ships to every task and the
+    // document rows stay where they are — a sort-merge anti-join here
+    // shuffles the whole corpus (text included) to drop a few ids
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val (df, pairs) = clusterFixture
+    val kept = graft.operators.Dedup.keepRepresentatives(df, pairs, "doc_id")
+    val plan = kept.queryExecution.explainString(ExplainMode.fromString("simple"))
+    val joins = plannedAntiJoins(kept)
+    assert(joins.size == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec],
+      s"the loser filter must plan a broadcast hash anti-join:\n$plan")
+    val docSide = joins.head.asInstanceOf[BroadcastHashJoinExec].left
+    assert(docSide.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the document side must not be shuffled:\n$plan")
+    assert(survivors(kept) == Seq(1L, 4L))
+    graft.operators.OpCache.release()
+  }
+
+  test("keepRepresentatives falls back to a shuffle anti-join when broadcast is off") {
+    // the broadcast is sized against the session threshold, never forced:
+    // with broadcasting disabled the same survivors come out of the
+    // sort-merge anti-join
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val (df, pairs) = clusterFixture
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val kept = graft.operators.Dedup.keepRepresentatives(df, pairs, "doc_id")
+      val joins = plannedAntiJoins(kept)
+      assert(joins.size == 1 && joins.head.isInstanceOf[SortMergeJoinExec],
+        "with broadcast disabled the loser filter must be a sort-merge " +
+          s"anti-join:\n${kept.queryExecution.explainString(ExplainMode.fromString("simple"))}")
+      assert(survivors(kept) == Seq(1L, 4L))
+    } finally {
+      old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      graft.operators.OpCache.release()
+    }
+  }
+
   test("q90 stratified sample plans as a pure scan+filter (zero shuffles)") {
     // the 100 TB claim on rate sampling: a deterministic hash filter needs
     // no exchange at any corpus size — one appearing here means the

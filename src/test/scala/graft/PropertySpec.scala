@@ -164,6 +164,22 @@ class PropertySpec extends SparkSpec {
     assert(mg.size <= cap, s"summary exceeded capacity: ${mg.size}")
   }
 
+  test("q145's heavy-n-gram gate holds at 1, 4 and 8 document partitions") {
+    // the merged summary depends on the partition layout; the verdicts
+    // must not. On the sf0.01 documents the gate without its planted
+    // footer read FALSE at 8 partitions only
+    val docs = spark.read.parquet(
+      s"${new java.io.File(sfDir).getParent}/sf0.01/documents.parquet")
+    Seq(1, 4, 8).foreach { p =>
+      val verdicts = graft.catalog.TextQuality
+        .heavyNgramsGate(spark, docs.repartition(p))
+        .collect().map(r => r.getString(0) -> r.getBoolean(2)).toMap
+      graft.operators.OpCache.release()
+      assert(verdicts == Map("mg_estimates_within_bound" -> true,
+        "mg_heavy_recall" -> true), s"at $p partitions: $verdicts")
+    }
+  }
+
   test("projection is idempotent: select(c) . select(c) == select(c)") {
     val df = sample(Gen.zip(Gen.chooseNum(-100, 100), Gen.alphaStr), 200, 1L)
       .toDF("a", "b")
