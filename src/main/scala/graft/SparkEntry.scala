@@ -28,4 +28,18 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     specs.map(q => q.name -> q.oracle).toMap
+
+  /** Run query `name` and hand its frame to `consume`, then release what
+    * the run left, whether or not it threw: operators persist reused
+    * intermediates ([[operators.OpCache]]) and store gates make scratch
+    * stores and dirs ([[catalog.Gate]]). Without a per-query release a
+    * sweep holds every cache at once and leaves every store behind.
+    * Verify and Bench run each query through this. */
+  def runReleased[A](spark: SparkSession, sfDir: String, name: String)
+                    (consume: DataFrame => A): A =
+    try consume(queries(name)(spark, sfDir))
+    finally {
+      operators.OpCache.release()
+      Gate.release(spark)
+    }
 }

@@ -43,23 +43,18 @@ object Verify {
       f.delete()
     }
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.keys
+      .filter(name => only.isEmpty || only(name))
+      .foreach { name =>
       // stale-dump guard: a query that fails during PLAN CONSTRUCTION
       // (before the overwrite) must not leave last run's parquet behind
       rmTree(new java.io.File(s"$outDir/$name"))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try SparkEntry.runReleased(spark, sfDir, name)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = String.valueOf(e.getMessage)
       }
-      finally
-        // operators persist reused intermediates; without a per-query
-        // release a full sweep holds every dedup/similarity cache
-        // simultaneously
-        operators.OpCache.release()
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -62,18 +62,38 @@ object Gate {
   private lazy val pid =
     java.lang.Long.toHexString(ProcessHandle.current().pid())
 
-  /** Per-process scratch table `<name>_<pid>`, with any copy an earlier run
-    * left dropped — the table and each `<table><sibling>` companion. */
+  /** Scratch stores and dirs made since the last [[release]] — a query
+    * may make them from concurrent `Par` blocks. */
+  private val stores = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** Per-process scratch store `<name>_<pid>`, with any copy an earlier run
+    * left dropped — the store and each `<store><sibling>` companion. Each
+    * is recorded for [[release]]. */
   def scratchStore(s: SparkSession, name: String, siblings: String*): String = {
     val tbl = s"${name}_$pid"
-    (tbl +: siblings.map(tbl + _)).foreach(Shared.dropLocalTable(s, _))
+    (tbl +: siblings.map(tbl + _)).foreach { t =>
+      Shared.dropLocalTable(s, t)
+      stores.add(t)
+    }
     tbl
   }
 
-  /** Per-process scratch directory `<tmpdir>/graft_<name>_<pid>`, emptied. */
+  /** Scratch directory `<name>` under the per-process
+    * [[Shared.roundTripBase]], emptied, and recorded for [[release]]. */
   def scratchDir(name: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_$pid"
+    val dir = s"${Shared.roundTripBase}/$name"
     Shared.rmTree(new java.io.File(dir))
+    dirs.add(dir)
     dir
+  }
+
+  /** Drop every scratch store and delete every scratch dir made since the
+    * last call — run after each query, so a finished run leaves none. */
+  def release(s: SparkSession): Unit = {
+    Iterator.continually(stores.poll()).takeWhile(_ != null)
+      .foreach(Shared.dropLocalTable(s, _))
+    Iterator.continually(dirs.poll()).takeWhile(_ != null)
+      .foreach(d => Shared.rmTree(new java.io.File(d)))
   }
 }

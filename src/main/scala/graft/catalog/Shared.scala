@@ -66,7 +66,7 @@ object Shared {
     * parallel Verify invocations) must not clobber each other's files.
     * Deleted on JVM exit — a long-lived driver invoking the catalog for
     * months must not accumulate fixture-sized CSV/JSON dumps in /tmp. */
-  private[catalog] lazy val roundTripBase: String = {
+  private[graft] lazy val roundTripBase: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_roundtrip_")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       rmTree(dir.toFile)
@@ -85,19 +85,22 @@ object Shared {
     f.delete(); ()
   }
 
-  /** Drop a catalog table AND its warehouse directory: a table dir left
-    * behind by a KILLED run isn't in the catalog, so the DROP misses it
-    * and saveAsTable would fail on the stale location — clean at the
-    * session's ACTUAL warehouse dir (only meaningful for a
+  /** Drop a store or table ([[operators.Layout.dropStore]]: its view,
+    * every version, staging tables) AND its warehouse directories: a
+    * directory left behind by a KILLED run isn't in the catalog, so the
+    * drop misses it and saveAsTable would fail on the stale location —
+    * clean at the session's ACTUAL warehouse dir (only meaningful for a
     * local-filesystem warehouse). Queries use per-process table names so
     * two concurrent runs in one repo dir can't clobber each other. */
   private[catalog] def dropLocalTable(s: SparkSession, tbl: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $tbl")
+    operators.Layout.dropStore(s, tbl)
     val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
     if (wh.getScheme == null || wh.getScheme == "file") {
       val root = if (wh.getScheme == null) wh.toString else wh.getPath
-      val loc = new java.io.File(root, tbl)
-      rmTree(loc)
+      val own = ("^" + java.util.regex.Pattern.quote(tbl.toLowerCase) +
+        "(__v\\d+|__graft_rw_.*)?$").r.pattern
+      Option(new java.io.File(root).listFiles).getOrElse(Array.empty)
+        .filter(f => own.matcher(f.getName).matches()).foreach(rmTree)
     }
   }
 

@@ -32,7 +32,9 @@ object Stores extends Family {
       Similarity.trainCentroids(e, "embedding", "vec_id", k = 10),
       operators.Quantize.trainCodebook(e, "embedding", "vec_id",
         dim = 64, m = m, ksub = 16))
-    val store = roundTripDir("graft_q118_codestore")
+    // a code store refuses a write onto a non-empty path: an emptied
+    // scratch dir per run
+    val store = s"${Gate.scratchDir("q118")}/store"
     operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
       m, subDim, store)
     val queries = e.filter(pmod(col("vec_id"), lit(100)) === 0)
@@ -333,7 +335,7 @@ object Stores extends Family {
   query("q138_store_compact") { (s, dir) =>
     val docs = parallelize(t(s, dir, "documents"))
     val m = pmod(col("doc_id"), lit(3))
-    val tbl = Gate.scratchStore(s, "q138_fp", "__graft_compact")
+    val tbl = Gate.scratchStore(s, "q138_fp")
     Dedup.writeFingerprintStore(docs.filter(m === 2), "text", tbl, buckets = 8)
     Dedup.ingestBatch(s, docs.filter(m === 0), "text", "doc_id", tbl)
     // pre-compaction snapshot through an RDD handle (q137's lesson: the
@@ -445,8 +447,7 @@ object Stores extends Family {
   query("q148_index_retract") { (s, dir) =>
     val docs = operators.OpCache.track(parallelize(t(s, dir, "documents"))
       .filter(length(trim(col("text"))) > 0).persist())
-    val tbl = Gate.scratchStore(s, "q148_idx", "_stats", "__graft_compact",
-      "__graft_old")
+    val tbl = Gate.scratchStore(s, "q148_idx", "_stats")
     val tbl2 = Gate.scratchStore(s, "q148_rb", "_stats")
     val removed = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
       .select(col("doc_id"))
@@ -539,8 +540,8 @@ object Stores extends Family {
       |ORDER BY metric""".stripMargin
   }
 
-  /** VERSIONED code-store lifecycle gate ([[operators.Quantize]] manifest
-    * form — q149's twin on the concurrent-reader-safe store): two
+  /** Code-store generation-chain gate ([[operators.Quantize]] manifest
+    * store — q149's twin, two retractions deep): two
     * sequential retractions walk the generation chain (v1→v2→v3, each
     * swap one atomic manifest rename), after which the store must equal
     * a one-shot rebuild over the final survivors, retracted ids must
@@ -565,13 +566,13 @@ object Stores extends Family {
     operators.Par.par2(
       {
         operators.Quantize.writeCodeStore(e, cents, cb, "embedding",
-          "vec_id", 4, 16, dirA, versioned = true)
+          "vec_id", 4, 16, dirA)
         operators.Quantize.removeFromCodeStore(s, dirA, rm1, "vec_id")
         operators.Quantize.removeFromCodeStore(s, dirA, rm2, "vec_id")
       },
       operators.Quantize.writeCodeStore(
         e.join(removed, Seq("vec_id"), "left_anti"), cents, cb,
-        "embedding", "vec_id", 4, 16, dirB, versioned = true))
+        "embedding", "vec_id", 4, 16, dirB))
     val got = operators.Quantize.readCodeStore(s, dirA)
     val want = operators.Quantize.readCodeStore(s, dirB)
     // the rebuild-parity aggregate and the retracted-id serving probe
@@ -596,7 +597,7 @@ object Stores extends Family {
       ("vstore_removed_never_served", 0.0, lit(served == 0L)),
       ("vstore_generation_chain", 3.0, lit(chainOk)))
   } {
-    // q157 is q149's twin on the VERSIONED (manifest) store: the oracle
+    // q157 is q149's twin two retractions deep: the oracle
     // pins the verdict rows — retract-chain ≡ rebuild, takedown honored,
     // generation chain + grace-manifest GC policy.
     """SELECT * FROM (VALUES
@@ -630,7 +631,7 @@ object Stores extends Family {
     val (replayed, _) = operators.Par.par2(
       {
         operators.Quantize.writeCodeStore(e.filter(m3 === 0), cents, cb,
-          "embedding", "vec_id", 4, 16, dirA, versioned = true)
+          "embedding", "vec_id", 4, 16, dirA)
         operators.Quantize.ingestBatchCodeStore(s, dirA, e.filter(m3 === 1),
           cents, cb, "embedding", "vec_id", 4, 16)
         operators.Quantize.ingestBatchCodeStore(s, dirA, e.filter(m3 === 2),
@@ -639,7 +640,7 @@ object Stores extends Family {
           cents, cb, "embedding", "vec_id", 4, 16).count()
       },
       operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-        4, 16, dirB, versioned = true))
+        4, 16, dirB))
     val store = operators.Quantize.readCodeStore(s, dirA)
     val want = operators.Quantize.readCodeStore(s, dirB)
     // the sequential-equals-oneshot aggregate and the one-file-per-cell
@@ -673,7 +674,7 @@ object Stores extends Family {
     * full corpus arrives); retrain trains fresh models on the full
     * corpus and re-encodes everything behind ONE manifest swap. The
     * verdict pins: the retrained store equals a one-shot build with the
-    * models the manifest now references ([[operators.Quantize.storedModels]]
+    * models the manifest now references ([[operators.Quantize.storedPq]]
     * — readers always pair codes with their models), serving works off
     * the stored models, the generation chain lands at v2 with both the
     * grace and current manifests, and BOTH model artifacts exist (the
@@ -691,14 +692,13 @@ object Stores extends Family {
     val base = Gate.scratchDir("q160")
     val (dirA, dirB) = (s"$base/store", s"$base/oneshot")
     operators.Quantize.writeCodeStore(half, cents0, cb0, "embedding",
-      "vec_id", 4, 16, dirA, versioned = true)
+      "vec_id", 4, 16, dirA)
     // the corpus DOUBLED since the models were trained — migrate
     operators.Quantize.retrainCodeStore(s, dirA, e, "embedding", "vec_id",
       dim = 64, m = 4, ksub = 8, cells = 8)
-    val (c2, cb2) = operators.Quantize.storedModels(s, dirA).getOrElse(
-      throw new IllegalStateException("retrained store lost its models"))
+    val (c2, cb2, _, _) = operators.Quantize.storedPq(s, dirA)
     operators.Quantize.writeCodeStore(e, c2, cb2, "embedding", "vec_id",
-      4, 16, dirB, versioned = true)
+      4, 16, dirB)
     val got = operators.Quantize.readCodeStore(s, dirA)
     val want = operators.Quantize.readCodeStore(s, dirB)
     // the retrain-parity aggregate and the stored-models serving probe
@@ -724,7 +724,7 @@ object Stores extends Family {
   } {
     // q160 pins the model-generation migration verdicts (q157's pattern
     // on the retrain leg): retrained ≡ one-shot with the manifest's own
-    // models, chain + grace policy, serving through storedModels.
+    // models, chain + grace policy, serving through storedPq.
     """SELECT * FROM (VALUES
       |  ('retrain_equals_oneshot_with_stored_models',
       |   CAST(0.0 AS DOUBLE), TRUE),
@@ -883,7 +883,7 @@ object Stores extends Family {
     val base = Gate.scratchDir("q163")
     val store = s"$base/store"
     operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-      4, 16, store, versioned = true)
+      4, 16, store)
     operators.Quantize.enableCodeStoreIdBloom(s, store, "vec_id", 200000L)
     val recorded = operators.Quantize.storedIdBloom(s, store).nonEmpty
     def ingest(batch: DataFrame): Long =
@@ -949,7 +949,7 @@ object Stores extends Family {
     val base = Gate.scratchDir("q164")
     val store = s"$base/store"
     operators.Quantize.writeCodeStore(e, cents, cb, "embedding", "vec_id",
-      4, 16, store, versioned = true)
+      4, 16, store)
     // control: a same-distribution sample of the corpus itself
     val control = e.filter(pmod(col("vec_id"), lit(7)) === 3)
     // drift: a tight NEW domain the stored models never saw (the

@@ -8,14 +8,26 @@ import org.apache.spark.sql.functions.col
  * Storage-layout helpers: pre-shuffle data ONCE at write time so repeated
  * joins/aggregations on the same key read co-located buckets and skip the
  * exchange entirely — the 100 TB answer to "this join shuffles every run".
+ *
+ * Every table store is VERSIONED from its first write: the data lives in
+ * bucketed `<table>__vN` tables and the store name `<table>` is a view
+ * over the serving version. Rewrites land in `__v(N+1)` and repoint the
+ * view with one `ALTER VIEW` (atomic for readers); appends and rewrites
+ * serialize through the commit-token chain below. There is no plain-table
+ * form and no migration into this one.
  */
 object Layout {
 
   /**
-   * Write `df` as a bucketed, sorted table: `buckets` hash buckets on
+   * Write `df` as a bucketed, sorted store: `buckets` hash buckets on
    * `keyCols`, sorted within buckets. Subsequent equi-joins or aggregations
    * on exactly `keyCols` between same-bucketing tables plan with NO shuffle
-   * on either side (and no sort for sort-merge).
+   * on either side (and no sort for sort-merge) — through the store's
+   * view too, which is a plan alias, not a copy (PlanSpec-gated).
+   *
+   * The data lands in `<table>__v1` and `<table>` becomes a view over it.
+   * Like an overwrite, any earlier store of that name is dropped first
+   * ([[dropStore]]).
    *
    * The write CO-LOCATES each bucket first (`repartition(buckets, keys)`
    * is murmur3 pmod n — exactly Spark's bucket id function, the
@@ -31,14 +43,42 @@ object Layout {
    * comfortably — the parameter already carries that contract.
    */
   def writeBucketed(df: DataFrame, table: String, keyCols: Seq[String],
-                    buckets: Int): Unit =
+                    buckets: Int): Unit = {
+    val spark = df.sparkSession
+    dropStore(spark, table)
     df.repartition(buckets, keyCols.map(col): _*)
       .write
       .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
       .sortBy(keyCols.head, keyCols.tail: _*)
       .mode("overwrite")
       .format("parquet")
-      .saveAsTable(table)
+      .saveAsTable(s"${table}__v1")
+    pointView(spark, table, 1, "CREATE")
+  }
+
+  /**
+   * Drop the store `table` whole: its view, every `__vN` version, any
+   * `__graft_rw_*` staging table a dead rewrite left, and a plain table
+   * of that name. Spark refuses `DROP TABLE` on a view, so this is the
+   * one way to remove a store. No-op on a name that holds nothing.
+   */
+  def dropStore(spark: SparkSession, table: String): Unit = {
+    val cat = spark.sessionState.catalog
+    val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    val db = id.database.getOrElse(cat.getCurrentDatabase)
+    if (cat.tableExists(id)) {
+      val kind =
+        if (cat.getTableMetadata(id).tableType == CatalogTableType.VIEW) "VIEW"
+        else "TABLE"
+      spark.sql(s"DROP $kind $db.${id.table}")
+    }
+    // qualified drops: an unqualified DROP resolves in the session's
+    // CURRENT database, which for a qualified store name would miss the
+    // store's own tables and could hit an unrelated same-named one
+    (versions(spark, table).map(_._2) ++
+      cat.listTables(db, s"${id.table}__graft_rw_*").map(_.table))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
+  }
 
   def readTable(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
@@ -47,7 +87,7 @@ object Layout {
     spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
 
-  /** The `<table>__vN` versions of a versioned store, ascending by N —
+  /** The `<table>__vN` versions of a store, ascending by N —
     * discovered from the catalog, so the convention survives restarts
     * (no driver-side registry to lose). */
   private def versions(spark: SparkSession, table: String): Seq[(Int, String)] = {
@@ -65,53 +105,85 @@ object Layout {
   }
 
   // ---- view-text coupling (writer ↔ recovery parser) -------------------
-  // Every view a versioned store ever gets is written through
-  // `viewBodySql` and parsed back through `servingVersion` — the TWO
-  // halves of one contract: recoverVersioned derives the serving
-  // version from the view's SQL text (resolveStore lies mid-swap), so
-  // any change to how the writer phrases the view MUST keep the parser
-  // matching. LayoutSpec gates the round-trip on a freshly written
-  // store and after a rewrite; change either side only with both.
+  // Every view a store ever gets is written through `viewBodySql` and
+  // parsed back through `servingVersion` — the TWO halves of one
+  // contract: resolveStore's heal check derives the serving version from
+  // the view's SQL text (the highest __vN lies mid-swap), so any change
+  // to how the writer phrases the view MUST keep the parser matching.
+  // LayoutSpec gates the round-trip on a freshly written store and after
+  // a rewrite; change either side only with both.
 
-  /** The ONE view body a versioned store's name is ever bound to. */
+  /** The ONE view body a store's name is ever bound to. */
   private def viewBodySql(table: String, v: Int): String =
     s"SELECT * FROM ${table}__v$v"
+
+  /** Point the store's view at `__v<v>`: `CREATE` for a new store, else
+    * the one-op `ALTER`. Analyzing the view body caches that version's
+    * relation — file listing included — in THIS session, where an append
+    * from another session (a stream's `foreachBatch` clone) never
+    * invalidates it, so later reads here would miss those rows
+    * (StreamingSpec-caught). Drop that entry: the version lists its files
+    * afresh on its next read here, like a table saveAsTable just wrote. */
+  private def pointView(spark: SparkSession, table: String, v: Int,
+                        verb: String): Unit = {
+    spark.sql(s"$verb VIEW $table AS ${viewBodySql(table, v)}")
+    spark.sessionState.catalog.refreshTable(
+      spark.sessionState.sqlParser.parseTableIdentifier(s"${table}__v$v"))
+  }
 
   /** Parser half of the coupling: the serving version recorded in a
     * view's stored SQL text ([[viewBodySql]]'s `__vN` suffix; the LAST
     * match tolerates a db-qualified or quoted table name containing the
-    * pattern). None = not a graft-versioned view. */
+    * pattern). None = not a graft store's view. */
   private[graft] def servingVersion(viewText: String): Option[Int] =
     "__v(\\d+)".r.findAllMatchIn(viewText)
       .map(_.group(1).toInt).toSeq.lastOption
 
   /**
-   * Resolve a store name to the TABLE that appends and rewrites must
-   * target: for a versioned store (`table` is the view created by
-   * [[enableVersioning]]) the current backing `<table>__vN`; for a plain
-   * store, `table` itself. Readers never need this — `spark.table`
-   * resolves the view, and the bucketed scan underneath keeps its
-   * exchange-free join property (a view is a plan alias, not a copy).
+   * Resolve a store name to the `<table>__vN` table that appends and
+   * rewrites must target: the newest version. Readers never need this —
+   * `spark.table` resolves the view, and the bucketed scan underneath
+   * keeps its exchange-free join property. A name that is not a graft
+   * store (no view over a `__vN`) is refused.
+   *
+   * HEAL: when the serving version (read from the view text through
+   * [[servingVersion]] — the one place the serving pointer lives) holds
+   * an `r` tombstone and a higher `__vN` exists, a rewrite committed and
+   * renamed its result but never repointed the view (it crashed, or is
+   * about to repoint). The staged version is a complete store, so this
+   * finishes the swap exactly as [[commitVersioned]] would have: repoint
+   * the view, drop what the grace policy drops. Idempotent with a live
+   * writer's own repoint of the same target, so every writer heals a
+   * crashed swap on its next resolve (LayoutSpec-gated).
    */
   def resolveStore(spark: SparkSession, table: String): String = {
     val cat = spark.sessionState.catalog
     val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    if (!cat.tableExists(id)) return table
-    if (cat.getTableMetadata(id).tableType != CatalogTableType.VIEW)
-      return table
+    val cur = Some(id).filter(cat.tableExists).map(cat.getTableMetadata)
+      .filter(_.tableType == CatalogTableType.VIEW)
+      .flatMap(_.viewText).flatMap(servingVersion)
     val vs = versions(spark, table)
-    require(vs.nonEmpty,
-      s"resolveStore: $table is a view but no ${table}__vN backing table " +
-        "exists — not a graft-versioned store")
+    require(cur.nonEmpty && vs.nonEmpty,
+      s"resolveStore: $table is not a graft store (no view over a " +
+        s"${table}__vN table) — write it with Layout.writeBucketed")
+    val newer = vs.map(_._1).filter(_ > cur.get)
+    if (newer.nonEmpty && listTokens(spark,
+        coordPath(spark, s"${table}__v${cur.get}")).exists(_._2.startsWith("r"))) {
+      // ALTER VIEW = one in-place alterTable (atomic for readers);
+      // CREATE OR REPLACE VIEW would drop + recreate (see commitVersioned)
+      pointView(spark, table, newer.min, "ALTER")
+      versions(spark, table).dropRight(2)
+        .foreach { case (_, v) => spark.sql(s"DROP TABLE IF EXISTS $v") }
+    }
     vs.last._2
   }
 
-  // ---- append/rewrite commit protocol (versioned stores) --------------
+  // ---- append/rewrite commit protocol ---------------------------------
   //
   // Catalog operations have no compare-and-swap, so an append racing a
   // rewrite used to be SILENTLY lost: the rewrite's file snapshot predates
   // the append, its view repoint serves a store without those rows, and
-  // nothing ever says so. Versioned stores now serialize commits through a
+  // nothing ever says so. Stores serialize commits through a
   // TOKEN CHAIN — one-byte files `_t%09d` (content: kind `a`ppend or
   // `r`ewrite) in `_graft_coord/` inside
   // the CURRENT backing table's directory (underscore-prefixed: invisible
@@ -141,9 +213,9 @@ object Layout {
   //    view repoint is mid-flight or crashed; see recovery note below).
   //
   // Crash recovery (window: rewrite crashed between its token commit and
-  // the view repoint — one catalog op wide): either complete the swap
-  // (`ALTER VIEW <table> AS SELECT * FROM <table>__vN+1`) or
-  // drop the staged `__vN+1`/staging table and delete the `r` token file.
+  // the view repoint): a crash AFTER the rename to `__vN+1` is healed by
+  // the next [[resolveStore]] (any writer); a crash BEFORE it leaves the
+  // version closed until [[recoverVersioned]] rolls the tombstone back.
   // An append crashing between its data write and its finalization now
   // leaves a LIVE intent: every rewrite refuses until the intent has
   // been idle past the horizon (default 24 h), by which time the crashed
@@ -234,70 +306,41 @@ object Layout {
           "view repoint); retry against the current version")
 
   /**
-   * Crash recovery for a versioned store whose rewrite died MID-COMMIT —
-   * the one window the token protocol leaves open (the rewrite's `r`
-   * token committed, the view repoint never ran): the version stays
-   * CLOSED — appends and rewrites refuse with the mid-swap message —
-   * until this runs. Run it only when the crashed writer is KNOWN dead;
-   * it inspects the state and finishes the commit one way or the other
-   * (LayoutSpec-gated on both states):
-   *  - `<table>__v(N+1)` exists (the crash hit between the rename and
-   *    the repoint): COMPLETE the swap — the staged result is a fully
-   *    written store, so repoint the view to it and drop superseded
-   *    versions, exactly what [[commitVersioned]] would have done;
-   *  - no next version (the crash hit between the token and the rename):
-   *    ROLL BACK — delete the `r` tombstone so the current version
-   *    accepts commits again, and drop any orphaned `__graft_rw_*`
-   *    staging tables the dead writer left.
-   * Returns true if it changed anything; false on plain stores and on
-   * healthy versioned stores. The COMPLETION branch is always safe (a
-   * live writer's own repoint of the same target is idempotent); the
-   * ROLLBACK branch DESTROYS a live writer's staged result if that
-   * writer is merely slow between its token and its rename, so it only
-   * fires once the tombstone has been idle past `rollbackHorizonMs`
-   * (default 24 h, the [[graft.operators.Quantize.gcCodeStore]] orphan
-   * discipline) — pass 0 only when the crashed writer is KNOWN dead.
+   * Crash recovery for a store whose rewrite died MID-COMMIT between its
+   * `r` token and its rename: no next version exists, and the version
+   * stays CLOSED — appends and rewrites refuse with the mid-swap message
+   * — until this runs. (A crash after the rename needs no call: the next
+   * [[resolveStore]] completes that swap.) ROLL BACK: delete the `r`
+   * tombstone so the current version accepts commits again, and drop
+   * any orphaned `__graft_rw_*` staging tables the dead writer left.
+   * Returns true if it changed anything; false on a healthy store.
+   * Rolling back DESTROYS a live writer's staged result if that writer is
+   * merely slow between its token and its rename, so it only fires once
+   * the tombstone has been idle past `rollbackHorizonMs` (default 24 h,
+   * the [[graft.operators.Quantize.gcCodeStore]] orphan discipline) —
+   * pass 0 only when the crashed writer is KNOWN dead (LayoutSpec-gated).
    */
   def recoverVersioned(spark: SparkSession, table: String,
                        rollbackHorizonMs: Long = 24L * 3600 * 1000)
       : Boolean = {
-    if (resolveStore(spark, table) == table) return false
-    // the SERVING version comes from the VIEW's definition, not from
-    // resolveStore: in the crashed-mid-swap state the highest __vN table
-    // IS the renamed-but-never-repointed staging result, so the two
-    // diverge — exactly the divergence this op exists to repair
-    // (LayoutSpec-caught; resolveStore here would inspect the staged
-    // table's empty coord dir and see a healthy store)
-    val viewText = meta(spark, table).viewText.getOrElse(return false)
-    val cur = servingVersion(viewText).getOrElse(return false)
-    val coord = coordPath(spark, s"${table}__v$cur")
+    // resolve first: it heals a post-rename crash, after which a
+    // tombstone left on the serving version can only mean a pre-rename one
+    val coord = coordPath(spark, resolveStore(spark, table))
     val closed = listTokens(spark, coord).filter(_._2.startsWith("r"))
     if (closed.isEmpty) return false
-    val newer = versions(spark, table).map(_._1).filter(_ > cur)
-    if (newer.nonEmpty) {
-      // ALTER VIEW = one in-place alterTable (atomic for readers);
-      // CREATE OR REPLACE VIEW would drop + recreate (see commitVersioned)
-      spark.sql(s"ALTER VIEW $table AS " + viewBodySql(table, newer.min))
-      versions(spark, table).dropRight(2)
-        .foreach { case (_, v) => spark.sql(s"DROP TABLE IF EXISTS $v") }
-    } else {
-      val fs = coord.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cutoff = System.currentTimeMillis() - rollbackHorizonMs
-      val stale = closed.filter(_._3 < cutoff)
-      if (stale.size < closed.size) return false // maybe a live writer
-      stale.foreach { case (seq, _, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(coord, f"_t$seq%09d"), false)
-      }
-      val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      val db = id.database.getOrElse(
-        spark.sessionState.catalog.getCurrentDatabase)
-      // qualify the drop: an unqualified DROP resolves in the session's
-      // CURRENT database, which for a qualified store name would spare
-      // the real orphan and could hit an unrelated same-named table
-      spark.sessionState.catalog
-        .listTables(db, s"${id.table}__graft_rw_*")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.${t.table}"))
+    val fs = coord.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cutoff = System.currentTimeMillis() - rollbackHorizonMs
+    if (closed.exists(_._3 >= cutoff)) return false // maybe a live writer
+    closed.foreach { case (seq, _, _) =>
+      fs.delete(new org.apache.hadoop.fs.Path(coord, f"_t$seq%09d"), false)
     }
+    val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    val db = id.database.getOrElse(
+      spark.sessionState.catalog.getCurrentDatabase)
+    // qualified drop: see dropStore
+    spark.sessionState.catalog
+      .listTables(db, s"${id.table}__graft_rw_*")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.${t.table}"))
     true
   }
 
@@ -306,20 +349,16 @@ object Layout {
    * read from the catalog — one new file per touched bucket, and the
    * bucketing (so the exchange-free join) survives any number of appends
    * (PlanSpec-gated). Deriving the spec from the table instead of a
-   * caller parameter removes the mismatched-spec footgun entirely and
-   * makes every ingest path (`Dedup.ingestBatch*`) versioning-aware for
-   * free via [[resolveStore]].
+   * caller parameter removes the mismatched-spec footgun entirely; the
+   * rows land in the version [[resolveStore]] names.
    *
-   * On a VERSIONED store ([[enableVersioning]]) the append participates
-   * in the commit-token protocol above: racing a
-   * [[rewriteBucketed]]/[[compactBucketed]] now REFUSES loudly instead of
+   * The append participates in the commit-token protocol above: racing a
+   * [[rewriteBucketed]]/[[compactBucketed]] REFUSES loudly instead of
    * silently losing the batch to the rewrite's pre-append snapshot
    * (LayoutSpec-gated both ways). The refusal means the batch may or may
    * not be in the new version — id-idempotent ingest paths
    * (`Dedup.ingestBatch*`, whose anti-join skips already-held ids) simply
-   * retry; raw callers must re-check. Plain (non-versioned) tables keep
-   * the documented single-writer contract — version the store if writers
-   * are truly concurrent.
+   * retry (the at-least-once contract); raw callers must re-check.
    */
   def appendBucketed(spark: SparkSession, df: DataFrame,
                      table: String): Unit =
@@ -357,17 +396,17 @@ object Layout {
     val bcols = spec.bucketColumnNames
     val scols =
       if (spec.sortColumnNames.nonEmpty) spec.sortColumnNames else bcols
-    val coord = if (target != table) Some(coordPath(spark, target)) else None
-    coord.foreach(refuseClosed(spark, _, "appendBucketed", target))
+    val coord = coordPath(spark, target)
+    refuseClosed(spark, coord, "appendBucketed", target)
     // INTENT first, data second: from this token on, any rewrite whose
     // file listing might miss this append's rows either sees a live
     // unfinalized intent (refuses at its snapshot) or a token past its
     // recorded seq (its CAS fails) — so a crash anywhere between the
     // data landing and the finalization below can no longer lose rows
     // to an in-flight rewrite's swap
-    val intent = coord.map(c => casToken(spark, c, "i",
+    val intent = casToken(spark, coord, "i",
       s"appendBucketed: a rewrite already committed from $target — the " +
-        "store moved; retry against the current version"))
+        "store moved; retry against the current version")
     try
       // co-locate the batch per bucket before the append (the
       // writeBucketed note): "one new file per touched bucket" only
@@ -386,61 +425,34 @@ object Layout {
         // finalize the intent so one bad batch doesn't pause rewrites
         // for the whole horizon; best-effort (a tombstone landing here
         // means the version closed anyway, the intent is moot)
-        try coord.zip(intent).foreach { case (c, i) =>
-          casToken(spark, c, s"a:$i", "version closed")
-        } catch { case _: Throwable => () }
+        try casToken(spark, coord, s"a:$intent", "version closed")
+        catch { case _: Throwable => () }
         throw e
     }
     // the seam fires AFTER the data landed and BEFORE the finalization —
     // a throw here leaves exactly the crashed-append state (rows
     // committed, intent live) the rewrite-side horizon gate exists for
     afterData()
-    coord.zip(intent).foreach { case (c, i) =>
-      // FINALIZE after the data lands: a rewrite whose token CAS
-      // succeeds past ours therefore listed files written before our
-      // finalization — ours included; one that read older tokens fails
-      // ITS CAS and is refused
-      casToken(spark, c, s"a:$i",
-        s"appendBucketed: a rewrite committed from $target while " +
-          "this append ran — the batch may not be in the new " +
-          "version; retry against the current version " +
+    // FINALIZE after the data lands: a rewrite whose token CAS succeeds
+    // past ours therefore listed files written before our finalization —
+    // ours included; one that read older tokens fails ITS CAS and is
+    // refused
+    casToken(spark, coord, s"a:$intent",
+      s"appendBucketed: a rewrite committed from $target while " +
+        "this append ran — the batch may not be in the new " +
+        "version; retry against the current version " +
+        "(id-idempotent ingest paths are safe to re-run)")
+    // the coord dir dies with its version: if TWO rewrites completed
+    // inside this append's write→token window, the grace policy has
+    // already DROPPED the target table (rows included) and the loop
+    // above just recreated an empty coord under the dead directory and
+    // "committed" into it — re-resolve and refuse if the store moved,
+    // so that pathological window is loud too, never silent
+    if (resolveStore(spark, table) != target)
+      throw new IllegalStateException(
+        s"appendBucketed: $table moved past $target while this append " +
+          "ran — the batch is not in the current version; retry " +
           "(id-idempotent ingest paths are safe to re-run)")
-      // the coord dir dies with its version: if TWO rewrites completed
-      // inside this append's write→token window, the grace policy has
-      // already DROPPED the target table (rows included) and the loop
-      // above just recreated an empty coord under the dead directory and
-      // "committed" into it — re-resolve and refuse if the store moved,
-      // so that pathological window is loud too, never silent
-      if (resolveStore(spark, table) != target)
-        throw new IllegalStateException(
-          s"appendBucketed: $table moved past $target while this append " +
-            "ran — the batch is not in the current version; retry " +
-            "(id-idempotent ingest paths are safe to re-run)")
-    }
-  }
-
-  /**
-   * Convert a plain bucketed store into its VERSIONED form: the data
-   * moves to `<table>__v1` and `<table>` becomes a VIEW over it. From
-   * then on every [[rewriteBucketed]]/[[compactBucketed]] writes
-   * `<table>__v(N+1)` and repoints the view with a single
-   * `ALTER VIEW` — ONE atomic catalog operation, so a
-   * concurrent reader always resolves to a live version and never
-   * observes a missing table (LayoutSpec gates this with a reader loop
-   * under repeated compactions). The version the view just left is kept
-   * for one generation (in-flight readers may still hold plans against
-   * its files); older versions are dropped.
-   *
-   * Call this ONCE right after creating the store, before concurrent
-   * readers exist — the conversion itself is a rename + view create
-   * (two catalog ops, the very window versioning then removes).
-   */
-  def enableVersioning(spark: SparkSession, table: String): Unit = {
-    val m = meta(spark, table)
-    require(m.tableType != CatalogTableType.VIEW,
-      s"enableVersioning: $table is already a view")
-    spark.sql(s"ALTER TABLE $table RENAME TO ${table}__v1")
-    spark.sql(s"CREATE VIEW $table AS ${viewBodySql(table, 1)}")
   }
 
   /**
@@ -464,11 +476,10 @@ object Layout {
    * layout; the `sortBy` still pays through run-length-friendly parquet
    * encoding and tight fp min/max footer ranges.
    *
-   * Swap semantics — see [[rewriteBucketed]]: on a [[enableVersioning]]
-   * store the swap is one atomic view repoint (concurrent-reader safe);
-   * on a plain table it is a rename chain whose unbound window is a
-   * single catalog op. Cost is one O(store) rewrite with a single full
-   * shuffle; amortize by cadence (e.g. every N appends), not per ingest.
+   * Swap semantics — see [[rewriteBucketed]]: one atomic view repoint
+   * (concurrent-reader safe). Cost is one O(store) rewrite with a single
+   * full shuffle; amortize by cadence (e.g. every N appends), not per
+   * ingest.
    */
   def compactBucketed(spark: SparkSession, table: String): Unit =
     rewriteBucketed(spark, table)(identity)
@@ -479,16 +490,10 @@ object Layout {
    * [[compactBucketed]] (transform = identity) and row deletion
    * ([[graft.operators.Dedup.removeFromFingerprintStore]]'s anti-join).
    *
-   * Swap semantics depend on the store form:
-   *  - VERSIONED ([[enableVersioning]]): the rewrite lands in
-   *    `<table>__v(N+1)` and ONE `ALTER VIEW` repoints the
-   *    store name — atomic for concurrent readers; the outgoing version
-   *    survives one generation for in-flight plans, older versions drop.
-   *  - plain table: a rename chain (`table`→`__graft_old`, tmp→`table`,
-   *    drop `__graft_old`) — the store name is unbound for exactly one
-   *    catalog op, and crash recovery is a single rename of
-   *    `__graft_old` back; run on a maintenance cadence, or version the
-   *    store if readers are truly concurrent.
+   * Swap semantics: the rewrite lands in `<table>__v(N+1)` and ONE
+   * `ALTER VIEW` repoints the store name — atomic for concurrent readers
+   * (LayoutSpec reader-loop gate); the outgoing version survives one
+   * generation for in-flight plans, older versions drop.
    *
    * Reads the table's FILES by path (see inline note), parquet stores
    * only (the provider guard below — a non-parquet bucketed table would
@@ -543,8 +548,7 @@ object Layout {
     val bcols = spec.bucketColumnNames
     val scols =
       if (spec.sortColumnNames.nonEmpty) spec.sortColumnNames else bcols
-    val versioned = target != table
-    // versioned rewrites land in a NONCE-named staging table, then COMMIT
+    // rewrites land in a NONCE-named staging table, then COMMIT
     // by renaming to __v(N+1) + repointing the view — two writers racing
     // toward the same version can never clobber each other's data (the
     // rename refuses an existing name), and a stale writer is REFUSED by
@@ -555,22 +559,18 @@ object Layout {
     // a re-listing would otherwise move the guard's expectation along
     // with it and wave the stale rewrite through (the exact lost update
     // commitVersioned exists to refuse)
-    val expected =
-      if (versioned) target.substring(target.lastIndexOf("__v") + 3).toInt
-      else 0
+    val expected = target.substring(target.lastIndexOf("__v") + 3).toInt
     val dest =
-      if (versioned)
-        s"${table}__graft_rw_${java.util.UUID.randomUUID().toString.take(8)}"
-      else s"${table}__graft_compact"
+      s"${table}__graft_rw_${java.util.UUID.randomUUID().toString.take(8)}"
     // token snapshot BEFORE the file listing below (spark.read builds its
     // file index eagerly): commit-token CAS success at seq0+1 then proves
     // no append committed after this point — every committed append's
     // files were on disk when the listing ran (appends token AFTER their
     // data lands)
-    val coord = if (versioned) Some(coordPath(spark, target)) else None
-    coord.foreach(refuseClosed(spark, _, "rewriteBucketed", target))
-    val seq0 = coord.map { c =>
-      val ts = listTokens(spark, c)
+    val coord = coordPath(spark, target)
+    refuseClosed(spark, coord, "rewriteBucketed", target)
+    val seq0 = {
+      val ts = listTokens(spark, coord)
       // LIVE-INTENT refusal: an append whose intent is committed but not
       // finalized may write data files AFTER the file listing below and
       // then crash before its finalization — the one interleaving the
@@ -608,22 +608,11 @@ object Layout {
       .format("parquet")
       .saveAsTable(dest)
     beforeCommit()
-    if (versioned) {
-      commitVersioned(spark, table, expected, dest, coord.get, seq0.get)
-    } else {
-      // rename chain: the store name is unbound for exactly ONE catalog
-      // op (between the two renames) and a crash leaves the data bound
-      // under __graft_old — one rename recovers it (vs the previous
-      // DROP+RENAME, whose crash window left no table at all)
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__graft_old")
-      spark.sql(s"ALTER TABLE $table RENAME TO ${table}__graft_old")
-      spark.sql(s"ALTER TABLE $dest RENAME TO $table")
-      spark.sql(s"DROP TABLE ${table}__graft_old")
-    }
+    commitVersioned(spark, table, expected, dest, coord, seq0)
   }
 
   /**
-   * Commit a versioned rewrite staged in `dest`: rename it to
+   * Commit a rewrite staged in `dest`: rename it to
    * `__v(expected+1)` and repoint the view — still ONE reader-visible
    * catalog op (the repoint; the rename touches a name no reader
    * resolves). CONCURRENT-WRITER contract (LayoutSpec-gated): if the
@@ -682,7 +671,7 @@ object Layout {
     // concurrent reader resolves either the old or the new version,
     // never a missing name. Then drop everything older than the version
     // just left.
-    spark.sql(s"ALTER VIEW $table AS " + viewBodySql(table, expected + 1))
+    pointView(spark, table, expected + 1, "ALTER")
     versions(spark, table).dropRight(2)
       .foreach { case (_, v) => spark.sql(s"DROP TABLE IF EXISTS $v") }
   }

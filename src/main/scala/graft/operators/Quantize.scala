@@ -218,12 +218,9 @@ object Quantize {
    * probes its `nProbe` nearest cells and ADC-scores only the codes
    * inside them. This is the ad-hoc form (encode in-plan); at 100 TB use
    * [[writeCodeStore]] + [[ivfPqTopKFromStore]], whose
-   * [[prunedCodeStore]] scan applies the probed cells as a LITERAL
-   * partition filter so only those cells' files are read (path
-   * equivalence gated by q118). Do NOT serve via [[readCodeStore]] +
-   * [[ivfPqTopKFromCodes]] directly — that reads EVERY partition:
-   * pruning there would depend on Spark's dynamic partition pruning,
-   * which silently degrades to a no-op on this shape (see
+   * [[prunedCodeStore]] scan selects only the probed cells' directories
+   * (path equivalence gated by q118). Do NOT serve via [[readCodeStore]]
+   * + [[ivfPqTopKFromCodes]] directly — that reads EVERY cell (see
    * [[prunedCodeStore]]'s static-pruning contract).
    * Recall compounds the two approximations (cell pruning × code
    * quantization) — gated by q113's verdict against exact brute force.
@@ -252,83 +249,78 @@ object Quantize {
    * Materialize the IVF-PQ code store PARTITIONED BY CELL — the at-scale
    * deployment shape the ad-hoc [[ivfPqTopK]] recomputes per query
    * batch: raw vectors are assigned and encoded ONCE at ingest; the
-   * (id, codes, cell) table is written with one parquet directory per
-   * cell so every probe-time scan is pruned to the nProbe probed
-   * partitions — (corpus/cells)·nProbe·m bytes of codes, never the raw
-   * vectors, never the unprobed cells. Serve with [[ivfPqTopKFromStore]]
-   * ([[prunedCodeStore]] applies the probed cells as a LITERAL partition
-   * filter — see its scaladoc for why static pruning beats relying on
+   * (id, codes, cell) rows are written with one parquet directory per
+   * cell so every probe-time scan is pruned to the nProbe probed cells —
+   * (corpus/cells)·nProbe·m bytes of codes, never the raw vectors, never
+   * the unprobed cells. Serve with [[ivfPqTopKFromStore]]
+   * ([[prunedCodeStore]] selects the probed cells' directories from the
+   * manifest — see its scaladoc for why static pruning beats relying on
    * DPP here); pruning is execution-gated in PlanSpec and the scanned
    * bytes are measured in SURVEY §6. Reference analog: stepist's staged
    * materialized boundaries between steps
    * (`stepist/flow/workers/adapters/simple_queue.py:90-92`) — encode
    * once, serve many.
+   *
+   * The store is versioned from this first write: generation 1, the
+   * `@models` artifact (centroids + codebook), the `@pq` geometry and
+   * manifest v1. Every later lifecycle op (ingest, retract, retrain)
+   * commits manifest v+1 by one atomic rename. There is no flat form and
+   * no migration into this one.
+   *
+   * `versioned` is kept only because existing callers (perfbench's
+   * traced code-store run) pass `versioned = true`; it must be true, and
+   * `false` is refused.
    */
   def writeCodeStore(corpus: DataFrame, centroids: DataFrame,
                      codebook: DataFrame, vecCol: String, idCol: String,
                      m: Int, subDim: Int, path: String,
-                     versioned: Boolean = false): Unit = {
+                     versioned: Boolean = true): Unit = {
+    require(versioned, "writeCodeStore: every code store is versioned " +
+      "(manifest + generations); versioned = false is not a store form")
+    val spark = corpus.sparkSession
+    require(codeStoreVersion(spark, path).isEmpty,
+      s"writeCodeStore: $path already holds a code store " +
+        "(retract/rebuild through its lifecycle ops instead)")
+    // a write onto foreign content would strand it: the manifest serves
+    // only the new generation, so the old files silently vanish from
+    // reads yet are never GC'd (gcStore only collects gen-/models-/
+    // manifest names). Refuse FOREIGN content — but graft's own
+    // uncommitted artifact names (a crashed or empty-corpus FIRST
+    // attempt leaves gen-/models- orphans and no manifest) must not wedge
+    // the retry forever; they are exactly what the age GC collects once a
+    // commit exists
+    val fs = storeFs(spark, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val foreign = if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.map(_.getPath.getName).filterNot {
+        case GenRe(_) | ModelsRe(_) | TmpManifestRe(_) => true
+        case n => n.startsWith("_") // _SUCCESS-class markers
+      }
+    require(foreign.isEmpty,
+      s"writeCodeStore: $path is not empty (${foreign.take(3).mkString(",")})" +
+        " — write a code store into an empty or new directory")
     val codes =
       assembleCodes(corpus, centroids, codebook, vecCol, idCol, m, subDim)
-    if (versioned) {
-      val spark = corpus.sparkSession
-      require(codeStoreVersion(spark, path).isEmpty,
-        s"writeCodeStore: $path already holds a versioned store " +
-          "(retract/rebuild through its lifecycle ops instead)")
-      // a versioned write onto a FLAT store would strand the old cell=
-      // data: the manifest serves only the new generation, so the flat
-      // rows silently vanish from reads yet are never GC'd (gcStore only
-      // collects gen-/models-/manifest names). Refuse FOREIGN content —
-      // but graft's own uncommitted artifact names (a crashed or
-      // empty-corpus FIRST attempt leaves gen-/models- orphans and no
-      // manifest) must not wedge the retry forever; they are exactly
-      // what the age GC collects once a commit exists
-      val fs = storeFs(spark, path)
-      val p = new org.apache.hadoop.fs.Path(path)
-      val foreign = if (!fs.exists(p)) Seq.empty
-        else fs.listStatus(p).toSeq.map(_.getPath.getName).filterNot {
-          case GenRe(_) | ModelsRe(_) | TmpManifestRe(_) => true
-          case n => n.startsWith("_") // _SUCCESS-class markers
-        }
-      require(foreign.isEmpty,
-        s"writeCodeStore: $path is not empty (${foreign.take(3).mkString(",")})" +
-          " — migrate an existing flat store with enableCodeStoreVersioning" +
-          " instead of overwriting it")
-      // generation first, models second: the empty-corpus refusal below
-      // then leaves at most one orphan dir for the retry's age GC
-      val entries = writeGeneration(spark, codes, path, 1L)
-      require(entries.nonEmpty, "writeCodeStore: empty corpus")
-      val models = writeModels(spark, path, 1L, centroids, codebook)
-      commitManifest(spark, path, 1L, entries,
-        Map("models" -> models, "pq" -> s"$m\t$subDim"))
-    } else {
-      // co-locate each cell before the partitioned write: without this,
-      // EVERY write task appends a file to EVERY cell directory —
-      // tasks×cells tiny files whose footer overhead dominates probe-time
-      // reads (measured 2×, SURVEY §6). One write-time shuffle buys one
-      // file per cell; at 100 TB size spark.sql.shuffle.partitions so a
-      // cell's codes fit a task comfortably (codes are m bytes/vector)
-      codes.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
+    // generation first, models second: the empty-corpus refusal below
+    // then leaves at most one orphan dir for the retry's age GC
+    val entries = writeGeneration(spark, codes, path, 1L)
+    require(entries.nonEmpty, "writeCodeStore: empty corpus")
+    val models = writeModels(spark, path, 1L, centroids, codebook)
+    commitManifest(spark, path, 1L, entries,
+      Map("models" -> models, "pq" -> s"$m\t$subDim"))
   }
 
-  /** Read a [[writeCodeStore]] layout back. Flat form: partition
-    * discovery re-infers `cell` from the directory names (int).
-    * Versioned form ([[enableCodeStoreVersioning]]): resolves the
-    * current manifest and reads exactly the cell directories it lists —
-    * `cell` is a data column there, no inference. */
+  /** Read a [[writeCodeStore]] store back: resolves the current manifest
+    * and reads exactly the cell directories it lists — `cell` is a data
+    * column, no partition inference. */
   def readCodeStore(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame =
-    codeStoreVersion(spark, path) match {
-      case Some(v) =>
-        val dirs = readManifest(spark, path, v)
-          .map(e => s"${path.stripSuffix("/")}/${e._2}")
-        spark.read.parquet(dirs: _*)
-      case None => spark.read.parquet(path)
-    }
+                    path: String): DataFrame = {
+    val v = currentVersion(spark, path, "readCodeStore")
+    spark.read.parquet(readManifest(spark, path, v)
+      .map(e => s"${path.stripSuffix("/")}/${e._2}"): _*)
+  }
 
-  // ---- versioned code store (manifest + immutable generations) -------
+  // ---- code store (manifest + immutable generations) ----------------
 
   // \d{6,}: the writer left-PADS to 6 digits but grows past them — a
   // {6}-anchored match would stop discovering manifests at v1,000,000
@@ -351,20 +343,28 @@ object Quantize {
     }.sorted
   }
 
-  /** Highest committed manifest version at `path`; None = flat store
-    * (or no store yet). */
+  /** Highest committed manifest version at `path`; None = no code store
+    * there. */
   def codeStoreVersion(spark: org.apache.spark.sql.SparkSession,
                        path: String): Option[Long] =
     existingManifests(spark, path).lastOption
 
+  /** [[codeStoreVersion]] for an op that needs a store: the one "not a
+    * code store" refusal every lifecycle and read op shares. */
+  private def currentVersion(spark: org.apache.spark.sql.SparkSession,
+                             path: String, op: String): Long =
+    codeStoreVersion(spark, path).getOrElse(
+      throw new IllegalArgumentException(
+        s"$op: $path is not a code store (no manifest) — write it with " +
+          "writeCodeStore"))
+
   private def manifestFile(path: String, v: Long) =
     new org.apache.hadoop.fs.Path(path, f"_graft_manifest-v$v%06d")
 
-  /** Manifest = optional `@key<TAB>value` METADATA lines (sorted first:
-    * `@models` → the model-artifact directory codes were produced with,
-    * [[storedModels]]) followed by sorted `cellValue<TAB>relativeCellDir`
-    * lines. Pre-metadata manifests are plain cell lines — absent keys
-    * simply read as an empty meta map. */
+  /** Manifest = `@key<TAB>value` METADATA lines (sorted first: every
+    * manifest carries `@models` → the model-artifact directory codes were
+    * produced with, and `@pq` → the geometry, [[storedPq]]) followed by
+    * sorted `cellValue<TAB>relativeCellDir` lines. */
   private def readManifestLines(spark: org.apache.spark.sql.SparkSession,
                                 path: String, v: Long): Seq[(String, String)] = {
     val fs = storeFs(spark, path)
@@ -519,30 +519,6 @@ object Quantize {
     df.stat.bloomFilter(
       org.apache.spark.sql.functions.xxhash64(col(idCol)), items, fpp)
 
-  /**
-   * The (centroids, codebook) model frames the CURRENT manifest references
-   * — the pair every read/serve/ingest against this store must use (codes
-   * encode distances to THESE codewords; any other models silently score
-   * garbage). None for flat stores and for versioned stores migrated by
-   * [[enableCodeStoreVersioning]] before a [[retrainCodeStore]] recorded
-   * models (their models live with the caller, the pre-r15 contract).
-   */
-  def storedModels(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Option[(DataFrame, DataFrame)] =
-    codeStoreVersion(spark, path).flatMap { v =>
-      readManifestMeta(spark, path, v).get("models").map { d =>
-        val base = path.stripSuffix("/")
-        // model artifacts are KB-sized by policy — resolve them as
-        // driver-local relations (one scan job each) so every consumer
-        // collect/broadcast (probe cells, ADC LUT, encode argmax) runs
-        // zero further jobs; the cap is the loud data-size guard
-        (OpCache.materializeLocal(
-            spark.read.parquet(s"$base/$d/centroids"), ModelFrameCap),
-          OpCache.materializeLocal(
-            spark.read.parquet(s"$base/$d/codebook"), ModelFrameCap))
-      }
-    }
-
   /** Row cap for a driver-resolved model frame (centroids / codebooks) —
     * far above any policy-sized model (thousands of rows), far below
     * anything data-sized. */
@@ -592,11 +568,7 @@ object Quantize {
                              path: String, idCol: String,
                              expectedItems: Long,
                              fpp: Double = 1e-5): Unit = {
-    val v = codeStoreVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"enableCodeStoreIdBloom: $path is not a versioned store — " +
-          "enableCodeStoreVersioning first (the sidecar is a manifest " +
-          "artifact)"))
+    val v = currentVersion(spark, path, "enableCodeStoreIdBloom")
     val bloom =
       buildIdBloom(readCodeStore(spark, path), idCol, expectedItems, fpp)
     val rel = writeBloomArtifact(spark, path, v + 1, bloom)
@@ -618,41 +590,10 @@ object Quantize {
     }
 
   /**
-   * Convert a FLAT [[writeCodeStore]] directory into its VERSIONED form —
-   * the path-store mirror of [[Layout.enableVersioning]]: data moves to
-   * an immutable `gen-000001/` (one rewrite, one-time migration cost),
-   * a manifest maps every cell to its directory, and from then on every
-   * [[removeFromCodeStore]] writes a NEW generation for the affected
-   * cells and commits by writing manifest v(N+1) — ONE atomic rename, so
-   * a concurrent reader always resolves a complete, internally
-   * consistent cell set and never observes a half-rewritten store
-   * (QuantizeSpec gates this with a reader loop under repeated
-   * retractions). The outgoing generation's directories survive one
-   * generation for in-flight readers; older ones are GC'd at commit.
-   *
-   * Call ONCE right after creating the store, before concurrent readers
-   * exist (or write versioned from the start:
-   * `writeCodeStore(..., versioned = true)`).
-   */
-  def enableCodeStoreVersioning(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Unit = {
-    require(codeStoreVersion(spark, path).isEmpty,
-      s"enableCodeStoreVersioning: $path is already versioned")
-    val flat = spark.read.parquet(path)
-    val entries = writeGeneration(spark, flat, path, 1L)
-    require(entries.nonEmpty, s"enableCodeStoreVersioning: $path is empty")
-    commitManifest(spark, path, 1L, entries)
-    val fs = storeFs(spark, path)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
-      .filter(_.getPath.getName.startsWith("cell="))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
-
-  /**
-   * Ingest-append for the VERSIONED code store — the growth half of its
+   * Ingest-append for the code store — the growth half of its
    * lifecycle ([[Dedup.ingestBatchSemDedup]]'s discipline applied to the
    * ANN-serving artifact): encode and assign the batch with the STORED
-   * models (pass the frames [[storedModels]] resolves — re-training would
+   * models (pass the frames [[storedPq]] resolves — re-training would
    * shift every cell boundary and invalidate old codes), SKIP ids the
    * store already holds (idempotence: a crash-replayed batch appends
    * nothing, so a streaming wrapper inherits exactly-once effect), then
@@ -703,10 +644,7 @@ object Quantize {
       codebook: DataFrame, vecCol: String, idCol: String,
       m: Int, subDim: Int, fullIdCheck: Boolean,
       expectModels: Option[String]): DataFrame = {
-    val v = codeStoreVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"ingestBatchCodeStore: $path is not a versioned store — " +
-          "enableCodeStoreVersioning first (appends need atomic swaps)"))
+    val v = currentVersion(spark, path, "ingestBatchCodeStore")
     val base = path.stripSuffix("/")
     val meta = readManifestMeta(spark, path, v)
     // a geometry-changing retrain commits @pq with the new split; a
@@ -913,7 +851,7 @@ object Quantize {
    * the same version gates as commit-time GC (current + one grace
    * manifest kept) plus the age fallback: an unreferenced artifact whose
    * target version is ≤ the current manifest and that has been untouched
-   * for `orphanHorizonMs` is collected. No-op on flat or empty stores.
+   * for `orphanHorizonMs` is collected. No-op on a path with no store.
    * Safe to run concurrently with readers and writers — everything a
    * surviving manifest references, and every artifact an in-flight
    * writer could own (target > current, or younger than the horizon),
@@ -988,39 +926,16 @@ object Quantize {
    * rewrite that refusal message points at: only the partitions
    * CONTAINING removed ids are rewritten, everything else is untouched.
    *
-   * Two store forms, dispatched on the manifest:
-   *  - VERSIONED ([[enableCodeStoreVersioning]] or
-   *    `writeCodeStore(versioned = true)`): survivors land in a new
-   *    immutable generation and the swap is ONE atomic manifest rename —
-   *    concurrent readers always see a complete cell set
-   *    (reader-loop-gated in QuantizeSpec); concurrent WRITERS are
-   *    detected by the generation check and refused, never silently
-   *    overwritten. Prefer this form whenever readers are live.
-   *  - FLAT (legacy layout below): in-place dynamic partition overwrite —
-   *    cheaper paths, but a reader racing the rewrite can observe mixed
-   *    generations; run on a maintenance window, or version the store.
-   *
-   * Flat-form mechanics:
-   *  1. The affected cells are found with one id-projected scan
-   *     (removal-batch-bounded driver list — the [[prunedCodeStore]]
-   *     literal-pruning discipline).
-   *  2. Their survivors are STAGED to a sibling directory first — the
-   *     overwrite must not read the directories it replaces, and for a
-   *     path-based store a staging write beats the RDD-materialize
-   *     snapshot the table-backed ingest paths use: the rows stay in
-   *     Tungsten end-to-end (measured: the RDD round-trip made a
-   *     69%-of-cells takedown SLOWER than a full rebuild; staged, it
-   *     prices at the data actually rewritten).
-   *  3. One dynamic-partition-overwrite job (reading the stage) replaces
-   *     exactly the affected `cell=` directories that still have rows;
-   *     cells whose EVERY row was removed get no written rows (dynamic
-   *     overwrite would silently keep their old files) and their
-   *     directories are deleted explicitly, as is the stage.
+   * Survivors of the affected cells land in a new immutable generation
+   * and the swap is ONE atomic manifest rename — concurrent readers
+   * always see a complete cell set (reader-loop-gated in QuantizeSpec);
+   * concurrent WRITERS are detected by the generation check and refused,
+   * never silently overwritten ([[removeVersioned]]).
    *
    * Afterwards [[ivfPqTopKFromStore]] returns nothing for removed ids
    * and is identical to a store rebuilt from the remaining corpus
-   * (QuantizeSpec-gated), and [[prunedCodeStore]]'s static partition
-   * pruning is untouched (the layout is still one directory per cell).
+   * (QuantizeSpec-gated), and [[prunedCodeStore]]'s manifest pruning is
+   * untouched (the layout is still one directory per cell).
    * Cost is O(affected cells), not O(store) — SURVEY §6 prices both
    * the clustered takedown (cells-proportional) and the fully scattered
    * worst case (approaches rebuild).
@@ -1028,20 +943,18 @@ object Quantize {
   def removeFromCodeStore(spark: org.apache.spark.sql.SparkSession,
                           path: String, removedIds: DataFrame,
                           idCol: String): Unit =
-    codeStoreVersion(spark, path) match {
-      case Some(v) => removeVersioned(spark, path, removedIds, idCol, v)
-      case None => removeFlat(spark, path, removedIds, idCol)
-    }
+    removeVersioned(spark, path, removedIds, idCol,
+      currentVersion(spark, path, "removeFromCodeStore"))
 
   /**
-   * Versioned-store retraction: survivors of the affected cells land in
+   * Retraction against a resolved manifest `v`: survivors of the affected cells land in
    * a NEW immutable generation, every untouched cell keeps its old
    * directory, and the swap is ONE manifest rename — atomic for
-   * concurrent readers (mirrors [[Layout.enableVersioning]]'s argument;
-   * QuantizeSpec reader-loop gated). Still O(affected cells): untouched
+   * concurrent readers (the [[Layout.rewriteBucketed]] view-repoint
+   * argument; QuantizeSpec reader-loop gated). Still O(affected cells): untouched
    * cells are never read or rewritten, only re-listed in the manifest.
    * Fully-emptied cells simply leave the manifest (no in-place directory
-   * delete — the flat form's one non-atomic step). A concurrent-writer
+   * delete). A concurrent-writer
    * commit between resolve and swap is REFUSED by the generation check
    * in [[commitManifest]] rather than silently overwritten.
    */
@@ -1129,7 +1042,7 @@ object Quantize {
   private[graft] val BloomRebuildStaleFraction = 0.1
 
   /**
-   * MODEL-GENERATION migration for the versioned code store — the leg
+   * MODEL-GENERATION migration for the code store — the leg
    * that completes the ANN lifecycle: centroids and codebook are
    * training-time artifacts, frozen at store creation ([[writeCodeStore]]
    * records them in the manifest; [[ingestBatchCodeStore]] deliberately
@@ -1148,7 +1061,7 @@ object Quantize {
    * current rows (the code store holds only codes — re-encoding needs the
    * vectors; at 100 TB that is one full corpus pass, the same unit as the
    * initial build, amortized over a retrain cadence, vs the per-batch
-   * O(assigned cells) of ingest). Afterwards [[storedModels]] returns the
+   * O(assigned cells) of ingest). Afterwards [[storedPq]] returns the
    * NEW models and the store equals a one-shot
    * `writeCodeStore(corpus, newModels, …)` (q160-gated); recall
    * before/after on a drifted corpus is measured in SURVEY §6.
@@ -1158,10 +1071,7 @@ object Quantize {
                        idCol: String, dim: Int, m: Int, ksub: Int,
                        cells: Int, iters: Int = 2): Unit = {
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
-    val v = codeStoreVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"retrainCodeStore: $path is not a versioned store — " +
-          "enableCodeStoreVersioning first (model swaps need atomic swaps)"))
+    val v = currentVersion(spark, path, "retrainCodeStore")
     // both trainers already return driver-local relations (r19) — a
     // materialize wrap would push them back through the RDD round-trip —
     // and they are independent Lloyd loops over the same corpus, so they
@@ -1235,10 +1145,7 @@ object Quantize {
                           path: String, batch: DataFrame, vecCol: String,
                           idCol: String, freshCells: Int = 0,
                           iters: Int = 2): DataFrame = {
-    val (cents, _) = storedModels(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"codeStoreDriftStats: $path records no models — write the store " +
-          "versioned (or retrainCodeStore once) to record them"))
+    val (cents, _, _, _) = storedPq(spark, path)
     codeStoreDriftStats(batch, cents, vecCol, idCol, freshCells, iters)
   }
 
@@ -1287,27 +1194,37 @@ object Quantize {
    * need, resolved from the store itself so callers cannot pair codes
    * with the wrong models or the wrong subspace geometry (the footgun
    * [[ingestBatchCodeStore]]'s scaladoc warns about, closed at the API).
-   * None for flat stores and for versioned stores migrated by
-   * [[enableCodeStoreVersioning]] before any models were recorded.
+   * Every manifest records them from v1 on; a path with no code store is
+   * refused.
    */
   def storedPq(spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[(DataFrame, DataFrame, Int, Int)] =
-    codeStoreVersion(spark, path).flatMap { v =>
-      val meta = readManifestMeta(spark, path, v)
-      for {
-        d <- meta.get("models")
-        pq <- meta.get("pq")
-      } yield {
-        val base = path.stripSuffix("/")
-        val a = pq.split("\t", 2)
-        // driver-local model resolution — the storedModels note
-        (OpCache.materializeLocal(
-            spark.read.parquet(s"$base/$d/centroids"), ModelFrameCap),
-          OpCache.materializeLocal(
-            spark.read.parquet(s"$base/$d/codebook"), ModelFrameCap),
-          a(0).toInt, a(1).toInt)
-      }
-    }
+      : (DataFrame, DataFrame, Int, Int) = {
+    val (d, (m, subDim)) = storedPqMeta(spark, path, "storedPq")
+    val (cents, cb) = modelFrames(spark, path, d)
+    (cents, cb, m, subDim)
+  }
+
+  /** The current manifest's `@models` directory and `@pq` geometry. */
+  private def storedPqMeta(spark: org.apache.spark.sql.SparkSession,
+                           path: String, op: String): (String, (Int, Int)) = {
+    val meta = readManifestMeta(spark, path, currentVersion(spark, path, op))
+    val a = meta("pq").split("\t", 2)
+    (meta("models"), (a(0).toInt, a(1).toInt))
+  }
+
+  /** The (centroids, codebook) frames under the model artifact `d`.
+    * Model artifacts are KB-sized by policy — resolve them as
+    * driver-local relations (one scan job each) so every consumer
+    * collect/broadcast (probe cells, ADC LUT, encode argmax) runs zero
+    * further jobs; the cap is the loud data-size guard. */
+  private def modelFrames(spark: org.apache.spark.sql.SparkSession,
+                          path: String, d: String): (DataFrame, DataFrame) = {
+    val base = path.stripSuffix("/")
+    (OpCache.materializeLocal(
+        spark.read.parquet(s"$base/$d/centroids"), ModelFrameCap),
+      OpCache.materializeLocal(
+        spark.read.parquet(s"$base/$d/codebook"), ModelFrameCap))
+  }
 
   /** [[ingestBatchCodeStore]] with models AND geometry resolved from the
     * manifest ([[storedPq]]) — the safe ingest form: the batch is always
@@ -1316,29 +1233,15 @@ object Quantize {
     * time, so a retrain committing between resolve and ingest (same
     * geometry, different codewords — undetectable from the frames alone)
     * is refused instead of mixing old-model codes into the new-model
-    * store. Refuses stores that carry no recorded models. */
+    * store. */
   def ingestBatchCodeStoreStored(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, vecCol: String, idCol: String,
       fullIdCheck: Boolean = false): DataFrame = {
-    val v = codeStoreVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"ingestBatchCodeStoreStored: $path is not a versioned store"))
-    val meta = readManifestMeta(spark, path, v)
-    val resolved = for { d <- meta.get("models"); pq <- meta.get("pq") }
-      yield (d, pq.split("\t", 2))
-    val (d, pq) = resolved.getOrElse(
-      throw new IllegalArgumentException(
-        s"ingestBatchCodeStoreStored: $path records no models — write the " +
-          "store versioned (or retrainCodeStore once) to record them, or " +
-          "pass models explicitly via ingestBatchCodeStore"))
-    val base = path.stripSuffix("/")
-    ingestCodeStore(spark, path, batch,
-      OpCache.materializeLocal(
-        spark.read.parquet(s"$base/$d/centroids"), ModelFrameCap),
-      OpCache.materializeLocal(
-        spark.read.parquet(s"$base/$d/codebook"), ModelFrameCap),
-      vecCol, idCol, pq(0).toInt, pq(1).toInt, fullIdCheck,
-      expectModels = Some(d))
+    val (d, (m, subDim)) =
+      storedPqMeta(spark, path, "ingestBatchCodeStoreStored")
+    val (cents, cb) = modelFrames(spark, path, d)
+    ingestCodeStore(spark, path, batch, cents, cb, vecCol, idCol, m, subDim,
+      fullIdCheck, expectModels = Some(d))
   }
 
   /** [[ivfPqTopKFromStore]] with models and geometry resolved from the
@@ -1348,59 +1251,9 @@ object Quantize {
   def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, vecCol: String, idCol: String,
       k: Int, nProbe: Int = 2, includeSelf: Boolean = false): DataFrame = {
-    val (cents, cb, m, subDim) = storedPq(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"ivfPqTopKStored: $path records no models — write the store " +
-          "versioned (or retrainCodeStore once) to record them, or pass " +
-          "models explicitly via ivfPqTopKFromStore"))
+    val (cents, cb, m, subDim) = storedPq(spark, path)
     ivfPqTopKFromStore(spark, path, queries, cents, cb, vecCol, idCol,
       m, subDim, k, nProbe, includeSelf)
-  }
-
-  private def removeFlat(spark: org.apache.spark.sql.SparkSession,
-                         path: String, removedIds: DataFrame,
-                         idCol: String): Unit = {
-    val store = readCodeStore(spark, path)
-    val gone = removedIds.toDF(idCol).distinct()
-    val affected = store.join(gone, Seq(idCol), "left_semi")
-      .select(col("cell")).distinct().collect().map(_.get(0)).toSeq
-    if (affected.isEmpty) return
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val stage = s"${path.stripSuffix("/")}__graft_retract"
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    store.filter(col("cell").isInCollection(affected))
-      .join(gone, Seq(idCol), "left_anti")
-      .repartition(col("cell")) // one file per rewritten cell (store note)
-      .write.mode("overwrite").partitionBy("cell").parquet(stage)
-    val staged = spark.read.schema(store.schema).parquet(stage)
-    val remaining = staged.select(col("cell")).distinct()
-      .collect().map(_.get(0)).toSet
-    // a retraction that leaves ZERO cells leaves an unreadable layout
-    // (no files to infer a schema from) — refuse, like removeFromIndex
-    if (remaining.isEmpty) {
-      val totalCells = store.select(col("cell")).distinct().count()
-      if (totalCells <= affected.size) {
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-        throw new IllegalArgumentException(
-          "removeFromCodeStore: retraction would empty the store " +
-            "(drop the store directory instead)")
-      }
-    }
-    // per-WRITER dynamic overwrite (DataFrameWriter option, Spark 2.4+):
-    // replaces only the partitions with written rows, without mutating
-    // the session-global partitionOverwriteMode conf a concurrent
-    // partitioned overwrite in the same session would inherit
-    if (remaining.nonEmpty)
-      staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(path)
-    // fully-emptied cells: no written rows → dynamic overwrite left the
-    // old directory — delete it (an empty cell has nothing to serve)
-    affected.filterNot(remaining).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"cell=$c"), true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
   }
 
   /** (query_id, cell) probe pairs: each query's nProbe nearest centroids
@@ -1424,9 +1277,10 @@ object Quantize {
    * Statically pruned view of a [[writeCodeStore]] layout for one query
    * batch: the probed cell ids — query METADATA bounded by
    * |queries|·nProbe, not corpus data — are collected to the driver and
-   * applied as a literal partition filter, so the scan reads ONLY the
-   * probed `cell=` directories (execution-gated in PlanSpec, measured in
-   * SURVEY §6). Static pruning is deliberate: Spark's dynamic partition
+   * select the probed cells' directories from the manifest, so the scan
+   * reads ONLY those directories; the unprobed cells never enter the
+   * plan (execution-gated in PlanSpec via the scan's numFiles, measured
+   * in SURVEY §6). Static pruning is deliberate: Spark's dynamic partition
    * pruning inserts its filter only when a cost model approves broadcast
    * reuse and silently degrades to `dynamicpruningexpression(true)`
    * otherwise (observed on this exact shape) — a store whose whole point
@@ -1441,21 +1295,13 @@ object Quantize {
     val cells = probeCells(queries, centroids, vecCol, idCol, nProbe)
       .select(col("cell").cast(cellType)).distinct()
       .collect().map(_.get(0)).toSeq
-    codeStoreVersion(spark, path) match {
-      case Some(v) =>
-        // versioned form prunes at the MANIFEST: only the probed cells'
-        // directories enter the scan at all — the same bounded-I/O
-        // guarantee, enforced by path selection instead of a partition
-        // filter (PlanSpec-gated via the executed scan's numFiles)
-        val probed = cells.map(String.valueOf).toSet
-        val dirs = readManifest(spark, path, v).filter(e => probed(e._1))
-          .map(e => s"${path.stripSuffix("/")}/${e._2}")
-        if (dirs.isEmpty) store.filter(lit(false))
-        else spark.read.schema(store.schema).parquet(dirs: _*)
-          .filter(col("cell").isInCollection(cells))
-      case None =>
-        store.filter(col("cell").isInCollection(cells))
-    }
+    val probed = cells.map(String.valueOf).toSet
+    val dirs = readManifest(spark, path,
+        currentVersion(spark, path, "prunedCodeStore"))
+      .filter(e => probed(e._1)).map(e => s"${path.stripSuffix("/")}/${e._2}")
+    if (dirs.isEmpty) store.filter(lit(false))
+    else spark.read.schema(store.schema).parquet(dirs: _*)
+      .filter(col("cell").isInCollection(cells))
   }
 
   /** ADC candidate scores over an (idCol, codes, cell) frame — the shared
@@ -1468,9 +1314,8 @@ object Quantize {
                   includeSelf: Boolean = false): DataFrame = {
     val probes = probeCells(queries, centroids, vecCol, idCol, nProbe)
     val lut = queryLut(codebook, queries, vecCol, idCol, m, subDim)
-    // probes must compare as the store's partition-column type (int after
-    // directory re-inference) or the cell equi-join silently casts and
-    // partition pruning is lost
+    // probes must compare as the store's cell-column type or the cell
+    // equi-join silently casts
     val cand = codes.join(
       broadcast(probes.withColumn("cell",
         col("cell").cast(codes.schema("cell").dataType))),
@@ -1508,7 +1353,7 @@ object Quantize {
 
   /** The at-scale serving path: statically pruned store scan + ADC top-k.
     * Identical results to the ad-hoc [[ivfPqTopK]] at the same models
-    * (q118 oracle gate); reads only the probed cells' partitions. */
+    * (q118 oracle gate); reads only the probed cells' directories. */
   def ivfPqTopKFromStore(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: DataFrame,
                          centroids: DataFrame, codebook: DataFrame,

@@ -81,6 +81,35 @@ class CatalogSpec extends SparkSpec {
     assert(!ok(none, exact))
   }
 
+  test("q138 and q149 run as Verify runs them leave no table, view or dir") {
+    val wh = new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
+    def ls(d: java.io.File, prefix: String): Seq[String] =
+      Option(d.list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith(prefix)).toSeq
+    // every trace of query `q`: catalog tables and views, warehouse dirs,
+    // scratch dirs (and the per-pid tmp dirs older builds used)
+    def traces(q: String): Seq[String] =
+      spark.catalog.listTables().select($"name").as[String].collect()
+        .filter(_.startsWith(q)).toSeq ++ ls(wh, q) ++
+        ls(new java.io.File(graft.catalog.Shared.roundTripBase), q) ++
+        ls(new java.io.File(System.getProperty("java.io.tmpdir")),
+          s"graft_${q}_$pid")
+    Seq("q138_store_compact" -> "q138", "q149_codestore_retract" -> "q149")
+      .foreach { case (name, q) =>
+        val (verdicts, during) = SparkEntry.runReleased(spark, sfDir, name) {
+          df => (df.select($"ok").as[Boolean].collect().toSeq, traces(q))
+        }
+        assert(verdicts.nonEmpty && verdicts.forall(identity),
+          s"$name verdicts failed: $verdicts")
+        // the check sees the query's state while it is live...
+        assert(during.nonEmpty, s"$name made no store this check can see")
+        // ...and none of it after the release
+        assert(traces(q).isEmpty, s"$name left ${traces(q)}")
+      }
+  }
+
   test("Gate.verdict from driver booleans sorts by metric") {
     val rows = Gate.verdict(spark)(("b_metric", 2.0, false), ("a_metric", 1.0,
       true)).as[(String, Double, Boolean)].collect().toSeq

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Layout, OpCache}
 import graft.functions.TextFunctions
 
-/** Store-lifecycle mechanics: versioned view-backed stores (atomic swap
-  * for concurrent readers), spec-derived appends, and the plain-table
-  * rename-chain swap. The content/plan gates for compaction itself live
-  * in PlanSpec and q138. */
+/** Store-lifecycle mechanics: view-backed `__vN` stores (atomic swap for
+  * concurrent readers), spec-derived appends, crash healing and
+  * `dropStore`. The content/plan gates for compaction itself live in
+  * PlanSpec and q138. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,12 +15,8 @@ class LayoutSpec extends SparkSpec {
 
   test("versioned store: concurrent readers never fail across repeated compactions") {
     val tbl = s"layoutspec_ver_$pid"
-    (Seq(tbl, s"${tbl}__graft_compact") ++
-      (1 to 8).map(n => s"${tbl}__v$n"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d", "e f").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     assert(spark.table(tbl).count() == 3, "view must serve the v1 data")
     // appends resolve the view to its current backing table
     Layout.appendBucketed(spark,
@@ -29,7 +25,7 @@ class LayoutSpec extends SparkSpec {
     assert(spark.table(tbl).count() == 4, "append through the view lost rows")
     // the crux: a reader loop must never observe a missing/partial store
     // while compactions swap versions underneath it — the view repoint is
-    // ONE catalog op (vs the plain table's rename chain)
+    // ONE catalog op
     @volatile var stop = false
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
     val reads = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -62,27 +58,24 @@ class LayoutSpec extends SparkSpec {
   test("view-text coupling: every view the writers generate parses back " +
     "to the serving version (recoverVersioned's parser contract)") {
     // recoverVersioned derives the serving version from the view's
-    // stored SQL text; this gate fails if enableVersioning /
-    // commitVersioned ever phrase the view in a way servingVersion
+    // stored SQL text (so does resolveStore's heal check); this gate
+    // fails if writeBucketed / commitVersioned ever phrase the view in a way servingVersion
     // cannot read — the silent-recovery-breakage the coupling note in
     // Layout.scala warns about
     val tbl = s"layoutspec_vt_$pid"
-    (Seq(tbl) ++ (1 to 4).map(n => s"${tbl}__v$n"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     def viewText: String = spark.sessionState.catalog
       .getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier(tbl))
       .viewText.getOrElse(fail(s"$tbl is not a view"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     assert(Layout.servingVersion(viewText).contains(1),
       s"fresh store's view text unparseable: '$viewText'")
     Layout.compactBucketed(spark, tbl)
     assert(Layout.servingVersion(viewText).contains(2),
       s"post-rewrite view text unparseable: '$viewText'")
     // and the parser agrees with resolveStore on a HEALTHY store (they
-    // may only diverge mid-swap, which is recoverVersioned's whole job)
+    // may only diverge mid-swap, which is the heal check's whole job)
     assert(Layout.resolveStore(spark, tbl) == s"${tbl}__v2")
     assert(Layout.servingVersion("SELECT * FROM plain_table").isEmpty,
       "non-versioned view text must parse to None")
@@ -95,7 +88,6 @@ class LayoutSpec extends SparkSpec {
     (1 to 4).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     // writer B commits v2 while writer A's rewrite (staged below) runs
     Layout.compactBucketed(spark, tbl)
     val content = spark.table(tbl).as[String].collect().toSet
@@ -131,7 +123,6 @@ class LayoutSpec extends SparkSpec {
     (1 to 4).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     // the lost-update interleaving: the rewrite has SNAPSHOTTED the files
     // and staged its result; the append lands before the commit
     val ex = intercept[IllegalStateException] {
@@ -177,7 +168,6 @@ class LayoutSpec extends SparkSpec {
     (1 to 5).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     def append(t: String, afterData: () => Unit = () => ()): Unit =
       Layout.appendBucketed(spark,
         Seq(t).toDF("text")
@@ -242,7 +232,6 @@ class LayoutSpec extends SparkSpec {
     (1 to 4).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
     Dedup.writeFingerprintStore(
       Seq("a b").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     def append(t: String): Unit = Layout.appendBucketed(spark,
       Seq(t).toDF("text")
         .select(TextFunctions.fingerprint($"text").as("fp")), tbl)
@@ -285,12 +274,8 @@ class LayoutSpec extends SparkSpec {
   test("recoverVersioned finishes a crashed rewrite commit: roll back " +
     "before the rename, complete after it") {
     val tbl = s"layoutspec_rec_$pid"
-    spark.sql(s"DROP VIEW IF EXISTS $tbl")
-    (Seq(s"${tbl}__graft_rw_dead") ++ (1 to 4).map(v => s"${tbl}__v$v"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d", "e f").toDF("text"), "text", tbl, buckets = 2)
-    Layout.enableVersioning(spark, tbl)
     // healthy store: recovery is a no-op (safe on a schedule)
     assert(!Layout.recoverVersioned(spark, tbl))
     // CASE 1 — writer died between its token and the rename: the version
@@ -316,75 +301,118 @@ class LayoutSpec extends SparkSpec {
     // CASE 2 — writer died between the rename and the repoint: __v2
     // exists and is complete, the view still serves __v1, and the dead
     // writer's `r` token sits in __v1's coord (where it committed it)
-    Layout.writeBucketed(
-      spark.table(tbl).unionByName(Seq("recovered-row").toDF("fp")),
-      s"${tbl}__v2", Seq("fp"), 2)
+    spark.table(tbl).unionByName(Seq("recovered-row").toDF("fp"))
+      .repartition(2, $"fp").write.bucketBy(2, "fp").sortBy("fp")
+      .format("parquet").saveAsTable(s"${tbl}__v2")
     val coord2 = Layout.coordPath(spark, s"${tbl}__v1")
     // CASE 1's rollback deleted _t1 and the append re-took seqs 1+2
     // (intent + finalization): the dead rewrite's token goes at the
     // next free sequence, 3
     assert(Layout.commitToken(spark, coord2, 3L, "r"))
-    // an append in this state resolves the HIGHEST version (__v2, the
-    // renamed staging), lands there, and must SURVIVE the recovery —
-    // invisible to readers only until the swap completes
-    append("p q")
+    // a reader between the crash and the next writer still sees __v1
     assert(spark.table(tbl).count() == 4,
-      "pre-recovery readers must still serve the old version")
-    assert(Layout.recoverVersioned(spark, tbl), "completion not detected")
-    assert(spark.table(tbl).count() == 6, // 5 staged + 1 mid-crash append
-      "completed swap must serve the staged store plus the append")
-    // healthy again: appends work against the new version's chain
+      "pre-heal readers must still serve the old version")
+    // the next append's resolve HEALS the store: it finishes the swap
+    // (repoints the view to __v2), then lands its row there
+    append("p q")
+    assert(spark.table(tbl).count() == 6, // 5 staged + 1 healing append
+      "healed swap must serve the staged store plus the append")
+    assert(Layout.servingVersion(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(tbl))
+      .viewText.get).contains(2), "the append did not repoint the view")
+    // healthy again: nothing left to recover, appends keep working
     assert(!Layout.recoverVersioned(spark, tbl))
     append("r s")
     assert(spark.table(tbl).count() == 7)
     OpCache.release()
   }
 
-  test("plain-table rewrite: rename-chain swap, crash leftovers recovered") {
-    val tbl = s"layoutspec_plain_$pid"
-    Seq(tbl, s"${tbl}__graft_compact", s"${tbl}__graft_old")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    Dedup.writeFingerprintStore(
-      Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    val before = spark.table(tbl).as[String].collect().toSet
-    // a stale __graft_old from a crashed previous swap must not block
-    Seq(("zz", "zz")).toDF("fp", "junk").write
-      .saveAsTable(s"${tbl}__graft_old")
-    Layout.compactBucketed(spark, tbl)
-    assert(spark.table(tbl).as[String].collect().toSet == before,
-      "compaction changed the store's content")
-    assert(!spark.catalog.tableExists(s"${tbl}__graft_old") &&
-      !spark.catalog.tableExists(s"${tbl}__graft_compact"),
-      "swap left temporary tables behind")
-    OpCache.release()
-  }
-
   test("appendBucketed derives the spec from the table; non-bucketed refused") {
     val tbl = s"layoutspec_app_$pid"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     Layout.writeBucketed(Seq((1L, "a")).toDF("id", "v"), tbl, Seq("id"), 3)
     Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), tbl)
     assert(spark.table(tbl).count() == 2)
     val spec = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(tbl)).bucketSpec
+      spark.sessionState.sqlParser.parseTableIdentifier(
+        Layout.resolveStore(spark, tbl))).bucketSpec
     assert(spec.exists(_.numBuckets == 3), s"append changed the spec: $spec")
+    // a plain table is not a graft store: refused, not appended to
     val plain = s"layoutspec_plainapp_$pid"
-    spark.sql(s"DROP TABLE IF EXISTS $plain")
     Seq((1L, "a")).toDF("id", "v").write.saveAsTable(plain)
-    intercept[IllegalArgumentException] {
+    val ex = intercept[IllegalArgumentException] {
       Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), plain)
     }
+    assert(ex.getMessage.contains("not a graft store"), ex.getMessage)
+    // a store whose version is not bucketed keeps the spec refusal
+    val unbucketed = s"layoutspec_nobkt_$pid"
+    Seq((1L, "a")).toDF("id", "v").write.format("parquet")
+      .saveAsTable(s"${unbucketed}__v1")
+    spark.sql(s"CREATE VIEW $unbucketed AS SELECT * FROM ${unbucketed}__v1")
+    val ex2 = intercept[IllegalArgumentException] {
+      Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), unbucketed)
+    }
+    assert(ex2.getMessage.contains("no bucket spec"), ex2.getMessage)
+    Seq(tbl, plain, unbucketed).foreach(Layout.dropStore(spark, _))
   }
 
   test("rewriteBucketed refuses non-parquet stores loudly") {
     val tbl = s"layoutspec_orc_$pid"
-    Seq(tbl, s"${tbl}__graft_compact", s"${tbl}__graft_old")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     Seq((1L, "a")).toDF("id", "v").write
-      .bucketBy(2, "id").sortBy("id").format("orc").saveAsTable(tbl)
+      .bucketBy(2, "id").sortBy("id").format("orc").saveAsTable(s"${tbl}__v1")
+    spark.sql(s"CREATE VIEW $tbl AS SELECT * FROM ${tbl}__v1")
     val e = intercept[IllegalArgumentException] {
       Layout.compactBucketed(spark, tbl)
     }
     assert(e.getMessage.contains("parquet"), e.getMessage)
+    Layout.dropStore(spark, tbl)
+  }
+
+  private def names(prefix: String): Seq[String] =
+    spark.catalog.listTables().select($"name").as[String].collect()
+      .filter(_.startsWith(prefix)).sorted.toSeq
+
+  test("writeBucketed: the first write is a view over __v1, and writing " +
+    "the name again replaces the store") {
+    val tbl = s"layoutspec_first_$pid"
+    Layout.writeBucketed(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), tbl,
+      Seq("id"), 2)
+    val m = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(tbl))
+    assert(m.tableType == org.apache.spark.sql.catalyst.catalog
+      .CatalogTableType.VIEW, s"$tbl is a ${m.tableType}, not a view")
+    assert(m.viewText.flatMap(Layout.servingVersion).contains(1))
+    assert(Layout.resolveStore(spark, tbl) == s"${tbl}__v1")
+    assert(names(tbl) == Seq(tbl, s"${tbl}__v1"))
+    // grow the store past v1, then write the name again: the old store
+    // goes whole and the new one starts over at v1
+    Layout.compactBucketed(spark, tbl)
+    assert(names(tbl) == Seq(tbl, s"${tbl}__v1", s"${tbl}__v2"))
+    Layout.writeBucketed(Seq((9L, "z")).toDF("id", "v"), tbl, Seq("id"), 2)
+    assert(names(tbl) == Seq(tbl, s"${tbl}__v1"))
+    assert(spark.table(tbl).as[(Long, String)].collect().toSeq ==
+      Seq((9L, "z")), "the rewritten name still serves the old store")
+    Layout.dropStore(spark, tbl)
+  }
+
+  test("dropStore leaves no view, version, staging table or warehouse dir") {
+    val tbl = s"layoutspec_drop_$pid"
+    Layout.writeBucketed(Seq((1L, "a")).toDF("id", "v"), tbl, Seq("id"), 2)
+    Layout.compactBucketed(spark, tbl)
+    // a dead rewrite's staging table
+    Seq((2L, "b")).toDF("id", "v").write.format("parquet")
+      .saveAsTable(s"${tbl}__graft_rw_dead")
+    val wh = new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    def dirs = Option(wh.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith(tbl)).sorted.toSeq
+    assert(dirs.size == 3, s"expected __v1, __v2 and staging dirs: $dirs")
+    Layout.dropStore(spark, tbl)
+    assert(names(tbl).isEmpty, s"dropStore left ${names(tbl)}")
+    assert(dirs.isEmpty, s"dropStore left warehouse dirs $dirs")
+    // a plain table of the name goes too; a missing name is a no-op
+    Seq((1L, "a")).toDF("id", "v").write.saveAsTable(tbl)
+    Layout.dropStore(spark, tbl)
+    Layout.dropStore(spark, tbl)
+    assert(names(tbl).isEmpty && dirs.isEmpty)
   }
 }

@@ -288,11 +288,12 @@ class PlanSpec extends SparkSpec {
 
   test("IVF-PQ code store: a probe reads only its probed cells' partitions") {
     // the 100 TB claim on writeCodeStore: serving through prunedCodeStore
-    // turns the probe list into a LITERAL partition filter, so the scan
-    // reads only the probed cell= directories. (DPP was tried first and
-    // silently degraded to dynamicpruningexpression(true) on this shape —
-    // hence the static design; this gate is execution-level so any such
-    // regression is caught, not just planned around.)
+    // turns the probe list into the scan's root paths — the probed cells'
+    // directories from the manifest — so the scan reads only those.
+    // (DPP was tried first and silently degraded to
+    // dynamicpruningexpression(true) on this shape — hence the static
+    // design; this gate is execution-level so any such regression is
+    // caught, not just planned around.)
     import org.apache.spark.sql.functions._
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val cents = graft.operators.Similarity.trainCentroids(
@@ -308,12 +309,6 @@ class PlanSpec extends SparkSpec {
     val topk = graft.operators.Quantize.ivfPqTopKFromStore(
       spark, dir, queries, cents, cb,
       "embedding", "vec_id", 4, 16, k = 5, nProbe = 2)
-    val plan = topk.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    val partLines = plan.linesIterator
-      .filter(_.contains("PartitionFilters")).mkString("\n")
-    assert(partLines.contains("cell") && partLines.contains("IN ("),
-      s"probed cells must appear as a literal partition filter:\n$plan")
     // EXECUTION-level proof: the store scan's numFiles metric reflects
     // files selected after pruning — 2 probed cells of 8 ⇒ 2 files
     assert(topk.collect().nonEmpty, "store-path top-k returned no rows")
@@ -329,7 +324,8 @@ class PlanSpec extends SparkSpec {
     }
     val storeScans = walk(topk.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.mkString(",").contains("pq_store"))
-    val totalFiles = spark.read.parquet(dir).inputFiles.length
+    val totalFiles =
+      graft.operators.Quantize.readCodeStore(spark, dir).inputFiles.length
     val readFiles = storeScans.flatMap(_.metrics.get("numFiles").map(_.value)).sum
     assert(storeScans.nonEmpty, "store scan not found in executed plan")
     // ≤2: a probed centroid can own zero corpus rows (no directory);
@@ -337,6 +333,12 @@ class PlanSpec extends SparkSpec {
     assert(readFiles <= 2 && readFiles < totalFiles,
       s"probe must read only its ≤2 probed cells' files: " +
         s"read $readFiles of $totalFiles")
+    // and the scan's roots are the probed cells' leaf directories only
+    val scannedRoots = storeScans
+      .flatMap(_.relation.location.rootPaths.map(_.getName)).distinct
+    assert(scannedRoots.nonEmpty && scannedRoots.size <= 2 &&
+      scannedRoots.forall(_.startsWith("pcell=")),
+      s"scan roots must be ≤2 probed cell dirs, got $scannedRoots")
     graft.operators.OpCache.release()
   }
 
@@ -354,7 +356,7 @@ class PlanSpec extends SparkSpec {
       emb, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
     val dir = tempDir("pq_vstore").toString
     graft.operators.Quantize.writeCodeStore(
-      emb, cents, cb, "embedding", "vec_id", 4, 16, dir, versioned = true)
+      emb, cents, cb, "embedding", "vec_id", 4, 16, dir)
     // retraction first: pruning must hold on a multi-generation store
     graft.operators.Quantize.removeFromCodeStore(spark, dir,
       emb.filter(pmod(col("vec_id"), lit(3)) === 0).select(col("vec_id")),
@@ -582,8 +584,7 @@ class PlanSpec extends SparkSpec {
     val m = pmod(col("doc_id"), lit(3))
     val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
     val tbl = s"planspec_fp_compact_$pid"
-    Seq(tbl, s"${tbl}__graft_compact")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    graft.operators.Layout.dropStore(spark, tbl)
     graft.operators.Dedup.writeFingerprintStore(
       docs.filter(m === 2), "text", tbl, buckets = 4)
     graft.operators.Dedup.ingestBatch(
@@ -774,8 +775,8 @@ class PlanSpec extends SparkSpec {
       .filter(length(trim(col("text"))) > 0)
     val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
     val tbl = s"planspec_bm25_rm_$pid"
-    Seq(tbl, s"${tbl}_stats", s"${tbl}__graft_compact", s"${tbl}__graft_old")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq(tbl, s"${tbl}_stats")
+      .foreach(graft.operators.Layout.dropStore(spark, _))
     graft.operators.Rank.writeIndex(docs, "text", "doc_id", tbl, buckets = 8)
     graft.operators.Rank.removeFromIndex(spark, tbl,
       docs.filter(pmod(col("doc_id"), lit(11)) === 0).select(col("doc_id")),
@@ -793,33 +794,6 @@ class PlanSpec extends SparkSpec {
       .findFirstMatchIn(bucketLine)
     assert(counts.exists(c => c.group(1).toInt < c.group(2).toInt),
       s"term filter lost its bucket pruning after retraction:\n$plan")
-    graft.operators.OpCache.release()
-  }
-
-  test("IVF-PQ code store keeps its partition pruning after removeFromCodeStore") {
-    import org.apache.spark.sql.functions._
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val cents = graft.operators.Similarity.trainCentroids(
-      emb, "embedding", "vec_id", k = 8)
-    val cb = graft.operators.Quantize.trainCodebook(
-      emb, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
-    val dir = tempDir("pq_rm_plan").toString
-    graft.operators.Quantize.writeCodeStore(
-      emb, cents, cb, "embedding", "vec_id", 4, 16, dir)
-    graft.operators.Quantize.removeFromCodeStore(spark, dir,
-      emb.filter(pmod(col("vec_id"), lit(3)) === 0).select(col("vec_id")),
-      "vec_id")
-    val queries = emb.filter(col("vec_id") === 1)
-    val topk = graft.operators.Quantize.ivfPqTopKFromStore(
-      spark, dir, queries, cents, cb,
-      "embedding", "vec_id", 4, 16, k = 5, nProbe = 2)
-    assert(topk.collect().nonEmpty, "post-retraction store top-k empty")
-    val plan = topk.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    val partLines = plan.linesIterator
-      .filter(_.contains("PartitionFilters")).mkString("\n")
-    assert(partLines.contains("cell") && partLines.contains("IN ("),
-      s"retraction broke the literal partition filter:\n$plan")
     graft.operators.OpCache.release()
   }
 

@@ -140,11 +140,11 @@ class QuantizeSpec extends SparkSpec {
     Quantize.writeCodeStore(e.join(removed, Seq("vec_id"), "left_anti"),
       cents, cbT, "embedding", "vec_id", 4, 16, dir2)
     val got = Quantize.readCodeStore(spark, dir)
-      .select($"vec_id", $"codes", $"cell")
-      .as[(Long, Seq[Int], Int)].collect().toSet
+      .select($"vec_id", $"codes", $"cell".cast("long"))
+      .as[(Long, Seq[Int], Long)].collect().toSet
     val want = Quantize.readCodeStore(spark, dir2)
-      .select($"vec_id", $"codes", $"cell")
-      .as[(Long, Seq[Int], Int)].collect().toSet
+      .select($"vec_id", $"codes", $"cell".cast("long"))
+      .as[(Long, Seq[Int], Long)].collect().toSet
     assert(got == want, s"missing=${want -- got}, extra=${got -- want}")
     // serving never returns a retracted id, and pruning still works
     // (the layout is still one directory per cell)
@@ -155,10 +155,10 @@ class QuantizeSpec extends SparkSpec {
       .select($"corpus_id").as[Long].collect().toSet
     assert(topk.nonEmpty && topk.intersect(removedIds).isEmpty,
       s"a retracted id is still served: ${topk.intersect(removedIds)}")
-    // a removal that empties a whole cell deletes that cell's directory
+    // a removal that empties a whole cell drops that cell from the store
     val post = Quantize.readCodeStore(spark, dir)
     val (oneCell, nPost) = (
-      post.select($"cell").as[Int].head(), post.count())
+      post.select($"cell".cast("long")).as[Long].head(), post.count())
     val inCell = post.filter($"cell" === oneCell).select($"vec_id")
     val nInCell = inCell.count()
     Quantize.removeFromCodeStore(spark, dir, inCell, "vec_id")
@@ -217,7 +217,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_ver").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     assert(Quantize.codeStoreVersion(spark, dir).contains(1L))
     def ids(p: String): Set[Long] =
       Quantize.readCodeStore(spark, p).select($"vec_id")
@@ -265,7 +265,7 @@ class QuantizeSpec extends SparkSpec {
     val dir2 = tempDir("pq_ver_rb").toString
     Quantize.writeCodeStore(
       e.join(remaining.toSeq.toDF("vec_id"), Seq("vec_id"), "left_semi"),
-      cents, cbT, "embedding", "vec_id", 4, 16, dir2, versioned = true)
+      cents, cbT, "embedding", "vec_id", 4, 16, dir2)
     val got = Quantize.readCodeStore(spark, dir)
       .select($"vec_id", $"codes", $"cell".cast("long"))
       .as[(Long, Seq[Int], Long)].collect().toSet
@@ -292,35 +292,6 @@ class QuantizeSpec extends SparkSpec {
     graft.operators.OpCache.release()
   }
 
-  test("enableCodeStoreVersioning migrates a flat store in place") {
-    val (e, cents, cbT) = storeModels()
-    val dir = tempDir("pq_mig").toString
-    Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16, dir)
-    val before = Quantize.readCodeStore(spark, dir)
-      .select($"vec_id", $"codes", $"cell")
-      .as[(Long, Seq[Int], Int)].collect().toSet
-    Quantize.enableCodeStoreVersioning(spark, dir)
-    assert(Quantize.codeStoreVersion(spark, dir).contains(1L))
-    // content identical through the manifest; flat cell= dirs are gone
-    val after = Quantize.readCodeStore(spark, dir)
-      .select($"vec_id", $"codes", $"cell")
-      .as[(Long, Seq[Int], Int)].collect().toSet
-    assert(after == before, "migration changed the store's content")
-    assert(!new java.io.File(dir).list().exists(_.startsWith("cell=")),
-      "flat cell= directories left behind after migration")
-    // double-migration refused; lifecycle ops keep working post-migration
-    intercept[IllegalArgumentException] {
-      Quantize.enableCodeStoreVersioning(spark, dir)
-    }
-    val removed = e.filter($"vec_id" % 5 === 0).select($"vec_id")
-    Quantize.removeFromCodeStore(spark, dir, removed, "vec_id")
-    val removedIds = removed.as[Long].collect().toSet
-    val left = Quantize.readCodeStore(spark, dir).select($"vec_id")
-      .as[Long].collect().toSet
-    assert(left == before.map(_._1) -- removedIds)
-    graft.operators.OpCache.release()
-  }
-
   test("versioned code store ingest: sequence equals one-shot, " +
     "idempotent, self-compacting") {
     val (e, cents, cbT) = storeModels()
@@ -328,7 +299,7 @@ class QuantizeSpec extends SparkSpec {
     val dir2 = tempDir("pq_ing_os").toString
     val m3 = pmod($"vec_id", lit(3))
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
-      "embedding", "vec_id", 4, 16, dir, versioned = true)
+      "embedding", "vec_id", 4, 16, dir)
     // two ingests walk the generation chain; stored models throughout
     val s1 = Quantize.ingestBatchCodeStore(spark, dir, e.filter(m3 === 1),
       cents, cbT, "embedding", "vec_id", 4, 16)
@@ -338,7 +309,7 @@ class QuantizeSpec extends SparkSpec {
     assert(Quantize.codeStoreVersion(spark, dir).contains(3L))
     // sequence ≡ one-shot over the union
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir2, versioned = true)
+      dir2)
     def rows(p: String) = Quantize.readCodeStore(spark, p)
       .select($"vec_id", $"codes", $"cell".cast("long"))
       .as[(Long, Seq[Int], Long)].collect().toSet
@@ -369,15 +340,16 @@ class QuantizeSpec extends SparkSpec {
       .select($"corpus_id").as[Long].collect()
     assert(topk.nonEmpty && topk.exists(_ % 3 == 1),
       s"no ingested vector served in a top-k: ${topk.toSeq}")
-    // flat stores are refused (appends need atomic swaps)
+    // a flat cell-partitioned layout (no manifest) is refused: appends
+    // need the manifest's atomic swap
     val flat = tempDir("pq_ing_flat").toString
-    Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
-      "embedding", "vec_id", 4, 16, flat)
+    e.select($"vec_id", $"vec_id".cast("int").as("cell")).write
+      .mode("overwrite").partitionBy("cell").parquet(flat)
     val ex = intercept[IllegalArgumentException] {
       Quantize.ingestBatchCodeStore(spark, flat, e.filter(m3 === 1),
         cents, cbT, "embedding", "vec_id", 4, 16)
     }
-    assert(ex.getMessage.contains("not a versioned store"), ex.getMessage)
+    assert(ex.getMessage.contains("not a code store"), ex.getMessage)
     graft.operators.OpCache.release()
   }
 
@@ -386,7 +358,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_crash").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     val before = Quantize.readCodeStore(spark, dir)
       .select($"vec_id").as[Long].collect().toSet
     // simulate a writer that crashed AFTER writing its generation but
@@ -464,7 +436,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_bound").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     // a batch of NEW ids carrying vectors copied from ONE cell's corpus
     // rows — same models + same vectors ⇒ assigns to exactly that cell
     val assigned = graft.operators.Similarity.ivfAssign(
@@ -521,7 +493,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_dup").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     // one NEW id arriving twice in the same batch: exactly one row lands
     val v = e.orderBy($"vec_id").limit(1).select($"embedding")
       .as[Seq[Float]].head()
@@ -556,7 +528,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_bloom").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     Quantize.enableCodeStoreIdBloom(spark, dir, "vec_id", 10000L, 0.01)
     assert(Quantize.codeStoreVersion(spark, dir).contains(2L),
       "sidecar enable should commit a manifest-only generation")
@@ -654,7 +626,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_bstale").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     def meta = Quantize.readManifestMeta(spark, dir,
       Quantize.codeStoreVersion(spark, dir).get)
     def lane(ids: Seq[Long]): Seq[Long] = ids.toDF("vec_id")
@@ -713,7 +685,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_age").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     val old = System.currentTimeMillis() - 48L * 3600 * 1000
     def mkOrphan(name: String, stale: Boolean): java.io.File = {
       val leaf = new java.io.File(dir, s"$name/pcell=999")
@@ -747,7 +719,7 @@ class QuantizeSpec extends SparkSpec {
     assert(freshCur.exists(),
       "a YOUNG orphan was age-collected — a racing doomed writer's " +
         "staging data is not this GC's to delete")
-    assert(Quantize.storedModels(spark, dir).nonEmpty,
+    assert(scala.util.Try(Quantize.storedPq(spark, dir)).isSuccess,
       "the referenced models dir was collected")
     assert(Quantize.readCodeStore(spark, dir)
       .select($"vec_id").as[Long].collect().toSet == before,
@@ -773,7 +745,7 @@ class QuantizeSpec extends SparkSpec {
       "idle current+1 orphan did not trigger the no-op advance")
     assert(!future.exists(),
       "idle current+1 orphan survived the advance + age gate")
-    assert(Quantize.storedModels(spark, dir).nonEmpty,
+    assert(scala.util.Try(Quantize.storedPq(spark, dir)).isSuccess,
       "the no-op advance dropped the models pointer")
     assert(Quantize.readCodeStore(spark, dir)
       .select($"vec_id").as[Long].collect().toSet == before,
@@ -793,20 +765,32 @@ class QuantizeSpec extends SparkSpec {
     graft.operators.OpCache.release()
   }
 
-  test("writeCodeStore(versioned) refuses a non-empty path — a flat " +
-    "store must migrate, not be shadowed") {
+  test("writeCodeStore refuses a non-empty path instead of shadowing it") {
     val (e, cents, cbT) = storeModels()
-    val dir = tempDir("pq_flatclash").toString
-    Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16, dir)
+    val dir = tempDir("pq_foreign").toString
+    // foreign content: a cell-partitioned parquet layout written by hand
+    e.select($"vec_id", $"vec_id".cast("int").as("cell")).write
+      .mode("overwrite").partitionBy("cell").parquet(dir)
     val ex = intercept[IllegalArgumentException] {
       Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-        dir, versioned = true)
+        dir)
     }
-    assert(ex.getMessage.contains("enableCodeStoreVersioning"),
-      ex.getMessage)
+    assert(ex.getMessage.contains("is not empty"), ex.getMessage)
     assert(Quantize.codeStoreVersion(spark, dir).isEmpty,
-      "refused versioned write left a manifest behind")
+      "refused write left a manifest behind")
     graft.operators.OpCache.release()
+  }
+
+  test("writeCodeStore(versioned = false) is refused: there is no flat form") {
+    val (e, cents, cbT) = storeModels()
+    val dir = tempDir("pq_noflat").toString
+    val ex = intercept[IllegalArgumentException] {
+      Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
+        dir, versioned = false)
+    }
+    assert(ex.getMessage.contains("versioned = false"), ex.getMessage)
+    assert(Quantize.codeStoreVersion(spark, dir).isEmpty &&
+      new java.io.File(dir).list().isEmpty, "refused write wrote files")
   }
 
   test("retrainCodeStore: new models + full re-encode behind one swap; " +
@@ -815,7 +799,7 @@ class QuantizeSpec extends SparkSpec {
     val half = e.filter($"vec_id" % 2 === 0)
     val dir = tempDir("pq_retrain").toString
     Quantize.writeCodeStore(half, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     def ids(p: String): Set[Long] =
       Quantize.readCodeStore(spark, p).select($"vec_id")
         .as[Long].collect().toSet
@@ -842,11 +826,10 @@ class QuantizeSpec extends SparkSpec {
       s"concurrent reader failed during retrain: ${failure.get()}")
     assert(Quantize.codeStoreVersion(spark, dir).contains(2L))
     // the manifest now pairs the new codes with the NEW models
-    val (c2, cb2) = Quantize.storedModels(spark, dir).getOrElse(
-      fail("retrained store lost its models pointer"))
+    val (c2, cb2, _, _) = Quantize.storedPq(spark, dir)
     val dir2 = tempDir("pq_retrain_os").toString
     Quantize.writeCodeStore(e, c2, cb2, "embedding", "vec_id", 4, 16,
-      dir2, versioned = true)
+      dir2)
     def rows(p: String) = Quantize.readCodeStore(spark, p)
       .select($"vec_id", $"codes", $"cell".cast("long"))
       .as[(Long, Seq[Int], Long)].collect().toSet
@@ -868,7 +851,8 @@ class QuantizeSpec extends SparkSpec {
     assert(modelDirs().size == 1 &&
       modelDirs().head.startsWith("models-000002"),
       s"old models not GC'd past grace: ${modelDirs()}")
-    assert(Quantize.storedModels(spark, dir).nonEmpty)
+    assert(scala.util.Try(Quantize.storedPq(spark, dir)).isSuccess,
+      "the retracted store lost its models pointer")
     graft.operators.OpCache.release()
   }
 
@@ -880,15 +864,14 @@ class QuantizeSpec extends SparkSpec {
     val dir = tempDir("pq_stored").toString
     val dir2 = tempDir("pq_stored2").toString
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
-      "embedding", "vec_id", 4, 16, dir, versioned = true)
-    val (_, _, m1, sd1) = Quantize.storedPq(spark, dir).getOrElse(
-      fail("versioned store records no PQ state"))
+      "embedding", "vec_id", 4, 16, dir)
+    val (_, _, m1, sd1) = Quantize.storedPq(spark, dir)
     assert((m1, sd1) == ((4, 16)), s"geometry mangled: $m1/$sd1")
     // manifest-resolved ingest ≡ the explicit-models ingest
     Quantize.ingestBatchCodeStoreStored(spark, dir, e.filter(m3 === 1),
       "embedding", "vec_id")
     Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
-      "embedding", "vec_id", 4, 16, dir2, versioned = true)
+      "embedding", "vec_id", 4, 16, dir2)
     Quantize.ingestBatchCodeStore(spark, dir2, e.filter(m3 === 1),
       cents, cbT, "embedding", "vec_id", 4, 16)
     def rows(p: String) = Quantize.readCodeStore(spark, p)
@@ -911,23 +894,22 @@ class QuantizeSpec extends SparkSpec {
     // hardcode m/subDim break; the self-describing form keeps serving
     Quantize.retrainCodeStore(spark, dir, e, "embedding", "vec_id",
       dim = 64, m = 8, ksub = 8, cells = 8)
-    val (_, _, m2, sd2) = Quantize.storedPq(spark, dir).getOrElse(
-      fail("retrained store lost its PQ state"))
+    val (_, _, m2, sd2) = Quantize.storedPq(spark, dir)
     assert((m2, sd2) == ((8, 8)), s"retrained geometry wrong: $m2/$sd2")
     assert(Quantize.ivfPqTopKStored(spark, dir, q, "embedding", "vec_id",
       k = 5, nProbe = 3).count() > 0)
-    // flat stores record nothing — both stored forms refuse loudly
+    // a flat cell-partitioned layout (no manifest) is not a code store:
+    // every stored form refuses it loudly
     val flat = tempDir("pq_stored_f").toString
-    Quantize.writeCodeStore(e.filter(m3 === 0), cents, cbT,
-      "embedding", "vec_id", 4, 16, flat)
-    assert(Quantize.storedPq(spark, flat).isEmpty)
-    intercept[IllegalArgumentException] {
-      Quantize.ivfPqTopKStored(spark, flat, q, "embedding", "vec_id", k = 5)
-    }
-    intercept[IllegalArgumentException] {
-      Quantize.ingestBatchCodeStoreStored(spark, flat, e.filter(m3 === 1),
-        "embedding", "vec_id")
-    }
+    e.select($"vec_id", $"vec_id".cast("int").as("cell")).write
+      .mode("overwrite").partitionBy("cell").parquet(flat)
+    def refused(op: => Any) = assert(intercept[IllegalArgumentException](op)
+      .getMessage.contains("not a code store"))
+    refused(Quantize.storedPq(spark, flat))
+    refused(Quantize.ivfPqTopKStored(spark, flat, q, "embedding", "vec_id",
+      k = 5))
+    refused(Quantize.ingestBatchCodeStoreStored(spark, flat,
+      e.filter(m3 === 1), "embedding", "vec_id"))
     graft.operators.OpCache.release()
   }
 
@@ -935,7 +917,7 @@ class QuantizeSpec extends SparkSpec {
     val (e, cents, cbT) = storeModels()
     val dir = tempDir("pq_race").toString
     Quantize.writeCodeStore(e, cents, cbT, "embedding", "vec_id", 4, 16,
-      dir, versioned = true)
+      dir)
     // writer A resolves v1, then writer B commits v2 first
     Quantize.removeFromCodeStore(spark, dir,
       e.filter($"vec_id" % 11 === 0).select($"vec_id"), "vec_id")

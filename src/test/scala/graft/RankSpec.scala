@@ -207,9 +207,8 @@ class RankSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
     val (tbl, tbl2) = (s"rankspec_rm_$pid", s"rankspec_rb_$pid")
-    Seq(tbl, s"${tbl}_stats", s"${tbl}__graft_compact", s"${tbl}__graft_old",
-      tbl2, s"${tbl2}_stats")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq(tbl, s"${tbl}_stats", tbl2, s"${tbl2}_stats")
+      .foreach(graft.operators.Layout.dropStore(spark, _))
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter($"doc_id" < 400 && length(trim($"text")) > 0)
     Rank.writeIndex(corpus, "text", "doc_id", tbl, buckets = 4)

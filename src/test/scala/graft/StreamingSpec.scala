@@ -473,7 +473,7 @@ class StreamingSpec extends SparkSpec {
     val seed = Seq((100L, Seq(0.9f, 0.1f, 0.1f, 0f)))
       .toDF("vec_id", "embedding")
     Seq(dirS, dirQ).foreach(d => graft.operators.Quantize.writeCodeStore(
-      seed, cents, cb, "embedding", "vec_id", 2, 2, d, versioned = true))
+      seed, cents, cb, "embedding", "vec_id", 2, 2, d))
     val b1 = Seq((1L, Seq(0.8f, 0.2f, 0f, 0f)), (2L, Seq(0f, 0.1f, 0.9f, 0.2f)))
     val b2 = Seq((3L, Seq(0.1f, 0.9f, 0.2f, 0f)),
       (100L, Seq(0.9f, 0.1f, 0.1f, 0f))) // already held — skipped
@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
       e, "embedding", "vec_id", dim = 64, m = 4, ksub = 8)
     val store = tempDir("cs_drift_s").toString
     graft.operators.Quantize.writeCodeStore(e, cents, cb, "embedding",
-      "vec_id", 4, 16, store, versioned = true)
+      "vec_id", 4, 16, store)
     // two CALM ticks (new ids, same distribution — disjoint corpus
     // slices re-keyed) then one DRIFTED tick (the q164 concentrated
     // new-domain shape the stored centroids never saw)
@@ -630,7 +630,7 @@ class StreamingSpec extends SparkSpec {
       (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f))).toDF("sub", "code", "codeword")
     val store = tempDir("drain_cs").toString
     Quantize.writeCodeStore(seed, cents, cb, "embedding", "vec_id", 2, 2,
-      store, versioned = true)
+      store)
     drained(vecs)((st, ckpt, tick) => StreamingFlows.streamingIngestCodeStore(
       st, store, cents, cb, "embedding", "vec_id", m = 2, subDim = 2, ckpt,
       onDrift = Some((_, _) => tick())))
