@@ -85,8 +85,8 @@ object Shared {
     f.delete(); ()
   }
 
-  /** Drop a store or table ([[operators.Layout.dropStore]]: its view,
-    * every version, staging tables) AND its warehouse directories: a
+  /** Drop a store or table ([[operators.Layout.dropStore]]: its views
+    * and every segment) AND its warehouse directories: a
     * directory left behind by a KILLED run isn't in the catalog, so the
     * drop misses it and saveAsTable would fail on the stale location —
     * clean at the session's ACTUAL warehouse dir (only meaningful for a
@@ -98,7 +98,7 @@ object Shared {
     if (wh.getScheme == null || wh.getScheme == "file") {
       val root = if (wh.getScheme == null) wh.toString else wh.getPath
       val own = ("^" + java.util.regex.Pattern.quote(tbl.toLowerCase) +
-        "(__v\\d+|__graft_rw_.*)?$").r.pattern
+        "(__s[0-9a-f]{8})?$").r.pattern
       Option(new java.io.File(root).listFiles).getOrElse(Array.empty)
         .filter(f => own.matcher(f.getName).matches()).foreach(rmTree)
     }

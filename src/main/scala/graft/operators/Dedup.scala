@@ -176,22 +176,21 @@ object Dedup {
    * the second time (DedupSpec-gated), and a sequence of ingests equals
    * the one-shot store over the concatenated corpus (q137 oracle).
    *
-   * Scale shape: the append is a same-bucket-spec `bucketBy` append
-   * ([[Layout.appendBucketed]] — the spec comes from the table's own
-   * catalog entry, so it can never mismatch, and versioned stores
-   * resolve to their current backing table) — one new file per touched
-   * bucket, so the store-side anti-join stays exchange-free after ANY
-   * number of ingests (Spark keeps `outputPartitioning` for multi-file
-   * buckets and re-sorts within the partition; PlanSpec-gated on an
-   * appended store). The survivors are materialized into an
-   * RDD BEFORE the append and the returned frame is re-planned from that
-   * RDD — a `persist()`ed DataFrame is NOT enough here: appending to the
-   * table triggers Spark's cache refresh, which RE-COMPUTES dependent
-   * cached plans against the post-append store and silently empties the
-   * survivor set (observed; the RDD handle is invisible to the SQL cache
-   * manager). In production, write survivors to the corpus sink first and
-   * append fingerprints from the written files; this in-memory form is
-   * the single-job composition of the same steps.
+   * Scale shape: the append writes one new immutable segment under the
+   * store's own bucket spec ([[Layout.appendBucketed]] — the spec comes
+   * from the store's catalog entry, so it can never mismatch) with one
+   * file per touched bucket, and commits a new version over the old
+   * segments plus it, so the store-side anti-join stays exchange-free
+   * after ANY number of ingests (the version's union of same-spec
+   * bucketed scans keeps `outputPartitioning`; PlanSpec-gated on an
+   * appended store). A lost commit race is retried on top of the winner,
+   * never refused. The survivors are materialized into an RDD BEFORE the
+   * append and the returned frame is re-planned from that RDD: its
+   * lineage no longer reads the store, and the RDD handle is invisible to
+   * the SQL cache manager that the append's catalog changes notify. In
+   * production, write survivors to the corpus sink first and append
+   * fingerprints from the written files; this in-memory form is the
+   * single-job composition of the same steps.
    */
   def ingestBatch(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, textCol: String, idCol: String, table: String,
@@ -227,16 +226,15 @@ object Dedup {
    *
    * Scale shape: per batch, only the BATCH is shingled/minhashed; both
    * store sides read co-located buckets exchange-free (PlanSpec-gated
-   * post-append), and the appends are one new file per touched bucket.
-   * The same RDD-materialize-before-append discipline as [[ingestBatch]]
-   * applies (the SQL cache manager recomputes dependent plans against
-   * the post-append tables).
+   * post-append), and each append is one new segment with one file per
+   * touched bucket. The same RDD-materialize-before-append discipline as
+   * [[ingestBatch]] applies.
    */
   def ingestBatchLsh(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, textCol: String, idCol: String, table: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rows = lshRows(numHashes, bands)
     val inBatch = keepRepresentatives(batch,
       minhashLsh(batch, textCol, idCol, shingleK, numHashes, bands,
         threshold), idCol)
@@ -254,7 +252,7 @@ object Dedup {
     // the two appends (the writeLshStore note)
     Par.par2(
       Layout.appendBucketed(spark,
-        lshBandBuckets(sigs, bands, numHashes / bands), s"${table}_bands"),
+        lshBandBuckets(sigs, bands, rows), s"${table}_bands"),
       Layout.appendBucketed(spark, sigs, s"${table}_sigs"))
     survivors
   }
@@ -359,8 +357,7 @@ object Dedup {
   def minhashLshAgainst(batch: DataFrame, corpus: DataFrame, textCol: String,
                         idCol: String, shingleK: Int = 3, numHashes: Int = 64,
                         bands: Int = 16, threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = lshRows(numHashes, bands)
     val bSigs = OpCache.track(
       lshSignatures(batch, textCol, idCol, shingleK, numHashes).persist())
     val cSigs = OpCache.track(
@@ -383,35 +380,72 @@ object Dedup {
       minhashSignatureFromHashes(
         shingleHashes(col(textCol), shingleK), numHashes).as("sig"))
 
+  /** Rows per band: `bands` must divide `numHashes`. */
+  private[graft] def lshRows(numHashes: Int, bands: Int): Int = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    numHashes / bands
+  }
+
+  /** One exploded `struct(band, bucket)` per LSH band of the signature
+    * column `sig` — the band formula every banding path (batch, store,
+    * stream) shares, so their buckets cannot drift. */
+  private[graft] def lshBands(sig: Column, bands: Int, rows: Int): Column =
+    explode(array((0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64(slice(sig, b * rows + 1, rows)).as("bucket"))
+    }: _*))
+
   /** Explode a signature frame into bare (id, band, bucket) triples —
     * the slim banding shape ([[minhashLsh]]'s shuffle note): the
     * `numHashes`-long signature never rides the candidate join. */
   private[graft] def lshBandBuckets(sigs: DataFrame, bands: Int,
                                     rows: Int): DataFrame =
-    sigs.select(col("id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rows + 1, rows)).as("bucket"))
-      }: _*)).as("bb"))
+    sigs.select(col("id"), lshBands(col("sig"), bands, rows).as("bb"))
       .select(col("id"), col("bb.band").as("band"),
         col("bb.bucket").as("bucket"))
+
+  /** Estimated Jaccard of two signatures: their agreement rate, rounded
+    * to 4 places. */
+  private[graft] def lshEstJaccard(a: Column, b: Column,
+                                   numHashes: Int): Column =
+    round(size(filter(zip_with(a, b, (x, y) => x === y), t => t))
+      .cast("double") / lit(numHashes), 4)
 
   /** Shared verification tail of the bipartite LSH paths: attach both
     * signatures per candidate pair, estimate Jaccard as signature
     * agreement, threshold. */
   private[graft] def lshVerifyBipartite(cands: DataFrame, bSigs: DataFrame,
-      cSigs: DataFrame, numHashes: Int, threshold: Double): DataFrame = {
-    val withSigs = cands
+      cSigs: DataFrame, numHashes: Int, threshold: Double): DataFrame =
+    cands
       .join(bSigs.select(col("id").as("batch_id"), col("sig").as("sig_a")), "batch_id")
       .join(cSigs.select(col("id").as("corpus_id"), col("sig").as("sig_b")), "corpus_id")
-    val est = size(filter(
-      zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      b => b)).cast("double") / lit(numHashes)
-    withSigs.select(col("batch_id"), col("corpus_id"),
-        round(est, 4).as("est_jaccard"))
+      .select(col("batch_id"), col("corpus_id"),
+        lshEstJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
       .dropDuplicates("batch_id", "corpus_id")
-  }
+
+  /** Self near-dup pairs from a banded (id, band, bucket) frame and its
+    * (id, sig) signatures — [[minhashLsh]] and [[minhashLshPairsFromStore]]
+    * both end here: band-bucket self-join into deduped candidate pairs
+    * (id_a < id_b; a pair may collide in several bands), attach both
+    * signatures per pair, verify. Output: (id_a, id_b, est_jaccard). */
+  private def lshSelfPairs(banded: DataFrame, sigs: DataFrame,
+      numHashes: Int, threshold: Double): DataFrame =
+    banded.alias("l").join(banded.alias("r"),
+        col("l.band") === col("r.band") &&
+        col("l.bucket") === col("r.bucket") &&
+        col("l.id") < col("r.id"))
+      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
+      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        lshEstJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
+      // ids are expected unique; on a dirty corpus with duplicate ids the
+      // attach joins would fan a pair out once per id occurrence — keep the
+      // one-row-per-pair contract regardless of input hygiene
+      .dropDuplicates("id_a", "id_b")
 
   /**
    * Materialize the corpus's LSH ingest store: the band buckets as
@@ -428,8 +462,7 @@ object Dedup {
   def writeLshStore(corpus: DataFrame, textCol: String, idCol: String,
                     table: String, shingleK: Int = 3, numHashes: Int = 64,
                     bands: Int = 16, buckets: Int = 8): Unit = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = lshRows(numHashes, bands)
     val sigs = OpCache.track(
       lshSignatures(corpus, textCol, idCol, shingleK, numHashes).persist())
     sigs.count() // prime the shared cache before the concurrent writers
@@ -455,8 +488,7 @@ object Dedup {
       batch: DataFrame, textCol: String, idCol: String, table: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = lshRows(numHashes, bands)
     val bSigs = OpCache.track(
       lshSignatures(batch, textCol, idCol, shingleK, numHashes).persist())
     val cBands = Layout.readTable(spark, s"${table}_bands").hint("merge")
@@ -485,25 +517,10 @@ object Dedup {
    */
   def minhashLshPairsFromStore(spark: org.apache.spark.sql.SparkSession,
       table: String, numHashes: Int = 64,
-      threshold: Double = 0.7): DataFrame = {
-    val bands = Layout.readTable(spark, s"${table}_bands").hint("merge")
-    val sigs = Layout.readTable(spark, s"${table}_sigs").hint("merge")
-    val cands = bands.alias("l").join(bands.alias("r"),
-        col("l.band") === col("r.band") &&
-          col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val withSigs = cands
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-    val est = size(filter(
-      zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      b => b)).cast("double") / lit(numHashes)
-    withSigs.select(col("id_a"), col("id_b"),
-        round(est, 4).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-  }
+      threshold: Double = 0.7): DataFrame =
+    lshSelfPairs(Layout.readTable(spark, s"${table}_bands").hint("merge"),
+      Layout.readTable(spark, s"${table}_sigs").hint("merge"),
+      numHashes, threshold)
 
   /**
    * MinHash signature from a shingle-hash array column: all `numHashes`
@@ -562,52 +579,13 @@ object Dedup {
   def minhashLsh(df: DataFrame, textCol: String, idCol: String,
                  shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
                  threshold: Double = 0.7): DataFrame = {
-    val (sigs, pairs) =
-      minhashCandidates(df, textCol, idCol, shingleK, numHashes, bands)
-    val withSigs = pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-    val est = size(filter(
-      zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-      b => b)).cast("double") / lit(numHashes)
-    withSigs.select(col("id_a"), col("id_b"), round(est, 4).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      // ids are expected unique; on a dirty corpus with duplicate ids the
-      // attach joins would fan a pair out once per id occurrence — keep the
-      // one-row-per-pair contract regardless of input hygiene
-      .dropDuplicates("id_a", "id_b")
-  }
-
-  /** The blocking stage of [[minhashLsh]]: (persisted signatures as
-    * (id, sig), deduped candidate pairs from the band-bucket self-join). */
-  private def minhashCandidates(
-      df: DataFrame, textCol: String, idCol: String, shingleK: Int,
-      numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = lshRows(numHashes, bands)
     // The native signature expression reads the shingle-hash array exactly
-    // once, so tokenize→shingle→signature fuses into one codegen'd stage.
-    val sigs = OpCache.track(df
-      .select(col(idCol).as("id"),
-        minhashSignatureFromHashes(
-          shingleHashes(col(textCol), shingleK), numHashes).as("sig"))
-      // signatures are reused by every band and both per-pair attach joins
-      .persist())
-    val banded = sigs.select(col("id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rows + 1, rows)).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val l = banded.alias("l")
-    val r = banded.alias("r")
-    val pairs = l.join(r,
-        col("l.band") === col("r.band") &&
-        col("l.bucket") === col("r.bucket") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b") // same pair may collide in several bands
-    (sigs, pairs)
+    // once, so tokenize→shingle→signature fuses into one codegen'd stage;
+    // signatures are reused by every band and both per-pair attach joins
+    val sigs = OpCache.track(
+      lshSignatures(df, textCol, idCol, shingleK, numHashes).persist())
+    lshSelfPairs(lshBandBuckets(sigs, bands, rows), sigs, numHashes, threshold)
   }
 
   /**
@@ -962,10 +940,9 @@ object Dedup {
    * multi-hop chains with a non-canonical root: the loop never fails
    * silently — it throws when `strict`, and logs a WARN otherwise.
    */
-  def resolveClusters(pairs: DataFrame, idACol: String = "id_a",
-                      idBCol: String = "id_b", maxRounds: Int = 50,
+  def resolveClusters(pairs: DataFrame, maxRounds: Int = 50,
                       strict: Boolean = false): DataFrame = {
-    val (edges, _) = clusterEdges(pairs, idACol, idBCol, maxRounds, strict)
+    val (edges, _) = clusterEdges(pairs, maxRounds, strict)
     // the members are the final edge set's ids: a round keeps the node set
     // (an id with a smaller neighbor stays the u of an edge, any other id
     // stays the v of one), so the input's ids are all still there
@@ -984,8 +961,8 @@ object Dedup {
 
   /** [[resolveClusters]]' star-round loop: the final (u, v) edge set, its
     * cache tracked for [[OpCache.release]], and its size. */
-  private def clusterEdges(pairs: DataFrame, idACol: String, idBCol: String,
-                           maxRounds: Int, strict: Boolean): (DataFrame, Long) = {
+  private def clusterEdges(pairs: DataFrame, maxRounds: Int,
+                           strict: Boolean): (DataFrame, Long) = {
     // canonical larger→smaller directed edges; the loop preserves this
     // invariant (every emitted edge points at a strictly smaller id).
     // Rounds materialize via OpCache.materializeHandle (persisted-RDD
@@ -993,8 +970,8 @@ object Dedup {
     // (Degenerate self-pairs are dropped here; a doc paired only with
     // itself is a singleton and is handled like any un-paired doc.)
     var (edges, edgesRdd, edgeCount) = OpCache.materializeHandle(pairs
-      .select(greatest(col(idACol), col(idBCol)).as("u"),
-        least(col(idACol), col(idBCol)).as("v"))
+      .select(greatest(col("id_a"), col("id_b")).as("u"),
+        least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
     // the not-yet-swapped round result, for failure cleanup only
@@ -1103,8 +1080,9 @@ object Dedup {
   /**
    * Applies a cluster resolution back to the corpus: keeps every document
    * that is either untouched by `pairs` (no near-dup edge) or its cluster's
-   * canonical survivor. `idACol`/`idBCol` name the pair columns, as in
-   * [[resolveClusters]].
+   * canonical survivor. `pairs` holds (id_a, id_b) pairs, as in
+   * [[resolveClusters]], whose round bound and WARN-on-non-convergence
+   * this shares.
    *
    * The loser filter is a left anti-join sized by the losers, not the
    * corpus: they are the distinct `u` of the CC loop's final edge set,
@@ -1115,15 +1093,9 @@ object Dedup {
    * statistics, so without this sizing it never broadcasts, and a
    * blanket hint would broadcast any size).
    */
-  def keepRepresentatives(df: DataFrame, pairs: DataFrame, idCol: String,
-                          idACol: String = "id_a",
-                          idBCol: String = "id_b",
-                          maxRounds: Int = 50,
-                          strict: Boolean = false): DataFrame = {
-    // maxRounds/strict forward to the CC loop: a caller shipping a corpus
-    // can opt into failing on non-convergence instead of silently keeping
-    // several "representatives" of one under-contracted cluster
-    val (edges, edgeCount) = clusterEdges(pairs, idACol, idBCol, maxRounds, strict)
+  def keepRepresentatives(df: DataFrame, pairs: DataFrame,
+                          idCol: String): DataFrame = {
+    val (edges, edgeCount) = clusterEdges(pairs, maxRounds = 50, strict = false)
     // resolveClusters' keep = false rows are exactly the final edges' u
     val losers = edges.select(col("u").as(idCol)).distinct()
     // Spark's own row-size estimate: 8 bytes of row overhead plus the id

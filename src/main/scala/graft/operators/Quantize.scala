@@ -1290,17 +1290,20 @@ object Quantize {
                       queries: DataFrame, centroids: DataFrame,
                       vecCol: String, idCol: String,
                       nProbe: Int): DataFrame = {
-    val store = readCodeStore(spark, path)
-    val cellType = store.schema("cell").dataType
+    val entries = readManifest(spark, path,
+        currentVersion(spark, path, "prunedCodeStore"))
+      .map(e => (e._1, s"${path.stripSuffix("/")}/${e._2}"))
+    // every cell dir holds the same schema: list one for it, so a probe
+    // lists only its probed cells' directories
+    val schema = spark.read.parquet(entries.head._2).schema
     val cells = probeCells(queries, centroids, vecCol, idCol, nProbe)
-      .select(col("cell").cast(cellType)).distinct()
+      .select(col("cell").cast(schema("cell").dataType)).distinct()
       .collect().map(_.get(0)).toSeq
     val probed = cells.map(String.valueOf).toSet
-    val dirs = readManifest(spark, path,
-        currentVersion(spark, path, "prunedCodeStore"))
-      .filter(e => probed(e._1)).map(e => s"${path.stripSuffix("/")}/${e._2}")
-    if (dirs.isEmpty) store.filter(lit(false))
-    else spark.read.schema(store.schema).parquet(dirs: _*)
+    val dirs = entries.filter(e => probed(e._1)).map(_._2)
+    if (dirs.isEmpty) spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
       .filter(col("cell").isInCollection(cells))
   }
 

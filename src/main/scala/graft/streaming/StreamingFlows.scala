@@ -102,16 +102,8 @@ object StreamingFlows {
    * batch form — the store ships fingerprints only, never text.
    */
   def streamingDedupAgainst(stream: DataFrame, corpusFps: DataFrame,
-                            textCol: String): DataFrame = {
-    require(corpusFps.columns.length == 1,
-      s"corpusFps must be a single fingerprint column, " +
-        s"got ${corpusFps.columns.toSeq}")
-    val fp = "__graft_dedup_fp"
-    stream
-      .withColumn(fp, graft.functions.TextFunctions.fingerprint(col(textCol)))
-      .join(corpusFps.toDF(fp), Seq(fp), "left_anti")
-      .drop(fp)
-  }
+                            textCol: String): DataFrame =
+    graft.operators.Dedup.dedupAgainstFingerprints(stream, textCol, corpusFps)
 
   /**
    * [[streamingDedupAgainst]] off a
@@ -323,32 +315,26 @@ object StreamingFlows {
       watermark: String = "10 minutes", shingleK: Int = 3,
       numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
+    val rows = graft.operators.Dedup.lshRows(numHashes, bands)
     val sigs = stream.select(col(idCol).as("batch_id"), col(tsCol),
       graft.operators.Dedup.minhashSignatureFromHashes(
         graft.functions.TextFunctions.shingleHashes(col(textCol), shingleK),
         numHashes).as("__sig_a"))
     val cands = sigs.select(col("batch_id"), col(tsCol), col("__sig_a"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            xxhash64(slice(col("__sig_a"), b * rows + 1, rows)).as("bucket"))
-        }: _*)).as("bb"))
+        graft.operators.Dedup.lshBands(col("__sig_a"), bands, rows).as("bb"))
       .select(col("batch_id"), col(tsCol), col("__sig_a"),
         col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .join(graft.operators.Layout.readTable(spark, s"${table}_bands"),
         Seq("band", "bucket"))
       .select(col("batch_id"), col(tsCol), col("__sig_a"),
         col("id").as("corpus_id"))
-    val est = size(filter(
-      zip_with(col("__sig_a"), col("__sig_b"), (x, y) => x === y),
-      b => b)).cast("double") / lit(numHashes)
     cands
       .join(graft.operators.Layout.readTable(spark, s"${table}_sigs")
         .select(col("id").as("corpus_id"), col("sig").as("__sig_b")),
         Seq("corpus_id"))
       .select(col("batch_id"), col("corpus_id"),
-        round(est, 4).as("est_jaccard"), col(tsCol))
+        graft.operators.Dedup.lshEstJaccard(col("__sig_a"), col("__sig_b"),
+          numHashes).as("est_jaccard"), col(tsCol))
       .filter(col("est_jaccard") >= threshold)
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("batch_id", "corpus_id")

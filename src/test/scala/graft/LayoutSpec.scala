@@ -4,28 +4,46 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Layout, OpCache}
 import graft.functions.TextFunctions
 
-/** Store-lifecycle mechanics: view-backed `__vN` stores (atomic swap for
-  * concurrent readers), spec-derived appends, crash healing and
-  * `dropStore`. The content/plan gates for compaction itself live in
-  * PlanSpec and q138. */
+/** Store-lifecycle mechanics: segment/version/view stores (atomic publish
+  * for concurrent readers), the exclusive version create as the one
+  * commit point, lost races, fault injection after each commit step,
+  * garbage collection and `dropStore`. The content/plan gates for
+  * compaction itself live in PlanSpec and q138. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
   private def pid = java.lang.Long.toHexString(ProcessHandle.current().pid())
+
+  private def fps(texts: String*) =
+    texts.toDF("text").select(TextFunctions.fingerprint($"text").as("fp"))
+
+  private def names(prefix: String): Seq[String] =
+    spark.catalog.listTables().select($"name").as[String].collect()
+      .filter(_.startsWith(prefix)).sorted.toSeq
+
+  private def versionsOf(tbl: String): Seq[Int] =
+    names(s"${tbl}__v").map(_.stripPrefix(s"${tbl}__v").toInt).sorted
+
+  private def segmentTables(tbl: String): Set[String] =
+    names(s"${tbl}__s").toSet
+
+  private def named(tbl: String, v: Int): Set[String] =
+    Layout.segmentsOf(spark, tbl, s"${tbl}__v$v").toSet
+
+  private def viewText(tbl: String): String = spark.sessionState.catalog
+    .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(tbl))
+    .viewText.getOrElse(fail(s"$tbl is not a view"))
 
   test("versioned store: concurrent readers never fail across repeated compactions") {
     val tbl = s"layoutspec_ver_$pid"
     Dedup.writeFingerprintStore(
       Seq("a b", "c d", "e f").toDF("text"), "text", tbl, buckets = 2)
     assert(spark.table(tbl).count() == 3, "view must serve the v1 data")
-    // appends resolve the view to its current backing table
-    Layout.appendBucketed(spark,
-      Seq("x y").toDF("text")
-        .select(TextFunctions.fingerprint($"text").as("fp")), tbl)
+    Layout.appendBucketed(spark, fps("x y"), tbl)
     assert(spark.table(tbl).count() == 4, "append through the view lost rows")
     // the crux: a reader loop must never observe a missing/partial store
-    // while compactions swap versions underneath it — the view repoint is
-    // ONE catalog op
+    // while compactions swap versions underneath it — the publish is ONE
+    // catalog op
     @volatile var stop = false
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
     val reads = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -42,300 +60,204 @@ class LayoutSpec extends SparkSpec {
     assert(failure.get() == null,
       s"concurrent reader failed during compaction: ${failure.get()}")
     assert(reads.get() > 0, "reader loop never completed a read")
-    // grace policy: current + previous versions remain, older dropped
-    val left = spark.catalog.listTables()
-      .filter(col("name").startsWith(s"${tbl}__v"))
-      .select($"name").as[String].collect().sorted.toSeq
-    assert(left == Seq(s"${tbl}__v3", s"${tbl}__v4"),
-      s"expected exactly v3 (grace) and v4 (current), got $left")
+    // v1 write, v2 append, v3-v5 compactions: the current and previous
+    // versions remain, with exactly the segments they name
+    assert(versionsOf(tbl) == Seq(4, 5), s"versions left: ${versionsOf(tbl)}")
+    assert(segmentTables(tbl) == named(tbl, 4) ++ named(tbl, 5))
     // rewrite-with-transform (retraction) also goes through the view
     Dedup.removeFromFingerprintStore(spark, tbl,
       Seq("a b").toDF("text"), "text")
     assert(spark.table(tbl).count() == 3, "retraction through the view")
+    Layout.dropStore(spark, tbl)
     OpCache.release()
   }
 
   test("view-text coupling: every view the writers generate parses back " +
-    "to the serving version (recoverVersioned's parser contract)") {
-    // recoverVersioned derives the serving version from the view's
-    // stored SQL text (so does resolveStore's heal check); this gate
-    // fails if writeBucketed / commitVersioned ever phrase the view in a way servingVersion
-    // cannot read — the silent-recovery-breakage the coupling note in
-    // Layout.scala warns about
+    "to its version and segments") {
+    // the serving version and a version's segments live only in the
+    // views' SQL text; this gate fails if the writers ever phrase a view
+    // in a way servingVersion / segmentsOf cannot read
     val tbl = s"layoutspec_vt_$pid"
-    def viewText: String = spark.sessionState.catalog
-      .getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(tbl))
-      .viewText.getOrElse(fail(s"$tbl is not a view"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    assert(Layout.servingVersion(viewText).contains(1),
-      s"fresh store's view text unparseable: '$viewText'")
+    assert(Layout.servingVersion(viewText(tbl)).contains(1),
+      s"fresh store's view text unparseable: '${viewText(tbl)}'")
+    assert(named(tbl, 1) == segmentTables(tbl) && segmentTables(tbl).size == 1)
+    Layout.appendBucketed(spark, fps("e f"), tbl)
+    assert(Layout.servingVersion(viewText(tbl)).contains(2))
+    assert(named(tbl, 2) == segmentTables(tbl) && segmentTables(tbl).size == 2,
+      s"an append's version names the old segment plus its own: " +
+        viewText(s"${tbl}__v2"))
     Layout.compactBucketed(spark, tbl)
-    assert(Layout.servingVersion(viewText).contains(2),
-      s"post-rewrite view text unparseable: '$viewText'")
-    // and the parser agrees with resolveStore on a HEALTHY store (they
-    // may only diverge mid-swap, which is the heal check's whole job)
-    assert(Layout.resolveStore(spark, tbl) == s"${tbl}__v2")
+    assert(Layout.servingVersion(viewText(tbl)).contains(3),
+      s"post-rewrite view text unparseable: '${viewText(tbl)}'")
+    assert(named(tbl, 3).size == 1 && (named(tbl, 3) & named(tbl, 2)).isEmpty)
+    // and the parser agrees with resolveStore on a healthy store
+    assert(Layout.resolveStore(spark, tbl) == s"${tbl}__v3")
     assert(Layout.servingVersion("SELECT * FROM plain_table").isEmpty,
       "non-versioned view text must parse to None")
+    Layout.dropStore(spark, tbl)
     OpCache.release()
   }
 
   test("versioned rewrite refuses a concurrent writer's lost update") {
     val tbl = s"layoutspec_race_$pid"
-    spark.sql(s"DROP VIEW IF EXISTS $tbl")
-    (1 to 4).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    // writer B commits v2 while writer A's rewrite (staged below) runs
-    Layout.compactBucketed(spark, tbl)
     val content = spark.table(tbl).as[String].collect().toSet
-    // writer A staged its rewrite against the STALE v1 snapshot
-    val stale = s"${tbl}__graft_rw_stale"
-    spark.sql(s"DROP TABLE IF EXISTS $stale")
-    Seq("zz").toDF("fp").write.format("parquet").saveAsTable(stale)
+    // writer A stages a rewrite of v1 that drops "a b"; writer B commits
+    // v2 (a compaction) before A's commit
     val ex = intercept[IllegalStateException] {
-      // coord/seq0 are immaterial here: the generation check refuses
-      // BEFORE the token CAS (the stale writer resolved __v1, now __v2)
-      Layout.commitVersioned(spark, tbl, expected = 1, dest = stale,
-        coord = Layout.coordPath(spark, s"${tbl}__v2"), seq0 = 0L)
+      Layout.rewriteBucketed(spark, tbl, step =>
+        if (step == "segment") Layout.compactBucketed(spark, tbl)
+      )(_.filter(col("fp") =!= TextFunctions.fingerprint(lit("a b"))))
     }
-    assert(ex.getMessage.contains("concurrent writer"), ex.getMessage)
+    assert(ex.getMessage.contains("another writer committed"), ex.getMessage)
     // the refused commit changed NOTHING a reader can see, and dropped
-    // its staging table
+    // its segment
     assert(spark.table(tbl).as[String].collect().toSet == content,
       "refused commit mutated the store")
-    assert(!spark.catalog.tableExists(stale), "staging table left behind")
-    assert(!spark.catalog.tableExists(s"${tbl}__v3"),
-      "refused commit advanced the generation")
+    assert(versionsOf(tbl) == Seq(1, 2), "refused commit advanced the generation")
+    assert(segmentTables(tbl) == named(tbl, 1) ++ named(tbl, 2),
+      "refused rewrite left its segment behind")
     // and a non-stale rewrite through the public path still works
     Layout.compactBucketed(spark, tbl)
     assert(spark.table(tbl).as[String].collect().toSet == content,
       "post-refusal compaction lost content")
+    Layout.dropStore(spark, tbl)
     OpCache.release()
   }
 
   test("an append interleaved into a rewrite is never dropped: the " +
     "rewrite is refused and the appended rows stay visible") {
     val tbl = s"layoutspec_ar_$pid"
-    spark.sql(s"DROP VIEW IF EXISTS $tbl")
-    (1 to 4).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
     Dedup.writeFingerprintStore(
       Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    // the lost-update interleaving: the rewrite has SNAPSHOTTED the files
-    // and staged its result; the append lands before the commit
+    // the append commits while the rewrite's segment is staged: the
+    // rewrite's snapshot misses it, so the rewrite is the one refused
     val ex = intercept[IllegalStateException] {
-      Layout.rewriteBucketed(spark, tbl, () =>
-        Layout.appendBucketed(spark,
-          Seq("x y").toDF("text")
-            .select(TextFunctions.fingerprint($"text").as("fp")), tbl)
+      Layout.rewriteBucketed(spark, tbl, step =>
+        if (step == "segment") Layout.appendBucketed(spark, fps("x y"), tbl)
       )(identity)
     }
-    assert(ex.getMessage.contains("after this rewrite's file snapshot"),
-      ex.getMessage)
+    assert(ex.getMessage.contains("another writer committed"), ex.getMessage)
     assert(spark.table(tbl).count() == 3,
       "the interleaved append's rows were dropped")
-    assert(!spark.catalog.tableExists(s"${tbl}__v2"),
-      "refused rewrite advanced the generation")
-    // the refused rewrite left no tombstone: a retry sees the appended
-    // rows (fresh snapshot) and swaps cleanly
-    Layout.compactBucketed(spark, tbl)
-    assert(spark.table(tbl).count() == 3,
-      "post-refusal compaction lost the appended rows")
-    // inverse direction: an append that starts against a version a
-    // rewrite CLOSED (token committed, repoint pending or done) refuses
-    // loudly instead of writing into the superseded table — plant the
-    // tombstone the way a mid-swap rewrite leaves it
-    val closed = Layout.coordPath(spark, Layout.resolveStore(spark, tbl))
-    assert(Layout.commitToken(spark, closed, 1L, "r"))
-    val ex2 = intercept[IllegalStateException] {
-      Layout.appendBucketed(spark,
-        Seq("p q").toDF("text")
-          .select(TextFunctions.fingerprint($"text").as("fp")), tbl)
-    }
-    assert(ex2.getMessage.contains("rewrite"), ex2.getMessage)
-    assert(spark.table(tbl).count() == 3,
-      "append into a closed version landed anyway")
+    // the other order: a rewrite commits while the append's segment is
+    // staged — the append loses the create, re-reads the rewrite's
+    // version and commits on top of it; no refusal, no lost row
+    Layout.appendBucketed(spark, fps("p q"), tbl, step =>
+      if (step == "segment") Dedup.removeFromFingerprintStore(spark, tbl,
+        Seq("a b").toDF("text"), "text"))
+    assert(spark.table(tbl).as[String].collect().toSet ==
+      fps("c d", "x y", "p q").as[String].collect().toSet,
+      "the append racing a rewrite must be served on top of it")
+    assert(Layout.servingVersion(viewText(tbl)).contains(4))
+    Layout.dropStore(spark, tbl)
     OpCache.release()
   }
 
-  test("a CRASHED append (rows committed, intent unfinalized) blocks " +
-    "rewrites until the horizon — never a silent row loss; failed and " +
-    "finalized appends don't block") {
-    val tbl = s"layoutspec_ci_$pid"
-    spark.sql(s"DROP VIEW IF EXISTS $tbl")
-    (1 to 5).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
-    Dedup.writeFingerprintStore(
-      Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
-    def append(t: String, afterData: () => Unit = () => ()): Unit =
-      Layout.appendBucketed(spark,
-        Seq(t).toDF("text")
-          .select(TextFunctions.fingerprint($"text").as("fp")), tbl,
-        afterData)
-    // the r15 residual window, driven deterministically: the append's
-    // data COMMITS, the process dies before its finalization token
-    val boom = intercept[RuntimeException] {
-      append("x y", () => throw new RuntimeException("crash after data"))
+  test("two writers racing to create the same version: exactly one wins, " +
+    "and racing appends both land") {
+    val tbl = s"layoutspec_cas_$pid"
+    Layout.writeBucketed(Seq((1L, "a")).toDF("id", "v"), tbl, Seq("id"), 2)
+    val segs = named(tbl, 1).toSeq
+    (2 to 6).foreach { n =>
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val ts = (1 to 2).map(_ => new Thread(() =>
+        try {
+          start.await()
+          if (Layout.createVersion(spark, tbl, n, segs)) wins.incrementAndGet()
+        } catch { case t: Throwable => errors.add(t) }))
+      ts.foreach(_.start()); ts.foreach(_.join(60000))
+      assert(errors.isEmpty, s"a racing create failed: ${errors.peek()}")
+      assert(wins.get() == 1, s"__v$n: ${wins.get()} writers won the create")
     }
-    assert(boom.getMessage == "crash after data")
-    assert(spark.table(tbl).count() == 3,
-      "the crashed append's committed rows should be visible")
-    // a rewrite CANNOT prove its listing includes those rows — refused
-    val ex = intercept[IllegalStateException] {
+    // the store heals to the newest version on the next resolve
+    assert(Layout.resolveStore(spark, tbl) == s"${tbl}__v6")
+    assert(Layout.servingVersion(viewText(tbl)).contains(6))
+    // two appends racing end to end: the loser retries, neither refuses
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val ts = Seq(2L, 3L).map(id => new Thread(() =>
+      try {
+        start.await()
+        Layout.appendBucketed(spark, Seq((id, "b")).toDF("id", "v"), tbl)
+      } catch { case t: Throwable => errors.add(t) }))
+    ts.foreach(_.start()); ts.foreach(_.join(120000))
+    assert(errors.isEmpty, s"a racing append failed: ${errors.peek()}")
+    assert(spark.table(tbl).select($"id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L), "a racing append lost its rows")
+    assert(versionsOf(tbl).last == 8)
+    Layout.dropStore(spark, tbl)
+  }
+
+  test("fault injection: a writer dying after any commit step leaves " +
+    "readers on v or v+1, loses no committed row, and the next writers " +
+    "succeed") {
+    case object Crash extends RuntimeException("injected crash")
+    val wh = new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    for (step <- Seq("segment", "version", "publish");
+         writer <- Seq("append", "rewrite")) {
+      val tbl = s"layoutspec_fault_${writer}_${step}_$pid"
+      def dirs = Option(wh.list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith(tbl)).toSeq
+      Dedup.writeFingerprintStore(
+        Seq("a b", "c d").toDF("text"), "text", tbl, buckets = 2)
+      Layout.appendBucketed(spark, fps("e f"), tbl) // v = 2, 3 rows
+      val v = fps("a b", "c d", "e f").as[String].collect().toSet
+      // v+1: the append adds "x y", the rewrite retracts "a b"
+      val v1 = if (writer == "append") v ++ fps("x y").as[String].collect()
+        else v -- fps("a b").as[String].collect()
+      val crash: String => Unit = s => if (s == step) throw Crash
+      intercept[Crash.type] {
+        if (writer == "append") Layout.appendBucketed(spark, fps("x y"), tbl, crash)
+        else Layout.rewriteBucketed(spark, tbl, crash)(
+          _.filter(col("fp") =!= TextFunctions.fingerprint(lit("a b"))))
+      }
+      def served = spark.table(tbl).as[String].collect().toSet
+      val ctx = s"$writer crashed after $step"
+      // readers see v until the publish, v+1 from it on
+      assert(served == (if (step == "publish") v1 else v), ctx)
+      // the next append (healing a committed-but-unpublished version
+      // first) and the next rewrite both succeed
+      Layout.appendBucketed(spark, fps("g h"), tbl)
       Layout.compactBucketed(spark, tbl)
+      val committed = (if (step == "segment") v else v1) ++
+        fps("g h").as[String].collect()
+      assert(served == committed, s"$ctx: committed rows lost")
+      // GC keeps the current and previous versions' segments; only the
+      // crashed writer's never-named segment is outside them
+      val vs = versionsOf(tbl)
+      assert(vs.size == 2, s"$ctx: versions left $vs")
+      val live = named(tbl, vs(0)) ++ named(tbl, vs(1))
+      assert((segmentTables(tbl) -- live).size == (if (step == "segment") 1 else 0),
+        s"$ctx: segments ${segmentTables(tbl)}, named $live")
+      assert(live.subsetOf(segmentTables(tbl)), ctx)
+      // dropStore removes everything, the orphan included
+      Layout.dropStore(spark, tbl)
+      assert(names(tbl).isEmpty && dirs.isEmpty,
+        s"$ctx: dropStore left ${names(tbl)} / $dirs")
     }
-    assert(ex.getMessage.contains("unfinalized"), ex.getMessage)
-    assert(!spark.catalog.tableExists(s"${tbl}__v2"),
-      "refused rewrite advanced the generation")
-    // appends are NOT paused — only rewrites wait on the horizon
-    append("e f")
-    assert(spark.table(tbl).count() == 4)
-    // the operator escape for a KNOWN-dead writer: horizon 0 ignores the
-    // stale intent; the crashed append's rows survive the swap (they
-    // are in any fresh listing — that is exactly why stale is safe)
-    Layout.rewriteBucketed(spark, tbl, inFlightHorizonMs = 0L)(identity)
-    assert(spark.table(tbl).count() == 4,
-      "compaction lost the crashed append's rows")
-    // healthy lifecycle on the new version: finalized intents never
-    // block (append then compact cleanly)
-    append("g h")
-    Layout.compactBucketed(spark, tbl)
-    assert(spark.table(tbl).count() == 5,
-      "a finalized append blocked or was lost by compaction")
-    // a planted live intent blocks the default-horizon rewrite until its
-    // token AGES past the horizon (the crashed-writer clock, not a flag)
-    val coord = Layout.coordPath(spark, Layout.resolveStore(spark, tbl))
-    assert(Layout.commitToken(spark, coord, 99L, "i"))
-    intercept[IllegalStateException] { Layout.compactBucketed(spark, tbl) }
-    val tok = new java.io.File(
-      new java.net.URI(coord.toString).getPath, "_t000000099")
-    assert(tok.exists() &&
-      tok.setLastModified(System.currentTimeMillis() - 48L * 3600 * 1000))
-    Layout.compactBucketed(spark, tbl)
-    assert(spark.table(tbl).count() == 5,
-      "compaction past a stale intent lost rows")
-    // a FAILED (not crashed) append self-finalizes its intent: one bad
-    // batch must not pause rewrites for the horizon
-    intercept[Exception] {
-      Layout.appendBucketed(spark,
-        Seq(1).toDF("wrong_schema_col"), tbl)
-    }
-    Layout.compactBucketed(spark, tbl) // no refusal
-    assert(spark.table(tbl).count() == 5)
-    OpCache.release()
-  }
-
-  test("append commit tokens: sequential appends chain, rewrites see them") {
-    val tbl = s"layoutspec_tok_$pid"
-    spark.sql(s"DROP VIEW IF EXISTS $tbl")
-    (1 to 4).foreach(v => spark.sql(s"DROP TABLE IF EXISTS ${tbl}__v$v"))
-    Dedup.writeFingerprintStore(
-      Seq("a b").toDF("text"), "text", tbl, buckets = 2)
-    def append(t: String): Unit = Layout.appendBucketed(spark,
-      Seq(t).toDF("text")
-        .select(TextFunctions.fingerprint($"text").as("fp")), tbl)
-    append("c d")
-    append("e f")
-    // both appends committed their token PAIRS (intent before data,
-    // finalization after) in the current version's coord dir
-    val coord = Layout.coordPath(spark, Layout.resolveStore(spark, tbl))
-    val fs = coord.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tokens = fs.listStatus(coord).map(_.getPath.getName).sorted.toSeq
-    assert(tokens == Seq("_t000000001", "_t000000002",
-      "_t000000003", "_t000000004"), tokens.toString)
-    // a clean rewrite includes them and the NEW version starts a fresh
-    // token chain (the old coord dies with the old version's directory)
-    Layout.compactBucketed(spark, tbl)
-    assert(spark.table(tbl).count() == 3, "compaction lost appended rows")
-    val coord2 = Layout.coordPath(spark, Layout.resolveStore(spark, tbl))
-    assert(coord2 != coord)
-    assert(!fs.exists(coord2) ||
-      fs.listStatus(coord2).isEmpty, "new version inherited stale tokens")
-    // and appends keep working against the new version
-    append("g h")
-    assert(spark.table(tbl).count() == 4)
-    // append-vs-append: competing appends' tokens (planted the way
-    // racing appendBucketed calls leave them) are benign — the next
-    // append chains past them to the next free sequence, no refusal
-    // (only an `r` token refuses; appends never conflict on data)
-    val c3 = Layout.coordPath(spark, Layout.resolveStore(spark, tbl))
-    assert(Layout.commitToken(spark, c3, 3L, "a"))
-    assert(Layout.commitToken(spark, c3, 4L, "a"))
-    append("i j")
-    assert(spark.table(tbl).count() == 5,
-      "append lost to a benign append-token conflict")
-    val after = fs.listStatus(c3).map(_.getPath.getName).sorted.toSeq
-    assert(after.contains("_t000000006"),
-      s"append did not chain past the planted tokens: $after")
-    OpCache.release()
-  }
-
-  test("recoverVersioned finishes a crashed rewrite commit: roll back " +
-    "before the rename, complete after it") {
-    val tbl = s"layoutspec_rec_$pid"
-    Dedup.writeFingerprintStore(
-      Seq("a b", "c d", "e f").toDF("text"), "text", tbl, buckets = 2)
-    // healthy store: recovery is a no-op (safe on a schedule)
-    assert(!Layout.recoverVersioned(spark, tbl))
-    // CASE 1 — writer died between its token and the rename: the version
-    // is closed (appends refuse) and an orphan staging table lingers
-    val coord1 = Layout.coordPath(spark, Layout.resolveStore(spark, tbl))
-    assert(Layout.commitToken(spark, coord1, 1L, "r"))
-    Seq("zz").toDF("fp").write.format("parquet")
-      .saveAsTable(s"${tbl}__graft_rw_dead")
-    def append(t: String): Unit = Layout.appendBucketed(spark,
-      Seq(t).toDF("text")
-        .select(TextFunctions.fingerprint($"text").as("fp")), tbl)
-    intercept[IllegalStateException] { append("x y") }
-    // a FRESH tombstone could be a merely-slow LIVE writer between its
-    // token and its rename — the default horizon refuses to roll back
-    assert(!Layout.recoverVersioned(spark, tbl),
-      "rollback destroyed a possibly-live writer's commit")
-    assert(Layout.recoverVersioned(spark, tbl, rollbackHorizonMs = 0L),
-      "rollback not detected")
-    append("x y") // the version accepts commits again
-    assert(spark.table(tbl).count() == 4)
-    assert(!spark.catalog.tableExists(s"${tbl}__graft_rw_dead"),
-      "orphan staging table survived rollback")
-    // CASE 2 — writer died between the rename and the repoint: __v2
-    // exists and is complete, the view still serves __v1, and the dead
-    // writer's `r` token sits in __v1's coord (where it committed it)
-    spark.table(tbl).unionByName(Seq("recovered-row").toDF("fp"))
-      .repartition(2, $"fp").write.bucketBy(2, "fp").sortBy("fp")
-      .format("parquet").saveAsTable(s"${tbl}__v2")
-    val coord2 = Layout.coordPath(spark, s"${tbl}__v1")
-    // CASE 1's rollback deleted _t1 and the append re-took seqs 1+2
-    // (intent + finalization): the dead rewrite's token goes at the
-    // next free sequence, 3
-    assert(Layout.commitToken(spark, coord2, 3L, "r"))
-    // a reader between the crash and the next writer still sees __v1
-    assert(spark.table(tbl).count() == 4,
-      "pre-heal readers must still serve the old version")
-    // the next append's resolve HEALS the store: it finishes the swap
-    // (repoints the view to __v2), then lands its row there
-    append("p q")
-    assert(spark.table(tbl).count() == 6, // 5 staged + 1 healing append
-      "healed swap must serve the staged store plus the append")
-    assert(Layout.servingVersion(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(tbl))
-      .viewText.get).contains(2), "the append did not repoint the view")
-    // healthy again: nothing left to recover, appends keep working
-    assert(!Layout.recoverVersioned(spark, tbl))
-    append("r s")
-    assert(spark.table(tbl).count() == 7)
     OpCache.release()
   }
 
   test("appendBucketed derives the spec from the table; non-bucketed refused") {
     val tbl = s"layoutspec_app_$pid"
     Layout.writeBucketed(Seq((1L, "a")).toDF("id", "v"), tbl, Seq("id"), 3)
-    Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), tbl)
-    assert(spark.table(tbl).count() == 2)
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(
-        Layout.resolveStore(spark, tbl))).bucketSpec
-    assert(spec.exists(_.numBuckets == 3), s"append changed the spec: $spec")
+    // columns are matched by name and cast to the store's types (an int
+    // key would hash to other buckets than the store's long keys)
+    Layout.appendBucketed(spark, Seq(("b", 2)).toDF("v", "id"), tbl)
+    assert(spark.table(tbl).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+    val specs = segmentTables(tbl).toSeq.map(s => spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(s))
+      .bucketSpec)
+    assert(specs.size == 2 && specs.forall(_.exists(_.numBuckets == 3)),
+      s"append changed the spec: $specs")
     // a plain table is not a graft store: refused, not appended to
     val plain = s"layoutspec_plainapp_$pid"
     Seq((1L, "a")).toDF("id", "v").write.saveAsTable(plain)
@@ -343,10 +265,12 @@ class LayoutSpec extends SparkSpec {
       Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), plain)
     }
     assert(ex.getMessage.contains("not a graft store"), ex.getMessage)
-    // a store whose version is not bucketed keeps the spec refusal
+    // a store whose segment is not bucketed keeps the spec refusal
     val unbucketed = s"layoutspec_nobkt_$pid"
     Seq((1L, "a")).toDF("id", "v").write.format("parquet")
-      .saveAsTable(s"${unbucketed}__v1")
+      .saveAsTable(s"${unbucketed}__s0000000a")
+    spark.sql(s"CREATE VIEW ${unbucketed}__v1 AS " +
+      s"SELECT id, v FROM ${unbucketed}__s0000000a")
     spark.sql(s"CREATE VIEW $unbucketed AS SELECT * FROM ${unbucketed}__v1")
     val ex2 = intercept[IllegalArgumentException] {
       Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), unbucketed)
@@ -358,7 +282,9 @@ class LayoutSpec extends SparkSpec {
   test("rewriteBucketed refuses non-parquet stores loudly") {
     val tbl = s"layoutspec_orc_$pid"
     Seq((1L, "a")).toDF("id", "v").write
-      .bucketBy(2, "id").sortBy("id").format("orc").saveAsTable(s"${tbl}__v1")
+      .bucketBy(2, "id").sortBy("id").format("orc")
+      .saveAsTable(s"${tbl}__s0000000a")
+    spark.sql(s"CREATE VIEW ${tbl}__v1 AS SELECT id, v FROM ${tbl}__s0000000a")
     spark.sql(s"CREATE VIEW $tbl AS SELECT * FROM ${tbl}__v1")
     val e = intercept[IllegalArgumentException] {
       Layout.compactBucketed(spark, tbl)
@@ -366,10 +292,6 @@ class LayoutSpec extends SparkSpec {
     assert(e.getMessage.contains("parquet"), e.getMessage)
     Layout.dropStore(spark, tbl)
   }
-
-  private def names(prefix: String): Seq[String] =
-    spark.catalog.listTables().select($"name").as[String].collect()
-      .filter(_.startsWith(prefix)).sorted.toSeq
 
   test("writeBucketed: the first write is a view over __v1, and writing " +
     "the name again replaces the store") {
@@ -382,13 +304,13 @@ class LayoutSpec extends SparkSpec {
       .CatalogTableType.VIEW, s"$tbl is a ${m.tableType}, not a view")
     assert(m.viewText.flatMap(Layout.servingVersion).contains(1))
     assert(Layout.resolveStore(spark, tbl) == s"${tbl}__v1")
-    assert(names(tbl) == Seq(tbl, s"${tbl}__v1"))
+    assert(names(tbl) == (Seq(tbl, s"${tbl}__v1") ++ segmentTables(tbl)).sorted)
     // grow the store past v1, then write the name again: the old store
     // goes whole and the new one starts over at v1
     Layout.compactBucketed(spark, tbl)
-    assert(names(tbl) == Seq(tbl, s"${tbl}__v1", s"${tbl}__v2"))
+    assert(versionsOf(tbl) == Seq(1, 2) && segmentTables(tbl).size == 2)
     Layout.writeBucketed(Seq((9L, "z")).toDF("id", "v"), tbl, Seq("id"), 2)
-    assert(names(tbl) == Seq(tbl, s"${tbl}__v1"))
+    assert(versionsOf(tbl) == Seq(1) && segmentTables(tbl).size == 1)
     assert(spark.table(tbl).as[(Long, String)].collect().toSeq ==
       Seq((9L, "z")), "the rewritten name still serves the old store")
     Layout.dropStore(spark, tbl)
@@ -398,14 +320,16 @@ class LayoutSpec extends SparkSpec {
     val tbl = s"layoutspec_drop_$pid"
     Layout.writeBucketed(Seq((1L, "a")).toDF("id", "v"), tbl, Seq("id"), 2)
     Layout.compactBucketed(spark, tbl)
-    // a dead rewrite's staging table
-    Seq((2L, "b")).toDF("id", "v").write.format("parquet")
-      .saveAsTable(s"${tbl}__graft_rw_dead")
+    // a crashed writer's segment that no version names
+    intercept[IllegalStateException] {
+      Layout.appendBucketed(spark, Seq((2L, "b")).toDF("id", "v"), tbl,
+        step => if (step == "segment") throw new IllegalStateException("crash"))
+    }
     val wh = new java.io.File(new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath)
     def dirs = Option(wh.list()).getOrElse(Array.empty[String])
       .filter(_.startsWith(tbl)).sorted.toSeq
-    assert(dirs.size == 3, s"expected __v1, __v2 and staging dirs: $dirs")
+    assert(dirs.size == 3, s"expected 2 named and 1 orphan segment dirs: $dirs")
     Layout.dropStore(spark, tbl)
     assert(names(tbl).isEmpty, s"dropStore left ${names(tbl)}")
     assert(dirs.isEmpty, s"dropStore left warehouse dirs $dirs")

@@ -542,10 +542,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("fingerprint store stays exchange-free after ingest appends") {
-    // the q137 at-scale claim: a bucketBy APPEND adds one file per touched
-    // bucket but keeps the table's hash partitioning, so the anti-join's
-    // store side needs no exchange after any number of ingests (Spark
-    // re-sorts within the partition for the multi-file buckets)
+    // the q137 at-scale claim: an APPEND adds a bucketed segment, and the
+    // version's UNION ALL of same-spec bucketed scans keeps the hash
+    // partitioning, so the anti-join's store side needs no exchange after
+    // any number of ingests
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val m = pmod(col("doc_id"), lit(3))
@@ -707,7 +707,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("LSH store stays exchange-free after ingestBatchLsh appends") {
-    // the q146 at-scale claim: the appendBucketed writes to _bands and
+    // the q146 at-scale claim: the appendBucketed segments of _bands and
     // _sigs keep both stores' bucketing, so the per-batch candidate and
     // attach joins stay exchange-free after any number of ingests
     import org.apache.spark.sql.functions._
