@@ -94,7 +94,8 @@ final case class FactoryStep(
  * count branch completeness. Branch results are merged into one FlowResult
  * (≙ dict-update merge, `next_step.py:51-54`). Nesting a Hub under an
  * unreduced Hub throws — the meta channel is single-valued, as in the
- * reference.
+ * reference. Stage-boundary writes made by the branches land as one
+ * append per boundary once every branch has returned ([[FanOut]]).
  */
 final case class Hub(branches: Seq[FlowNode]) extends FlowNode {
   require(branches.nonEmpty, "Hub needs at least one branch")
@@ -126,6 +127,50 @@ object Flow {
   val BranchCol = "__hub_branch"
 
   private[core] def isMeta(c: String): Boolean = c.startsWith("__hub_")
+}
+
+/**
+ * One Hub fan-out as one commit. [[App.run]] opens a scope around a Hub's
+ * branch walk and [[App.runZip]] around its branches; a sink that calls
+ * [[defer]] inside the scope (the stage boundaries do, from `write`) gets
+ * ONE append when the walk returns: the `unionByName` of its deferred
+ * frames, in the order they were written. A branch that throws drops
+ * every deferred frame, so a fan-out lands whole or not at all. Outside a
+ * scope [[defer]] declines and the sink appends at once.
+ *
+ * The scope is per thread: a branch that hands a write to another thread
+ * appends at once. A scope opened inside a scope joins the outer one.
+ * Sinks commit in the order of their first deferred frame; a sink whose
+ * append fails stops the commit, so the sinks after it get nothing.
+ */
+object FanOut {
+  private final class Scope {
+    val deferred = mutable.LinkedHashMap
+      .empty[AnyRef, (mutable.ArrayBuffer[DataFrame], DataFrame => Unit)]
+  }
+  private val current = new ThreadLocal[Scope]
+
+  /** Run `body` as one fan-out, then give each sink its one append. */
+  def apply[T](body: => T): T =
+    if (current.get != null) body
+    else {
+      val scope = new Scope
+      current.set(scope)
+      val out = try body finally current.remove()
+      scope.deferred.values.foreach { case (frames, append) =>
+        append(frames.reduce(_.unionByName(_, allowMissingColumns = true)))
+      }
+      out
+    }
+
+  /** Inside a fan-out: keep `df` for `sink`'s one append at the end of
+    * the scope and return true. Outside: return false (append now). */
+  def defer(sink: AnyRef, df: DataFrame)(append: DataFrame => Unit): Boolean =
+    Option(current.get).exists { scope =>
+      scope.deferred.getOrElseUpdate(sink,
+        (mutable.ArrayBuffer.empty[DataFrame], append))._1 += df
+      true
+    }
 }
 
 /**
@@ -290,8 +335,10 @@ final class App(val spark: SparkSession) {
           .withColumn(HubJobIdCol,
             concat(lit(s"$hid-"), monotonically_increasing_id(), lit(s":$n")))
           .persist()) // branches must share one materialization of upstream
-        h.branches.zipWithIndex.flatMap { case (b, i) =>
-          walk(b, tagged.withColumn(BranchCol, lit(i)), acc)
+        FanOut {
+          h.branches.zipWithIndex.flatMap { case (b, i) =>
+            walk(b, tagged.withColumn(BranchCol, lit(i)), acc)
+          }
         }
 
       case r: ReducerStep => Seq(r -> in)
@@ -345,8 +392,10 @@ final class App(val spark: SparkSession) {
     if (inputs.size != hub.branches.size)
       throw new HubArityException(hub.branches.size, inputs.size)
     val acc = mutable.LinkedHashMap.empty[String, DataFrame]
-    val pending = hub.branches.zip(inputs).zipWithIndex.flatMap { case ((b, in), i) =>
-      walk(b, in.withColumn(BranchCol, lit(i)), acc)
+    val pending = FanOut {
+      hub.branches.zip(inputs).zipWithIndex.flatMap { case ((b, in), i) =>
+        walk(b, in.withColumn(BranchCol, lit(i)), acc)
+      }
     }
     finishReducers(pending, acc)
     graft.observe.Signals.fireFinished(acc.keySet.toSet)

@@ -38,9 +38,19 @@ private[graft] object Par {
 
   /** Run every block concurrently, await ALL (even on failure — a block
     * must never outlive the call and race its caller's next store
-    * mutation), rethrow the first failure in declaration order. */
+    * mutation), rethrow the first failure in declaration order. Each block
+    * runs under the caller's Spark local properties (job group,
+    * description, scheduler pool): a pool thread inherits them only when
+    * it is created, so a reused thread would keep another caller's. */
   private def all[T](blocks: Seq[() => T]): Seq[T] = {
-    val futures = blocks.map(b => Future(Try(b()))(ec))
+    import org.apache.spark.GraftLocalProperties.{capture, install}
+    val caller = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(s => (s.sparkContext, capture(s.sparkContext)))
+    val futures = blocks.map(b => Future {
+      caller.foreach { case (sc, props) => install(sc, props) }
+      Try(b())
+    }(ec))
     val results = futures.map(Await.result(_, Duration.Inf))
     results.map(_.get)
   }

@@ -469,15 +469,17 @@ object Quantize {
     * so readers always pair the two, and GC'd exactly like generations
     * (nonce-unique per attempt, collected once no surviving manifest
     * references them and the version gate passes). Returns the relative
-    * directory for the manifest's `@models` line. */
+    * directory for the manifest's `@models` line. The two writes are
+    * independent and run as overlapping jobs. */
   private def writeModels(spark: org.apache.spark.sql.SparkSession,
                           path: String, gen: Long, centroids: DataFrame,
                           codebook: DataFrame): String = {
     val dir =
       f"models-$gen%06d-${java.util.UUID.randomUUID().toString.take(8)}"
     val base = path.stripSuffix("/")
-    centroids.write.mode("overwrite").parquet(s"$base/$dir/centroids")
-    codebook.write.mode("overwrite").parquet(s"$base/$dir/codebook")
+    Par.par2(
+      centroids.write.mode("overwrite").parquet(s"$base/$dir/centroids"),
+      codebook.write.mode("overwrite").parquet(s"$base/$dir/codebook"))
     dir
   }
 

@@ -170,8 +170,7 @@ final class InMemoryBoundary(schema: StructType, limit: Option[Long] = None,
     }
   }
 
-  override def write(df: DataFrame): Unit = {
-    awaitCapacity(df.sparkSession)
+  override protected def append(df: DataFrame): Unit = {
     val rows = df.collect().toIndexedSeq
     synchronized {
       pruneDead()

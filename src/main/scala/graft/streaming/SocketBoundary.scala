@@ -194,8 +194,7 @@ final class SocketBoundary(host: String, port: Int, subPort: Int,
     } finally s.close()
   }
 
-  override def write(df: DataFrame): Unit = {
-    awaitCapacity(df.sparkSession)
+  override protected def append(df: DataFrame): Unit = {
     // locals only: the closure must not capture `this` (a boundary holds
     // no serializable state and never travels to executors)
     val (h, p) = (host, port)

@@ -410,11 +410,29 @@ object StreamingFlows {
  *    matching the grade of the reference's in-process adapter it mirrors
  *    (`adapters/simple_queue.py`); never route data whose loss matters
  *    through it — that is what [[ParquetBoundary]] is for.
+ *
+ * FAN-OUT VISIBILITY: inside a Hub fan-out ([[graft.core.FanOut]], opened
+ * by `App.run` and `App.runZip`) [[write]] throttles and checks at once
+ * but defers the append; when the fan-out's branch walk returns, the
+ * boundary gets ONE append of all its branches' rows. A fan-out whose
+ * branch throws appends nothing, and where an append lands at once (one
+ * small [[ParquetBoundary]] file, one [[InMemoryBoundary]] batch) a
+ * consumer never sees branch A's rows without branch B's. The throttle
+ * counts only appended rows, not rows still deferred in an open fan-out.
  */
 trait StageBoundary {
   /** Enqueue a batch (≙ add_jobs): append rows durably. Blocks while the
-    * queue is at or over `jobsLimit`, if one is configured. */
-  def write(df: DataFrame): Unit
+    * queue is at or over `jobsLimit`, if one is configured; inside a Hub
+    * fan-out the append itself waits for the end of the fan-out. */
+  final def write(df: DataFrame): Unit = {
+    awaitCapacity(df.sparkSession)
+    admit(df)
+    if (!graft.core.FanOut.defer(this, df)(append)) append(df)
+  }
+  /** Checks a write must pass when it is called, before it is deferred. */
+  protected def admit(df: DataFrame): Unit = ()
+  /** Land `df` in the queue: one call per write, or per fan-out. */
+  protected def append(df: DataFrame): Unit
   /** Batch read of everything enqueued so far (≙ drain). */
   def read(spark: SparkSession): DataFrame
   /** Streaming read — the worker side (≙ process loop). */
@@ -450,8 +468,21 @@ trait StageBoundary {
 
 /** Parquet-directory stage boundary: append-only files, schema pinned at
   * first write. At cluster scale this is the standard files-as-queue
-  * pattern (exactly-once with checkpointed readers). `limit`, if set, is
-  * the producer-side jobs_limit in ROWS (checked before each append);
+  * pattern (exactly-once with checkpointed readers).
+  *
+  * An append writes into its own `_staging-<uuid>` directory inside the
+  * queue (readers, [[jobsCount]] and the trims skip `_` names), then
+  * renames the data files into the queue. Concurrent producers therefore
+  * never share a committer's `_temporary` directory, and a reader sees a
+  * file only once it is complete. An append whose plan estimate is under
+  * `spark.sql.files.maxPartitionBytes` is written as ONE file; a larger
+  * one keeps its partitioning (one file per partition). A Hub fan-out is
+  * one append (see [[StageBoundary]]), so its branches land in the same
+  * file and a worker reduces the job in one micro-batch. A crash between
+  * the renames of a multi-file append leaves the renamed files visible.
+  *
+  * `limit`, if set, is the producer-side jobs_limit in ROWS (checked by
+  * each write);
   * `limitTimeoutMs` bounds how long a throttled write may block (None =
   * forever, the reference's behavior — `adapters/simple_queue.py:24-29`
   * sleeps unconditionally).
@@ -486,9 +517,8 @@ final class ParquetBoundary(path: String, limit: Option[Long] = None,
   }
 
   /** The directory holds at least one data file right now. A trimmed-empty
-    * queue keeps its directory (trim deletes files, never the dir, and
-    * `_SUCCESS` markers survive), so "dir exists" alone does not mean
-    * "schema is inferable". */
+    * queue keeps its directory (trim deletes files, never the dir), so
+    * "dir exists" alone does not mean "schema is inferable". */
   private def hasDataFile(spark: SparkSession): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     try p.getFileSystem(hadoopConf(spark)).listStatus(p)
@@ -501,8 +531,7 @@ final class ParquetBoundary(path: String, limit: Option[Long] = None,
       org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
-  override def write(df: DataFrame): Unit = {
-    awaitCapacity(df.sparkSession)
+  override protected def admit(df: DataFrame): Unit = {
     // pin-once under the lock (concurrent first writes can't race on which
     // schema wins; readers get a happens-before edge) — and REJECT a
     // schema-divergent later append: parquet append has no cross-file
@@ -527,7 +556,27 @@ final class ParquetBoundary(path: String, limit: Option[Long] = None,
               s"${pinned.simpleString}, got ${df.schema.simpleString}")
       }
     }
-    df.write.mode("append").parquet(path)
+  }
+
+  override protected def append(df: DataFrame): Unit = {
+    val spark = df.sparkSession
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(hadoopConf(spark))
+    val staging = new org.apache.hadoop.fs.Path(dir,
+      s"_staging-${java.util.UUID.randomUUID()}")
+    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <
+      spark.sessionState.conf.filesMaxPartitionBytes
+    try {
+      (if (small) df.coalesce(1) else df).write.parquet(staging.toString)
+      fs.listStatus(staging)
+        .filter(st => st.isFile && isDataFile(st.getPath.getName))
+        .foreach { st =>
+          val to = new org.apache.hadoop.fs.Path(dir, st.getPath.getName)
+          if (!fs.rename(st.getPath, to))
+            throw new java.io.IOException(
+              s"could not move ${st.getPath} into queue '$path'")
+        }
+    } finally fs.delete(staging, true)
   }
 
   override def read(spark: SparkSession): DataFrame = {

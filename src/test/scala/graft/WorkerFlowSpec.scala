@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 import graft.core._
 import graft.streaming.{InMemoryBoundary, ParquetBoundary, StreamingReducer}
 
@@ -18,6 +20,10 @@ object WorkerFlowSpec {
   /** Armed → the poison UDF throws once (local mode shares the JVM, so the
     * "executor" sees this driver-side flag). */
   val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** The gate UDF counts `entered` down and then waits for `released`
+    * when it sees id 0 (reset per test). */
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var released = new java.util.concurrent.CountDownLatch(1)
 }
 
 class WorkerFlowSpec extends SparkSpec {
@@ -572,5 +578,129 @@ class WorkerFlowSpec extends SparkSpec {
       assert(g1.toSeq == Seq(1, 2), s"first subscriber lost data: ${g1.toSeq}")
       assert(g2.toSeq == Seq(1, 2), s"second subscriber lost data: ${g2.toSeq}")
     } finally { q1.stop(); q2.stop() }
+  }
+
+  /** Data files (not `_`/`.` names) directly in a queue directory. */
+  private def queueFiles(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+
+  /** ingest -> Hub(a, b), each branch writing its frame to `write`. */
+  private def hubInto(app: App, tag: String, write: DataFrame => Unit,
+                      failB: Boolean = false): FlowNode = {
+    def branch(name: String, f: DataFrame => DataFrame) =
+      app.step(s"${tag}_$name", df => { write(f(df)); df })
+    app.step(s"${tag}_src", identity, next = Some(Hub(
+      branch("a", _.withColumn("v", $"x" * 2)),
+      branch("b", df =>
+        if (failB) throw new IllegalStateException("branch b failed")
+        else df.withColumn("v", $"x" + 1)))))
+  }
+
+  test("a Hub fan-out lands in a ParquetBoundary as one data file") {
+    val dir = tempDir("wf_fanout").toString
+    val b = new ParquetBoundary(s"$dir/q")
+    val app = new App(spark)
+    val root = hubInto(app, "fo", b.write)
+    // 4 input partitions: two separate branch appends would leave 8 files
+    app.run(root, (1 to 20).toDF("x").repartition(4))
+    assert(queueFiles(s"$dir/q").size == 1, queueFiles(s"$dir/q"))
+    app.run(root, (21 to 40).toDF("x").repartition(4))
+    assert(queueFiles(s"$dir/q").size == 2, queueFiles(s"$dir/q"))
+    assert(b.jobsCount(spark) == 80L)
+    // both branches of every job are there, each exactly once
+    val got = b.read(spark).groupBy($"__hub_branch").count()
+      .as[(Int, Long)].collect().sorted.toSeq
+    assert(got == Seq((0, 40L), (1, 40L)), got)
+    app.cleanup()
+  }
+
+  test("a fan-out whose branch throws leaves the boundary empty") {
+    val dir = tempDir("wf_fanout_fail").toString
+    val b = new ParquetBoundary(s"$dir/q")
+    val app = new App(spark)
+    val err = intercept[IllegalStateException] {
+      app.run(hubInto(app, "ff", b.write, failB = true), (1 to 5).toDF("x"))
+    }
+    assert(err.getMessage.contains("branch b failed"))
+    assert(b.jobsCount(spark) == 0L && queueFiles(s"$dir/q").isEmpty,
+      "branch a's rows must not land without branch b's")
+    // the boundary still takes the next fan-out whole
+    val app2 = new App(spark)
+    app2.run(hubInto(app2, "ff2", b.write), (1 to 5).toDF("x"))
+    assert(b.jobsCount(spark) == 10L)
+    app.cleanup(); app2.cleanup()
+  }
+
+  test("a ParquetBoundary append is one file unless it is over maxPartitionBytes") {
+    val dir = tempDir("wf_split").toString
+    val b = new ParquetBoundary(s"$dir/q")
+    val frame = (1 to 300).toDF("x").repartition(3)
+    b.write(frame)
+    assert(queueFiles(s"$dir/q").size == 1)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "16")
+    try b.write(frame)
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(queueFiles(s"$dir/q").size == 4, queueFiles(s"$dir/q"))
+    assert(b.jobsCount(spark) == 600L)
+  }
+
+  test("concurrent appends to one ParquetBoundary both land") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    WorkerFlowSpec.entered = new java.util.concurrent.CountDownLatch(1)
+    WorkerFlowSpec.released = new java.util.concurrent.CountDownLatch(1)
+    val gate = udf { (id: Long) =>
+      if (id == 0L) {
+        WorkerFlowSpec.entered.countDown()
+        WorkerFlowSpec.released.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      id
+    }
+    val dir = tempDir("wf_concurrent").toString
+    val b = new ParquetBoundary(s"$dir/q")
+    // one partition: id 0 is its first row, so writer A's task has its
+    // output file open when the gate stops it
+    val a = Future(b.write(spark.range(0, 3, 1, 1).select(gate($"id").as("x"))))
+    try {
+      assert(WorkerFlowSpec.entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "writer A never reached its gate")
+      b.write(spark.range(10, 12).toDF("x")) // writer B commits meanwhile
+    } finally WorkerFlowSpec.released.countDown()
+    Await.result(a, 60.seconds)
+    assert(b.read(spark).as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L, 10L, 11L))
+    assert(b.jobsCount(spark) == 5L)
+  }
+
+  test("a Hub fan-out reaches an InMemoryBoundary as one addData") {
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStreamBaseClass, MemoryStreamTable}
+    val schema = StructType(Seq(
+      StructField("x", IntegerType), StructField("__hub_job_id", StringType),
+      StructField("__hub_branch", IntegerType, nullable = false),
+      StructField("v", IntegerType)))
+    val b = new InMemoryBoundary(schema)
+    val stream = b.readStream(spark).queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 =>
+        r.table.asInstanceOf[MemoryStreamTable].stream
+          .asInstanceOf[MemoryStreamBaseClass[_]]
+    }.get
+    def offset = Option(stream.latestOffset(stream.initialOffset(),
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()))
+      .map(_.json()).getOrElse("none")
+    assert(offset == "none") // nothing added yet
+    val app = new App(spark)
+    app.run(hubInto(app, "im", b.write), (1 to 5).toDF("x"))
+    assert(offset == "0", s"one addData per fan-out, offset $offset")
+    assert(b.jobsCount(spark) == 10L)
+    assert(b.read(spark).where($"__hub_branch" === 1).select($"v" - $"x")
+      .as[Int].collect().toSet == Set(1))
+    app.cleanup()
+    b.close()
   }
 }
