@@ -9,9 +9,16 @@ import org.apache.spark.sql.functions._
  * shingling. The reference expresses all per-record text work as arbitrary
  * Python inside step handlers (e.g. `text.count('python')`,
  * `/root/reference/README.markdown:84-85`); here each is a named, composable
- * Column function built ONLY from `org.apache.spark.sql.functions._`
- * primitives so the whole stage stays inside whole-stage codegen — no UDFs,
- * no driver round-trips, scales linearly with partitions at 100 TB.
+ * Column function — no UDFs, no driver round-trips, linear in partitions at
+ * 100 TB. Most are built from `org.apache.spark.sql.functions._` primitives.
+ * Those primitives codegen, but a higher-order-function lambda (`transform`,
+ * `filter`, `aggregate`) is `CodegenFallback` and runs interpreted, once per
+ * array element. So the per-word hot kernels ([[shingles]],
+ * [[shingleHashes]], [[qualityScore]], [[gopherQualityStats]],
+ * [[repetitionStats]]) are native expressions in
+ * [[graft.functions.expressions]] that read the [[tokens]] array; their
+ * built-in formulations stay as `...Hof` reference specs, checked equal by
+ * ExpressionsSpec.
  */
 object TextFunctions {
 
@@ -141,8 +148,19 @@ object TextFunctions {
    * Composite quality score in [0,1]: rewards moderate length, words of
    * natural length, some stopwords, low punctuation density. Deterministic
    * and cheap — the Gopher-rules-flavored filter for web-scale corpora.
+   * The mean of five 0/1 checks, rounded to 2 places: 5 to 10,000
+   * [[tokens]]; [[meanWordLen]] in [2.5, 12]; [[stopwordRatio]] at least
+   * 0.05; [[punctRatio]] at most 0.3; [[alphaRatio]] at least 0.5. One
+   * native pass over the tokens and the raw text
+   * ([[expressions.QualityScoreExpr]]).
    */
-  def qualityScore(text: Column): Column = {
+  def qualityScore(text: Column): Column =
+    expressions.GraftExpressions.qualityScore(tokens(text),
+      coalesce(text, lit("")))
+
+  /** Reference semantics of [[qualityScore]] composed from the per-signal
+    * helpers, each tokenizing on its own. Equivalence-spec only. */
+  private[graft] def qualityScoreHof(text: Column): Column = {
     val nTok = tokenCount(text).cast("double")
     val lenOk = when(nTok >= 5 && nTok <= 10000, lit(1.0)).otherwise(lit(0.0))
     val mwl = meanWordLen(text)
@@ -335,9 +353,9 @@ object TextFunctions {
    * neither the repetition fractions nor [[qualityScore]]'s composite
    * sees (machine-generated hash/ellipsis spam, bullet-list pages,
    * numeric tables, gibberish with no function words). Returns a struct
-   * of per-document statistics, all single-pass column expressions over
-   * one bound token array and one bound line array — no shuffle, no
-   * UDF, a scan-speed map stage at 100 TB:
+   * of per-document statistics from one native pass over the [[tokens]]
+   * array and the raw text ([[expressions.GopherQualityStatsExpr]]) — no
+   * shuffle, no UDF, a scan-speed map stage at 100 TB:
    *
    *  - `n_words`: [[tokens]] count (lowercased, whitespace-split);
    *  - `mean_word_len`: mean code-point length of the words;
@@ -356,7 +374,14 @@ object TextFunctions {
    * Fractions round HALF_UP to 4 places; a blank document is all-zero.
    * q165 pins every definition against a full DuckDB recomputation.
    */
-  def gopherQualityStats(text: Column): Column = {
+  def gopherQualityStats(text: Column): Column =
+    expressions.GraftExpressions.gopherQualityStats(tokens(text),
+      coalesce(text, lit("")))
+
+  /** Reference semantics of [[gopherQualityStats]] in built-in
+    * higher-order functions over one bound token array and one bound
+    * line array. Equivalence-spec only. */
+  private[graft] def gopherQualityStatsHof(text: Column): Column = {
     val raw = coalesce(text, lit(""))
     bindOnce(tokens(text)) { w =>
       bindOnce(filter(split(raw, "\n"), l => l =!= "")) { lines =>
@@ -425,11 +450,8 @@ object TextFunctions {
     * gate at fixture-appropriate [[GopherQualityBounds]] instead (q96
     * does, q166 oracle-gates the parameterized form); q165 gates the
     * published defaults on decorated fixtures that exercise every bound
-    * in both directions. MEASURED (SURVEY §6, 50k/500k):
-    * 1.27 → 1.80 s across the decade, zero shuffle — scan-dominated,
-    * cheaper than the native repetition pass riding beside it, so the
-    * interpreted-HOF formulation stays (no q162-style tax at this
-    * 8-stat surface). */
+    * in both directions. Zero shuffle; the stats are one native pass
+    * ([[gopherQualityStats]]). */
   def gopherQualityKeep(text: Column,
       bounds: GopherQualityBounds = GopherQualityBounds()): Column =
     bindOnce(gopherQualityStats(text))(gopherQualityKeepFromStats(_, bounds))
@@ -645,14 +667,19 @@ object TextFunctions {
     xxhash64(concat_ws(" ", tokens(text)))
 
   /**
-   * Word k-shingles: overlapping windows of `k` consecutive tokens joined by
-   * a space. Built from sequence+transform+slice — no UDF, no explode unless
-   * the caller wants one. Documents shorter than k yield a single shingle of
-   * the whole text. The token array is bound once per row ([[bindOnce]]),
-   * so the per-window lambda slices it instead of re-tokenizing the
-   * document at every window position.
+   * Word k-shingles: overlapping windows of `k` (> 0) consecutive
+   * [[tokens]] joined by one space, in order — no UDF, no explode unless
+   * the caller wants one. A document of `k` tokens or fewer yields a single
+   * shingle of the whole text, and blank text yields `[""]`. One native
+   * pass over the token array ([[expressions.ShinglesExpr]]).
    */
   def shingles(text: Column, k: Int): Column =
+    expressions.GraftExpressions.shingles(tokens(text), k)
+
+  /** Reference semantics of [[shingles]] in built-in higher-order
+    * functions: the token array is bound once per row ([[bindOnce]]) and
+    * a per-window lambda slices it. Equivalence-spec only. */
+  private[graft] def shinglesHof(text: Column, k: Int): Column =
     bindOnce(tokens(text)) { toks =>
       when(size(toks) <= k, array(concat_ws(" ", toks)))
         .otherwise(transform(
@@ -660,9 +687,17 @@ object TextFunctions {
           i => concat_ws(" ", slice(toks, i, lit(k)))))
     }
 
-  /** Hashed shingle set (distinct), the MinHash input domain. */
+  /** Hashed shingle set, the MinHash input domain: `xxhash64` of each
+    * [[shingles]] window, distinct in first-occurrence order. One native
+    * pass that builds no shingle string
+    * ([[expressions.ShingleHashesExpr]]). */
   def shingleHashes(text: Column, k: Int): Column =
-    array_distinct(transform(shingles(text, k), s => xxhash64(s)))
+    expressions.GraftExpressions.shingleHashes(tokens(text), k)
+
+  /** Reference semantics of [[shingleHashes]] in built-in functions.
+    * Equivalence-spec only. */
+  private[graft] def shingleHashesHof(text: Column, k: Int): Column =
+    array_distinct(transform(shinglesHof(text, k), s => xxhash64(s)))
 
   /**
    * Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, SIGMOD'03):

@@ -586,9 +586,7 @@ object RepetitionStatsExpr {
   private val LineRe = java.util.regex.Pattern.compile("\n")
   private val WsRe = java.util.regex.Pattern.compile("\\s+")
 
-  private def round4(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+  private def round4(x: Double): Double = TextStats.round(x, 4)
 
   private def codePoints(t: String): Long =
     t.codePointCount(0, t.length).toLong
@@ -699,6 +697,347 @@ object RepetitionStatsExpr {
       slot += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+  }
+}
+
+/**
+ * Word k-shingles of a token array (the output of
+ * [[graft.functions.TextFunctions.tokens]], which never holds a null):
+ * every window of `k` consecutive tokens joined by one space, in order.
+ * A document of `k` tokens or fewer gives one shingle of all its tokens,
+ * so blank text gives `[""]`. One pass that copies each window's bytes
+ * once, where the built-in formulation
+ * ([[graft.functions.TextFunctions.shinglesHof]], the executable spec)
+ * interprets a `slice` + `concat_ws` lambda per window.
+ */
+case class ShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
+  require(k > 0, s"k must be positive, got $k")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "shingles"
+
+  override def nullSafeEval(v: Any): Any =
+    ShinglesExpr.compute(v.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.expressions.ShinglesExpr.compute($c, $k)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ShinglesExpr {
+  import org.apache.spark.unsafe.Platform
+
+  /** Number of windows: one whole-text shingle at `k` tokens or fewer. */
+  private[expressions] def windows(n: Int, k: Int): Int =
+    if (n <= k) 1 else n - k + 1
+
+  /** Window `w`'s token range: all tokens when there is one window. */
+  private[expressions] def width(n: Int, k: Int): Int = math.min(n, k)
+
+  /** UTF-8 length of tokens `[from, from + len)` joined by one space. */
+  private[expressions] def joinedBytes(toks: Array[UTF8String], from: Int,
+                                       len: Int): Int = {
+    var b = math.max(len - 1, 0)
+    var i = from
+    while (i < from + len) { b += toks(i).numBytes(); i += 1 }
+    b
+  }
+
+  /** Writes tokens `[from, from + len)` joined by one space into `buf`. */
+  private[expressions] def writeJoined(toks: Array[UTF8String], from: Int,
+                                       len: Int, buf: Array[Byte]): Unit = {
+    var pos = 0
+    var i = from
+    while (i < from + len) {
+      if (i > from) { buf(pos) = ' '; pos += 1 }
+      toks(i).writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
+      pos += toks(i).numBytes()
+      i += 1
+    }
+  }
+
+  private[expressions] def strings(tokens: ArrayData): Array[UTF8String] =
+    Array.tabulate(tokens.numElements())(tokens.getUTF8String)
+
+  /** Shared by interpreted eval and generated code. */
+  def compute(tokens: ArrayData, k: Int): ArrayData = {
+    val toks = strings(tokens)
+    val len = width(toks.length, k)
+    val out = new Array[Any](windows(toks.length, k))
+    var w = 0
+    while (w < out.length) {
+      val buf = new Array[Byte](joinedBytes(toks, w, len))
+      writeJoined(toks, w, len, buf)
+      out(w) = UTF8String.fromBytes(buf)
+      w += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+}
+
+/**
+ * The distinct shingle hashes of a token array: Spark's `xxhash64`
+ * (seed 42) of each [[ShinglesExpr]] window's UTF-8 bytes, deduplicated
+ * in first-occurrence order as `array_distinct` does — the MinHash input
+ * domain. Hashes each window from one reused buffer, so no shingle
+ * string is built. Bit-identical to
+ * [[graft.functions.TextFunctions.shingleHashesHof]].
+ */
+case class ShingleHashesExpr(child: Expression, k: Int) extends UnaryExpression {
+  require(k > 0, s"k must be positive, got $k")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "shingle_hashes"
+
+  override def nullSafeEval(v: Any): Any =
+    ShingleHashesExpr.compute(v.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.expressions.ShingleHashesExpr.compute($c, $k)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ShingleHashesExpr {
+  import ShinglesExpr._
+  import org.apache.spark.sql.catalyst.expressions.XXH64
+  import org.apache.spark.unsafe.Platform
+
+  /** Shared by interpreted eval and generated code. */
+  def compute(tokens: ArrayData, k: Int): ArrayData = {
+    val toks = strings(tokens)
+    val len = width(toks.length, k)
+    val n = windows(toks.length, k)
+    val out = new Array[Long](n)
+    var m = 0
+    // open-addressing set of the hashes emitted so far (load <= 1/2)
+    val cap = Integer.highestOneBit(n) << 2
+    val slots = new Array[Long](cap)
+    val used = new Array[Boolean](cap)
+    var buf = new Array[Byte](64)
+    var w = 0
+    while (w < n) {
+      val bytes = joinedBytes(toks, w, len)
+      if (bytes > buf.length) buf = new Array[Byte](bytes * 2)
+      writeJoined(toks, w, len, buf)
+      val h = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, bytes, 42L)
+      var s = (h ^ (h >>> 32)).toInt & (cap - 1)
+      while (used(s) && slots(s) != h) s = (s + 1) & (cap - 1)
+      if (!used(s)) {
+        used(s) = true
+        slots(s) = h
+        out(m) = h
+        m += 1
+      }
+      w += 1
+    }
+    ArrayData.toArrayData(java.util.Arrays.copyOf(out, m))
+  }
+}
+
+/** Shared by the Gopher-stats and quality-score kernels: Spark `round`
+  * (HALF_UP on the double's shortest decimal form) and code-point
+  * scans of the raw text. */
+private[expressions] object TextStats {
+  def round(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Code points of `s` in Unicode category L — the `\p{L}` class. */
+  def letters(s: String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      if (Character.isLetter(cp)) n += 1
+      i += Character.charCount(cp)
+    }
+    n
+  }
+
+  /** Non-overlapping occurrences of `pat` in `s`, scanned left to right
+    * (the count Spark's `replace` removes). */
+  def occurrences(s: String, pat: String): Int = {
+    var n = 0
+    var i = s.indexOf(pat)
+    while (i >= 0) { n += 1; i = s.indexOf(pat, i + pat.length) }
+    n
+  }
+}
+
+/**
+ * The non-repetition half of Gopher's appendix-A1 filter
+ * ([[graft.functions.TextFunctions.gopherQualityStats]] documents each
+ * field) from the token array and the raw text: all 8 statistics in one
+ * pass over the tokens and one over the lines, where the built-in
+ * formulation ([[graft.functions.TextFunctions.gopherQualityStatsHof]],
+ * the executable spec) interprets a lambda per word and per line. Lines
+ * are the non-empty fragments of a split on `\n`; the line-start and
+ * line-end rules trim ASCII spaces only (Spark's `ltrim`/`rtrim`);
+ * lengths count code points (Spark `length`); fractions round HALF_UP to
+ * 4 places (Spark `round`).
+ */
+case class GopherQualityStatsExpr(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = GopherQualityStatsExpr.schema
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "gopher_quality_stats"
+
+  override def nullSafeEval(tokens: Any, text: Any): Any =
+    GopherQualityStatsExpr.compute(
+      tokens.asInstanceOf[ArrayData], text.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, s) =>
+      s"graft.functions.expressions.GopherQualityStatsExpr.compute($t, $s)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object GopherQualityStatsExpr {
+  import TextStats._
+
+  /** Field order and types are the published API (q165's oracle). */
+  val schema: StructType = StructType(Seq(
+    StructField("n_words", IntegerType, nullable = false),
+    StructField("mean_word_len", DoubleType, nullable = false),
+    StructField("hash_word_ratio", DoubleType, nullable = false),
+    StructField("ellipsis_word_ratio", DoubleType, nullable = false),
+    StructField("bullet_line_frac", DoubleType, nullable = false),
+    StructField("ellipsis_line_frac", DoubleType, nullable = false),
+    StructField("alpha_word_frac", DoubleType, nullable = false),
+    StructField("stop_hits", IntegerType, nullable = false)))
+
+  private lazy val stopWords: Array[UTF8String] =
+    graft.functions.TextFunctions.gopherStopWords.map(UTF8String.fromString).toArray
+
+  private lazy val bullets: Set[Int] =
+    graft.functions.TextFunctions.gopherBulletGlyphs.map(_.codePointAt(0)).toSet
+
+  def compute(tokens: ArrayData, text: UTF8String): InternalRow = {
+    val nW = tokens.numElements()
+    var chars = 0L
+    var alphaWords = 0
+    var stopMask = 0
+    var i = 0
+    while (i < nW) {
+      val t = tokens.getUTF8String(i)
+      chars += t.numChars()
+      if (letters(t.toString) > 0) alphaWords += 1
+      val s = stopWords.indexOf(t)
+      if (s >= 0) stopMask |= 1 << s
+      i += 1
+    }
+    val raw = text.toString
+    var nL = 0
+    var bulletLines = 0
+    var ellLines = 0
+    var start = 0
+    while (start <= raw.length) {
+      val nl = raw.indexOf('\n', start)
+      val end = if (nl < 0) raw.length else nl
+      if (end > start) {
+        nL += 1
+        var a = start
+        while (a < end && raw.charAt(a) == ' ') a += 1
+        if (a < end && bullets(raw.codePointAt(a))) bulletLines += 1
+        var b = end
+        while (b > start && raw.charAt(b - 1) == ' ') b -= 1
+        if (b - start >= 3 && raw.startsWith("...", b - 3) ||
+            b > start && raw.charAt(b - 1) == '…') ellLines += 1
+      }
+      start = end + 1
+    }
+    def perWord(c: Double) = if (nW > 0) c / nW.toDouble else 0.0
+    def perLine(c: Double) = if (nL > 0) c / nL.toDouble else 0.0
+    val hashes = occurrences(raw, "#").toDouble
+    val ellipses = (occurrences(raw, "...") + occurrences(raw, "…")).toDouble
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      nW,
+      round(perWord(chars.toDouble), 4),
+      round(perWord(hashes), 4),
+      round(perWord(ellipses), 4),
+      round(perLine(bulletLines.toDouble), 4),
+      round(perLine(ellLines.toDouble), 4),
+      round(perWord(alphaWords.toDouble), 4),
+      Integer.bitCount(stopMask)))
+  }
+}
+
+/**
+ * [[graft.functions.TextFunctions.qualityScore]] (its scaladoc gives the
+ * five checks) from the token array and the raw text in one pass each,
+ * where the built-in formulation
+ * ([[graft.functions.TextFunctions.qualityScoreHof]], the executable
+ * spec) tokenizes once per check and interprets a lambda per word.
+ * `\p{Punct}` is the ASCII POSIX class; lengths count code points.
+ */
+case class QualityScoreExpr(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "quality_score"
+
+  override def nullSafeEval(tokens: Any, text: Any): Any =
+    QualityScoreExpr.compute(
+      tokens.asInstanceOf[ArrayData], text.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, s) =>
+      s"graft.functions.expressions.QualityScoreExpr.compute($t, $s)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object QualityScoreExpr {
+  import TextStats._
+
+  private lazy val stopWords: Set[UTF8String] =
+    graft.functions.TextFunctions.stopwordList("en").map(UTF8String.fromString).toSet
+
+  private val Punct = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~"
+
+  def compute(tokens: ArrayData, text: UTF8String): Double = {
+    val n = tokens.numElements()
+    var wordChars = 0L
+    var stops = 0
+    var i = 0
+    while (i < n) {
+      val t = tokens.getUTF8String(i)
+      wordChars += t.numChars()
+      if (stopWords(t)) stops += 1
+      i += 1
+    }
+    val raw = text.toString
+    val chars = text.numChars()
+    var punct = 0
+    i = 0
+    while (i < raw.length) {
+      if (Punct.indexOf(raw.charAt(i)) >= 0) punct += 1
+      i += 1
+    }
+    def ok(b: Boolean) = if (b) 1.0 else 0.0
+    def ratio(c: Double, d: Int) = if (d == 0) 0.0 else c / d
+    val nTok = n.toDouble
+    val meanLen = ratio(wordChars.toDouble, n)
+    round((ok(nTok >= 5 && nTok <= 10000) +
+      ok(meanLen >= 2.5 && meanLen <= 12.0) +
+      ok(ratio(stops.toDouble, n) >= 0.05) +
+      ok(ratio(punct.toDouble, chars) <= 0.3) +
+      ok(ratio(letters(raw).toDouble, chars) >= 0.5)) / 5.0, 2)
   }
 }
 
@@ -1707,6 +2046,26 @@ object GraftExpressions {
   def repetitionStats(c: Column): Column =
     GraftColumnBridge.column(
       RepetitionStatsExpr(GraftColumnBridge.expression(c)))
+
+  /** See [[ShinglesExpr]] — `tokens` is `TextFunctions.tokens`' array. */
+  def shingles(tokens: Column, k: Int): Column =
+    GraftColumnBridge.column(ShinglesExpr(GraftColumnBridge.expression(tokens), k))
+
+  /** See [[ShingleHashesExpr]] — `tokens` as for [[shingles]]. */
+  def shingleHashes(tokens: Column, k: Int): Column =
+    GraftColumnBridge.column(
+      ShingleHashesExpr(GraftColumnBridge.expression(tokens), k))
+
+  /** See [[GopherQualityStatsExpr]] — `text` is the coalesced raw text
+    * and `tokens` its `TextFunctions.tokens` array. */
+  def gopherQualityStats(tokens: Column, text: Column): Column =
+    GraftColumnBridge.column(GopherQualityStatsExpr(
+      GraftColumnBridge.expression(tokens), GraftColumnBridge.expression(text)))
+
+  /** See [[QualityScoreExpr]] — inputs as for [[gopherQualityStats]]. */
+  def qualityScore(tokens: Column, text: Column): Column =
+    GraftColumnBridge.column(QualityScoreExpr(
+      GraftColumnBridge.expression(tokens), GraftColumnBridge.expression(text)))
 
   def hashedNgramScore(tokens: Column): Column =
     GraftColumnBridge.column(

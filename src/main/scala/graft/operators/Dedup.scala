@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 
@@ -916,7 +917,15 @@ object Dedup {
    * (true exactly for the canonical survivor). a–b, b–c, c–d ⇒ all four map
    * to min(a,b,c,d), keep = (id == that min).
    *
-   * Algorithm: alternating large-star / small-star (Kiveris et al.,
+   * Small edge sets resolve on the driver: when the ids are integral and
+   * the distinct edges fit the session's `autoBroadcastJoinThreshold` (at
+   * 24 B each for long ids: 8 B of row overhead plus two longs), they are
+   * collected in one job, and a union-find (each root the smallest id of
+   * its component) yields the star forest the distributed loop below
+   * converges to, as a local relation. `maxRounds` and `strict` apply to
+   * the distributed loop only.
+   *
+   * Distributed algorithm: alternating large-star / small-star (Kiveris et al.,
    * "Connected Components in MapReduce and Beyond", SoCC'14) — each round is
    * a groupBy-min + join over bare (u, v) id pairs (16 bytes/edge; documents
    * never enter the loop), converging in O(log² n) rounds vs O(diameter) for
@@ -932,9 +941,10 @@ object Dedup {
    * Only ids with at least one non-self edge in `pairs` are returned;
    * singleton documents (no near-dup edge, or a degenerate self-pair) are
    * trivially their own cluster and are left untouched — callers drop
-   * `keep = false` ids with [[keepRepresentatives]]. The final
-   * edge set stays cached for the returned frame; release with
-   * [[OpCache.release]] after consuming it.
+   * `keep = false` ids with [[keepRepresentatives]]. The distributed
+   * loop's final edge set stays cached for the returned frame; release
+   * with [[OpCache.release]] after consuming it (the driver path caches
+   * nothing).
    *
    * If `maxRounds` exhausts before the fixpoint, the result may label
    * multi-hop chains with a non-canonical root: the loop never fails
@@ -959,8 +969,8 @@ object Dedup {
         col("root").isNull.as("keep"))
   }
 
-  /** [[resolveClusters]]' star-round loop: the final (u, v) edge set, its
-    * cache tracked for [[OpCache.release]], and its size. */
+  /** [[resolveClusters]]' edge resolution: the final (u, v) edge set, its
+    * cache (if any) tracked for [[OpCache.release]], and its size. */
   private def clusterEdges(pairs: DataFrame, maxRounds: Int,
                            strict: Boolean): (DataFrame, Long) = {
     // canonical larger→smaller directed edges; the loop preserves this
@@ -974,6 +984,19 @@ object Dedup {
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
+    val threshold = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integral = edges.schema.head.dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    // Spark's own row-size estimate: 8 bytes of row overhead plus the ids
+    val rowBytes = 8L + edges.schema.map(_.dataType.defaultSize).sum
+    if (integral && threshold > 0 && edgeCount * rowBytes <= threshold) {
+      val collected = try edgesRdd.collect() finally edgesRdd.unpersist(blocking = false)
+      val forest = starForest(collected)
+      return (pairs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(forest: _*), edges.schema), forest.length.toLong)
+    }
     // the not-yet-swapped round result, for failure cleanup only
     var inFlightRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
     try {
@@ -1011,6 +1034,33 @@ object Dedup {
       edgesRdd.unpersist(blocking = false)
       if (inFlightRdd != null) inFlightRdd.unpersist(blocking = false)
       throw e
+    }
+  }
+
+  /** The fixpoint of [[starRound]] computed on the driver: a union-find
+    * over integral-id edges that links the larger root under the smaller,
+    * so every root is its component's minimum, then one (u, root) row per
+    * non-root id. */
+  private def starForest(edges: Array[Row]): Array[Row] = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var root = x
+      while (parent.get(root) != root) root = parent.get(root)
+      var y = x
+      while (y != root) { val next = parent.get(y); parent.put(y, root); y = next }
+      root
+    }
+    edges.foreach { e =>
+      parent.putIfAbsent(e.get(0), e.get(0))
+      parent.putIfAbsent(e.get(1), e.get(1))
+      val (a, b) = (find(e.get(0)), find(e.get(1)))
+      if (a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue)
+        parent.put(b, a)
+      else if (a != b) parent.put(a, b)
+    }
+    parent.keySet.toArray.flatMap { n =>
+      val root = find(n)
+      if (root == n) None else Some(Row(n, root))
     }
   }
 

@@ -9,6 +9,24 @@ class DedupSpec extends SparkSpec {
 
   lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
+  /** Pins `resolveClusters`/`keepRepresentatives` to the distributed
+    * star-round loop: with broadcasting off no edge set fits the driver
+    * path's size rule. */
+  private def distributed[T](body: => T): T =
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  /** `resolveClusters` rows as (id, cluster_id, keep), sorted by id. */
+  private def clusterRows(pairs: org.apache.spark.sql.DataFrame) =
+    Dedup.resolveClusters(pairs)
+      .select($"id", $"cluster_id", $"keep")
+      .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+
+  private def randomPairs(seed: Int, nodes: Int, edges: Int) = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(edges)((rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+      .filter { case (a, b) => a != b }
+  }
+
   test("exact dedup keeps the minimum id per normalized text") {
     val df = Seq(
       (10L, "Hello  World"), (3L, "hello world"), (7L, "different text here"))
@@ -199,21 +217,17 @@ class DedupSpec extends SparkSpec {
     // a–b, b–c, c–d plus an unrelated pair: two components
     val pairs = Seq((20L, 10L), (20L, 30L), (30L, 40L), (100L, 200L))
       .toDF("id_a", "id_b")
-    val out = Dedup.resolveClusters(pairs)
-      .select($"id", $"cluster_id", $"keep")
-      .as[(Long, Long, Boolean)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq(
+    val out = distributed(clusterRows(pairs))
+    assert(out == Seq(
       (10L, 10L, true), (20L, 10L, false), (30L, 10L, false), (40L, 10L, false),
       (100L, 100L, true), (200L, 100L, false)))
   }
 
   test("resolveClusters matches brute-force transitive closure on random graphs") {
-    val rnd = new scala.util.Random(42)
-    val edges = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-      .filter { case (a, b) => a != b }
+    val edges = randomPairs(42, 40, 60)
     val pairs = edges.toDF("id_a", "id_b")
-    val got = Dedup.resolveClusters(pairs)
-      .select($"id", $"cluster_id").as[(Long, Long)].collect().toMap
+    val got = distributed(Dedup.resolveClusters(pairs)
+      .select($"id", $"cluster_id").as[(Long, Long)].collect().toMap)
     // driver-side union-find as the oracle
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
@@ -233,9 +247,7 @@ class DedupSpec extends SparkSpec {
     // large-star/small-star alternation must finish inside the default
     // maxRounds = 50 budget (O(log^2 n)) and label every node with the min
     val pairs = (1L until 1000L).map(i => (i - 1, i)).toDF("id_a", "id_b")
-    val out = Dedup.resolveClusters(pairs)
-      .select($"id", $"cluster_id", $"keep")
-      .as[(Long, Long, Boolean)].collect()
+    val out = distributed(clusterRows(pairs))
     assert(out.length == 1000)
     assert(out.forall { case (id, c, keep) => c == 0L && keep == (id == 0L) })
     graft.operators.OpCache.release()
@@ -247,25 +259,59 @@ class DedupSpec extends SparkSpec {
     // generous budget on the same input must succeed)
     val pairs = Seq((20L, 10L), (20L, 30L), (30L, 40L), (40L, 50L))
       .toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalStateException] {
-      Dedup.resolveClusters(pairs, maxRounds = 1, strict = true).count()
+    distributed {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalStateException] {
+        Dedup.resolveClusters(pairs, maxRounds = 1, strict = true).count()
+      }
+      assert(e.getMessage.contains("did not converge"))
+      // the throw path must leave nothing OpCache.release() can't reach
+      graft.operators.OpCache.release()
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
+        "the throw path stranded cached entries")
+      // non-strict keeps the defensive best-effort result (and warns)
+      val lax = Dedup.resolveClusters(pairs, maxRounds = 1)
+      assert(lax.count() == 5)
+      graft.operators.OpCache.release()
+      // same input, sufficient budget: converges to the canonical labels
+      val ok = Dedup.resolveClusters(pairs)
+        .select($"id", $"cluster_id").as[(Long, Long)].collect().toMap
+      assert(ok == Map(10L -> 10L, 20L -> 10L, 30L -> 10L, 40L -> 10L,
+        50L -> 10L))
+      graft.operators.OpCache.release()
     }
-    assert(e.getMessage.contains("did not converge"))
-    // the throw path must leave nothing OpCache.release() can't reach
-    graft.operators.OpCache.release()
+  }
+
+  test("resolveClusters: the driver union-find and the star-round loop " +
+    "give identical rows") {
+    val graphs = Seq(1, 2, 3).map(s => randomPairs(s, 200, 300)) ++ Seq(
+      randomPairs(4, 40, 120), // dense: few large components
+      (1L until 1000L).map(i => (i - 1, i)), // the pathological chain
+      (1L until 1000L).map(i => (i, i - 1)).reverse)
+    graphs.foreach { edges =>
+      val pairs = edges.toDF("id_a", "id_b")
+      val onDriver = clusterRows(pairs)
+      val loop = distributed(clusterRows(pairs))
+      assert(onDriver.nonEmpty && onDriver == loop,
+        s"paths differ on ${edges.size} edges: " +
+          s"${(onDriver diff loop).take(5)} vs ${(loop diff onDriver).take(5)}")
+      OpCache.release()
+    }
+  }
+
+  test("resolveClusters' driver path caches nothing and plans a local relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val pairs = randomPairs(5, 100, 150).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val clusters = Dedup.resolveClusters(pairs)
+    assert(clusters.queryExecution.analyzed.collectFirst {
+      case r: LocalRelation => r }.nonEmpty,
+      "a small edge set must resolve on the driver")
+    clusters.collect()
+    val df = (0L until 100L).map(i => (i, s"t$i")).toDF("doc_id", "text")
+    Dedup.keepRepresentatives(df, pairs.select($"id_a", $"id_b"), "doc_id").collect()
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "the throw path stranded cached entries")
-    // non-strict keeps the defensive best-effort result (and warns)
-    val lax = Dedup.resolveClusters(pairs, maxRounds = 1)
-    assert(lax.count() == 5)
-    graft.operators.OpCache.release()
-    // same input, sufficient budget: converges to the canonical labels
-    val ok = Dedup.resolveClusters(pairs)
-      .select($"id", $"cluster_id").as[(Long, Long)].collect().toMap
-    assert(ok == Map(10L -> 10L, 20L -> 10L, 30L -> 10L, 40L -> 10L,
-      50L -> 10L))
-    graft.operators.OpCache.release()
+      "the driver path left a persisted RDD behind")
   }
 
   test("OpCache.release leaves no lingering cached RDDs after an operator sweep") {

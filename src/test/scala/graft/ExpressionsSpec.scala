@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.functions.expressions.GraftExpressions
@@ -570,5 +571,88 @@ class ExpressionsSpec extends SparkSpec {
           text, org.apache.spark.sql.types.StringType), 16, 4)
       .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     assert(ev.numElements() == viaCol.size)
+  }
+
+  /** The text kernels' edge cases: null, blank, tab-led (an empty edge
+    * token), dotted capital I and final sigma (lowercasing that changes
+    * length), emoji (supplementary code points), bullet and ellipsis
+    * lines, hashes, punctuation and short documents. */
+  private val textEdgeCases: Seq[String] = Seq(null, "", " ", "   ", "\n",
+    "\thello world", "İstanbul İİ Σ ΣΑΣ ος", "emoji 😀 party 🎉 time 😀",
+    "• item one\n- item two\n  * item three\n▪x\n‣ last",
+    "wait…\nand so....\n... \nok ...  \n.. no", "#tag #more ## a#b",
+    "a", "a b", "a b c", "a b c d", "a b c d e", "a b c d e f g",
+    "the cat the cat the cat the cat", "  leading and trailing  ",
+    "tab\tsep\nnew line\n\npara", "ünïcödé ｗｉｄｅ ﬁ",
+    "Hello, World! It's (really) nice: [yes]; {no}.", "😀😀 😀", "12345 678 90")
+
+  /** The sf0.001 documents, the edge cases and 400 seeded random texts
+    * over a vocabulary of the same hazards, behind an RDD so no plan
+    * folds the kernels on the driver. */
+  private lazy val kernelFixture = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("the", "be", "to", "of", "cat", "İ", "Σ", "😀", "•", "-",
+      "*", "...", "…", "#", "a.b", "x,y!", "ab#", "Zz", "dog…", "ünï")
+    val seps = Seq(" ", " ", " ", "\n", "\t", "  ", "\n\n", " \n ")
+    val soup = Seq.fill(400)((0 until rnd.nextInt(40)).map(_ =>
+      vocab(rnd.nextInt(vocab.size)) + seps(rnd.nextInt(seps.size))).mkString)
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select($"text").as[String].collect()
+    spark.createDataFrame(
+      spark.sparkContext.parallelize((docs.toSeq ++ textEdgeCases ++ soup).map(Row(_)), 4),
+      StructType(Seq(StructField("text", StringType))))
+  }
+
+  /** Rows where a native text kernel and its reference formulation
+    * differ, with whole-stage codegen and then with every projection and
+    * predicate interpreted. */
+  private def kernelMismatches(native: Column, hof: Column): Seq[(String, Long)] = {
+    val df = kernelFixture.select(native.as("native"), hof.as("hof"))
+    assert(df.schema("native").dataType.catalogString ==
+      df.schema("hof").dataType.catalogString,
+      s"types differ: ${df.schema}")
+    val modes = Seq("codegen" -> Seq.empty[(String, String)],
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    modes.map { case (mode, confs) =>
+      mode -> withSQLConf(confs: _*)(
+        df.filter(not($"native" <=> $"hof")).count())
+    }.filter(_._2 != 0L)
+  }
+
+  test("native shingles and shingleHashes equal their HOF references, k = 1-5") {
+    import graft.functions.TextFunctions._
+    assert(kernelFixture.count() > 600)
+    for (k <- 1 to 5) {
+      assert(kernelMismatches(shingles($"text", k), shinglesHof($"text", k)).isEmpty,
+        s"shingles k=$k")
+      assert(kernelMismatches(shingleHashes($"text", k),
+        shingleHashesHof($"text", k)).isEmpty, s"shingleHashes k=$k")
+    }
+    // the contract edges, pinned on the native forms
+    val edge = Seq("", "a b", "\thello").toDF("t")
+      .select(shingles($"t", 3), shingles($"t", 1)).collect()
+    assert(edge.map(r => (r.getSeq[String](0), r.getSeq[String](1))).toSeq == Seq(
+      (Seq(""), Seq("")), (Seq("a b"), Seq("a", "b")),
+      (Seq(" hello"), Seq("", "hello"))))
+    intercept[IllegalArgumentException](shingles($"t", 0))
+  }
+
+  test("native gopherQualityStats and qualityScore equal their HOF references") {
+    import graft.functions.TextFunctions._
+    assert(kernelMismatches(gopherQualityStats($"text"),
+      gopherQualityStatsHof($"text")).isEmpty)
+    assert(kernelMismatches(qualityScore($"text"), qualityScoreHof($"text")).isEmpty)
+    // the fixture reaches both sides of every check it compares
+    val stats = kernelFixture.select(gopherQualityStats($"text").as("g"),
+      qualityScore($"text").as("q"))
+      .agg(max($"g.bullet_line_frac"), max($"g.ellipsis_line_frac"),
+        max($"g.hash_word_ratio"), min($"g.alpha_word_frac"),
+        max($"g.stop_hits"), countDistinct($"q")).head()
+    assert(stats.getDouble(0) > 0 && stats.getDouble(1) > 0 &&
+      stats.getDouble(2) > 0 && stats.getDouble(3) < 1 &&
+      stats.getInt(4) >= 2 && stats.getLong(5) >= 4, s"weak fixture: $stats")
   }
 }

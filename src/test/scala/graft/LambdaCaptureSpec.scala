@@ -83,6 +83,10 @@ class LambdaCaptureSpec extends SparkSpec {
     "shingles(3)" -> shingles(text, 3),
     "shingleHashes(3)" -> shingleHashes(text, 3),
     "shingleHashes(5)" -> shingleHashes(text, 5),
+    "shinglesHof(3)" -> shinglesHof(text, 3),
+    "shingleHashesHof(3)" -> shingleHashesHof(text, 3),
+    "qualityScoreHof" -> qualityScoreHof(text),
+    "gopherQualityStatsHof" -> gopherQualityStatsHof(text),
     "Dedup.minhashSignature" ->
       graft.operators.Dedup.minhashSignature(text, 3, 64)
   ).map { case (name, c) => name -> docs.select(c.as("v")) } ++ Seq(

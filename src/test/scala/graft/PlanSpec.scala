@@ -194,20 +194,14 @@ class PlanSpec extends SparkSpec {
     // sort-merge anti-join
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val (df, pairs) = clusterFixture
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try {
+    try withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val kept = graft.operators.Dedup.keepRepresentatives(df, pairs, "doc_id")
       val joins = plannedAntiJoins(kept)
       assert(joins.size == 1 && joins.head.isInstanceOf[SortMergeJoinExec],
         "with broadcast disabled the loser filter must be a sort-merge " +
           s"anti-join:\n${kept.queryExecution.explainString(ExplainMode.fromString("simple"))}")
       assert(survivors(kept) == Seq(1L, 4L))
-    } finally {
-      old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      graft.operators.OpCache.release()
-    }
+    } finally graft.operators.OpCache.release()
   }
 
   test("q90 stratified sample plans as a pure scan+filter (zero shuffles)") {

@@ -21,6 +21,15 @@ trait SparkSpec extends AnyFunSuite {
     dir
   }
 
+  /** Runs `body` with the given session confs set, then restores each
+    * conf's earlier value (or unsets it). */
+  def withSQLConf[T](confs: (String, String)*)(body: => T): T = {
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
     finally while (!testDirs.isEmpty) SparkSpec.deleteTree(testDirs.poll())
