@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
  * array element. So the per-word hot kernels ([[shingles]],
  * [[shingleHashes]], [[qualityScore]], [[gopherQualityStats]],
  * [[repetitionStats]]) are native expressions in
- * [[graft.functions.expressions]] that read the [[tokens]] array; their
- * built-in formulations stay as `...Hof` reference specs, checked equal by
+ * [[graft.functions.expressions]]; all but [[repetitionStats]] take the
+ * [[tokens]] array as an input. The first four keep their built-in
+ * formulations as `...Hof` reference specs, checked equal by
  * ExpressionsSpec.
  */
 object TextFunctions {
